@@ -19,6 +19,14 @@ import graft.pipeline.ActiveLoop
   * identical files. The `mlp` binary is external compute behind the
   * Calculator connector (here the stub); `relax/select` stand-ins are
   * the ActiveLoop's distort/grade stages.
+  *
+  * Job budget: one `iterate()` — the render of the newest iteration
+  * plus one [[ActiveLoop.step]] — fires at most 10 Spark jobs and no
+  * parquet schema inference. The iteration number comes from the ActiveLoop's
+  * listing-keyed cache, so the render check and the step read it
+  * without a job while the active set's files are the ones this loop
+  * last wrote; an append by another loop on the same directory changes
+  * the listing and is picked up with one re-read.
   */
 final class MtpLoop(spark: SparkSession, calc: Calculator,
     workDir: String, species: Seq[String], ranSeed: Long = 42L) {
@@ -44,6 +52,8 @@ final class MtpLoop(spark: SparkSession, calc: Calculator,
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val iter = active.currentIteration
+    require(iter >= 0,
+      s"MtpLoop.writeTrainCfg: no active set under $workDir; call bootstrap first")
     val out = Paths.get(s"$workDir/train.cfg")
     val marker = Paths.get(s"$workDir/.rendered_iter")
     val rendered =

@@ -4208,6 +4208,24 @@ object Versioned {
     } finally deleteRecursively(tmp)
   }
 
+  /** Per-row multiplicities of two frames over `keys`: one row per
+    * distinct key tuple of either side, `__ca`/`__cb` its count in `a`
+    * / `b` (0 when absent). Σ |ca − cb| is the symmetric multiset
+    * difference, exceptAll(a, b).count + exceptAll(b, a).count, from
+    * one pass per side. Keys match null-safely (`<=>`): with a plain
+    * equi-join a null-key group present on both sides would stay
+    * unmatched and count twice. */
+  def multisetCounts(a: DataFrame, b: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    def counts(df: DataFrame, n: String, alias: String) =
+      df.groupBy(keys.map(col): _*).agg(count(lit(1)).as(n)).as(alias)
+    val on = keys.map(k => col(s"__a.$k") <=> col(s"__b.$k")).reduce(_ && _)
+    counts(a, "__ca", "__a").join(counts(b, "__cb", "__b"), on, "full_outer")
+      .select(keys.map(k => coalesce(col(s"__a.$k"), col(s"__b.$k")).as(k)) ++
+        Seq(coalesce(col("__ca"), lit(0L)).as("__ca"),
+          coalesce(col("__cb"), lit(0L)).as("__cb")): _*)
+  }
+
   /** v11_cdc_replicate (round 13): the REPLICATION operator
     * [[applyChanges]], oracled end-to-end. Table A is driven through
     * every row-bearing commit kind — two appends, an upsert MERGE, a
@@ -4246,27 +4264,17 @@ object Versioned {
         applyChanges(feed.where(col("_commit_version") === v), b,
           Seq("doc_id"))
       }
-      val fa = read(spark, a)
-      val fb = read(spark, b)
       // symmetric multiset difference + B's final aggregates in ONE
-      // action (round 17): the two exceptAll counts each re-scanned
-      // both sides, and the final aggregate was a third pass over B.
-      // With cnt_X = per-full-row multiplicities,
-      // exceptAll(B,A).count + exceptAll(A,B).count =
-      // Σ max(cb−ca,0) + Σ max(ca−cb,0) = Σ |ca − cb| — the same
-      // number from one pass per side — and B's n_rows/sums are
-      // Σ cb / Σ col·cb over the same joined frame.
-      val cb0 = coalesce(col("__cb"), lit(0L))
-      val r = fa.groupBy(col("doc_id"), col("n_chars"))
-        .agg(count(lit(1)).as("__ca"))
-        .join(fb.groupBy(col("doc_id"), col("n_chars"))
-          .agg(count(lit(1)).as("__cb")),
-          Seq("doc_id", "n_chars"), "full_outer")
+      // action (round 17): B's n_rows/sums are Σ cb / Σ col·cb over
+      // the same per-row multiplicities the diff reads.
+      val cb = col("__cb")
+      val r = multisetCounts(read(spark, a), read(spark, b),
+          Seq("doc_id", "n_chars"))
         .agg(
-          sum(abs(coalesce(col("__ca"), lit(0L)) - cb0)).as("diff"),
-          sum(cb0).as("n_rows"),
-          sum(col("doc_id") * cb0).as("sum_doc_id"),
-          sum(col("n_chars").cast("long") * cb0).as("sum_chars"))
+          sum(abs(col("__ca") - cb)).as("diff"),
+          sum(cb).as("n_rows"),
+          sum(col("doc_id") * cb).as("sum_doc_id"),
+          sum(col("n_chars").cast("long") * cb).as("sum_chars"))
         .head()
       spark.createDataFrame(
         spark.sparkContext.parallelize(Seq(Row(

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.graftspec.JobLog
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -46,5 +47,57 @@ class ActiveLoopSpec extends AnyFunSuite {
     // bootstrap is a no-op on existing state
     resumed.bootstrap(MaterialsPipeline.seeds)
     assert(resumed.current.count() === all.count())
+  }
+
+  private def freshPath(): String =
+    Files.createTempDirectory("active").toString + "/active_set"
+
+  test("run stops at the first step that adds nothing") {
+    val one = new ActiveLoop(spark, StubCalculator(), freshPath())
+    one.bootstrap(MaterialsPipeline.seeds)
+    val (n, stepJobs) = JobLog.record(spark.sparkContext)(
+      one.step(nCandidatesPerConfig = 0, selectK = 4))
+    assert(n === 0 && stepJobs.nonEmpty)
+
+    val loop = new ActiveLoop(spark, StubCalculator(), freshPath())
+    loop.bootstrap(MaterialsPipeline.seeds)
+    val (added, runJobs) = JobLog.record(spark.sparkContext)(
+      loop.run(5, nCandidatesPerConfig = 0, selectK = 4))
+    assert(added.isEmpty)
+    // exactly one step's jobs: the four budgeted steps after the
+    // converged one never run
+    assert(runJobs.size === stepJobs.size, runJobs.mkString("\n"))
+    assert(loop.currentIteration === 0)
+  }
+
+  test("two loops on one path take turns through the listing-keyed cache") {
+    val path = freshPath()
+    val a = new ActiveLoop(spark, StubCalculator(), path)
+    val b = new ActiveLoop(spark, StubCalculator(), path)
+    a.bootstrap(MaterialsPipeline.seeds)
+    b.bootstrap(MaterialsPipeline.seeds) // sees A's iteration 0: no-op
+    val added = Seq(a, b, a, b).map { loop =>
+      val n = loop.step(nCandidatesPerConfig = 3, selectK = 4)
+      assert(n > 0)
+      n
+    }
+    assert(a.currentIteration === 4 && b.currentIteration === 4)
+    val all = a.current
+    val iters = all.groupBy("iteration").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(iters.keySet === (0 to 4).toSet)
+    assert((1 to 4).map(iters(_)) === added)
+    assert(all.select("uuid").distinct().count() === all.count())
+    assert(all.count() === 2 + added.sum)
+    assert(new ActiveLoop(spark, StubCalculator(), path)
+      .currentIteration === 4)
+  }
+
+  test("step before bootstrap fails with a clear message") {
+    val loop = new ActiveLoop(spark, StubCalculator(), freshPath())
+    val e = intercept[IllegalArgumentException](
+      loop.step(nCandidatesPerConfig = 3, selectK = 4))
+    assert(e.getMessage.contains("no active set"))
+    assert(e.getMessage.contains("call bootstrap first"))
   }
 }

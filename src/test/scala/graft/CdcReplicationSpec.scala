@@ -197,4 +197,27 @@ class CdcReplicationSpec extends AnyFunSuite {
     assert(stateOf(Versioned.read(spark, b)) ===
       Set((1L, 1L, "x"), (2L, 2L, "y")))
   }
+
+  test("multisetCounts matches null keys: a null-key group on both sides cancels") {
+    import spark.implicits._
+    val a = Seq[(Option[Long], Long)]((None, 5L), (None, 5L), (Some(1L), 2L),
+      (Some(2L), 3L)).toDF("k", "v")
+    val b = Seq[(Option[Long], Long)]((None, 5L), (None, 5L), (Some(1L), 2L),
+      (Some(2L), 4L)).toDF("k", "v")
+    def diff(x: DataFrame, y: DataFrame): Long =
+      Versioned.multisetCounts(x, y, Seq("k", "v"))
+        .agg(sum(abs(col("__ca") - col("__cb")))).head().getLong(0)
+    assert(diff(a, a) === 0L)
+    assert(diff(b, b) === 0L)
+    // only (2,3) vs (2,4) differ — the null group (count 2 each) cancels
+    assert(diff(a, b) === 2L)
+    assert(diff(a, b) === a.exceptAll(b).count() + b.exceptAll(a).count())
+    val nullGroup = Versioned.multisetCounts(a, b, Seq("k", "v"))
+      .where(col("k").isNull).collect()
+    assert(nullGroup.length === 1)
+    assert(nullGroup.head.getLong(2) === 2L && nullGroup.head.getLong(3) === 2L)
+    // multiplicities, not sets: one extra null row is a diff of one
+    assert(diff(a.union(Seq[(Option[Long], Long)]((None, 5L)).toDF("k", "v")),
+      a) === 1L)
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.graftspec.JobLog
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -64,5 +65,32 @@ class MtpLoopSpec extends AnyFunSuite {
     val plan = grp.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("groupUuid"))
     assert(ConfigsIO.readGroup(spark, dir, g).count() > 0)
+  }
+
+  test("job budget: one iterate() fires at most 10 jobs, no schema inference") {
+    val dir = Files.createTempDirectory("mtpjobs").toString
+    val loop = new MtpLoop(spark, StubCalculator(), dir, Seq("Ag", "Pd"))
+    loop.bootstrap(MaterialsPipeline.seeds)
+    // the first iterate renders the bootstrap, the second the first
+    // iteration's append
+    (1 to 2).foreach { i =>
+      val (added, jobs) = JobLog.record(spark.sparkContext)(
+        loop.iterate(nCandidatesPerConfig = 12, selectK = 20))
+      val listed = jobs.mkString("\n")
+      assert(added > 0)
+      assert(jobs.size <= 10, s"iterate $i fired ${jobs.size} jobs:\n$listed")
+      assert(!jobs.exists(j => j.site.startsWith("parquet at ActiveLoop") &&
+        !j.inSqlExecution), s"parquet schema inference in iterate $i:\n$listed")
+    }
+    assert(loop.currentIteration === 2)
+  }
+
+  test("writeTrainCfg before bootstrap fails with a clear message") {
+    val dir = Files.createTempDirectory("mtpempty").toString
+    val loop = new MtpLoop(spark, StubCalculator(), dir, Seq("Ag", "Pd"))
+    val e = intercept[IllegalArgumentException](loop.writeTrainCfg())
+    assert(e.getMessage.contains("call bootstrap first"))
+    val e2 = intercept[IllegalArgumentException](loop.iterate())
+    assert(e2.getMessage.contains("call bootstrap first"))
   }
 }
