@@ -68,6 +68,12 @@ object TextPipeline {
       stages = stages)
   }
 
+  /** Stages that rewrite `text` row by row and drop no row:
+    * [[run]] carries the row count across them without counting.
+    * TextPipelineSpec checks that each keeps the row count and the
+    * `doc_id` set. */
+  private[graft] val rowPreserving: Set[String] = Set("normalize", "redact")
+
   /** One curation stage: docs in → docs out (schema preserved). */
   def applyStage(docs: DataFrame, st: SpecPipeline.Step,
       ranSeed: Long): DataFrame = {
@@ -147,7 +153,6 @@ object TextPipeline {
     // paying a full checkpoint of the text column per stage. Shuffle
     // stages keep the eager per-stage materialization (the
     // ActiveLoop shape — plans don't nest, each computed once).
-    val rowPreserving = Set("normalize", "redact")
     plan.stages.zipWithIndex.foreach { case (st, i) =>
       docs = applyStage(docs, st, plan.ranSeed)
       val preserving = rowPreserving(st.stepType)

@@ -2106,6 +2106,51 @@ object Versioned {
     case _ => true // mismatched shapes never prune
   }
 
+  /** The touched/untouched split of the live files for a row-level op
+    * whose matching rows must satisfy `bounds` (empty bounds touch
+    * every file). Range tier: a file is touched when its stats
+    * ([[fileKeyStats]]) may intersect every bound. Bloom tier (round
+    * 16, see [[BloomFilters]]): a range survivor whose sidecar proves
+    * none of `keySets` (finite per-column key sets, logical names) is
+    * present is skipped too. `keySets` is evaluated only when some
+    * survivor has a sidecar. Untouched files carry into the next
+    * snapshot by reference. */
+  private def pruneTouched(spark: SparkSession, path: String,
+      base: Snapshot, bounds: Map[String, ColStat],
+      keySets: => Map[String, Seq[Any]] = Map.empty)
+      : (Seq[String], Seq[String]) = {
+    val (ranged, disjoint) = fileKeyStats(spark, path, base).partition {
+      case (_, st) =>
+        bounds.forall { case (c, b) => statIntersects(st.get(base.physOf(c)), b) }
+    }
+    val candidates = ranged.map(_._1)
+    val keys: Map[String, Seq[Any]] =
+      if (!candidates.exists(f => Files.exists(
+        Paths.get(norm(path), BloomFilters.sidecarRel(f))))) Map.empty
+      else keySets.map { case (c, vs) => base.physOf(c) -> vs }
+    val keep =
+      if (keys.isEmpty) candidates.toSet
+      else BloomFilters.survivors(spark, norm(path), candidates, keys)
+    val (touched, skipped) = candidates.partition(keep)
+    (touched, disjoint.map(_._1) ++ skipped)
+  }
+
+  /** Output file count of a rewrite of `touched` files that writes
+    * `rows` fresh rows: the touched set's file granularity (without
+    * the coalesce a join's union lands as shuffle-partition-many small
+    * files — measured: 1 touched file re-emerged as 17), raised with
+    * the fresh volume (`spark.graft.versioned.targetFileRows`, default
+    * 2²⁰ rows a file, at most 4096 files) so a bulk insert into a small
+    * table is not serialized through one writer task (round 12). */
+  private def outFileCount(spark: SparkSession, touched: Int,
+      rows: Long): Int = {
+    val targetFileRows = spark.conf
+      .getOption("spark.graft.versioned.targetFileRows")
+      .map(_.toLong).getOrElse(1L << 20)
+    math.max(math.max(1, touched),
+      math.min(4096L, (rows + targetFileRows - 1) / targetFileRows).toInt)
+  }
+
   /** MERGE clause surface (Delta's whenMatched/whenNotMatched, scoped
     * to schema-identical upserts). Matched-clause `condition`s may
     * reference BOTH sides by qualifier — `col("target.v") <
@@ -2389,47 +2434,32 @@ object Versioned {
               LongStat(asLong(r.get(2 * i)), asLong(r.get(2 * i + 1))))
         }
       }.toMap
-    val ranges = fileKeyStats(spark, path, base)
     // notMatchedBySource touches every unmatched target row — which
-    // can live in ANY file — so pruning is off and every file rewrites
-    val (rangedT, untouchedT) =
-      if (notMatchedBySource.nonEmpty) (ranges, Nil)
-      else ranges.partition { case (_, st) =>
-        bounds.forall { case (k, b) => statIntersects(st.get(base.physOf(k)), b) }
-      }
+    // can live in ANY file — so pruning is off (no bounds, no keys) and
+    // every file rewrites.
     // bloom tier (round 16): a SMALL source (the CDC-upsert regime,
     // ≤ MergeKeyCap distinct key tuples) probes candidate sidecars
     // with its exact key sets — the pruning min/max can't give on
-    // uuid-like keys. Collected only when a candidate actually has a
-    // sidecar; per-column membership is a NECESSARY condition for a
-    // match, so skipped files carry by reference exactly like
+    // uuid-like keys; per-column membership is a NECESSARY condition
+    // for a match, so skipped files carry by reference exactly like
     // range-disjoint ones.
-    val bloomKeys: Map[String, Seq[Any]] =
+    val (touched, untouched) = pruneTouched(spark, path, base,
+      if (notMatchedBySource.nonEmpty) Map.empty else bounds,
       if (notMatchedBySource.nonEmpty || nTotal == 0 ||
-        nTotal > BloomFilters.MergeKeyCap ||
-        !rangedT.exists(r => java.nio.file.Files.exists(
-          java.nio.file.Paths.get(norm(path),
-            BloomFilters.sidecarRel(r._1))))) Map.empty
+        nTotal > BloomFilters.MergeKeyCap) Map.empty
       else {
         val rows = src.select(keys.map(col(_)): _*).distinct().collect()
         keys.zipWithIndex.map { case (k, i) =>
           k -> rows.map(_.get(i)).toSeq.distinct
         }.toMap
-      }
-    val bloomKeep = bloomPrune(spark, path, base, rangedT.map(_._1),
-      bloomKeys).toSet
-    val (touched, bloomSkipped) = rangedT.partition(r => bloomKeep(r._1))
-    val untouched = untouchedT ++ bloomSkipped
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"data/c-$commitId"
+      })
     val existing =
       if (touched.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
       else // files carry ALL columns (Iceberg discipline — partition
         // values are duplicated into the paths, never dropped from
         // the rows), under PHYSICAL names (column mapping, round 14)
-        readFiles(spark, path, touched.map(_._1), mergedDdl, base.colMap,
-          base.dvs)
+        readFiles(spark, path, touched, mergedDdl, base.colMap, base.dvs)
     val keyCols = keys.map(col)
     def condOf(c: Option[Column]): Column = c.getOrElse(lit(true))
     val none = src.limit(0)
@@ -2595,19 +2625,6 @@ object Versioned {
     }
     val insertedRows = insertOuts.reduceOption(_.unionByName(_))
       .getOrElse(none)
-    // the rewrite keeps the TOUCHED set's file granularity (without
-    // the coalesce the union inherits the join's shuffle partitioning
-    // and a 1-file rewrite lands as shuffle-partition-many small
-    // files — measured: 1 touched file re-emerged as 17), but the
-    // output file count also scales with the SOURCE volume so a
-    // bulk-insert merge into a small table is not serialized through
-    // one writer task (round 12). coalesce never INCREASES partition
-    // count, so a small union still lands compactly.
-    val targetFileRows = spark.conf
-      .getOption("spark.graft.versioned.targetFileRows")
-      .map(_.toLong).getOrElse(1L << 20)
-    val outFiles = math.max(math.max(1, touched.size),
-      math.min(4096L, (nTotal + targetFileRows - 1) / targetFileRows).toInt)
     // row-level CDF: this commit's change set — update clauses emit
     // pre/post images, delete clauses emit deletes, inserts emit
     // inserts. Touched files are COMPLETE for matched detection (see
@@ -2635,28 +2652,65 @@ object Versioned {
       } :+ insertedRows.withColumn(CT, lit("insert")))
     // lazy (round 17): materializes inside the data write's job — the
     // write's filter still persists WHOLE partitions of the change
-    // set, so the CDF write below reads complete pinned blocks
+    // set, so the CDF write after it reads complete pinned blocks
     val changeSet = chgPieces.reduce(_.unionByName(_))
       .localCheckpoint(false)
-    writeData(keptExisting
-      .unionByName(changeSet.where(col("_change_type")
-        .isin("update_postimage", "insert")).drop("_change_type"))
-      .coalesce(outFiles), s"$path/$dataRel",
-      base.partitionCols, base.colMap)
-    val added = listParquet(dataPath(path, commitId))
-      .map(f => s"$dataRel/$f")
-    val files = untouched.map(_._1) ++ added
-    val mergedStats = base.stats.view
-      .filterKeys(untouched.map(_._1).toSet).toMap ++
-      statsForFiles(spark, path, added, base.partitionCols, schema, base.colMap)
-    val changeRel = writeChanges(changeSet, path, commitId, base.colMap)
     // a notMatchedBySource merge's footprint is the whole table —
     // empty bounds prove nothing, so ANY interloping append aborts
-    publishCow(path, "merge", base, files, mergedStats,
-      changes = Some(changeRel),
+    commitCow(spark, path, "merge", base, untouched,
+      Some(keptExisting.unionByName(changeSet.where(col("_change_type")
+        .isin("update_postimage", "insert")).drop("_change_type"))
+        .coalesce(outFileCount(spark, touched.size, nTotal))),
+      Some(changeSet),
       sourceBounds =
         if (notMatchedBySource.nonEmpty) Some(Map.empty) else Some(bounds),
       ddl = Some(mergedDdl))
+  }
+
+  /** The one copy-on-write commit, shared by merge, replace, delete and
+    * update (both layouts), optimize, compact and purge: mint a commit
+    * id, write the data, list the fresh files, join the `kept` base
+    * files' carried stats with the fresh files' footer stats, write the
+    * change feed, and [[publishCow]] the live set `kept ++ fresh`.
+    *
+    * Write order: data first (DV `sidecars`, then the `rows` as fresh
+    * data files; `rows` None writes no data file), then the change feed
+    * (`changes` None: the op records none), then the publish. Nothing
+    * is visible before the publish, and a crash before it leaves only
+    * unreferenced files for [[vacuum]].
+    *
+    * Lazy pins: a caller may pin its tagged rows or change set with
+    * `localCheckpoint(false)` only when the data write is the pin's
+    * first consumer and scans every tagged partition — the write then
+    * materializes whole blocks and the change-feed write reads them
+    * instead of recomputing the plan.
+    *
+    * A fresh file whose footer counts zero rows (Spark writes one for
+    * an empty task-0 partition) is deleted and never referenced; a
+    * rewrite that keeps nothing publishes no data file, not an empty
+    * one. */
+  private def commitCow(spark: SparkSession, path: String, op: String,
+      base: Snapshot, kept: Seq[String], rows: Option[DataFrame],
+      changes: Option[DataFrame], sourceBounds: Option[Map[String, ColStat]],
+      ddl: Option[String] = None,
+      sidecars: String => Map[String, String] = _ => Map.empty): Int = {
+    val commitId = java.util.UUID.randomUUID().toString.take(12)
+    val dvUpdates = sidecars(commitId)
+    val dataRel = s"data/c-$commitId"
+    val written = rows.fold(Seq.empty[String]) { df =>
+      writeData(df, s"$path/$dataRel", base.partitionCols, base.colMap)
+      listParquet(dataPath(path, commitId)).map(f => s"$dataRel/$f")
+    }
+    val fresh = statsForFiles(spark, path, written, base.partitionCols,
+      StructType.fromDDL(ddl.getOrElse(base.schemaDdl)), base.colMap)
+    val (added, empty) = written.partition(f =>
+      !fresh(f).get(RowsStatKey).contains(LongStat(0L, 0L)))
+    empty.foreach(f => Files.delete(Paths.get(norm(path), f)))
+    val changeRel = changes.map(writeChanges(_, path, commitId, base.colMap))
+    publishCow(path, op, base, kept ++ added,
+      base.stats.view.filterKeys(kept.toSet).toMap ++
+        fresh.view.filterKeys(added.toSet).toMap,
+      changeRel, sourceBounds, ddl, dvUpdates)
   }
 
   /** Publish a COW commit (merge/optimize) with conflict RESOLUTION:
@@ -2925,21 +2979,6 @@ object Versioned {
     }
   }
 
-  /** Bloom-tier file skipping (round 16, see [[BloomFilters]]):
-    * shrink `candidates` to the files whose sidecars may contain the
-    * predicate's finite key sets, translated to physical names. A
-    * no-sidecar file, a non-finite predicate, or an empty key-set map
-    * keeps everything — the tier only ever REMOVES provably-clean
-    * files on top of the range tier's verdict. */
-  private def bloomPrune(spark: SparkSession, path: String,
-      base: Snapshot, candidates: Seq[String],
-      keySets: Map[String, Seq[Any]]): Seq[String] = {
-    if (keySets.isEmpty || candidates.isEmpty) return candidates
-    val phys = keySets.map { case (c, vs) => base.physOf(c) -> vs }
-    val keep = BloomFilters.survivors(spark, norm(path), candidates, phys)
-    candidates.filter(keep)
-  }
-
   /** DELETE rows matching `pred`, file-granular copy-on-write (round
     * 11, the [[merge]] discipline applied to deletes): files whose
     * stats are DISJOINT from the predicate's necessary bounds
@@ -2964,6 +3003,28 @@ object Versioned {
     * is REBASED over; an overlapping or stats-less append, any
     * non-append commit, or an unanalyzable predicate (empty bounds
     * prove nothing) still aborts loudly. */
+  def deleteWhere(spark: SparkSession, path: String,
+      pred: org.apache.spark.sql.Column): Int =
+    rowDml(spark, path, "delete", pred, None)
+
+  /** UPDATE rows matching `pred`, setting each `set` column to its
+    * expression over the ROW (unset columns keep their values) —
+    * SQL `UPDATE t SET c = expr WHERE pred` as the same file-granular
+    * copy-on-write as [[deleteWhere]] (round 12): predicate-disjoint
+    * files carry by reference, the predicate is evaluated ONCE per
+    * touched row (checkpointed flag), the CDF records
+    * update_preimage/update_postimage rows, and the publish rebases
+    * over provably-disjoint interloping appends. Rows the update
+    * CREATES (postimages) may leave the predicate's bounds — that is
+    * fine: bounds gate which EXISTING rows can match, and the
+    * rewritten files get fresh stats. */
+  def updateWhere(spark: SparkSession, path: String,
+      pred: org.apache.spark.sql.Column,
+      set: Map[String, org.apache.spark.sql.Column]): Int = {
+    require(set.nonEmpty, s"versioned: updateWhere needs SET columns")
+    rowDml(spark, path, "update", pred, Some(set))
+  }
+
   /** Selective overwrite (round 13, Delta's `replaceWhere`): in ONE
     * commit, delete every row matching `pred` and insert `df`'s rows
     * — the backfill idiom (replace one day/partition/key-range with
@@ -2982,114 +3043,100 @@ object Versioned {
       pred: org.apache.spark.sql.Column): Int = {
     val spark = df.sparkSession
     val base = snapshot(path)
-    val schema = StructType.fromDDL(base.schemaDdl)
     val insDdl =
       asNullableSchema(df.schema).toDDL
     require(insDdl == base.schemaDdl,
       s"versioned: replaceWhere schema mismatch at $path:\n  table: " +
         s"${base.schemaDdl}\n  insert: $insDdl")
     // single evaluation of a possibly nondeterministic source (the
-    // merge discipline), then Delta's window validation
+    // merge discipline), then Delta's window validation and the insert
+    // count in one aggregate
     val ins = df.localCheckpoint()
-    val smuggled = ins.where(!coalesce(pred, lit(false))).count()
+    val r = ins.agg(count(lit(1)),
+      count(when(!coalesce(pred, lit(false)), lit(1)))).head()
+    val smuggled = r.getLong(1)
     require(smuggled == 0L,
       s"versioned: replaceWhere at $path: $smuggled inserted row(s) " +
         s"do not match the replace predicate $pred — a selective " +
         "overwrite only writes inside its own window")
     val bounds = predBounds(
       org.apache.spark.sql.graftx.ColumnExpr.nodeOf(pred))
-    val ranges = fileKeyStats(spark, path, base)
-    val (touched, untouched) = ranges.partition { case (_, st) =>
-      bounds.forall { case (c, b) => statIntersects(st.get(base.physOf(c)), b) }
-    }
-    val live =
-      if (touched.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else readFiles(spark, path, touched.map(_._1), base.schemaDdl,
-        base.colMap, base.dvs)
-    val RepFlag = "__graft_replace"
-    val tagged = live.withColumn(RepFlag, pred).localCheckpoint()
-    val kept = tagged
-      .where(!col(RepFlag) || col(RepFlag).isNull).drop(RepFlag)
-    val removed = tagged.where(col(RepFlag)).drop(RepFlag)
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"data/c-$commitId"
-    // output files scale with the INSERT volume (the merge
-    // discipline), floored at the touched set's granularity
-    val targetFileRows = spark.conf
-      .getOption("spark.graft.versioned.targetFileRows")
-      .map(_.toLong).getOrElse(1L << 20)
-    val nIns = ins.count()
-    val outFiles = math.max(math.max(1, touched.size),
-      math.min(4096L, (nIns + targetFileRows - 1) / targetFileRows).toInt)
-    writeData(kept.unionByName(ins).coalesce(outFiles),
-      s"$path/$dataRel", base.partitionCols, base.colMap)
-    val added = listParquet(dataPath(path, commitId))
-      .map(f => s"$dataRel/$f")
-    val files = untouched.map(_._1) ++ added
-    val newStats = base.stats.view
-      .filterKeys(untouched.map(_._1).toSet).toMap ++
-      statsForFiles(spark, path, added, base.partitionCols, schema, base.colMap)
-    val changeRel = writeChanges(
-      removed.withColumn("_change_type", lit("delete"))
-        .unionByName(ins.withColumn("_change_type", lit("insert"))),
-      path, commitId, base.colMap)
-    publishCow(path, "replace", base, files, newStats,
-      changes = Some(changeRel), sourceBounds = Some(bounds))
+    val (touched, untouched) = pruneTouched(spark, path, base, bounds)
+    cowDml(spark, path, "replace", base, pred, bounds, touched, untouched,
+      Some(_ => ins), r.getLong(0))
   }
 
-  def deleteWhere(spark: SparkSession, path: String,
-      pred: org.apache.spark.sql.Column): Int = {
+  /** DELETE (`set` None) or UPDATE (`set` Some) of the rows matching
+    * `pred`: prune with both tiers, then rewrite the touched files
+    * copy-on-write ([[cowDml]]) or, with deletion vectors enabled,
+    * mask them ([[dvDml]]). An update is a delete plus postimages:
+    * every output column casts to its table type (ADVICE r12 high:
+    * `SET v = v / 2` on BIGINT otherwise publishes DOUBLE parquet
+    * under a BIGINT manifest DDL — later reads fail until RESTORE). */
+  private def rowDml(spark: SparkSession, path: String, op: String,
+      pred: org.apache.spark.sql.Column,
+      set: Option[Map[String, org.apache.spark.sql.Column]]): Int = {
     val base = snapshot(path)
+    val schema = StructType.fromDDL(base.schemaDdl)
+    val tableCols: Seq[String] = schema.fields.map(_.name).toSeq
+    set.foreach(_.keys.foreach(k => require(tableCols.contains(k),
+      s"versioned: SET column $k is not a table column at $path " +
+        s"(table: ${tableCols.mkString(", ")})")))
+    val post = set.map(s => (hit: DataFrame) => hit.select(tableCols.map(c =>
+      s.getOrElse(c, col(c)).cast(schema(c).dataType).as(c)): _*))
     val node = org.apache.spark.sql.graftx.ColumnExpr.nodeOf(pred)
     val bounds = predBounds(node)
-    val ranges = fileKeyStats(spark, path, base)
-    val (ranged, untouchedR) = ranges.partition { case (_, st) =>
-      bounds.forall { case (c, b) => statIntersects(st.get(base.physOf(c)), b) }
-    }
     // bloom tier on top of the range tier (round 16): an equality/IN
     // predicate on a high-cardinality key — where [min,max] prunes
     // nothing — shrinks to the files whose sidecars may hold the keys
-    val bloomKeep = bloomPrune(spark, path, base, ranged.map(_._1),
-      pointKeySets(node)).toSet
-    val (touched, bloomSkipped) = ranged.partition(r => bloomKeep(r._1))
-    val untouched = untouchedR ++ bloomSkipped
+    val (touched, untouched) =
+      pruneTouched(spark, path, base, bounds, pointKeySets(node))
     if (dvEnabled(spark) && touched.nonEmpty)
-      return dvDelete(spark, path, base, pred, bounds,
-        touched.map(_._1), untouched.map(_._1))
-    val schema = StructType.fromDDL(base.schemaDdl)
+      dvDml(spark, path, op, base, pred, bounds, touched, untouched, post)
+    else cowDml(spark, path, op, base, pred, bounds, touched, untouched,
+      post, 0L)
+  }
+
+  /** CDF rows of a row-level op: the removed rows (`delete`, or
+    * `update_preimage` for an update) plus its fresh rows (`insert`,
+    * or `update_postimage`). */
+  private def changeRows(op: String, hit: DataFrame,
+      fresh: Option[DataFrame]): DataFrame = {
+    val (pre, post) =
+      if (op == "update") ("update_preimage", "update_postimage")
+      else ("delete", "insert")
+    fresh.foldLeft(hit.withColumn("_change_type", lit(pre)))((c, f) =>
+      c.unionByName(f.withColumn("_change_type", lit(post))))
+  }
+
+  /** The copy-on-write tag-and-split of delete, update and replace:
+    * tag every live row of the touched files with `pred` once, write
+    * the untagged rows plus `fresh` (postimages of the tagged rows,
+    * or replace's inserts) as new files, and record the tagged rows
+    * and the fresh rows in the change feed. The tag pin is lazy
+    * (round 17): the data write is its first consumer and scans every
+    * tagged partition, so the change-feed write reads pinned blocks
+    * instead of a second scan of the touched files. Output files
+    * follow [[outFileCount]] over `nFresh` rows. */
+  private def cowDml(spark: SparkSession, path: String, op: String,
+      base: Snapshot, pred: org.apache.spark.sql.Column,
+      bounds: Map[String, ColStat], touched: Seq[String],
+      untouched: Seq[String], fresh: Option[DataFrame => DataFrame],
+      nFresh: Long): Int = {
     val live =
-      if (touched.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else readFiles(spark, path, touched.map(_._1), base.schemaDdl,
-        base.colMap, base.dvs)
-    val DelFlag = "__graft_delete"
-    // lazy pin (round 17): the eager pin was a separate full read of
-    // the touched files; now the kept-rows write materializes (and
-    // persists) the tagged scan in its own job and the CDF write
-    // reads the pinned blocks
-    val tagged = live.withColumn(DelFlag, pred).localCheckpoint(false)
-    val kept = tagged
-      .where(!col(DelFlag) || col(DelFlag).isNull).drop(DelFlag)
-    val deleted = tagged.where(col(DelFlag)).drop(DelFlag)
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"data/c-$commitId"
-    writeData(kept.coalesce(math.max(1, touched.size)),
-      s"$path/$dataRel", base.partitionCols, base.colMap)
-    val added = listParquet(dataPath(path, commitId))
-      .map(f => s"$dataRel/$f")
-    val files = untouched.map(_._1) ++ added
-    val keptStats = base.stats.view
-      .filterKeys(untouched.map(_._1).toSet).toMap ++
-      statsForFiles(spark, path, added, base.partitionCols, schema, base.colMap)
-    // row-level CDF: the deleted rows (complete from the touched
-    // files alone — untouched files provably hold none), persisted
-    // before publish
-    val changeRel = writeChanges(
-      deleted.withColumn("_change_type", lit("delete")),
-      path, commitId, base.colMap)
-    publishCow(path, "delete", base, files, keptStats,
-      changes = Some(changeRel), sourceBounds = Some(bounds))
+      if (touched.isEmpty) spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], StructType.fromDDL(base.schemaDdl))
+      else readFiles(spark, path, touched, base.schemaDdl, base.colMap,
+        base.dvs)
+    val Hit = "__graft_hit"
+    val tagged = live.withColumn(Hit, pred).localCheckpoint(false)
+    val kept = tagged.where(!col(Hit) || col(Hit).isNull).drop(Hit)
+    val hit = tagged.where(col(Hit)).drop(Hit)
+    val freshRows = fresh.map(_(hit))
+    commitCow(spark, path, op, base, untouched,
+      Some(freshRows.fold(kept)(kept.unionByName)
+        .coalesce(outFileCount(spark, touched.size, nFresh))),
+      Some(changeRows(op, hit, freshRows)), Some(bounds))
   }
 
   // ------------------------------- deletion vectors (round 15)
@@ -3111,18 +3158,23 @@ object Versioned {
     spark.conf.getOption("spark.graft.dv.rewriteFraction")
       .map(_.toDouble).getOrElse(0.5)
 
-  /** Merge-on-read DELETE: commit per-file sidecars of matched row
-    * ordinals instead of rewriting file bytes. Write cost ∝ matched
-    * ROWS (sidecars + CDF parquet + one manifest), never touched-file
+  /** Merge-on-read DELETE and UPDATE (round 15): commit per-file
+    * sidecars of matched row ordinals instead of rewriting file
+    * bytes. Write cost ∝ matched ROWS (sidecars + CDF parquet + an
+    * update's postimage parquet + one manifest), never touched-file
     * bytes — the point-DML shape COW cannot give a 100 TB table.
     * Per-file triage from ONE localCheckpoint'd scan:
     *
     *  - zero matches → file carried by reference, DV state unchanged;
     *  - every live row matches → file DROPPED from the set (no
-    *    sidecar, no rewrite — strictly cheaper than both);
+    *    sidecar, no rewrite — strictly cheaper than both; an update's
+    *    rows all reappear as postimages);
     *  - matched fraction ≥ [[dvRewriteFraction]] → classic COW
     *    rewrite of the kept rows (the crossover);
     *  - else → sidecar with (existing ∪ new) ordinals.
+    *
+    * An update (`fresh` defined) writes the postimages of every
+    * matched row together with the crossover files' kept rows.
     *
     * The scan reads ordinals RAW (`_metadata.row_index`) and
     * re-applies the existing mask as a filter, so ordinals are always
@@ -3130,261 +3182,75 @@ object Versioned {
     * re-match (or re-emit CDF). CDF rows persist as plain change
     * parquet like the COW path — the change FEED is identical either
     * way, only the data layout differs. Conflict detection, CHECK
-    * enforcement (fresh rewrite files only — dropping rows cannot
-    * violate a CHECK) and the vacuum-race guard ride [[publishCow]]
-    * unchanged. */
-  private def dvDelete(spark: SparkSession, path: String,
+    * enforcement (fresh files only — dropping rows cannot violate a
+    * CHECK; postimages are gated like a COW update's rewrites) and
+    * the vacuum-race guard ride [[publishCow]] unchanged. */
+  private def dvDml(spark: SparkSession, path: String, op: String,
       base: Snapshot, pred: org.apache.spark.sql.Column,
       bounds: Map[String, ColStat], touched: Seq[String],
-      untouched: Seq[String]): Int = {
-    val schema = StructType.fromDDL(base.schemaDdl)
-    val logical = asNullableSchema(schema)
+      untouched: Seq[String], fresh: Option[DataFrame => DataFrame]): Int = {
+    val logical = asNullableSchema(StructType.fromDDL(base.schemaDdl))
     val physSchema = physicalSchema(logical, base.colMap)
-    val absOf: Map[String, String] =
-      touched.map(f => s"${norm(path)}/$f" -> f).toMap
+    val root = norm(path)
+    val absOf: Map[String, String] = touched.map(f => s"$root/$f" -> f).toMap
     val priorDvs = base.dvs.view.filterKeys(touched.toSet).toMap
     val FileC = "__g_file"
     val PosC = "__g_pos"
-    val DelFlag = "__graft_delete"
+    val Hit = "__graft_hit"
     val raw = spark.read.schema(physSchema)
-      .parquet(touched.map(f => s"${norm(path)}/$f"): _*)
+      .parquet(touched.map(f => s"$root/$f"): _*)
       .withColumn(FileC, col("_metadata.file_path"))
       .withColumn(PosC, col("_metadata.row_index"))
       .where(DeletionVectors.liveFilter(
-        DeletionVectors.dvPathsOf(norm(path), priorDvs),
+        DeletionVectors.dvPathsOf(root, priorDvs),
         strict = false)(col(FileC), col(PosC)))
     // physical → logical via the readFiles positional struct-cast
     // seam (round 16, ADVICE r15): a top-level `col(p).as(l)` alias
-    // leaves nested physical names in place, so a predicate over a
-    // renamed NESTED field would fail here where COW succeeds
+    // leaves nested physical names in place, so a predicate or SET
+    // over a renamed NESTED field would fail here where COW succeeds
     val tagged = raw.select(logical.fields.zip(physSchema.fields).map {
       case (lf, pf) => col(s"`${pf.name}`").cast(lf.dataType).as(lf.name)
     }.toIndexedSeq ++ Seq(col(FileC), col(PosC)): _*)
-      .withColumn(DelFlag, coalesce(pred, lit(false)))
+      .withColumn(Hit, coalesce(pred, lit(false)))
       .localCheckpoint() // evaluate a possibly nondeterministic pred ONCE
     val counts = tagged.groupBy(col(FileC))
-      .agg(count(lit(1)).as("n"), sum(col(DelFlag).cast("long")).as("h"))
+      .agg(count(lit(1)).as("n"), sum(col(Hit).cast("long")).as("h"))
       .collect()
-      .map(r => (DeletionVectors.normFilePath(r.getString(0)),
+      .map(r => (absOf(DeletionVectors.normFilePath(r.getString(0))),
         r.getLong(1), r.getLong(2)))
     val frac = dvRewriteFraction(spark)
-    var dropped = Vector.empty[String] // fully-dead: leave the set
-    var cowRel = Vector.empty[String] // rewrite kept rows
-    var dvRel = Vector.empty[String] // sidecar
-    var zeroRel = Vector.empty[String] // carried, DV state unchanged
-    counts.foreach { case (absFile, n, h) =>
-      val rel = absOf(absFile)
-      if (h == 0L) zeroRel :+= rel
-      else if (h == n) dropped :+= rel
-      else if (h.toDouble / n >= frac) cowRel :+= rel
-      else dvRel :+= rel
-    }
+    val triage: Map[String, Seq[String]] = counts.toSeq.groupMap {
+      case (_, n, h) =>
+        if (h == 0L) "zero" else if (h == n) "gone"
+        else if (h.toDouble / n >= frac) "cow" else "dv"
+    }(_._1)
+    def kind(k: String): Seq[String] = triage.getOrElse(k, Nil)
+    val (gone, cow, dv) = (kind("gone"), kind("cow"), kind("dv"))
     // a pruned-in file ALL of whose rows were already DV-masked reads
     // zero rows — it never appears in `counts`; carry it untouched
-    val counted = counts.map(c => absOf(c._1)).toSet
-    zeroRel ++= touched.filterNot(counted)
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
-    // sidecars: (existing ∪ new) ordinals per DV'd file, written FROM
-    // TASKS (round 16) — the driver receives only the file→sidecar
-    // rename map, O(DV'd files), never the matched ordinals
-    val dvAbs = dvRel.map(r => s"${norm(path)}/$r").toSet
-    val inDv = udf((f: String) =>
-      dvAbs.contains(DeletionVectors.normFilePath(f)))
-    val dvUpdates: Map[String, String] = DeletionVectors.writeSidecars(
-      tagged.where(col(DelFlag) && inDv(col(FileC))), FileC, PosC,
-      norm(path), dvRel, priorDvs, commitId)
-    // COW leg: kept rows of crossover files only
-    val cowAbsSet = cowRel.map(r => s"${norm(path)}/$r").toSet
-    val keepCow = tagged.where(!col(DelFlag) &&
-      udf((f: String) => cowAbsSet.contains(
-        DeletionVectors.normFilePath(f))).apply(col(FileC)))
-      .drop(FileC, PosC, DelFlag)
-    val added: Seq[String] =
-      if (cowRel.isEmpty) Nil
-      else {
-        val dataRel = s"data/c-$commitId"
-        writeData(keepCow.coalesce(math.max(1, cowRel.size)),
-          s"$path/$dataRel", base.partitionCols, base.colMap)
-        listParquet(dataPath(path, commitId)).map(f => s"$dataRel/$f")
-      }
-    val files = untouched ++ zeroRel ++ dvRel ++ added
-    val outStats = base.stats.view
-      .filterKeys((untouched ++ zeroRel ++ dvRel).toSet).toMap ++
-      statsForFiles(spark, path, added, base.partitionCols, schema, base.colMap)
-    val changeRel = writeChanges(
-      tagged.where(col(DelFlag)).drop(FileC, PosC, DelFlag)
-        .withColumn("_change_type", lit("delete")),
-      path, commitId, base.colMap)
-    publishCow(path, "delete", base, files, outStats,
-      changes = Some(changeRel), sourceBounds = Some(bounds),
-      dvUpdates = dvUpdates)
-  }
-
-  /** Merge-on-read UPDATE (round 15): matched rows are DV-masked on
-    * their origin files and their POSTIMAGES append as fresh files —
-    * write cost ∝ matched rows (postimage parquet + sidecars + CDF),
-    * never touched-file bytes. Per-file triage as [[dvDelete]]:
-    * zero-hit files carry; fully-hit files leave the set (every row
-    * reappears updated in the fresh write — no sidecar needed);
-    * crossover files COW their kept rows into the same fresh write.
-    * Postimage files are fresh appends, so CHECK constraints gate
-    * them in [[publishCow]] exactly like a COW update's rewrites. */
-  private def dvUpdate(spark: SparkSession, path: String,
-      base: Snapshot, pred: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column],
-      bounds: Map[String, ColStat], touched: Seq[String],
-      untouched: Seq[String]): Int = {
-    val schema = StructType.fromDDL(base.schemaDdl)
-    val tableCols: Seq[String] = schema.fields.map(_.name).toSeq
-    val logical = asNullableSchema(schema)
-    val physSchema = physicalSchema(logical, base.colMap)
-    val absOf: Map[String, String] =
-      touched.map(f => s"${norm(path)}/$f" -> f).toMap
-    val priorDvs = base.dvs.view.filterKeys(touched.toSet).toMap
-    val FileC = "__g_file"
-    val PosC = "__g_pos"
-    val UpdFlag = "__graft_update"
-    val raw = spark.read.schema(physSchema)
-      .parquet(touched.map(f => s"${norm(path)}/$f"): _*)
-      .withColumn(FileC, col("_metadata.file_path"))
-      .withColumn(PosC, col("_metadata.row_index"))
-      .where(DeletionVectors.liveFilter(
-        DeletionVectors.dvPathsOf(norm(path), priorDvs),
-        strict = false)(col(FileC), col(PosC)))
-    // readFiles positional struct-cast seam (round 16, ADVICE r15):
-    // nested physical names alias back too, so SET/predicates over
-    // renamed nested fields match the COW path
-    val tagged = raw.select(logical.fields.zip(physSchema.fields).map {
-      case (lf, pf) => col(s"`${pf.name}`").cast(lf.dataType).as(lf.name)
-    }.toIndexedSeq ++ Seq(col(FileC), col(PosC)): _*)
-      .withColumn(UpdFlag, coalesce(pred, lit(false)))
-      .localCheckpoint()
-    val counts = tagged.groupBy(col(FileC))
-      .agg(count(lit(1)).as("n"), sum(col(UpdFlag).cast("long")).as("h"))
-      .collect()
-      .map(r => (DeletionVectors.normFilePath(r.getString(0)),
-        r.getLong(1), r.getLong(2)))
-    val frac = dvRewriteFraction(spark)
-    var gone = Vector.empty[String] // fully-hit: leaves the set
-    var cowRel = Vector.empty[String]
-    var dvRel = Vector.empty[String]
-    var zeroRel = Vector.empty[String]
-    counts.foreach { case (absFile, n, h) =>
-      val rel = absOf(absFile)
-      if (h == 0L) zeroRel :+= rel
-      else if (h == n) gone :+= rel
-      else if (h.toDouble / n >= frac) cowRel :+= rel
-      else dvRel :+= rel
+    val zero = kind("zero") ++ touched.filterNot(counts.map(_._1).toSet)
+    def inFiles(rels: Seq[String]): Column = {
+      val abs = rels.map(r => s"$root/$r").toSet
+      udf((f: String) => abs.contains(DeletionVectors.normFilePath(f)))
+        .apply(col(FileC))
     }
-    val counted = counts.map(c => absOf(c._1)).toSet
-    zeroRel ++= touched.filterNot(counted)
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
-    val dvAbs = dvRel.map(r => s"${norm(path)}/$r").toSet
-    val inDv = udf((f: String) =>
-      dvAbs.contains(DeletionVectors.normFilePath(f)))
-    // task-side sidecar writes (round 16): driver sees only the
-    // file→sidecar rename map, O(DV'd files)
-    val dvUpdates: Map[String, String] = DeletionVectors.writeSidecars(
-      tagged.where(col(UpdFlag) && inDv(col(FileC))), FileC, PosC,
-      norm(path), dvRel, priorDvs, commitId)
-    val hit = tagged.where(col(UpdFlag)).drop(FileC, PosC, UpdFlag)
-    // store-assignment casts, as the COW update path (ADVICE r12 high)
-    val updated = hit.select(tableCols.map(c =>
-      set.getOrElse(c, col(c)).cast(schema(c).dataType).as(c)): _*)
-    val cowAbsSet = cowRel.map(r => s"${norm(path)}/$r").toSet
-    val inCow = udf((f: String) =>
-      cowAbsSet.contains(DeletionVectors.normFilePath(f)))
-    val keepCow = tagged.where(!col(UpdFlag) && inCow(col(FileC)))
-      .drop(FileC, PosC, UpdFlag)
-    val dataRel = s"data/c-$commitId"
-    writeData(keepCow.unionByName(updated)
-      .coalesce(math.max(1, cowRel.size + gone.size)),
-      s"$path/$dataRel", base.partitionCols, base.colMap)
-    val added = listParquet(dataPath(path, commitId))
-      .map(f => s"$dataRel/$f")
-    val files = untouched ++ zeroRel ++ dvRel ++ added
-    val outStats = base.stats.view
-      .filterKeys((untouched ++ zeroRel ++ dvRel).toSet).toMap ++
-      statsForFiles(spark, path, added, base.partitionCols, schema, base.colMap)
-    val changeRel = writeChanges(
-      hit.withColumn("_change_type", lit("update_preimage"))
-        .unionByName(updated
-          .withColumn("_change_type", lit("update_postimage"))),
-      path, commitId, base.colMap)
-    publishCow(path, "update", base, files, outStats,
-      changes = Some(changeRel), sourceBounds = Some(bounds),
-      dvUpdates = dvUpdates)
-  }
-
-  /** UPDATE rows matching `pred`, setting each `set` column to its
-    * expression over the ROW (unset columns keep their values) —
-    * SQL `UPDATE t SET c = expr WHERE pred` as the same file-granular
-    * copy-on-write as [[deleteWhere]] (round 12): predicate-disjoint
-    * files carry by reference, the predicate is evaluated ONCE per
-    * touched row (checkpointed flag), the CDF records
-    * update_preimage/update_postimage rows, and the publish rebases
-    * over provably-disjoint interloping appends. Rows the update
-    * CREATES (postimages) may leave the predicate's bounds — that is
-    * fine: bounds gate which EXISTING rows can match, and the
-    * rewritten files get fresh stats. */
-  def updateWhere(spark: SparkSession, path: String,
-      pred: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column]): Int = {
-    require(set.nonEmpty, s"versioned: updateWhere needs SET columns")
-    val base = snapshot(path)
-    val schema = StructType.fromDDL(base.schemaDdl)
-    val tableCols: Seq[String] = schema.fields.map(_.name).toSeq
-    set.keys.foreach(k => require(tableCols.contains(k),
-      s"versioned: SET column $k is not a table column at $path " +
-        s"(table: ${tableCols.mkString(", ")})"))
-    val node = org.apache.spark.sql.graftx.ColumnExpr.nodeOf(pred)
-    val bounds = predBounds(node)
-    val ranges = fileKeyStats(spark, path, base)
-    val (ranged, untouchedR) = ranges.partition { case (_, st) =>
-      bounds.forall { case (c, b) => statIntersects(st.get(base.physOf(c)), b) }
-    }
-    // bloom tier (round 16) — the deleteWhere discipline
-    val bloomKeep = bloomPrune(spark, path, base, ranged.map(_._1),
-      pointKeySets(node)).toSet
-    val (touched, bloomSkipped) = ranged.partition(r => bloomKeep(r._1))
-    val untouched = untouchedR ++ bloomSkipped
-    if (dvEnabled(spark) && touched.nonEmpty)
-      return dvUpdate(spark, path, base, pred, set, bounds,
-        touched.map(_._1), untouched.map(_._1))
-    val live =
-      if (touched.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else readFiles(spark, path, touched.map(_._1), base.schemaDdl,
-        base.colMap, base.dvs)
-    val UpdFlag = "__graft_update"
-    // lazy pin (round 17) — the deleteWhere rationale
-    val tagged = live.withColumn(UpdFlag, pred).localCheckpoint(false)
-    val kept = tagged
-      .where(!col(UpdFlag) || col(UpdFlag).isNull).drop(UpdFlag)
-    val hit = tagged.where(col(UpdFlag)).drop(UpdFlag)
-    // every output column casts to its table type (ADVICE r12 high:
-    // `SET v = v / 2` on BIGINT otherwise publishes DOUBLE parquet
-    // under a BIGINT manifest DDL — later reads fail until RESTORE)
-    val updated = hit.select(tableCols.map(c =>
-      set.getOrElse(c, col(c)).cast(schema(c).dataType).as(c)): _*)
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"data/c-$commitId"
-    writeData(kept.unionByName(updated)
-      .coalesce(math.max(1, touched.size)),
-      s"$path/$dataRel", base.partitionCols, base.colMap)
-    val added = listParquet(dataPath(path, commitId))
-      .map(f => s"$dataRel/$f")
-    val files = untouched.map(_._1) ++ added
-    val newStats = base.stats.view
-      .filterKeys(untouched.map(_._1).toSet).toMap ++
-      statsForFiles(spark, path, added, base.partitionCols, schema, base.colMap)
-    val changeRel = writeChanges(
-      hit.withColumn("_change_type", lit("update_preimage"))
-        .unionByName(updated
-          .withColumn("_change_type", lit("update_postimage"))),
-      path, commitId, base.colMap)
-    publishCow(path, "update", base, files, newStats,
-      changes = Some(changeRel), sourceBounds = Some(bounds))
+    val hit = tagged.where(col(Hit)).drop(FileC, PosC, Hit)
+    val freshRows = fresh.map(_(hit))
+    // COW leg: kept rows of crossover files, plus an update's postimages
+    val keepCow = tagged.where(!col(Hit) && inFiles(cow))
+      .drop(FileC, PosC, Hit)
+    val (rows, nOut) = freshRows.fold((keepCow, cow.size))(p =>
+      (keepCow.unionByName(p), cow.size + gone.size))
+    commitCow(spark, path, op, base, untouched ++ zero ++ dv,
+      Option.when(freshRows.isDefined || cow.nonEmpty)(
+        rows.coalesce(math.max(1, nOut))),
+      Some(changeRows(op, hit, freshRows)), Some(bounds),
+      // sidecars: (existing ∪ new) ordinals per DV'd file, written FROM
+      // TASKS (round 16) — the driver receives only the file→sidecar
+      // rename map, O(DV'd files), never the matched ordinals
+      sidecars = commitId => DeletionVectors.writeSidecars(
+        tagged.where(col(Hit) && inFiles(dv)), FileC, PosC, root, dv,
+        priorDvs, commitId))
   }
 
   /** OPTIMIZE: compact the live set into `numFiles` files — same
@@ -3417,16 +3283,9 @@ object Versioned {
             s"versioned: OPTIMIZE WHERE needs a stats-analyzable " +
               "predicate (equality/range/IN over stats-bearing " +
               s"columns), got $pred")
-          val ranges = fileKeyStats(spark, path, base)
-          val (t, u) = ranges.partition { case (_, st) =>
-            bounds.forall { case (c, b) => statIntersects(st.get(base.physOf(c)), b) }
-          }
-          (t.map(_._1), u.map(_._1))
+          pruneTouched(spark, path, base, bounds)
       }
     if (touchedFiles.isEmpty) return base.version
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"data/c-$commitId"
-    val schemaT = StructType.fromDDL(base.schemaDdl)
     val rows =
       if (carried.isEmpty) read(spark, path, Some(base.version))
       else readFiles(spark, path, touchedFiles, base.schemaDdl,
@@ -3448,18 +3307,12 @@ object Versioned {
         }
         rows.repartitionByRange(numFiles, key)
       }
-    writeData(laidOut, s"$path/$dataRel", base.partitionCols,
-      base.colMap)
-    val added = listParquet(dataPath(path, commitId))
-      .map(f => s"$dataRel/$f")
     // conflict RESOLUTION (round 11): OPTIMIZE is a pure layout op —
     // its rows are the base snapshot's verbatim — so ANY interloping
     // append rebases cleanly (the appended files simply stay in their
     // original layout); a steady append stream can no longer starve a
     // long compaction. sourceBounds = None encodes "no row footprint".
-    publishCow(path, "optimize", base, carried ++ added,
-      base.stats.view.filterKeys(carried.toSet).toMap ++
-        statsForFiles(spark, path, added, base.partitionCols, schemaT, base.colMap),
+    commitCow(spark, path, "optimize", base, carried, Some(laidOut),
       changes = None, sourceBounds = None)
   }
 
@@ -3493,23 +3346,13 @@ object Versioned {
     if (touched.isEmpty ||
       (touched.size == 1 && !base.dvs.contains(touched.head)))
       return base.version
-    val carried = base.files.filterNot(touched.toSet)
     val totalBytes = touched.map(f => sizeOf(f).getOrElse(0L)).sum
     val outFiles = math.max(1L,
       math.min(4096L, (totalBytes + target - 1) / target)).toInt
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"data/c-$commitId"
-    val schemaT = StructType.fromDDL(base.schemaDdl)
     val rows = readFiles(spark, path, touched, base.schemaDdl,
       base.colMap, base.dvs) // masks apply: live rows only
-    writeData(rows.coalesce(outFiles), s"$path/$dataRel",
-      base.partitionCols, base.colMap)
-    val added = listParquet(dataPath(path, commitId))
-      .map(f => s"$dataRel/$f")
-    publishCow(path, "optimize", base, carried ++ added,
-      base.stats.view.filterKeys(carried.toSet).toMap ++
-        statsForFiles(spark, path, added, base.partitionCols, schemaT,
-          base.colMap),
+    commitCow(spark, path, "optimize", base,
+      base.files.filterNot(touched.toSet), Some(rows.coalesce(outFiles)),
       changes = None, sourceBounds = None)
   }
 
@@ -3526,19 +3369,11 @@ object Versioned {
     val base = snapshot(path)
     if (base.dvs.isEmpty) return base.version
     val masked = base.files.filter(base.dvs.contains)
-    val carried = base.files.filterNot(base.dvs.contains)
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"data/c-$commitId"
-    val schemaT = StructType.fromDDL(base.schemaDdl)
     val rows = readFiles(spark, path, masked, base.schemaDdl,
       base.colMap, base.dvs) // the mask applies: live rows only
-    writeData(rows.coalesce(math.max(1, masked.size)),
-      s"$path/$dataRel", base.partitionCols, base.colMap)
-    val added = listParquet(dataPath(path, commitId))
-      .map(f => s"$dataRel/$f")
-    publishCow(path, "optimize", base, carried ++ added,
-      base.stats.view.filterKeys(carried.toSet).toMap ++
-        statsForFiles(spark, path, added, base.partitionCols, schemaT, base.colMap),
+    commitCow(spark, path, "optimize", base,
+      base.files.filterNot(base.dvs.contains),
+      Some(rows.coalesce(math.max(1, masked.size))),
       changes = None, sourceBounds = None)
   }
 
