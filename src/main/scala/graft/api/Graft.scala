@@ -74,8 +74,11 @@ object Graft {
     def simhash(docs: DataFrame): DataFrame = DedupOps.simhash64Of(docs)
 
     /** qid: d6_dup_clusters — connected-component labels `(doc_id,
-      * cluster_id)` from a pair list + id universe (iterative
-      * min-label; O(1) driver traffic per round). At scale, persist
+      * cluster_id = component minimum)` from a pair list + id universe.
+      * One Spark job: a union-find per pair partition, merged on the
+      * driver, which holds one entry per document that has a pair.
+      * Both pair columns and `universe.doc_id` must be integral types
+      * (a `require` names the offending column). At scale, persist
       * the result once per corpus snapshot and join it from every
       * consumer (keepBest / dedupWeights / clusterSplit). */
     def clusterLabels(pairs: DataFrame, universe: DataFrame): DataFrame =

@@ -311,8 +311,9 @@ object MinHash {
   }
 
   /** Keeper selection: connected pairs collapse to min-id keepers
-    * (1 round of label propagation per call — iterate to a fixpoint
-    * for deep duplicate chains). */
+    * (1 round of label propagation per call — for deep duplicate
+    * chains use the connected-component labels of
+    * `DupClusters.computeLabels` instead). */
   def keepers(pairs: DataFrame, allIds: DataFrame, idCol: String): DataFrame = {
     val mins = pairs.groupBy(col("id_b").as(idCol))
       .agg(min(col("id_a")).as("keeper"))

@@ -481,24 +481,21 @@ object DedupOps {
     * pair generation: pick one keeper per component, not per pair —
     * pairs alone under-delete transitive duplicate chains).
     *
-    * Iterative min-label propagation: labels = min(own, neighbors')
-    * to fixpoint. Each iteration is one equi-join + groupBy(min) —
-    * the standard distributed CC shape; iterations = O(graph
-    * diameter), and near-dup graphs are unions of small cliques, so
-    * convergence is 2–3 rounds in practice. Only the O(1) changed
-    * count crosses the driver per round. Singleton docs keep their
-    * own id as cluster_id. */
+    * Labels come from `DupClusters.computeLabels`: a union-find per
+    * pair partition, merged on the driver in one Spark job, so the
+    * cost does not grow with component diameter. cluster_id is the
+    * component's minimum doc_id; singleton docs keep their own id. */
   def d6DupClusters(s: SparkSession, dir: String): DataFrame =
     clusterLabels(s, dir).orderBy(col("doc_id"))
 
   /** The MATERIALIZED labels table for `dir` (operators.DupClusters):
-    * the simhash → pairs → min-label fixpoint runs once per session
-    * per corpus; d6, d13, and any downstream curation stage all JOIN
-    * the same checkpointed table — the production shape, where labels
-    * are written once per corpus snapshot. The CC iteration itself
-    * lives in `DupClusters.computeLabels` (spec-covered with planted
-    * graphs); this binding only supplies the d3 pair list and the
-    * documents universe. */
+    * the simhash → pairs → connected components pipeline runs once per
+    * session per corpus; d6, d13, and any downstream curation stage
+    * all JOIN the same checkpointed table — the production shape,
+    * where labels are written once per corpus snapshot. The CC kernel
+    * itself lives in `DupClusters.computeLabels` (spec-covered with
+    * planted graphs and graph shapes); this binding only supplies the
+    * d3 pair list and the documents universe. */
   private def clusterLabels(s: SparkSession, dir: String): DataFrame =
     graft.operators.DupClusters.labelsFor(s, dir)(
       (d3HammingPairs(s, dir).select(col("doc_a"), col("doc_b")),

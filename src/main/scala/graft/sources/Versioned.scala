@@ -931,7 +931,12 @@ object Versioned {
           case LongStat(n, _) => f -> n
         }
       }.toMap
-      BloomFilters.buildFor(spark, norm(path), files, bloomCols, rowCounts)
+      // a file the footer counts 0 rows in has no key to record
+      // (commitCow does not even reference it): the build skips it
+      // instead of reading it
+      BloomFilters.buildFor(spark, norm(path),
+        files.filterNot(f => rowCounts.get(f).contains(0L)), bloomCols,
+        rowCounts)
     }
     if (pcols.isEmpty) footer
     else files.map(f => f -> (footer.getOrElse(f, Map.empty) ++

@@ -42,6 +42,19 @@ class ApiSpec extends AnyFunSuite {
     assert(d1 === Map(1L -> 2L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
   }
 
+  test("clusterLabels rejects non-integral id columns, naming column and type") {
+    import spark.implicits._
+    val universe = Seq(1L, 2L).toDF("doc_id")
+    val e = intercept[IllegalArgumentException](Graft.dedup.clusterLabels(
+      Seq(("1", "2")).toDF("doc_a", "doc_b"), universe))
+    assert(e.getMessage.contains("doc_a") && e.getMessage.contains("string"),
+      e.getMessage)
+    val u = intercept[IllegalArgumentException](Graft.dedup.clusterLabels(
+      Seq((1, 2L)).toDF("doc_a", "doc_b"), Seq("1").toDF("doc_id")))
+    assert(u.getMessage.contains("doc_id") && u.getMessage.contains("string"),
+      u.getMessage)
+  }
+
   test("quickstart: minhash pairs -> labels -> keepBest/weights/split") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

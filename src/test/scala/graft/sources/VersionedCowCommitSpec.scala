@@ -100,6 +100,23 @@ class VersionedCowCommitSpec extends AnyFunSuite {
     }
   }
 
+  test("zero-row files: a delete that matches nothing builds no bloom " +
+    "sidecar for its unreferenced data file") {
+    spark.conf.set(BloomFilters.ColumnsConf, "id")
+    try {
+      val t = table()
+      val (v, jobs) = JobLog.record(spark.sparkContext)(
+        Versioned.deleteWhere(spark, t, none))
+      assert(v === 2)
+      assert(!jobs.exists(_.site.contains("BloomFilters")), jobs.mkString("\n"))
+      val live = Versioned.snapshot(t).files
+      val sidecars = Files.list(java.nio.file.Paths.get(t, "_bloom"))
+      try assert(sidecars.iterator().asScala.map(p => s"_bloom/${p.getFileName}")
+        .toSet === live.map(BloomFilters.sidecarRel).toSet)
+      finally sidecars.close()
+    } finally spark.conf.unset(BloomFilters.ColumnsConf)
+  }
+
   test("zero-row files: a delete of every row leaves an empty live set, " +
     "and history still shows its change feed") {
     val t = table()
