@@ -66,23 +66,44 @@ object Tables {
     * non-empty, returning (name → rowCount). Round-5 lesson: a missing
     * events fixture let 8 queries "pass" the bench at no-op speed and
     * silently drop out of the correctness artifact — fail LOUDLY here
-    * instead, before any query runs. `head(1)` not `count()`: existence
-    * of one row is the gate, the full count is reported best-effort
-    * from parquet metadata (O(footers)). */
+    * instead, before any query runs. Row counts are summed from the
+    * parquet footers of the table's data files (one file, or a
+    * directory's files not starting with `_` or `.`): no Spark job.
+    * Each table still goes through `apply`, so the schema cache and
+    * the events read settings are set up as for a query. */
   def preflight(spark: SparkSession, dir: String,
       names: Seq[String] = all): Seq[(String, Long)] = {
     val missing = names.filterNot(n => new java.io.File(s"$dir/$n.parquet").exists())
     if (missing.nonEmpty)
       sys.error(s"[preflight] missing fixture table(s) in $dir: " +
         missing.mkString(", ") + " — refusing to run against a partial fixture set")
-    val counts = names.map { n =>
-      val df = apply(spark, dir, n)
-      val nonEmpty = df.head(1).nonEmpty
-      if (!nonEmpty)
+    names.map { n =>
+      apply(spark, dir, n)
+      val rows = footerRowCount(spark, s"$dir/$n.parquet")
+      if (rows == 0)
         sys.error(s"[preflight] fixture table $n in $dir is EMPTY — " +
           "refusing to run (timings/results would be meaningless)")
-      n -> df.count()
+      n -> rows
     }
-    counts
+  }
+
+  /** Rows in the parquet file or directory at `path`, from footers. */
+  private def footerRowCount(spark: SparkSession, path: String): Long = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def dataFiles(st: FileStatus): Seq[FileStatus] =
+      if (st.isFile) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => c.getPath.getName.startsWith("_") ||
+          c.getPath.getName.startsWith("."))
+        .flatMap(dataFiles)
+    dataFiles(fs.getFileStatus(root)).map { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
   }
 }

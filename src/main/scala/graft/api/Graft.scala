@@ -69,8 +69,10 @@ object Graft {
     def incrementalMinhashProbe(batch: DataFrame, history: DataFrame): DataFrame =
       DedupOps.incrementalProbeOf(batch, history)
 
-    /** qid: d3_simhash — 64-bit SimHash per document over `(doc_id,
-      * text)`. */
+    /** qid: d3_simhash — 64-bit SimHash over `(doc_id, text)`: one
+      * row `(doc_id, n_tok, simhash, band0..band3)` per input row with
+      * non-null text, computed row-locally (no shuffle). `doc_id` is
+      * expected unique; rows sharing a `doc_id` are not merged. */
     def simhash(docs: DataFrame): DataFrame = DedupOps.simhash64Of(docs)
 
     /** qid: d6_dup_clusters — connected-component labels `(doc_id,

@@ -191,45 +191,27 @@ object DedupOps {
         (coalesce(col("est_jaccard"), lit(0.0)) >= 0.5).as("is_dup"))
   }
 
-  /** D3 SimHash core: 64-bit signature — bit j = majority, across the
-    * distinct-token set, of bit j of the first 64 bits of md5(token).
-    * 64 bits replaces the r1 16-bit scheme, whose 2^16 signature space
-    * could not separate a self-similar corpus (28k hamming≤1 pairs
-    * from 500 docs) and whose 8-bit band keys drove the band self-join
-    * toward N²/256. Here band keys are 16-bit (65,536 values) and the
-    * signature discriminates. All codegen'd column expressions: the
-    * two `conv` calls per token parse md5 hex to two 32-bit chunks,
-    * bits fall out with shifts. Returns doc_id, n_tok, the 64-char
-    * bit-string signature, and the 4×16-bit pigeonhole band keys. */
+  /** D3 SimHash signatures of the fixture's documents. */
   private def simhash64(s: SparkSession, dir: String): DataFrame =
     simhash64Of(Tables(s, dir, "documents"))
 
-  /** Simhash kernel over an arbitrary documents relation (doc_id,
-    * text) — reused by the TextPipeline curation stages (M7). */
-  def simhash64Of(docs: DataFrame): DataFrame = {
-    val tk = docs
-      .repartition(col("doc_id")) // spread md5 work (single-split file)
-      .select(col("doc_id"), explode(array_distinct(toks)).as("tok"))
-      .withColumn("h", md5(col("tok")))
-      .withColumn("c0", conv(substring(col("h"), 1, 8), 16, 10).cast("long"))
-      .withColumn("c1", conv(substring(col("h"), 9, 8), 16, 10).cast("long"))
-    val bitSums = (0 until 64).map { j =>
-      val c = if (j < 32) col("c0") else col("c1")
-      sum(shiftright(c, 31 - (j % 32)).bitwiseAND(lit(1L))).as(s"s$j")
-    }
-    val agg = tk.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tok"), bitSums: _*)
-    def bit(j: Int): Column = col(s"s$j") * 2 > col("n_tok")
-    val bits = concat((0 until 64).map(j =>
-      when(bit(j), "1").otherwise("0")): _*)
-    val bands = (0 until 4).map { k =>
-      (0 until 16).map(i =>
-        when(bit(16 * k + i), lit(1 << (15 - i))).otherwise(lit(0)))
-        .reduce(_ + _).cast("int").as(s"band$k")
-    }
-    agg.select(
-      Seq(col("doc_id"), col("n_tok"), bits.as("simhash")) ++ bands: _*)
-  }
+  /** 64-bit SimHash per row of a `(doc_id, text)` relation — d3, the
+    * dup-labels build (d6/d13/d18/o11) and m7's dedup_simhash stage.
+    * Bit j is the majority, over the distinct tokens of
+    * `split(text, " ")`, of bit j of md5(token)'s first 64 bits; the
+    * 64 bits replaced an r1 16-bit scheme whose 2^16 signatures could
+    * not separate a self-similar corpus. Rows with null text are
+    * dropped; every other row yields one row — `doc_id` is expected
+    * unique, duplicates are not merged. Returns doc_id, n_tok, the
+    * 64-char bit-string signature and the 4×16-bit pigeonhole band
+    * keys, computed by the row-local `graftx.Simhash64` kernel in the
+    * scan's projection: no shuffle, no token explode, no aggregate. */
+  def simhash64Of(docs: DataFrame): DataFrame =
+    docs.where(col("text").isNotNull)
+      .select(col("doc_id"),
+        org.apache.spark.sql.graftx.Simhash64
+          .simhash64(array_distinct(toks)).as("sig"))
+      .select(col("doc_id"), col("sig.*"))
 
   /** D3 SimHash signature table (public shape). */
   def d3Simhash(s: SparkSession, dir: String): DataFrame =

@@ -133,14 +133,14 @@ class DupClustersSpec extends AnyFunSuite {
     assert(labelsOf(pairs, universe) === bfsLabels(edges, ids))
   }
 
-  test("job budget: a cold d6 build at sf0.001 fires at most 12 jobs") {
+  test("job budget: a cold d6 build at sf0.001 fires at most 9 jobs") {
     val sf = "/root/testdata/sf0.001"
     DupClusters.invalidate()
     val (d6, jobs) = JobLog.record(spark.sparkContext) {
       queries.DedupOps.d6DupClusters(spark, sf)
     }
     info(s"cold d6 build: ${jobs.size} jobs")
-    assert(jobs.size <= 12, jobs.mkString("\n"))
+    assert(jobs.size <= 9, jobs.mkString("\n"))
     d6.write.format("noop").mode("overwrite").save()
   }
 

@@ -188,6 +188,18 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("SortMergeJoin") && !plan.contains("HashAggregate"))
   }
 
+  test("simhash signatures: row-local, the executed plan's one exchange is the sort's") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val df = queries.DedupOps.d3Simhash(spark, sf)
+    assert(df.collect().nonEmpty) // executedPlan is now AQE's final plan
+    val exchanges = new AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size === 1, df.queryExecution.executedPlan.toString)
+    assert(exchanges.head.outputPartitioning.getClass.getSimpleName ===
+      "RangePartitioning", exchanges.head.toString)
+  }
+
   test("salted skew join: build side replicates via Generate, join keys carry the salt") {
     val plan = formatted(queries.Relational.j10SkewJoin(spark, sf))
     assert(plan.contains("Generate"),
