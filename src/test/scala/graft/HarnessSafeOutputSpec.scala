@@ -43,7 +43,13 @@ class HarnessSafeOutputSpec extends AnyFunSuite {
   }
 
   test("every registered query returns only atomic (pandas-sortable) columns") {
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+    // s9_aflux's only input is the reference's canned AFLUX response
+    // (FIXTURES.md §A6), outside the repository: checked where present
+    val afluxFixture = java.nio.file.Files.exists(
+      java.nio.file.Paths.get(graft.sources.Aflux.PaperFixture))
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => n != "s9_aflux" || afluxFixture)
+    val offenders = names.flatMap { name =>
       val schema = SparkEntry.queries(name)(spark, sf).schema
       val bad = schema.fields.filter(f => nested(f.dataType))
       if (bad.isEmpty) Nil
