@@ -1,6 +1,7 @@
 package graft.fit
 
-import java.nio.file.{Files, Paths}
+import java.nio.channels.{Channels, FileChannel}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.calculators.Calculator
@@ -21,12 +22,12 @@ import graft.pipeline.ActiveLoop
   * the ActiveLoop's distort/grade stages.
   *
   * Job budget: one `iterate()` — the render of the newest iteration
-  * plus one [[ActiveLoop.step]] — fires at most 10 Spark jobs and no
-  * parquet schema inference. The iteration number comes from the ActiveLoop's
-  * listing-keyed cache, so the render check and the step read it
-  * without a job while the active set's files are the ones this loop
-  * last wrote; an append by another loop on the same directory changes
-  * the listing and is picked up with one re-read.
+  * plus one [[ActiveLoop.step]] — fires 4 Spark jobs, none with a
+  * shuffle, and no parquet schema inference. The iteration number
+  * comes from the ActiveLoop's listing-keyed cache, so the render check
+  * and the step read it without a job while the active set's files are
+  * the ones this loop last wrote; an append by another loop on the same
+  * directory changes the listing and is picked up with one re-read.
   */
 final class MtpLoop(spark: SparkSession, calc: Calculator,
     workDir: String, species: Seq[String], ranSeed: Long = 42L) {
@@ -37,40 +38,37 @@ final class MtpLoop(spark: SparkSession, calc: Calculator,
 
   /** Cumulative train.cfg: incremental append of iterations newer
     * than the rendered-through marker (mtp.py:476–517 — bulk load
-    * once, then append only the last iteration). The marker makes the
-    * render idempotent: re-running after a crash appends nothing
-    * twice.
+    * once, then append only the last iteration). The marker records the
+    * iteration and train.cfg's byte length after the append; a render
+    * first truncates the file back to that length, so re-running after
+    * a crash anywhere in the render appends nothing twice. A missing or
+    * unreadable marker re-renders the file from scratch (the render is
+    * a deterministic projection of the table).
     *
-    * Distributed render: each increment is written as a sorted chunk
-    * of part files (`repartitionByRange` + `sortWithinPartitions` on
-    * the block text — disjoint sorted ranges, so parts concatenated
-    * in partition order ARE the globally sorted chunk), then
-    * byte-streamed onto train.cfg at the `mlp` hand-off. No row data
-    * ever crosses the driver — only file bytes at the single-file
+    * Each increment is one job: a single partition sorted on the block
+    * text (`coalesce(1)` + `sortWithinPartitions`, no sample job and no
+    * shuffle) written as one part file under `chunks/`, then
+    * byte-streamed onto train.cfg at the `mlp` hand-off and deleted. No
+    * row data crosses the driver — only file bytes at the single-file
     * boundary the external trainer requires. */
-  def writeTrainCfg(): java.nio.file.Path = {
+  def writeTrainCfg(): Path = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val iter = active.currentIteration
     require(iter >= 0,
       s"MtpLoop.writeTrainCfg: no active set under $workDir; call bootstrap first")
     val out = Paths.get(s"$workDir/train.cfg")
     val marker = Paths.get(s"$workDir/.rendered_iter")
-    val rendered =
-      if (Files.exists(marker) && Files.exists(out))
-        Files.readString(marker).trim.toInt
-      else -1
+    val (rendered, length) = renderedThrough(out, marker)
     if (rendered >= iter) return out
     val ds = active.current.where(s"iteration > $rendered")
       .as[graft.pipeline.ConfigRow].map(_.toConfig)
-    val chunkDir = Paths.get(s"$workDir/chunks/upto_$iter")
+    val chunkDir = Paths.get(s"$workDir/chunks")
     TrainTable.toCfgLines(ds, species)
       .map(_.stripSuffix("\n")) // text writer restores the final newline
       .toDF("cfg")
-      .repartitionByRange(col("cfg"))
-      .sortWithinPartitions(col("cfg"))
+      .coalesce(1)
+      .sortWithinPartitions("cfg")
       .write.mode("overwrite").text(chunkDir.toString)
-    if (rendered < 0) Files.deleteIfExists(out)
     val partFiles = {
       val s = Files.list(chunkDir)
       try s.iterator().asScala.toVector.filter(
@@ -78,13 +76,37 @@ final class MtpLoop(spark: SparkSession, calc: Calculator,
         .sortBy(_.getFileName.toString)
       finally s.close()
     }
-    val os = Files.newOutputStream(out,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    try partFiles.foreach(p => Files.copy(p, os))
-    finally os.close()
-    Files.writeString(marker, iter.toString)
+    val ch = FileChannel.open(out, StandardOpenOption.CREATE,
+      StandardOpenOption.WRITE)
+    val size = try {
+      ch.truncate(length).position(length)
+      val os = Channels.newOutputStream(ch)
+      partFiles.foreach(p => Files.copy(p, os))
+      ch.size()
+    } finally ch.close()
+    Files.writeString(marker, s"$iter $size")
+    deleteTree(chunkDir)
     out
+  }
+
+  /** (iteration, train.cfg byte length) of the last completed render;
+    * (-1, 0) when there is none to extend — no marker, one that does not
+    * parse, or a train.cfg shorter than it records. */
+  private def renderedThrough(out: Path, marker: Path): (Int, Long) = {
+    val recorded =
+      if (!Files.exists(marker) || !Files.exists(out)) None
+      else Files.readString(marker).trim.split(' ') match {
+        case Array(i, n) => i.toIntOption.zip(n.toLongOption)
+        case _ => None
+      }
+    recorded.filter { case (i, n) => i >= 0 && n >= 0 && n <= Files.size(out) }
+      .getOrElse((-1, 0L))
+  }
+
+  private def deleteTree(root: Path): Unit = if (Files.exists(root)) {
+    val s = Files.walk(root)
+    try s.iterator().asScala.toVector.reverse.foreach(Files.delete)
+    finally s.close()
   }
 
   /** One full AL pass: train-file render → (external train) → relax/

@@ -1,7 +1,8 @@
 package graft.pipeline
 
+import scala.collection.mutable
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.calculators.Calculator
@@ -15,9 +16,9 @@ import graft.generators.Generators
   * Re-expressed as an idempotent driver loop over batch jobs — the
   * idiomatic Spark shape for bounded iterative ML. Per iteration:
   * relax/perturb candidates from the current set (stand-in for MTP
-  * relax), grade them (stand-in for maxvol extrapolation), select
-  * top-k, anti-join against everything seen (D1/G12), run the
-  * calculator, append with an `iteration` column. State lives
+  * relax), run the calculator and grade them (stand-in for maxvol
+  * extrapolation), select top-k, drop those already in the set
+  * (D1/G12), append with an `iteration` column. State lives
   * entirely in the persisted parquet table, so a crashed loop resumes
   * from the last completed iteration (the reference's `status.txt`
   * becomes table contents).
@@ -25,11 +26,19 @@ import graft.generators.Generators
   * Job budget: reading the table runs no job (the schema is known, the
   * existence check is a file listing), and `currentIteration` runs none
   * while the table's file listing is the one its cached value was read
-  * from. One `step` evaluates the candidate pipeline once (a job per
-  * shuffle stage under AQE), collects the at most `selectK` fresh rows
-  * and appends them with one write job. Together with MtpLoop's render
-  * one iteration is 7 jobs at `selectK` = 20 (MtpLoopSpec holds it to
-  * at most 10).
+  * from. One `step` is three jobs and no shuffle: the candidate pass,
+  * the seen check over at most `selectK` uuids, and the append. Together
+  * with MtpLoop's render one iteration is 4 jobs (MtpLoopSpec holds it
+  * to that, each job a single stage).
+  *
+  * The candidate pass is partition-local top-k with a driver merge.
+  * Each partition distorts its rows, drops repeated pre-extract uuids,
+  * runs the calculator, and emits its distinct top `selectK` by
+  * (grade desc, uuid asc); the driver dedups the at most
+  * partitions × `selectK` rows by pre-extract uuid and keeps the first
+  * `selectK`. That is the global distinct top k: a member of it is
+  * outranked in its own partition only by uuids that also outrank it
+  * globally, of which there are fewer than k, so its partition emits it.
   *
   * Listing-keyed cache invariant: the driver keeps max(iteration)
   * together with the data-file listing (name, length, mtime) it holds
@@ -69,8 +78,11 @@ final class ActiveLoop(spark: SparkSession, calc: Calculator,
 
   private def table: DataFrame = spark.read.schema(schema).parquet(tablePath)
 
+  /** The active set; before `bootstrap`, an empty relation with the
+    * table's schema. */
   def current: DataFrame =
-    if (listing().isDefined) table else spark.emptyDataFrame
+    if (listing().isDefined) table
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   def currentIteration: Int = (listing(), cached) match {
     case (None, _) => -1
@@ -85,10 +97,9 @@ final class ActiveLoop(spark: SparkSession, calc: Calculator,
   /** Seed iteration 0 from initial configs. */
   def bootstrap(seeds: Seq[Config]): Unit =
     if (currentIteration < 0) {
-      val cal = calc
-      val ds = spark.createDataset(seeds).map(cal.extract(_))
-      ds.toDF().withColumn("iteration", lit(0))
-        .write.mode("overwrite").parquet(tablePath)
+      spark.createDataset(seeds.map(calc.extract)).toDF()
+        .withColumn("iteration", lit(0))
+        .coalesce(1).write.mode("overwrite").parquet(tablePath)
       remember(if (seeds.isEmpty) -1 else 0)
     }
 
@@ -99,29 +110,35 @@ final class ActiveLoop(spark: SparkSession, calc: Calculator,
     require(last >= 0,
       s"ActiveLoop.step: no active set at $tablePath; call bootstrap first")
     val iter = last + 1
-    // locals only in the closures below — capturing fields would drag
+    // locals only in the closure below — capturing fields would drag
     // `this` (and the non-serializable SparkSession) into the task
     val seed = ranSeed + iter
     val nCand = nCandidatesPerConfig
+    val k = selectK
     val cal = calc
     val cur = current
-    val cands = cur.as[ConfigRow].flatMap { row =>
-      Generators.distortion(row.toConfig, nCand,
-        covDiag = 0.0016, volumeFactor = 1.0, rattle = 0.02,
-        ranSeed = seed)
-    }.dropDuplicates("uuid")
-    // grade: stand-in extrapolation score = stub energy magnitude
-    val graded = cands.map(cal.extract(_))
-      .map(c => (c, math.abs(c.energy.getOrElse(0.0))))
-      .toDF("config", "grade")
-    val selected = graded.orderBy(col("grade").desc,
-        col("config.uuid").asc).limit(selectK)
-      .select(col("config.*"))
-    // D1/G12 dedup-guarded append: never re-add a seen content hash.
-    // At most selectK rows: evaluated once, counted and appended from
-    // the driver.
-    val fresh = selected.join(cur.select(col("uuid")),
-      Seq("uuid"), "left_anti").as[Config].collect().toSeq
+    // (pre-extract uuid, graded candidate): each partition's distinct top k
+    val local = cur.as[ConfigRow].mapPartitions { rows =>
+      val drawn = mutable.HashSet.empty[String]
+      val top = mutable.PriorityQueue.empty[(String, Config)](ActiveLoop.rank)
+      rows.flatMap(row => Generators.distortion(row.toConfig, nCand,
+          covDiag = 0.0016, volumeFactor = 1.0, rattle = 0.02,
+          ranSeed = seed))
+        .filter(c => drawn.add(c.uuid))
+        .foreach { c =>
+          top.enqueue(c.uuid -> cal.extract(c))
+          if (top.size > k) top.dequeue() // the worst ranked
+        }
+      top.iterator
+    }.collect()
+    val selected = local.sorted(ActiveLoop.rank)
+      .distinctBy(_._1).take(k).map(_._2).toSeq
+    // D1/G12 dedup-guarded append: never re-add a seen content hash
+    val seen =
+      if (selected.isEmpty) Set.empty[String]
+      else cur.where(col("uuid").isin(selected.map(_.uuid): _*))
+        .select("uuid").as[String].collect().toSet
+    val fresh = selected.filterNot(c => seen(c.uuid))
     if (fresh.nonEmpty) {
       spark.createDataset(fresh).toDF().withColumn("iteration", lit(iter))
         .coalesce(1).write.mode("append").parquet(tablePath)
@@ -139,6 +156,20 @@ final class ActiveLoop(spark: SparkSession, calc: Calculator,
       .map(_ => step(nCandidatesPerConfig, selectK))
       .takeWhile(_ > 0)
       .toSeq
+}
+
+object ActiveLoop {
+
+  /** Stand-in extrapolation grade: the calculator's energy magnitude. */
+  private def grade(c: Config): Double = math.abs(c.energy.getOrElse(0.0))
+
+  /** Selection order of graded candidates keyed by pre-extract uuid,
+    * best first: grade desc (NaN first, as Spark sorts it), then uuid,
+    * then the key, so that the order is total. */
+  private val rank: Ordering[(String, Config)] =
+    Ordering.by[(String, Config), (Double, String, String)](
+      kc => (grade(kc._2), kc._2.uuid, kc._1))(Ordering.Tuple3(
+      Ordering.Double.TotalOrdering.reverse, Ordering.String, Ordering.String))
 }
 
 /** Row mirror of Config for Dataset reads from parquet (the open

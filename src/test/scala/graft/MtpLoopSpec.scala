@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.calculators.StubCalculator
 import graft.fit.MtpLoop
-import graft.pipeline.MaterialsPipeline
+import graft.pipeline.{ConfigRow, MaterialsPipeline}
 import graft.sources.ConfigsIO
 
 class MtpLoopSpec extends AnyFunSuite {
@@ -20,31 +20,77 @@ class MtpLoopSpec extends AnyFunSuite {
       "org.apache.spark.sql.graftx.GraftExtensions")
     .getOrCreate()
 
+  private val species = Seq("Ag", "Pd")
+
+  /** Driver-side reference of a render: the blocks of `iters`, sorted. */
+  private def sortedBlocks(dir: String, iters: Range): String = {
+    import spark.implicits._
+    val ds = spark.read.parquet(s"$dir/active_set")
+      .where(col("iteration").isin(iters: _*))
+      .as[ConfigRow].map(_.toConfig)
+    graft.fit.TrainTable.toCfgLines(ds, species).collect().sorted.mkString
+  }
+
+  /** The incremental train.cfg of iterations 0..last: each iteration's
+    * blocks sorted, concatenated in iteration order. */
+  private def incremental(dir: String, last: Int): String =
+    (0 to last).map(i => sortedBlocks(dir, i to i)).mkString
+
+  private def trainCfg(dir: String): String =
+    Files.readString(Paths.get(s"$dir/train.cfg"))
+
   test("MTP loop: incremental train.cfg grows with the active set (§3.2)") {
     val dir = Files.createTempDirectory("mtp").toString
-    val loop = new MtpLoop(spark, StubCalculator(), dir, Seq("Ag", "Pd"))
+    val loop = new MtpLoop(spark, StubCalculator(), dir, species)
     val added = loop.run(MaterialsPipeline.seeds, iterThreshold = 3)
     assert(added.nonEmpty && added.forall(_ > 0))
-    val cfg = Files.readString(Paths.get(s"$dir/train.cfg"))
+    val cfg = trainCfg(dir)
     val nBlocks = "BEGIN_CFG".r.findAllIn(cfg).length
     assert(nBlocks.toLong === loop.setSize) // cumulative file == table
     // idempotent re-render: calling again appends nothing
     loop.writeTrainCfg()
-    val cfg2 = Files.readString(Paths.get(s"$dir/train.cfg"))
-    assert(cfg2 === cfg)
-    // the distributed chunk render is byte-identical to the driver-side
-    // reference layout (sorted blocks per incremental chunk): re-render
-    // from scratch in one chunk and compare against a collect().sorted
-    // rendering of the full table
-    import spark.implicits._
-    val dir2 = Files.createTempDirectory("mtp2").toString
-    val loop2 = new MtpLoop(spark, StubCalculator(), dir2, Seq("Ag", "Pd"))
-    loop2.bootstrap(MaterialsPipeline.seeds)
-    loop2.writeTrainCfg()
-    val distributed = Files.readString(Paths.get(s"$dir2/train.cfg"))
-    val reference = graft.fit.TrainTable.toCfgLines(
-      loop2.activeConfigs, Seq("Ag", "Pd")).collect().sorted.mkString
-    assert(distributed === reference)
+    assert(trainCfg(dir) === cfg)
+    // the single-partition render is byte-identical to the driver-side
+    // reference layout: each incremental chunk's blocks sorted
+    assert(loop.currentIteration === 3)
+    assert(cfg === incremental(dir, 3))
+    // a render leaves no chunk files behind
+    assert(!Files.exists(Paths.get(s"$dir/chunks")))
+    // from scratch, one chunk over the table's four files: all blocks
+    // sorted
+    Files.delete(Paths.get(s"$dir/.rendered_iter"))
+    loop.writeTrainCfg()
+    assert(trainCfg(dir) === sortedBlocks(dir, 0 to 3))
+    assert(!Files.exists(Paths.get(s"$dir/chunks")))
+  }
+
+  test("a torn train.cfg append is truncated before the next render") {
+    val dir = Files.createTempDirectory("mtptorn").toString
+    val loop = new MtpLoop(spark, StubCalculator(), dir, species)
+    loop.bootstrap(MaterialsPipeline.seeds)
+    assert(loop.iterate() > 0) // renders iteration 0, appends iteration 1
+    loop.writeTrainCfg()
+    // a crash after the append and before the marker leaves bytes the
+    // marker does not cover
+    Files.writeString(Paths.get(s"$dir/train.cfg"), "BEGIN_CFG\n torn\n",
+      java.nio.file.StandardOpenOption.APPEND)
+    assert(loop.iterate() > 0) // the render is current: no truncation yet
+    loop.writeTrainCfg()
+    assert(loop.currentIteration === 2)
+    assert(trainCfg(dir) === incremental(dir, 2))
+
+    // a marker that does not parse re-renders from scratch
+    Files.writeString(Paths.get(s"$dir/.rendered_iter"), "2")
+    loop.writeTrainCfg()
+    assert(trainCfg(dir) === sortedBlocks(dir, 0 to 2))
+  }
+
+  test("reading the loop before bootstrap returns an empty set") {
+    val dir = Files.createTempDirectory("mtpfresh").toString
+    val loop = new MtpLoop(spark, StubCalculator(), dir, species)
+    assert(loop.currentIteration === -1)
+    assert(loop.setSize === 0L)
+    assert(loop.activeConfigs.collect().isEmpty)
   }
 
   test("ConfigsIO: group-partitioned parquet round-trip with pruning (S2)") {
@@ -67,7 +113,7 @@ class MtpLoopSpec extends AnyFunSuite {
     assert(ConfigsIO.readGroup(spark, dir, g).count() > 0)
   }
 
-  test("job budget: one iterate() fires at most 10 jobs, no schema inference") {
+  test("job budget: one iterate() fires at most 4 jobs, no shuffle, no schema inference") {
     val dir = Files.createTempDirectory("mtpjobs").toString
     val loop = new MtpLoop(spark, StubCalculator(), dir, Seq("Ag", "Pd"))
     loop.bootstrap(MaterialsPipeline.seeds)
@@ -78,7 +124,8 @@ class MtpLoopSpec extends AnyFunSuite {
         loop.iterate(nCandidatesPerConfig = 12, selectK = 20))
       val listed = jobs.mkString("\n")
       assert(added > 0)
-      assert(jobs.size <= 10, s"iterate $i fired ${jobs.size} jobs:\n$listed")
+      assert(jobs.size <= 4, s"iterate $i fired ${jobs.size} jobs:\n$listed")
+      assert(jobs.forall(_.stages == 1), s"a shuffle in iterate $i:\n$listed")
       assert(!jobs.exists(j => j.site.startsWith("parquet at ActiveLoop") &&
         !j.inSqlExecution), s"parquet schema inference in iterate $i:\n$listed")
     }

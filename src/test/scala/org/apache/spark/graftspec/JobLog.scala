@@ -15,8 +15,10 @@ object JobLog {
   /** @param site the result stage's call site (`parquet at X.scala:N`)
     * @param inSqlExecution run under a SQL execution id: a Dataset
     *   action or write; false for driver-side helper jobs such as
-    *   parquet schema inference */
-  final case class Job(site: String, inSqlExecution: Boolean)
+    *   parquet schema inference
+    * @param stages the job's stages, skipped ones included: 1 for a job
+    *   that reads no shuffle */
+  final case class Job(site: String, inSqlExecution: Boolean, stages: Int)
 
   def record[A](sc: SparkContext)(body: => A): (A, Seq[Job]) = {
     val jobs = new ConcurrentLinkedQueue[Job]()
@@ -26,7 +28,7 @@ object JobLog {
           .map(_.name).getOrElse("")
         val sql = Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-        jobs.add(Job(site, sql.isDefined))
+        jobs.add(Job(site, sql.isDefined, js.stageInfos.size))
       }
     }
     sc.listenerBus.waitUntilEmpty()
