@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.calculators.Calculator
 import graft.core.{Config, Formula}
 import graft.pipeline.ActiveLoop
+import graft.sources.Cfg
 
 /** The MTP active-learning state machine (SURVEY §2.10/§3.2;
   * reference: fitting/mtp.py:779–935 — `train → relax_setup → relax →
@@ -45,9 +46,12 @@ final class MtpLoop(spark: SparkSession, calc: Calculator,
     * unreadable marker re-renders the file from scratch (the render is
     * a deterministic projection of the table).
     *
-    * Each increment is one job: a single partition sorted on the block
-    * text (`coalesce(1)` + `sortWithinPartitions`, no sample job and no
-    * shuffle) written as one part file under `chunks/`, then
+    * The file is every block of the table sorted on (iteration, block
+    * text), whatever the render history: a render of several
+    * iterations at once writes the same bytes as one render per
+    * iteration. Each increment is one job: a single partition sorted on
+    * that key (`coalesce(1)` + `sortWithinPartitions`, no sample job
+    * and no shuffle) written as one part file under `chunks/`, then
     * byte-streamed onto train.cfg at the `mlp` hand-off and deleted. No
     * row data crosses the driver — only file bytes at the single-file
     * boundary the external trainer requires. */
@@ -60,14 +64,16 @@ final class MtpLoop(spark: SparkSession, calc: Calculator,
     val marker = Paths.get(s"$workDir/.rendered_iter")
     val (rendered, length) = renderedThrough(out, marker)
     if (rendered >= iter) return out
-    val ds = active.current.where(s"iteration > $rendered")
-      .as[graft.pipeline.ConfigRow].map(_.toConfig)
+    val tm = Formula.typeMap(species)
     val chunkDir = Paths.get(s"$workDir/chunks")
-    TrainTable.toCfgLines(ds, species)
-      .map(_.stripSuffix("\n")) // text writer restores the final newline
-      .toDF("cfg")
+    active.current.where(s"iteration > $rendered")
+      .as[graft.pipeline.ConfigRow]
+      // the text writer restores the final newline
+      .map(r => (r.iteration, Cfg.write(r.toConfig, tm).stripSuffix("\n")))
+      .toDF("iteration", "cfg")
       .coalesce(1)
-      .sortWithinPartitions("cfg")
+      .sortWithinPartitions("iteration", "cfg")
+      .select("cfg")
       .write.mode("overwrite").text(chunkDir.toString)
     val partFiles = {
       val s = Files.list(chunkDir)

@@ -2,9 +2,9 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField}
 
 /** Connected-component duplicate-cluster labels as a MATERIALIZED
   * surface (the `MinHash.signatures(materialize = true)` discipline,
@@ -34,6 +34,15 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * a long near-dup chain in bounded rounds. Reference analog: the
   * content-hash dup groups of database/active.py:181–198, generalized
   * to transitive near-dup chains.
+  *
+  * SimHash near-dup labels do not go through a pair table at all:
+  * [[hammingBucketPairs]] shuffles the signature's band buckets once
+  * and verifies each bucket inside its partition, and
+  * [[hammingBucketLabels]] feeds that pair stream into the union-find
+  * in the same pass. One kernel serves d3's pair list and the labels,
+  * so the hamming ≤ 3 edge set has one implementation. Its skew guard
+  * is per bucket (star edges past `maxBucket` rows), so it holds at
+  * most `maxBucket + 1` rows of a bucket and needs no count pass.
   */
 object DupClusters {
 
@@ -60,16 +69,99 @@ object DupClusters {
     * integral; anything else fails with a `require` naming the column.
     */
   def computeLabels(pairs: DataFrame, universe: DataFrame): DataFrame = {
-    (pairs.schema.fields :+ universe.schema("doc_id")).foreach { f =>
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType),
-        s"cluster labels: id column ${f.name} must be an integral type, " +
-          s"got ${f.dataType.simpleString}")
-    }
+    (pairs.schema.fields :+ universe.schema("doc_id")).foreach(requireIntegral)
     val spark = universe.sparkSession
     import spark.implicits._
     val local = pairs.toDF("doc_a", "doc_b").na.drop()
       .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
       .as[(Long, Long)].mapPartitions(minRoots).collect()
+    mergeRoots(local, universe)
+  }
+
+  /** Near-duplicate pairs by bit distance, from one band-bucket pass.
+    * `sig` holds an integral `idCol` and four int columns
+    * `band0..band3` (a SimHash's 16-bit pigeonhole bands: two
+    * signatures within `maxHamming` ≤ 3 bits agree on at least one
+    * band). Returns `(id_a, id_b, hamming)` with id_a < id_b and
+    * hamming = Σ_k bit_count(band k_a XOR band k_b) ≤ `maxHamming`. A
+    * pair that agrees on several bands comes once per band: callers
+    * that need a set `distinct()` it.
+    *
+    * One shuffle: the four bands are exploded, repartitioned once on
+    * (band_idx, band_val) and sorted within partitions on
+    * (band_idx, band_val, id nulls last), so every bucket arrives as
+    * one run with its minimum id first; one `mapPartitions` streams
+    * the buckets and verifies each candidate inside the partition
+    * (filter-and-verify in the index partition, no pair table, no
+    * self-join). A bucket of at most `maxBucket` rows emits every
+    * pair within `maxHamming`. A bucket that grows past `maxBucket`
+    * switches to STAR mode: its first row, the minimum id, is linked
+    * to every member within `maxHamming` whose id differs — the edges
+    * of [[MinHash.guardedBandPairs]] on the same relation, whose
+    * bounded-recall contract and connectivity scope hold unchanged.
+    * The kernel holds at most `maxBucket + 1` rows of a bucket, so it
+    * needs no count pass. With [[MinHash.GuardConfKey]] `off` every
+    * bucket emits all its pairs (the plain band self-join) and is held
+    * whole.
+    *
+    * Rows with a null id pair with nothing but count toward their
+    * bucket's size; a null band puts the row in no bucket of that band
+    * and, since its distance is then null, in no pair. */
+  def hammingBucketPairs(sig: DataFrame, idCol: String, maxHamming: Int,
+      maxBucket: Int = MinHash.DefaultMaxBucket): DataFrame =
+    bucketPass(sig, idCol, maxHamming, maxBucket,
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaInt))(identity)
+      .toDF("id_a", "id_b", "hamming")
+
+  /** [[computeLabels]] over the pairs of [[hammingBucketPairs]]
+    * without materializing them: each partition of the bucket pass
+    * feeds its verified pairs straight into its union-find and emits
+    * one (vertex, local root) row per vertex; the driver merges the
+    * roots and left-joins `universe.doc_id`, as [[computeLabels]]
+    * does. One shuffle, one pass over the pairs, no `distinct` (a
+    * repeated edge is a no-op for a union-find). */
+  def hammingBucketLabels(sig: DataFrame, idCol: String, maxHamming: Int,
+      universe: DataFrame, maxBucket: Int = MinHash.DefaultMaxBucket): DataFrame = {
+    requireIntegral(universe.schema("doc_id"))
+    val local = bucketPass(sig, idCol, maxHamming, maxBucket,
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))(
+      pairs => minRoots(pairs.map(p => (p._1, p._2)))).collect()
+    mergeRoots(local, universe)
+  }
+
+  private def requireIntegral(f: StructField): Unit =
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType),
+      s"cluster labels: id column ${f.name} must be an integral type, " +
+        s"got ${f.dataType.simpleString}")
+
+  /** The bucket pass: `sig` exploded to (id, band0..band3, band_idx,
+    * band_val), one shuffle on the bucket key, each partition sorted so
+    * that a bucket is one run with its minimum id first, and `consume`
+    * applied to each partition's [[BucketStream]]. */
+  private def bucketPass[T](sig: DataFrame, idCol: String, maxHamming: Int,
+      maxBucket: Int, enc: Encoder[T])(
+      consume: Iterator[(Long, Long, Int)] => Iterator[T]): Dataset[T] = {
+    require(maxBucket >= 2, "maxBucket must be >= 2")
+    requireIntegral(sig.schema(idCol))
+    val bands = (0 until 4).map(k => s"band$k")
+    bands.foreach(b => require(sig.schema(b).dataType == IntegerType,
+      s"hamming buckets: $b must be an int, got ${sig.schema(b).dataType.simpleString}"))
+    val cap = if (MinHash.guardOff(sig)) Int.MaxValue else maxBucket
+    sig.select(col(idCol).cast("long").as("id") +: bands.map(col) :+
+        posexplode(array(bands.map(col): _*)).as(Seq("band_idx", "band_val")): _*)
+      .where(col("band_val").isNotNull)
+      .repartition(col("band_idx"), col("band_val"))
+      .sortWithinPartitions(col("band_idx"), col("band_val"), col("id").asc_nulls_last)
+      .mapPartitions((rows: Iterator[Row]) =>
+        consume(new BucketStream(rows.map(BandRow.of), maxHamming, cap).pairs))(enc)
+  }
+
+  /** Roots from per-partition union-finds, merged on the driver, as
+    * labels of `universe.doc_id` (a document no root names labels
+    * itself). */
+  private def mergeRoots(local: Array[(Long, Long)], universe: DataFrame): DataFrame = {
+    val spark = universe.sparkSession
+    import spark.implicits._
     val labels = minRoots(local.iterator).toSeq.toDF("doc_id", "cluster_id")
     universe.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
@@ -100,15 +192,69 @@ object DupClusters {
 
   /** The materialized labels table for `dir`'s documents corpus
     * (SessionTable discipline): the kernel runs on first touch, O(1)
-    * lookups after. `compute` builds the pair list + universe lazily
-    * (only invoked on a miss). */
-  def labelsFor(s: SparkSession, dir: String)(
-      compute: => (DataFrame, DataFrame)): DataFrame =
-    SessionTable.of(s, s"dup-labels:$dir") {
-      val (pairs, universe) = compute
-      computeLabels(pairs, universe)
-    }
+    * lookups after. `compute` builds the labels (only invoked on a
+    * miss). */
+  def labelsFor(s: SparkSession, dir: String)(compute: => DataFrame): DataFrame =
+    SessionTable.of(s, s"dup-labels:$dir")(compute)
 
   /** Drop all materialized labels (spec hygiene / corpus swap). */
   def invalidate(): Unit = SessionTable.invalidate()
+}
+
+/** One exploded row of the hamming bucket pass: its bucket
+  * (band index, band value) packed into `key`, its id (`hasId` false
+  * for a null id) and its four bands (null when any band is null). */
+private[graft] final case class BandRow(key: Long, id: Long, hasId: Boolean,
+    bands: Array[Int])
+
+private[graft] object BandRow {
+  /** From a row laid out as (id, band0..band3, band_idx, band_val). */
+  def of(r: Row): BandRow = BandRow(
+    (r.getInt(5).toLong << 32) | (r.getInt(6) & 0xffffffffL),
+    if (r.isNullAt(0)) 0L else r.getLong(0), !r.isNullAt(0),
+    if ((1 to 4).exists(r.isNullAt)) null else Array.tabulate(4)(k => r.getInt(k + 1)))
+}
+
+/** The partition-local half of [[DupClusters.hammingBucketPairs]] over
+  * rows sorted by (key, id nulls last). A bucket of at most
+  * `maxBucket` rows is held whole and emits all its pairs; at
+  * `maxBucket + 1` held rows it turns to star mode and streams the
+  * rest of the bucket against its first row, holding nothing more.
+  * `peakHeld` is the most rows held at once. */
+private[graft] final class BucketStream(rows: Iterator[BandRow],
+    maxHamming: Int, maxBucket: Int) {
+  private val in = rows.buffered
+  private var peak = 0
+
+  def peakHeld: Int = peak
+
+  private def sameBucket(key: Long): Boolean = in.hasNext && in.head.key == key
+
+  /** (x.id, y.id, hamming) when x.id < y.id and the pair is within
+    * `maxHamming`. */
+  private def edge(x: BandRow, y: BandRow): Iterator[(Long, Long, Int)] =
+    if (!x.hasId || !y.hasId || x.id >= y.id || x.bands == null || y.bands == null)
+      Iterator.empty
+    else {
+      var h = 0
+      var k = 0
+      while (k < 4) { h += Integer.bitCount(x.bands(k) ^ y.bands(k)); k += 1 }
+      if (h <= maxHamming) Iterator.single((x.id, y.id, h)) else Iterator.empty
+    }
+
+  val pairs: Iterator[(Long, Long, Int)] =
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val key = in.head.key
+      val held = mutable.ArrayBuffer(in.next())
+      while (held.size <= maxBucket && sameBucket(key)) held += in.next()
+      peak = math.max(peak, held.size)
+      if (held.size <= maxBucket)
+        held.indices.iterator.flatMap(a =>
+          (a + 1 until held.size).iterator.flatMap(b => edge(held(a), held(b))))
+      else {
+        val rest = Iterator.continually(()).takeWhile(_ => sameBucket(key))
+          .map(_ => in.next())
+        (held.iterator.drop(1) ++ rest).flatMap(edge(held(0), _))
+      }
+    }
 }

@@ -135,7 +135,7 @@ object MinHash {
     * is legitimate. */
   val GuardConfKey = "spark.graft.lsh.skewGuard"
 
-  private def guardOff(df: DataFrame): Boolean =
+  private[operators] def guardOff(df: DataFrame): Boolean =
     df.sparkSession.conf.get(GuardConfKey, "on")
       .equalsIgnoreCase("off")
 

@@ -406,47 +406,26 @@ object DedupOps {
   /** D3c: graded near-dup pairs by simhash hamming distance ≤ 3, via
     * pigeonhole banding — the 64-bit signature splits into 4 bands of
     * 16 bits; distance ≤ 3 flips at most 3 bands, so at least one
-    * matches exactly. Band keys are 16-bit ints (65,536 bucket
-    * values), so the band self-join stays ~N²/65536 per band in the
-    * worst case and, with a discriminating 64-bit signature, far
-    * lower in practice. Candidates come from the band equi-join; the
-    * exact distance (popcount of XOR over the 4 band ints — codegen'd
-    * `bit_count`, no per-bit string compare) filters them. */
-  def d3HammingPairs(s: SparkSession, dir: String): DataFrame = {
-    // The signature table is PINNED once (eager localCheckpoint,
-    // round 16): the guard's five consumers (size agg, anti/semi
-    // splits, both self-join sides) plus the hamming verify each
-    // re-executed the md5-per-token simhash lineage — ReuseExchange
-    // only dedupes bit-identical exchange subtrees and the branches'
-    // inferred isnotnull filters split them. Measured 2.46 s → 0.96 s
-    // steady-state at sf0.1 (3-lap loop); the pin is doc-count-sized
-    // (one 5-int row per doc). Eager-by-nature in CacheHygieneSpec —
-    // the mm2 signature-table discipline.
-    // Band-bucket skew guard (the d2/d4 discipline, r9): a corpus of
-    // near-identical boilerplate collapses onto one simhash band
-    // value, and the unguarded self-join is n² in that bucket —
-    // buckets over the cap star-pair to the min-id representative
-    // (exact hamming still verified; never triggered at gate scale)
-    val sig = simhash64(s, dir)
-      .select(col("doc_id"), col("band0"), col("band1"),
-        col("band2"), col("band3"))
-      .localCheckpoint()
-    val exploded = sig.select(
-      col("doc_id") +: (0 until 4).map(k => col(s"band$k")) :+
-        posexplode(array((0 until 4).map(k => col(s"band$k")): _*))
-          .as(Seq("band_idx", "band_val")): _*)
-    val hamming = (0 until 4).map(k =>
-      bit_count(col(s"band${k}_a").bitwiseXOR(col(s"band${k}_b")))
-        .cast("long"))
-      .reduce(_ + _)
-    graft.operators.MinHash.guardedBandPairs(exploded,
-        Seq("band_idx", "band_val"), "doc_id",
-        (0 until 4).map(k => s"band$k"))
+    * matches exactly. Pairs come from `DupClusters.hammingBucketPairs`:
+    * one shuffle on the (band, 16-bit value) bucket, then each bucket
+    * is verified inside its partition (popcount of XOR over the 4 band
+    * ints). Its band-bucket skew guard is enforced per bucket in that
+    * same pass: a bucket past `MinHash.DefaultMaxBucket` rows (a
+    * corpus of near-identical boilerplate on one band value) links its
+    * members to its min-id row instead of emitting n² pairs, holding
+    * at most cap + 1 rows (never triggered at gate scale). A pair that
+    * agrees on two bands comes twice from the kernel, hence the
+    * `distinct`. */
+  def d3HammingPairs(s: SparkSession, dir: String): DataFrame =
+    graft.operators.DupClusters.hammingBucketPairs(simhash64(s, dir),
+        "doc_id", NearDupHamming)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-        hamming.as("hamming"))
-      .where(col("hamming") <= 3)
+        col("hamming").cast("long").as("hamming"))
       .distinct()
-  }
+
+  /** Bit distance within which two SimHash signatures are near
+    * duplicates (d3's pairs, the dup-labels clusters). */
+  private val NearDupHamming = 3
 
   /** D3b: exact-duplicate groups by simhash collision (hamming-0
     * pairing; the graded hamming-distance join is the ANN-style
@@ -463,25 +442,28 @@ object DedupOps {
     * pair generation: pick one keeper per component, not per pair —
     * pairs alone under-delete transitive duplicate chains).
     *
-    * Labels come from `DupClusters.computeLabels`: a union-find per
-    * pair partition, merged on the driver in one Spark job, so the
-    * cost does not grow with component diameter. cluster_id is the
-    * component's minimum doc_id; singleton docs keep their own id. */
+    * Labels come from `DupClusters.hammingBucketLabels`: a union-find
+    * per bucket partition fed by the verified d3 pairs, merged on the
+    * driver, so the cost does not grow with component diameter.
+    * cluster_id is the component's minimum doc_id; singleton docs keep
+    * their own id. */
   def d6DupClusters(s: SparkSession, dir: String): DataFrame =
     clusterLabels(s, dir).orderBy(col("doc_id"))
 
   /** The MATERIALIZED labels table for `dir` (operators.DupClusters):
-    * the simhash → pairs → connected components pipeline runs once per
-    * session per corpus; d6, d13, and any downstream curation stage
-    * all JOIN the same checkpointed table — the production shape,
-    * where labels are written once per corpus snapshot. The CC kernel
-    * itself lives in `DupClusters.computeLabels` (spec-covered with
-    * planted graphs and graph shapes); this binding only supplies the
-    * d3 pair list and the documents universe. */
+    * the simhash → components pipeline runs once per session per
+    * corpus; d6, d13, and any downstream curation stage all JOIN the
+    * same checkpointed table — the production shape, where labels are
+    * written once per corpus snapshot. The components are those of
+    * d3's pair graph, built by `DupClusters.hammingBucketLabels` in
+    * one shuffle: each bucket partition feeds its verified pairs
+    * straight into its union-find, and the driver merges the roots
+    * over the documents universe. The signature table is read once by
+    * that one pass, so it is not pinned. */
   private def clusterLabels(s: SparkSession, dir: String): DataFrame =
     graft.operators.DupClusters.labelsFor(s, dir)(
-      (d3HammingPairs(s, dir).select(col("doc_a"), col("doc_b")),
-        Tables(s, dir, "documents").select(col("doc_id"))))
+      graft.operators.DupClusters.hammingBucketLabels(simhash64(s, dir),
+        "doc_id", NearDupHamming, Tables(s, dir, "documents")))
 
   /** D18 soft-dedup training weights — the DROPLESS alternative to
     * d13's keep-one survivorship: every member of a duplicate cluster

@@ -45,10 +45,10 @@ class CacheHygieneSpec extends AnyFunSuite {
     * or driver-coordinated control flow (converged loops / prefix
     * sums), where laziness is impossible by construction. */
   private val eagerByNature = Set(
-    "d6_dup_clusters",  // min-label propagation to fixpoint
-    "d13_keep_best",    // builds on d6's fixpoint clusters
-    "d18_dedup_weights", // builds on d6's fixpoint clusters
-    "o11_cluster_split", // builds on d6's fixpoint clusters
+    "d6_dup_clusters",  // union-find roots collected and merged on the driver
+    "d13_keep_best",    // builds on d6's union-find clusters
+    "d18_dedup_weights", // builds on d6's union-find clusters
+    "o11_cluster_split", // builds on d6's union-find clusters
     "o5_split_assign",  // partition-count collect + prefix sum
     "s2_ann_lsh",       // adaptivePlanes sizes nPlanes from a count()
     "s3_ann_ivf",       // Lloyd iterations for the IVF centroids
@@ -59,8 +59,6 @@ class CacheHygieneSpec extends AnyFunSuite {
     "d12_bloom_dedup",  // Bloom filter build over the corpus windows
     "mm2_image_phash",  // (id, pHash) signature table pinned at build
                         // so the JPEG decode pass runs once (r16)
-    "d3_hamming_pairs", // simhash signature table pinned at build so
-                        // the md5-per-token pass runs once (r16)
     "d4_neardup_pairs", // k=72 minhash signature table pinned at
                         // build — same discipline (r16)
     "d16_editdist_join", // bounded (id, s) relation pinned at build —
@@ -152,7 +150,7 @@ class CacheHygieneSpec extends AnyFunSuite {
     // materialize the checkpoint-heaviest queries, drop every
     // reference, then GC until the cleaner has unpersisted the blocks.
     val baseline = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    Seq("d2_minhash_pairs", "d4_ngram_jaccard", "d3_hamming_pairs")
+    Seq("d2_minhash_pairs", "d4_ngram_jaccard", "d16_editdist_join")
       .foreach(n =>
         SparkEntry.queries(n)(spark, sf)
           .write.format("noop").mode("overwrite").save())

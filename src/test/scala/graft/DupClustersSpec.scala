@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The materialized cluster-labels surface (operators.DupClusters):
   * CC correctness on planted graphs and on graph shapes checked against
-  * a breadth-first-search reference, the kernel's job budget,
+  * a breadth-first-search reference, the kernel's job budget, the
+  * hamming bucket kernel against the guarded band self-join it
+  * replaced (pairs, star mode, nulls, labels, rows held per bucket),
   * build-once semantics of the session store, and equality of the d13
   * survivorship consumed from the store vs freshly recomputed labels. */
 class DupClustersSpec extends AnyFunSuite {
@@ -133,15 +135,159 @@ class DupClustersSpec extends AnyFunSuite {
     assert(labelsOf(pairs, universe) === bfsLabels(edges, ids))
   }
 
-  test("job budget: a cold d6 build at sf0.001 fires at most 9 jobs") {
+  test("job budget: a cold d6 build at sf0.001 fires at most 5 jobs and shuffles once") {
     val sf = "/root/testdata/sf0.001"
     DupClusters.invalidate()
     val (d6, jobs) = JobLog.record(spark.sparkContext) {
       queries.DedupOps.d6DupClusters(spark, sf)
     }
     info(s"cold d6 build: ${jobs.size} jobs")
-    assert(jobs.size <= 9, jobs.mkString("\n"))
+    // the bucket shuffle's map job, the roots collect (which reads that
+    // shuffle), the labels broadcast and the pin, plus parquet schema
+    // inference when this JVM has not read the table yet
+    assert(jobs.size <= 5, jobs.mkString("\n"))
+    assert(jobs.count(_.inSqlExecution) <= 4, jobs.mkString("\n"))
+    // exactly one job reads a shuffle, and it reads exactly one
+    assert(jobs.map(_.stages - 1).sum === 1, jobs.mkString("\n"))
     d6.write.format("noop").mode("overwrite").save()
+  }
+
+  private val sf = "/root/testdata/sf0.001"
+  private val bandNames = (0 until 4).map(k => s"band$k")
+
+  /** The d3 pipeline the bucket kernel replaced, kept as its reference:
+    * band explode, `MinHash.guardedBandPairs` (the count pass with
+    * anti/semi splits and the band self-join), the hamming ≤ 3 verify
+    * and a `distinct`. */
+  private def referencePairs(sig: DataFrame,
+      maxBucket: Int = operators.MinHash.DefaultMaxBucket): DataFrame = {
+    val bands = bandNames.map(col)
+    val exploded = sig.select(col("doc_id") +: bands :+
+      posexplode(array(bands: _*)).as(Seq("band_idx", "band_val")): _*)
+    val hamming = (0 until 4).map(k =>
+      bit_count(col(s"band${k}_a").bitwiseXOR(col(s"band${k}_b"))).cast("long"))
+      .reduce(_ + _)
+    operators.MinHash.guardedBandPairs(exploded,
+        Seq("band_idx", "band_val"), "doc_id", bandNames, maxBucket)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
+        hamming.as("hamming"))
+      .where(col("hamming") <= 3)
+      .distinct()
+  }
+
+  private def kernelPairs(sig: DataFrame,
+      maxBucket: Int = operators.MinHash.DefaultMaxBucket): DataFrame =
+    DupClusters.hammingBucketPairs(sig, "doc_id", 3, maxBucket)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
+        col("hamming").cast("long").as("hamming"))
+      .distinct()
+
+  private def rows(df: DataFrame): Set[(Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
+  private def withGuard[A](on: Boolean)(body: => A): A = {
+    spark.conf.set(operators.MinHash.GuardConfKey, if (on) "on" else "off")
+    try body finally spark.conf.unset(operators.MinHash.GuardConfKey)
+  }
+
+  /** A signature relation with one band0 bucket of 12 rows (ids 1..10,
+    * a repeated id 5 and a null id) over a bucket cap of 4, its members
+    * 0–6 bits from id 1; a small bucket with a null id and a row with a
+    * null band; and 300 random rows on other band values whose buckets
+    * all outgrow the cap. */
+  private def plantedSig: DataFrame = {
+    import spark.implicits._
+    val band1 = Seq(0, 1, 3, 7, 15, 2, 6, 14, 63, 5)
+    val big = (1 to 10).map(i =>
+      (Option(i.toLong), Option(1), Option(band1(i - 1)), Option(0), Option(0))) ++
+      Seq((Option(5L), Option(1), Option(1), Option(0), Option(0)),
+        (Option.empty[Long], Option(1), Option(0), Option(0), Option(0)))
+    val small = Seq(
+      (Option(20L), Option(2), Option(9), Option(9), Option(9)),
+      (Option(21L), Option(2), Option(9), Option(9), Option(8)),
+      (Option.empty[Long], Option(2), Option(9), Option(9), Option(9)),
+      (Option(22L), Option(2), Option(9), Option.empty[Int], Option(9)))
+    val rnd = new scala.util.Random(11)
+    val random = (100 until 400).map(i =>
+      (Option(i.toLong), Option(100 + rnd.nextInt(6)), Option(200 + rnd.nextInt(4)),
+        Option(300 + (rnd.nextInt(3) << 2)), Option(400 + rnd.nextInt(5))))
+    (big ++ small ++ random).toDF("doc_id" +: bandNames: _*)
+  }
+
+  test("hammingBucketPairs: sf0.001 d3 pairs equal the guarded band self-join's") {
+    val sig = queries.DedupOps.simhash64Of(Tables(spark, sf, "documents"))
+    val want = rows(referencePairs(sig))
+    assert(want.nonEmpty)
+    assert(rows(queries.DedupOps.d3HammingPairs(spark, sf)) === want)
+    assert(DupClusters.hammingBucketPairs(sig, "doc_id", 3).collect()
+      .forall(r => r.getLong(0) < r.getLong(1) && r.getInt(2) <= 3))
+  }
+
+  test("hammingBucketPairs: a bucket over the cap star-links, guard on and off") {
+    val sig = plantedSig
+    val on = withGuard(on = true)(rows(kernelPairs(sig, maxBucket = 4)))
+    val off = withGuard(on = false)(rows(kernelPairs(sig, maxBucket = 4)))
+    assert(on === withGuard(on = true)(rows(referencePairs(sig, maxBucket = 4))))
+    assert(off === withGuard(on = false)(rows(referencePairs(sig, maxBucket = 4))))
+    // the planted bucket: star edges from id 1 with the guard on, plus
+    // the small band1 = 1 bucket {2, 5}; every pair within 3 bits with
+    // it off. Id 22 (a null band) and the null ids pair with nothing.
+    assert(on.filter(_._2 <= 10) === Set((1L, 2L, 1L), (1L, 3L, 2L),
+      (1L, 4L, 3L), (1L, 5L, 1L), (1L, 6L, 1L), (1L, 7L, 2L), (1L, 8L, 3L),
+      (1L, 10L, 2L), (2L, 5L, 0L)))
+    assert(off.contains((2L, 6L, 2L)) && !on.exists(p => p._1 == 2L && p._2 == 6L))
+    assert(on.contains((20L, 21L, 1L)) && off.contains((20L, 21L, 1L)))
+    assert(!(on ++ off).exists(p => p._1 == 22L || p._2 == 22L))
+    assert(on.size < off.size)
+    assert((on ++ off).forall(p => p._1 < p._2 && p._3 <= 3))
+  }
+
+  test("hammingBucketPairs: documents with a null doc_id or null text") {
+    import spark.implicits._
+    val base = Tables(spark, sf, "documents")
+      .select(col("doc_id"), col("text")).as[(Option[Long], Option[String])]
+      .collect().toSeq
+    val (id0, text0) = base.collectFirst { case (Some(i), t @ Some(_)) => (i, t) }.get
+    val planted = base ++ Seq((None, text0), (None, None),
+      (Some(900001L), None), (Some(900002L), text0))
+    val sig = queries.DedupOps.simhash64Of(planted.toDF("doc_id", "text"))
+    val got = rows(kernelPairs(sig))
+    assert(got === rows(referencePairs(sig)))
+    assert(got.contains((id0, 900002L, 0L)))
+    assert(!got.exists(p => p._1 == 900001L || p._2 == 900001L))
+  }
+
+  test("hammingBucketLabels equal computeLabels and BFS over the reference pairs") {
+    import spark.implicits._
+    val docs = Tables(spark, sf, "documents")
+    val cases = Seq(
+      (queries.DedupOps.simhash64Of(docs), docs.select(col("doc_id")),
+        operators.MinHash.DefaultMaxBucket),
+      (plantedSig, ((1L to 30L) ++ (100L until 400L)).toDF("doc_id"), 4))
+    cases.foreach { case (sig, universe, cap) =>
+      val ref = referencePairs(sig, cap).select(col("doc_a"), col("doc_b"))
+      val labels = DupClusters.hammingBucketLabels(sig, "doc_id", 3, universe, cap)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels === labelsOf(ref, universe))
+      val edges = ref.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(labels === bfsLabels(edges, universe.collect().map(_.getLong(0)).toSeq))
+      assert(labels.exists { case (d, c) => d != c })
+    }
+  }
+
+  test("bucket stream holds at most maxBucket + 1 rows of a bucket with the guard on") {
+    def bucket(key: Long, n: Int) = (0 until n).map(i =>
+      operators.BandRow(key, i.toLong, hasId = true, Array(i & 7, 0, 0, 0)))
+    val input = bucket(1L, 100) ++ bucket(2L, 3) ++ bucket(3L, 5)
+    val guarded = new operators.BucketStream(input.iterator, 3, 4)
+    val starPairs = guarded.pairs.toList
+    assert(guarded.peakHeld === 5)
+    // star from id 0 in buckets 1 and 3, all pairs in bucket 2
+    assert(starPairs.count(_._1 == 0L) === 99 + 2 + 4)
+    assert(starPairs.size === 99 + 3 + 4)
+    val whole = new operators.BucketStream(input.iterator, 3, Int.MaxValue)
+    assert(whole.pairs.size === 100 * 99 / 2 + 3 + 10)
+    assert(whole.peakHeld === 100)
   }
 
   test("labelsFor materializes once: second consumer runs zero Spark jobs") {

@@ -22,19 +22,19 @@ class MtpLoopSpec extends AnyFunSuite {
 
   private val species = Seq("Ag", "Pd")
 
-  /** Driver-side reference of a render: the blocks of `iters`, sorted. */
-  private def sortedBlocks(dir: String, iters: Range): String = {
+  /** Driver-side reference of a render: the blocks of `iter`, sorted. */
+  private def sortedBlocks(dir: String, iter: Int): String = {
     import spark.implicits._
     val ds = spark.read.parquet(s"$dir/active_set")
-      .where(col("iteration").isin(iters: _*))
+      .where(col("iteration") === iter)
       .as[ConfigRow].map(_.toConfig)
     graft.fit.TrainTable.toCfgLines(ds, species).collect().sorted.mkString
   }
 
-  /** The incremental train.cfg of iterations 0..last: each iteration's
-    * blocks sorted, concatenated in iteration order. */
+  /** The train.cfg of iterations 0..last, whatever the render history:
+    * each iteration's blocks sorted, concatenated in iteration order. */
   private def incremental(dir: String, last: Int): String =
-    (0 to last).map(i => sortedBlocks(dir, i to i)).mkString
+    (0 to last).map(sortedBlocks(dir, _)).mkString
 
   private def trainCfg(dir: String): String =
     Files.readString(Paths.get(s"$dir/train.cfg"))
@@ -56,11 +56,11 @@ class MtpLoopSpec extends AnyFunSuite {
     assert(cfg === incremental(dir, 3))
     // a render leaves no chunk files behind
     assert(!Files.exists(Paths.get(s"$dir/chunks")))
-    // from scratch, one chunk over the table's four files: all blocks
-    // sorted
+    // from scratch, one chunk over the table's four files: the same
+    // bytes as the incremental renders
     Files.delete(Paths.get(s"$dir/.rendered_iter"))
     loop.writeTrainCfg()
-    assert(trainCfg(dir) === sortedBlocks(dir, 0 to 3))
+    assert(trainCfg(dir) === incremental(dir, 3))
     assert(!Files.exists(Paths.get(s"$dir/chunks")))
   }
 
@@ -79,10 +79,11 @@ class MtpLoopSpec extends AnyFunSuite {
     assert(loop.currentIteration === 2)
     assert(trainCfg(dir) === incremental(dir, 2))
 
-    // a marker that does not parse re-renders from scratch
+    // a marker that does not parse re-renders from scratch, to the
+    // same bytes
     Files.writeString(Paths.get(s"$dir/.rendered_iter"), "2")
     loop.writeTrainCfg()
-    assert(trainCfg(dir) === sortedBlocks(dir, 0 to 2))
+    assert(trainCfg(dir) === incremental(dir, 2))
   }
 
   test("reading the loop before bootstrap returns an empty set") {
