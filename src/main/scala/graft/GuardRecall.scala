@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Measures the LSH band-bucket skew guard's ACTUAL recall on a
   * corpus that fires it (VERDICT r9 task 1: the bounded-recall
-  * contract of `MinHash.guardedBandPairs` / `capBucketMembers` had
+  * contract of the band-bucket pass `DupClusters.bucketPairs` /
+  * `MinHash.capBucketMembers` had
   * only ever been argued, because no gate corpus plants a band bucket
   * over DefaultMaxBucket).
   *
@@ -13,8 +14,8 @@ import org.apache.spark.sql.functions._
   * at several duplication rates — the identical family alone exceeds
   * the guard threshold). For each of the guarded surfaces the runner
   * executes guard ON (default) and guard OFF
-  * (`spark.graft.lsh.skewGuard = off` — the round-10 bypass flag
-  * makes the unguarded run the SAME code path the guard replaces):
+  * (`spark.graft.lsh.skewGuard = off`: the bucket pass holds every
+  * bucket whole, i.e. the plain band self-join):
   *
   *  - d2_minhash_pairs — candidate pairs (star edges exempt from the
   *    threshold): pair recall vs the unguarded set, extra star edges,

@@ -52,11 +52,12 @@ object Graft {
         shingleN, materialize)
 
     /** qid: d2_minhash_pairs — banded candidate pairs `(id_a, id_b,
-      * est_jaccard)` from a signature table; the equi-join is on band
-      * keys, never doc×doc. Band buckets over `maxBucket` members
-      * (boilerplate mega-buckets) star-pair to their min-id
-      * representative instead of self-joining n² — cluster semantics
-      * preserved, adversarial corpora bounded (SCALING §8). */
+      * est_jaccard)` from a signature table: one shuffle on the band
+      * keys, each bucket's pairs verified inside its partition, never
+      * doc×doc. Band buckets over `maxBucket` members (boilerplate
+      * mega-buckets) star-pair to their min-id representative instead
+      * of emitting n² pairs — cluster semantics preserved, adversarial
+      * corpora bounded (SCALING §8). */
     def minhashCandidatePairs(sig: DataFrame, idCol: String, k: Int = 16,
         bands: Int = 2, threshold: Double = 0.75,
         maxBucket: Int = graft.operators.MinHash.DefaultMaxBucket): DataFrame =

@@ -1,10 +1,12 @@
 package graft.operators
 
+import java.util.Objects
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Connected-component duplicate-cluster labels as a MATERIALIZED
   * surface (the `MinHash.signatures(materialize = true)` discipline,
@@ -40,9 +42,9 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
   * and verifies each bucket inside its partition, and
   * [[hammingBucketLabels]] feeds that pair stream into the union-find
   * in the same pass. One kernel serves d3's pair list and the labels,
-  * so the hamming ≤ 3 edge set has one implementation. Its skew guard
-  * is per bucket (star edges past `maxBucket` rows), so it holds at
-  * most `maxBucket + 1` rows of a bucket and needs no count pass.
+  * so the hamming ≤ 3 edge set has one implementation. The same
+  * bucket pass, [[bucketPairs]], yields d2's and d4's MinHash
+  * candidates, each with its own bucket key, payload and verify.
   */
 object DupClusters {
 
@@ -87,29 +89,19 @@ object DupClusters {
     * pair that agrees on several bands comes once per band: callers
     * that need a set `distinct()` it.
     *
-    * One shuffle: the four bands are exploded, repartitioned once on
-    * (band_idx, band_val) and sorted within partitions on
-    * (band_idx, band_val, id nulls last), so every bucket arrives as
-    * one run with its minimum id first; one `mapPartitions` streams
-    * the buckets and verifies each candidate inside the partition
-    * (filter-and-verify in the index partition, no pair table, no
-    * self-join). A bucket of at most `maxBucket` rows emits every
-    * pair within `maxHamming`. A bucket that grows past `maxBucket`
-    * switches to STAR mode: its first row, the minimum id, is linked
-    * to every member within `maxHamming` whose id differs — the edges
-    * of [[MinHash.guardedBandPairs]] on the same relation, whose
-    * bounded-recall contract and connectivity scope hold unchanged.
-    * The kernel holds at most `maxBucket + 1` rows of a bucket, so it
-    * needs no count pass. With [[MinHash.GuardConfKey]] `off` every
-    * bucket emits all its pairs (the plain band self-join) and is held
-    * whole.
+    * The four bands are exploded to one row per (band_idx, band_val)
+    * bucket and go through [[bucketPairs]]' one-shuffle pass, whose
+    * verify here is the popcount of the XOR over the four band ints:
+    * a bucket of at most `maxBucket` rows emits every pair within
+    * `maxHamming`, a larger one links its minimum id to every member
+    * within `maxHamming`. The bucket key is packed into one long and
+    * the bands into an int array, so the verify is primitive.
     *
-    * Rows with a null id pair with nothing but count toward their
-    * bucket's size; a null band puts the row in no bucket of that band
-    * and, since its distance is then null, in no pair. */
+    * A null band puts the row in no bucket of that band and, since
+    * its distance is then null, in no pair. */
   def hammingBucketPairs(sig: DataFrame, idCol: String, maxHamming: Int,
       maxBucket: Int = MinHash.DefaultMaxBucket): DataFrame =
-    bucketPass(sig, idCol, maxHamming, maxBucket,
+    bucketPass(hammingRows(sig, idCol), BandRows, BandRow.within(maxHamming), maxBucket,
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaInt))(identity)
       .toDF("id_a", "id_b", "hamming")
 
@@ -123,37 +115,85 @@ object DupClusters {
   def hammingBucketLabels(sig: DataFrame, idCol: String, maxHamming: Int,
       universe: DataFrame, maxBucket: Int = MinHash.DefaultMaxBucket): DataFrame = {
     requireIntegral(universe.schema("doc_id"))
-    val local = bucketPass(sig, idCol, maxHamming, maxBucket,
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))(
+    val local = bucketPass(hammingRows(sig, idCol), BandRows, BandRow.within(maxHamming),
+      maxBucket, Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))(
       pairs => minRoots(pairs.map(p => (p._1, p._2)))).collect()
     mergeRoots(local, universe)
   }
+
+  /** Pairs of rows that share a band bucket, verified inside the
+    * bucket's partition. This pass is the band-bucket skew guard of
+    * every LSH pair surface: d2's and d4's MinHash candidates call it
+    * on plain rows, and [[hammingBucketPairs]] runs it on packed ones.
+    *
+    * `exploded` holds one row per (document, bucket): `idCol`, the
+    * `payloadCols` the verify reads, and the bucket key `keyCols`. One
+    * shuffle: the rows are repartitioned once on the key and sorted
+    * within partitions on (key, id nulls last), so every bucket
+    * arrives as one run with its minimum id first; one `mapPartitions`
+    * streams the buckets (filter-and-verify in the index partition, no
+    * pair table, no self-join, no count pass). For two rows x, y of
+    * one bucket, x's id below y's, `verify(x, y, star)` returns the
+    * pair's output row (schema `out`) or `None`; it sees each row
+    * laid out as (id, payload…, key…).
+    *
+    * The skew guard is per bucket. A bucket of at most `maxBucket`
+    * rows offers every pair. A bucket that grows past `maxBucket`
+    * switches to STAR mode: its first row, the minimum id, is offered
+    * with every member whose id differs, `star = true` — O(n) pairs
+    * instead of O(n²), holding at most `maxBucket + 1` rows. Sound for
+    * dedup because members of one mega-bucket agree on a whole band,
+    * so linking them to one representative puts the bucket in one
+    * connected component; pair-level output inside it is the star
+    * subset (bounded recall). A verify that rejects a star edge can
+    * fragment that component, so one for which band agreement is
+    * itself the similarity evidence passes star edges
+    * ([[MinHash.candidatePairs]]). With [[MinHash.GuardConfKey]] `off`
+    * every bucket is held whole (the plain band self-join).
+    *
+    * Rows with a null id pair with nothing but count toward their
+    * bucket's size; a row with a null key column is in no bucket. A
+    * pair that shares several buckets comes once per bucket: callers
+    * that need a set `distinct()` it. */
+  def bucketPairs(exploded: DataFrame, keyCols: Seq[String], idCol: String,
+      payloadCols: Seq[String], out: StructType,
+      maxBucket: Int = MinHash.DefaultMaxBucket)(
+      verify: (Row, Row, Boolean) => Option[Row]): DataFrame =
+    bucketPass(exploded.select(((idCol +: payloadCols) ++ keyCols).map(col): _*),
+      new KeyedRows(1 + payloadCols.size), verify, maxBucket, Encoders.row(out))(identity)
 
   private def requireIntegral(f: StructField): Unit =
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType),
       s"cluster labels: id column ${f.name} must be an integral type, " +
         s"got ${f.dataType.simpleString}")
 
-  /** The bucket pass: `sig` exploded to (id, band0..band3, band_idx,
-    * band_val), one shuffle on the bucket key, each partition sorted so
-    * that a bucket is one run with its minimum id first, and `consume`
-    * applied to each partition's [[BucketStream]]. */
-  private def bucketPass[T](sig: DataFrame, idCol: String, maxHamming: Int,
-      maxBucket: Int, enc: Encoder[T])(
-      consume: Iterator[(Long, Long, Int)] => Iterator[T]): Dataset[T] = {
-    require(maxBucket >= 2, "maxBucket must be >= 2")
+  /** `sig` exploded to (id, band0..band3, band_idx, band_val). */
+  private def hammingRows(sig: DataFrame, idCol: String): DataFrame = {
     requireIntegral(sig.schema(idCol))
     val bands = (0 until 4).map(k => s"band$k")
     bands.foreach(b => require(sig.schema(b).dataType == IntegerType,
       s"hamming buckets: $b must be an int, got ${sig.schema(b).dataType.simpleString}"))
-    val cap = if (MinHash.guardOff(sig)) Int.MaxValue else maxBucket
     sig.select(col(idCol).cast("long").as("id") +: bands.map(col) :+
-        posexplode(array(bands.map(col): _*)).as(Seq("band_idx", "band_val")): _*)
-      .where(col("band_val").isNotNull)
-      .repartition(col("band_idx"), col("band_val"))
-      .sortWithinPartitions(col("band_idx"), col("band_val"), col("id").asc_nulls_last)
-      .mapPartitions((rows: Iterator[Row]) =>
-        consume(new BucketStream(rows.map(BandRow.of), maxHamming, cap).pairs))(enc)
+      posexplode(array(bands.map(col): _*)).as(Seq("band_idx", "band_val")): _*)
+  }
+
+  /** The bucket pass of [[bucketPairs]] over `rows`, laid out as
+    * (id, payload…, key…) with the key from column `layout.keyFrom`
+    * on: rows with a null key column dropped, one shuffle on the key,
+    * each partition sorted so that a bucket is one run with its
+    * minimum id first, and `consume` applied to each partition's
+    * [[BucketStream]]. */
+  private def bucketPass[R, E, T](rows: DataFrame, layout: BucketRows[R],
+      verify: (R, R, Boolean) => Option[E], maxBucket: Int, enc: Encoder[T])(
+      consume: Iterator[E] => Iterator[T]): Dataset[T] = {
+    require(maxBucket >= 2, "maxBucket must be >= 2")
+    val cap = if (MinHash.guardOff(rows)) Int.MaxValue else maxBucket
+    val key = rows.columns.toSeq.drop(layout.keyFrom).map(col)
+    rows.where(key.map(_.isNotNull).reduce(_ && _))
+      .repartition(key: _*)
+      .sortWithinPartitions(key :+ col(rows.columns.head).asc_nulls_last: _*)
+      .mapPartitions((it: Iterator[Row]) =>
+        consume(new BucketStream(it.map(layout.of), layout, verify, cap).pairs))(enc)
   }
 
   /** Roots from per-partition union-finds, merged on the driver, as
@@ -201,6 +241,27 @@ object DupClusters {
   def invalidate(): Unit = SessionTable.invalidate()
 }
 
+/** How the bucket pass reads its rows, laid out as (id, payload…,
+  * key…): `of` decodes one, `sameBucket` compares two rows' keys, and
+  * `pairable(x, y)` holds when both ids are non-null and differ (x
+  * sorts before y, so its id is then the smaller). */
+private[graft] trait BucketRows[R] extends Serializable {
+  /** The first key column. */
+  def keyFrom: Int
+  def of(r: Row): R
+  def sameBucket(x: R, y: R): Boolean
+  def pairable(x: R, y: R): Boolean
+}
+
+/** Rows read as they are, the key from column `keyFrom` on. */
+private[graft] final class KeyedRows(val keyFrom: Int) extends BucketRows[Row] {
+  def of(r: Row): Row = r
+  def sameBucket(x: Row, y: Row): Boolean =
+    (keyFrom until x.length).forall(i => Objects.deepEquals(x.get(i), y.get(i)))
+  def pairable(x: Row, y: Row): Boolean =
+    !x.isNullAt(0) && !y.isNullAt(0) && !Objects.deepEquals(x.get(0), y.get(0))
+}
+
 /** One exploded row of the hamming bucket pass: its bucket
   * (band index, band value) packed into `key`, its id (`hasId` false
   * for a null id) and its four bands (null when any band is null). */
@@ -213,48 +274,57 @@ private[graft] object BandRow {
     (r.getInt(5).toLong << 32) | (r.getInt(6) & 0xffffffffL),
     if (r.isNullAt(0)) 0L else r.getLong(0), !r.isNullAt(0),
     if ((1 to 4).exists(r.isNullAt)) null else Array.tabulate(4)(k => r.getInt(k + 1)))
+
+  /** The hamming verify: (x.id, y.id, hamming) when both rows have
+    * their bands and differ in at most `maxHamming` bits. */
+  def within(maxHamming: Int)(x: BandRow, y: BandRow, star: Boolean): Option[(Long, Long, Int)] =
+    if (x.bands == null || y.bands == null) None
+    else {
+      var h = 0
+      var k = 0
+      while (k < 4) { h += Integer.bitCount(x.bands(k) ^ y.bands(k)); k += 1 }
+      if (h <= maxHamming) Some((x.id, y.id, h)) else None
+    }
 }
 
-/** The partition-local half of [[DupClusters.hammingBucketPairs]] over
-  * rows sorted by (key, id nulls last). A bucket of at most
-  * `maxBucket` rows is held whole and emits all its pairs; at
+/** [[BandRow]]s, keyed by band index and value. */
+private[graft] object BandRows extends BucketRows[BandRow] {
+  val keyFrom = 5
+  def of(r: Row): BandRow = BandRow.of(r)
+  def sameBucket(x: BandRow, y: BandRow): Boolean = x.key == y.key
+  def pairable(x: BandRow, y: BandRow): Boolean = x.hasId && y.hasId && x.id < y.id
+}
+
+/** The partition-local half of [[DupClusters.bucketPairs]] over rows
+  * sorted by (key, id nulls last). A bucket of at most `maxBucket`
+  * rows is held whole and offers all its pairs to `verify`; at
   * `maxBucket + 1` held rows it turns to star mode and streams the
   * rest of the bucket against its first row, holding nothing more.
   * `peakHeld` is the most rows held at once. */
-private[graft] final class BucketStream(rows: Iterator[BandRow],
-    maxHamming: Int, maxBucket: Int) {
+private[graft] final class BucketStream[R, E](rows: Iterator[R], layout: BucketRows[R],
+    verify: (R, R, Boolean) => Option[E], maxBucket: Int) {
   private val in = rows.buffered
   private var peak = 0
 
   def peakHeld: Int = peak
 
-  private def sameBucket(key: Long): Boolean = in.hasNext && in.head.key == key
+  private def sameBucket(first: R): Boolean = in.hasNext && layout.sameBucket(first, in.head)
 
-  /** (x.id, y.id, hamming) when x.id < y.id and the pair is within
-    * `maxHamming`. */
-  private def edge(x: BandRow, y: BandRow): Iterator[(Long, Long, Int)] =
-    if (!x.hasId || !y.hasId || x.id >= y.id || x.bands == null || y.bands == null)
-      Iterator.empty
-    else {
-      var h = 0
-      var k = 0
-      while (k < 4) { h += Integer.bitCount(x.bands(k) ^ y.bands(k)); k += 1 }
-      if (h <= maxHamming) Iterator.single((x.id, y.id, h)) else Iterator.empty
-    }
+  private def edge(x: R, y: R, star: Boolean): Option[E] =
+    if (layout.pairable(x, y)) verify(x, y, star) else None
 
-  val pairs: Iterator[(Long, Long, Int)] =
+  val pairs: Iterator[E] =
     Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
-      val key = in.head.key
       val held = mutable.ArrayBuffer(in.next())
-      while (held.size <= maxBucket && sameBucket(key)) held += in.next()
+      while (held.size <= maxBucket && sameBucket(held(0))) held += in.next()
       peak = math.max(peak, held.size)
       if (held.size <= maxBucket)
         held.indices.iterator.flatMap(a =>
-          (a + 1 until held.size).iterator.flatMap(b => edge(held(a), held(b))))
+          (a + 1 until held.size).iterator.flatMap(b => edge(held(a), held(b), star = false)))
       else {
-        val rest = Iterator.continually(()).takeWhile(_ => sameBucket(key))
+        val rest = Iterator.continually(()).takeWhile(_ => sameBucket(held(0)))
           .map(_ => in.next())
-        (held.iterator.drop(1) ++ rest).flatMap(edge(held(0), _))
+        (held.iterator.drop(1) ++ rest).flatMap(edge(held(0), _, star = true))
       }
     }
 }

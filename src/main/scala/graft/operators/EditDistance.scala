@@ -125,7 +125,7 @@ object EditDistance {
     // far under the cap → bit-identical results there (the d16 oracle
     // is unchanged). The exact-distance verify below scopes the
     // connectivity claim: a probe whose only kept neighbors exceed k
-    // edits drops out (bounded-recall, see MinHash.guardedBandPairs).
+    // edits drops out (bounded-recall, see DupClusters.bucketPairs).
     val idx = graft.operators.MinHash.capBucketMembers(
       segmentKeys(bounded, "id", "s", k).withColumnRenamed("id", "id_a"),
       Seq("seg_i", "part_len", "seg"), "id_a", maxBucket)

@@ -1,18 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Reusable MinHash+LSH operator API (the library surface behind the
   * `d2_*` query entries; SURVEY north-star dedup).
   *
   * Pipeline: tokenize → shingle → K minhashes (explode → codegen'd
   * md5 → groupBy(min): the shuffle carries K hashes per doc, never
-  * shingles) → `bands` banded keys → candidate pairs by band
-  * equi-join → estimated-Jaccard verify.
+  * shingles) → `bands` banded keys → candidate pairs from one
+  * band-bucket pass with the estimated-Jaccard verify inside each
+  * bucket (`DupClusters.bucketPairs`).
   *
   * At 100 TB: `signatures` is a table you persist once per corpus
-  * snapshot; `candidatePairs` is one shuffle join on short band keys.
+  * snapshot; `candidatePairs` is one shuffle on short band keys.
   */
 object MinHash {
 
@@ -50,67 +52,57 @@ object MinHash {
     * 2^31−1 — overflow-free in signed 64-bit on both engines, and the
     * DuckDB oracle replicates the arithmetic bit-exactly. Versus k
     * independent digests this removes ~15/16 of the hash cost, which
-    * dominates the signature pass. */
+    * dominates the signature pass. A band key is the md5 of its rows'
+    * minhashes joined by commas. */
   def signatures(df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, bands: Int = 2, shingleN: Int = 3,
-      materialize: Boolean = true): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
-    val rowsPerBand = k / bands
-    val co = affineCoeffs(k)
-    val base = df
-      .where(size(split(col(textCol), " ")) >= shingleN)
-      .repartition(col(idCol))
-      .select(col(idCol), explode(shingleCol(col(textCol), shingleN)).as("__sh"))
-      .withColumn("__x",
-        conv(substring(md5(col("__sh")), 1, 15), 16, 10).cast("long") % Mod)
-    val aggs = (0 until k).map { i =>
-      val (a, b) = co(i)
-      min((col("__x") * a + b) % Mod).as(s"mh$i")
-    }
-    val sig = base.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-    val out = (0 until bands).foldLeft(sig) { (d, b) =>
-      d.withColumn(s"band_$b", md5(concat_ws(",",
-        (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh$i")): _*)))
-    }
-    if (materialize) out.persist() else out
-  }
+      materialize: Boolean = true): DataFrame =
+    signatureTable(df, idCol, textCol, k, bands, shingleN,
+      shingleCol(col(textCol), shingleN), materialize)(
+      sh => conv(substring(md5(sh), 1, 15), 16, 10).cast("long") % Mod,
+      rows => md5(concat_ws(",", rows: _*)))
 
-  /** Production-speed signature variant: xxhash64(seed, shingle)
-    * instead of md5 — stays in whole-stage codegen with no digest
-    * allocation, ~an order of magnitude cheaper per shingle. Same
-    * LSH semantics (min over 64-bit hashes), but engine-specific
-    * hash values → used when no cross-engine oracle parity is
-    * required (the md5 path exists exactly for that parity). */
+  /** Production-speed signature variant: xxhash64 per shingle instead
+    * of md5, and xxhash64 band keys — stays in whole-stage codegen
+    * with no digest allocation, ~an order of magnitude cheaper per
+    * shingle. Same LSH semantics (the same affine family over the
+    * hashed shingle), but engine-specific hash values → used when no
+    * cross-engine oracle parity is required (the md5 path exists
+    * exactly for that parity). n = 1 shingles are the raw tokens: a
+    * plain `split`, no n-gram assembly. */
   def signaturesFast(df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, bands: Int = 2, shingleN: Int = 3,
-      materialize: Boolean = true): DataFrame = {
+      materialize: Boolean = true): DataFrame =
+    signatureTable(df, idCol, textCol, k, bands, shingleN,
+      if (shingleN == 1) split(col(textCol), " ", -1)
+      else shingleCol(col(textCol), shingleN), materialize)(
+      sh => pmod(xxhash64(sh), lit(Mod)),
+      rows => xxhash64(rows: _*))
+
+  /** The signature builder behind [[signatures]] and
+    * [[signaturesFast]]: `shingles` exploded per document, `hash` maps
+    * a shingle to x in [0, [[Mod]]), the k minhashes are the minima of
+    * the affine maps (a_i·x + b_i) mod [[Mod]] — one hash per shingle
+    * instead of k — and `bandKey` folds each band's minhash columns. */
+  private def signatureTable(df: DataFrame, idCol: String, textCol: String,
+      k: Int, bands: Int, shingleN: Int, shingles: Column, materialize: Boolean)(
+      hash: Column => Column, bandKey: Seq[Column] => Column): DataFrame = {
     require(k % bands == 0, "k must divide into bands")
     val rowsPerBand = k / bands
-    // n = 1 shingles are the raw tokens: plain split stays in
-    // whole-stage codegen (the UDF exists only because n-gram
-    // assembly is interpreted-lambda-hostile; see shingleUdf)
-    val sh = if (shingleN == 1) split(col(textCol), " ", -1)
-             else shingleCol(col(textCol), shingleN)
-    // ONE xxhash64 per shingle + k affine maps (the same trick the
-    // md5 oracle path uses): versus k independent xxhash64 passes
-    // this removes (k−1)/k of the per-shingle hash cost, which
-    // dominates at the d4 surface's k = 72 (isolated d4_neardup
-    // 5.6 s → measured after: see commit). Same LSH semantics —
-    // pairwise-independent affine family over the hashed shingle.
     val co = affineCoeffs(k)
     val base = df
       .where(size(split(col(textCol), " ")) >= shingleN)
       .repartition(col(idCol))
-      .select(col(idCol), explode(sh).as("__sh"))
-      .withColumn("__x", pmod(xxhash64(col("__sh")), lit(Mod)))
+      .select(col(idCol), explode(shingles).as("__sh"))
+      .withColumn("__x", hash(col("__sh")))
     val aggs = (0 until k).map { i =>
       val (a, b) = co(i)
       min((col("__x") * a + b) % Mod).as(s"mh$i")
     }
     val sig = base.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
     val out = (0 until bands).foldLeft(sig) { (d, b) =>
-      d.withColumn(s"band_$b", xxhash64(
-        (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh$i")): _*))
+      d.withColumn(s"band_$b", bandKey(
+        (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh$i"))))
     }
     if (materialize) out.persist() else out
   }
@@ -123,119 +115,20 @@ object MinHash {
   val DefaultMaxBucket: Int = 4096
 
   /** Session conf for the band-bucket skew guard: `"on"` (default)
-    * runs the count-pass + star/cap machinery; `"off"` skips it
-    * entirely — [[guardedBandPairs]] becomes the plain band self-join
-    * and [[capBucketMembers]] a pass-through. Set it off ONLY for a
-    * corpus the caller asserts is unskewed (no band bucket anywhere
-    * near [[DefaultMaxBucket]]): it recovers the unguarded constants
-    * (the count agg + anti/semi splits cost ~15–25 % on clean gate
-    * corpora) at the price of the n² mega-bucket failure mode the
-    * guard exists for. Results are identical on any corpus where no
-    * bucket exceeds the cap — the only regime where turning it off
-    * is legitimate. */
+    * runs the star/cap machinery; `"off"` skips it entirely — the
+    * bucket pass (`DupClusters.bucketPairs`) holds every bucket whole
+    * and emits the plain band self-join, and [[capBucketMembers]] is a
+    * pass-through. Set it off ONLY for a corpus the caller asserts is
+    * unskewed (no band bucket anywhere near [[DefaultMaxBucket]]): it
+    * drops the cap's count pass and splits at the price of the n²
+    * mega-bucket failure mode the guard exists for. Results are
+    * identical on any corpus where no bucket exceeds the cap — the
+    * only regime where turning it off is legitimate. */
   val GuardConfKey = "spark.graft.lsh.skewGuard"
 
   private[operators] def guardOff(df: DataFrame): Boolean =
     df.sparkSession.conf.get(GuardConfKey, "on")
       .equalsIgnoreCase("off")
-
-  /** Band-bucket SKEW GUARD for LSH self-joins — the 100 TB failure
-    * mode SCALING.md names: millions of near-identical pages (cookie
-    * banners, templated listings) share one band key, and the band
-    * equi-join turns into an in-bucket n² that no executor finishes.
-    *
-    * Mechanism: one cheap `groupBy(bucket).count` pass (partial-agg —
-    * only (key, count) shuffles) sizes every bucket; buckets
-    * ≤ `maxBucket` self-join exactly as before (bit-identical pairs);
-    * buckets above it switch to STAR pairing against the bucket's
-    * min-id representative — O(n) pairs instead of O(n²). Sound for
-    * dedup because members of one mega-bucket agree on a full band
-    * (k/bands minhash rows), i.e. they are near-certain duplicates of
-    * EACH OTHER; linking all of them to one representative puts the
-    * whole bucket in one connected component, at a millionth of the
-    * cost. Pair-level output within a mega-bucket is the star subset
-    * (documented bounded-recall semantics).
-    *
-    * CONNECTIVITY SCOPE: the one-component claim holds for the
-    * CANDIDATE graph this function returns. A caller that filters
-    * pairs afterwards by a similarity predicate (est-Jaccard ≥ t,
-    * hamming ≤ k, exact Jaccard) can drop a star edge (rep, member)
-    * that a member–member edge of the unguarded join would have
-    * passed, so mega-bucket clusters may fragment beyond the pair
-    * loss. Callers for whom band agreement itself is the similarity
-    * evidence should pass `emitStar = true` and exempt `is_star`
-    * edges from the threshold (see [[candidatePairs]]); callers with
-    * an EXACT verify must keep the filter (the output contract is the
-    * exact predicate) and inherit the scoped claim.
-    *
-    * `exploded` columns: keyCols ++ (idCol, payloadCols…); returns
-    * (id_a, id_b, payload_a…, payload_b… [, is_star]) with
-    * id_a < id_b, possibly with cross-band duplicates — callers
-    * `distinct()` as before. With `emitStar`, star edges carry
-    * `is_star = true` (small-bucket pairs false).
-    *
-    * Honoring [[GuardConfKey]]: when the session asserts an unskewed
-    * corpus, the whole count-pass branch is skipped and the plain
-    * band self-join runs (identical results whenever no bucket
-    * exceeds `maxBucket`). */
-  def guardedBandPairs(exploded: DataFrame, keyCols: Seq[String],
-      idCol: String, payloadCols: Seq[String],
-      maxBucket: Int = DefaultMaxBucket,
-      emitStar: Boolean = false): DataFrame = {
-    require(maxBucket >= 2, "maxBucket must be >= 2")
-    val keys = keyCols.map(col)
-    def starred(df: DataFrame, star: Boolean) =
-      if (emitStar) df.withColumn("is_star", lit(star)) else df
-    if (guardOff(exploded)) {
-      // caller-asserted clean corpus: one co-partitioned self-join,
-      // no count pass, no anti/semi splits (both sides reuse the one
-      // exchange via ReuseExchange exactly as before the guard)
-      val ex = exploded.repartition(keys: _*)
-      def side0(suffix: String) = ex.select(
-        keys ++ (col(idCol).as(s"id_$suffix") +:
-          payloadCols.map(c => col(c).as(s"${c}_$suffix"))): _*)
-      val outCols0 = (Seq("id_a", "id_b") ++
-        payloadCols.flatMap(c => Seq(s"${c}_a", s"${c}_b"))).map(col)
-      return starred(
-        side0("a").join(side0("b"), keyCols)
-          .where(col("id_a") < col("id_b"))
-          .select(outCols0: _*), star = false)
-    }
-    // ONE shared exchange for every consumer below: repartitioning on
-    // the band keys here means the size agg, the anti/semi splits and
-    // both self-join sides all read the SAME shuffle output
-    // (ReuseExchange dedupes the identical subtree), so the signature/
-    // explode lineage is computed once — without this the guard's
-    // extra consumers re-evaluated it per branch, measured +25–35 % on
-    // d2/d3/d16 at the 5x point. The join and the groupBy then need
-    // no further exchange (already hash-clustered on keyCols).
-    val ex = exploded.repartition(keys: _*)
-    // Hot-bucket KEY SET, not per-row sizes: the qualifying keys are ≤
-    // n/maxBucket rows — EMPTY on healthy corpora, so AQE broadcasts
-    // them, the anti-join degenerates to a pass-through, and AQE's
-    // empty-relation propagation prunes the whole star branch: the
-    // unskewed plan pays one co-partitioned agg, nothing else.
-    val bigKeys = ex.groupBy(keys: _*).agg(count(lit(1)).as("__bn"))
-      .where(col("__bn") > maxBucket)
-      .select(keys: _*)
-    def side(suffix: String)(df: DataFrame) = df.select(
-      keys ++ (col(idCol).as(s"id_$suffix") +:
-        payloadCols.map(c => col(c).as(s"${c}_$suffix"))): _*)
-    val outCols = (Seq("id_a", "id_b") ++
-      payloadCols.flatMap(c => Seq(s"${c}_a", s"${c}_b"))).map(col)
-    val small = ex.join(bigKeys, keyCols, "left_anti")
-    val smallPairs = side("a")(small).join(side("b")(small), keyCols)
-      .where(col("id_a") < col("id_b"))
-      .select(outCols: _*)
-    val big = ex.join(bigKeys, keyCols, "left_semi")
-    val repAggs = min(col(idCol)).as("id_a") +:
-      payloadCols.map(c => min_by(col(c), col(idCol)).as(s"${c}_a"))
-    val reps = big.groupBy(keys: _*).agg(repAggs.head, repAggs.tail: _*)
-    val bigPairs = side("b")(big).join(reps, keyCols)
-      .where(col("id_a") =!= col("id_b"))
-      .select(outCols: _*)
-    starred(smallPairs, star = false).union(starred(bigPairs, star = true))
-  }
 
   /** Bipartite band-join guard: bounds the rows per bucket of a
     * PROBE-TARGET side to ~`maxBucket`, so the per-bucket fan-out of
@@ -244,7 +137,10 @@ object MinHash {
     * bit-identically; above it the kept set is the bucket's MIN-ID
     * row plus a deterministic xxhash64-threshold subset (expected
     * size ≤ maxBucket, Chernoff-concentrated) — bounded-recall
-    * semantics, same count-pass discipline as [[guardedBandPairs]].
+    * semantics, as in the self-join guard of `DupClusters.bucketPairs`.
+    * That streaming pass cannot produce this kept set: the hash
+    * threshold needs the bucket's full size n before it keeps any row,
+    * so the cap keeps its own count pass.
     *
     * Deliberately NO `row_number` window over the band keys: on the
     * adversarial corpus this guard exists for, a 10⁷-row bucket would
@@ -261,8 +157,8 @@ object MinHash {
     if (guardOff(exploded)) return exploded
     val keys = keyCols.map(col)
     val orig = exploded.columns.map(col)
-    // one shared exchange, as in guardedBandPairs: count pass, the
-    // anti split and the filtered big side all reuse it
+    // one shared exchange: the count pass, the anti split and the
+    // filtered big side all reuse it
     val ex = exploded.repartition(keys: _*)
     val bigKeys = ex.groupBy(keys: _*)
       .agg(count(lit(1)).as("__bn"), min(col(idCol)).as("__minid"))
@@ -275,9 +171,13 @@ object MinHash {
     small.select(orig: _*).union(kept.select(orig: _*))
   }
 
-  /** Candidate near-dup pairs with estimated Jaccard ≥ threshold.
-    * Band buckets larger than `maxBucket` take the star-guard path
-    * (see [[guardedBandPairs]]) instead of the in-bucket self-join.
+  /** Candidate near-dup pairs `(id_a, id_b, est_jaccard)`, id_a < id_b,
+    * with estimated Jaccard (equal signature positions / k) ≥
+    * `threshold`, from one band-bucket pass
+    * (`DupClusters.bucketPairs`, keyed on (band_idx, band_key)): each
+    * bucket's pairs are verified inside its partition. Band buckets
+    * larger than `maxBucket` star-pair to their min id instead of
+    * emitting n² pairs.
     *
     * Star edges are EXEMPT from the threshold: members of a
     * mega-bucket agree on a full band (k/bands minhash rows), which
@@ -291,22 +191,23 @@ object MinHash {
   def candidatePairs(sig: DataFrame, idCol: String, k: Int = 16,
       bands: Int = 2, threshold: Double = 0.75,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val sigArr = array((0 until k).map(i => col(s"mh$i")): _*)
     val exploded = sig
-      .select(col(idCol), sigArr.as("__sig"),
+      .select(col(idCol),
+        array((0 until k).map(i => col(s"mh$i")): _*).cast("array<bigint>").as("__sig"),
         posexplode(array((0 until bands).map(b => col(s"band_$b")): _*))
           .as(Seq("band_idx", "band_key")))
-    // signature agreement as a native codegen loop (the interpreted
-    // size(filter(sequence)) lambda was the per-candidate hot cost)
-    val estJ = org.apache.spark.sql.graftx.PositionalEqual
-      .equalCount(col("__sig_a"), col("__sig_b"))
-      .cast("double") / k
-    guardedBandPairs(exploded, Seq("band_idx", "band_key"), idCol,
-        Seq("__sig"), maxBucket, emitStar = true)
-      .select(col("id_a"), col("id_b"), estJ.as("est_jaccard"),
-        col("is_star"))
-      .where(col("est_jaccard") >= threshold || col("is_star"))
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
+    val id = sig.schema(idCol).dataType
+    val out = StructType(Seq(StructField("id_a", id), StructField("id_b", id),
+      StructField("est_jaccard", DoubleType)))
+    DupClusters.bucketPairs(exploded, Seq("band_idx", "band_key"), idCol,
+        Seq("__sig"), out, maxBucket) { (x, y, star) =>
+        val (a, b) = (x.getSeq[Long](1), y.getSeq[Long](1))
+        var equal = 0
+        var i = 0
+        while (i < k) { if (a(i) == b(i)) equal += 1; i += 1 }
+        val est = equal.toDouble / k
+        if (est >= threshold || star) Some(Row(x.get(0), y.get(0), est)) else None
+      }
       .distinct()
   }
 

@@ -646,7 +646,7 @@ object Multimodal {
     // stay connected to the keeper with bounded per-probe fan-out;
     // gate-scale buckets are far under the cap → bit-identical
     // results there. The hamming≤max verify below scopes the
-    // connectivity claim (bounded-recall, see guardedBandPairs).
+    // connectivity claim (bounded-recall, see DupClusters.bucketPairs).
     val idxCapped = graft.operators.MinHash.capBucketMembers(
       idx, Seq("band_idx", "band_key"), "media_a")
     idxCapped.hint("merge").join(prb, Seq("band_idx", "band_key"))

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{StructField, StructType}
 import graft.Tables
 
 /** Deduplication operators for training-data pipelines, generalizing
@@ -63,14 +64,14 @@ object DedupOps {
         col("band_1").as("band1"), col("mh0"), col(s"mh${K - 1}"))
       .orderBy(col("doc_id"))
 
-  /** D2b LSH candidate pairs. Both band-join sides derive from the
-    * SAME signature subtree, so the signature shuffle (the expensive
-    * shingle→hash→agg pass) canonicalizes identically and physical
-    * planning dedupes it (ReuseExchange / AQE stage reuse: the
-    * per-shingle hash work runs ONCE, both sides re-read the shuffle
-    * files). No persist, no checkpoint: building the query runs zero
-    * jobs, leaves zero cache entries, and a throwing caller leaks
-    * nothing (CacheHygieneSpec asserts all three). At 100 TB the
+  /** D2b LSH candidate pairs: the signature table's band rows go
+    * through one band-bucket pass (`DupClusters.bucketPairs`, via
+    * `MinHash.candidatePairs`) that verifies the estimated Jaccard
+    * inside each bucket, so the signature pass (the expensive
+    * shingle→hash→agg pass) has one consumer and runs once. No persist,
+    * no checkpoint: building the query runs zero jobs, leaves zero
+    * cache entries, and a throwing caller leaks nothing
+    * (CacheHygieneSpec asserts all three). At 100 TB the
     * signature table would instead be persisted once per corpus
     * snapshot as its own table — `MinHash.signatures(materialize=
     * true)` is that surface. */
@@ -302,60 +303,28 @@ object DedupOps {
     * while J ≤ 0.4 pairs surface at < 5 % (r = 6 keeps the
     * shared-vocabulary baseline of a same-generator corpus out of the
     * candidate set — r = 4 let J ≈ 0.4 pairs flood the join).
-    * Candidates go STRAIGHT to the exact token-set verify: the
-    * per-candidate exact check intersects two |tset|-element arrays,
-    * so it beats a k-term minhash estimate whenever |tset| < k — on
-    * this corpus decisively (≤ 31-token vocabulary vs k = 72; the
-    * estJ gate measured 2× the whole verify stage, since it re-joins
-    * two 72-long signature arrays per candidate). `estGate = true`
-    * restores the gate for corpora whose token sets dwarf k (web-scale
-    * docs with 10³–10⁴ tokens), where a 72-int estimate per pair is
-    * far cheaper than intersecting the full sets. Results are
-    * identical to d4NgramJaccard either way (MinHashSpec asserts set
-    * equality at sf0.01); no oracle (engine-specific hash), the exact
-    * twin IS the oracle-checked d4 entry. Band keys include `source`
-    * — d4's blocking — so candidates never cross blocks. */
+    * Candidates ([[nearDupCandidates]]) go STRAIGHT to the exact
+    * token-set verify: the per-candidate exact check intersects two
+    * |tset|-element arrays, so it beats a k-term minhash estimate
+    * whenever |tset| < k — on this corpus decisively (≤ 31-token
+    * vocabulary vs k = 72; an estimate gate measured 2× the whole
+    * verify stage). Results are identical to d4NgramJaccard
+    * (MinHashSpec asserts set equality at sf0.01); no oracle
+    * (engine-specific hash), the exact twin IS the oracle-checked d4
+    * entry. Band keys include `source` — d4's blocking — so
+    * candidates never cross blocks. */
   def nearDupPairs(s: SparkSession, dir: String,
-      threshold: Double = 0.9, estGate: Boolean = false): DataFrame = {
-    val k = 72
+      threshold: Double = 0.9): DataFrame = {
     val bands = 12
     val docs = Tables(s, dir, "documents")
-    // signature table pinned once (eager localCheckpoint, round 16):
-    // the skew guard's five consumers re-executed the k=72 xxhash64
-    // signature pass per branch (ReuseExchange misses on the
-    // branches' differing inferred filters). Measured 2.49 → 1.95 s
-    // steady / 13.6 → 3.4 s cold at sf0.1. Pin is one 72-long row
-    // per doc; eager-by-nature in CacheHygieneSpec.
     val sig = graft.operators.MinHash.signaturesFast(
-      docs, "doc_id", "text", k = k, bands = bands, shingleN = 1,
+      docs, "doc_id", "text", k = 72, bands = bands, shingleN = 1,
       materialize = false)
-      .localCheckpoint()
-    val exploded = sig
+    val cand = nearDupCandidates(sig
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
       .select(col("doc_id"), col("source"),
         posexplode(array((0 until bands).map(b => col(s"band_$b")): _*))
-          .as(Seq("band_idx", "band_key")))
-    // band-bucket skew guard (SCALING.md item 8): buckets over the
-    // cap star-pair to a representative instead of self-joining n²;
-    // never triggered at gate scale → candidate (and output) sets
-    // unchanged there, and a boilerplate mega-bucket costs O(n)
-    val cand0 = graft.operators.MinHash.guardedBandPairs(
-        exploded, Seq("source", "band_idx", "band_key"), "doc_id", Nil)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-      .distinct()
-    val cand = if (!estGate) cand0 else {
-      val sigArr = array((0 until k).map(i => col(s"mh$i")): _*)
-      val estJ = (0 until k).map(i =>
-        when(element_at(col("sig_a"), i + 1) === element_at(col("sig_b"), i + 1),
-          1).otherwise(0)).reduce(_ + _).cast("double") / k
-      // margin: threshold − 0.15 ≈ 3.5σ of the k=72 estimator at
-      // J = 0.9 — recall stays ~1 while sub-threshold pairs drop
-      cand0
-        .join(sig.select(col("doc_id").as("doc_a"), sigArr.as("sig_a")), "doc_a")
-        .join(sig.select(col("doc_id").as("doc_b"), sigArr.as("sig_b")), "doc_b")
-        .where(estJ >= threshold - 0.15)
-        .select(col("doc_a"), col("doc_b"))
-    }
+          .as(Seq("band_idx", "band_key"))))
     val d = docs
       .select(col("doc_id"), array_sort(array_distinct(toks)).as("tset"))
       .withColumn("nt", size(col("tset")))
@@ -376,6 +345,24 @@ object DedupOps {
         lit(tMicro) * greatest(col("na"), col("nb")).cast("long"))
       .select(col("doc_a"), col("doc_b"), j.as("jaccard"))
       .where(col("jaccard") >= threshold)
+  }
+
+  /** d4's candidate step: distinct `(doc_a, doc_b)` pairs, doc_a <
+    * doc_b, of documents that share a (source, band_idx, band_key)
+    * bucket of `exploded`, from the band-bucket pass
+    * (`DupClusters.bucketPairs`) with no verify. A bucket over
+    * `maxBucket` rows (a boilerplate mega-bucket, SCALING.md item 8)
+    * star-pairs to its min doc_id instead of emitting n² pairs; never
+    * triggered at gate scale, so the candidate set is the plain band
+    * self-join's there. */
+  private[graft] def nearDupCandidates(exploded: DataFrame,
+      maxBucket: Int = graft.operators.MinHash.DefaultMaxBucket): DataFrame = {
+    val id = exploded.schema("doc_id").dataType
+    graft.operators.DupClusters.bucketPairs(exploded,
+        Seq("source", "band_idx", "band_key"), "doc_id", Nil,
+        StructType(Seq(StructField("doc_a", id), StructField("doc_b", id))),
+        maxBucket)((x, y, _) => Some(Row(x.get(0), y.get(0))))
+      .distinct()
   }
 
   /** D5 embedding near-dup: cosine ≥ threshold within label blocks

@@ -59,8 +59,6 @@ class CacheHygieneSpec extends AnyFunSuite {
     "d12_bloom_dedup",  // Bloom filter build over the corpus windows
     "mm2_image_phash",  // (id, pHash) signature table pinned at build
                         // so the JPEG decode pass runs once (r16)
-    "d4_neardup_pairs", // k=72 minhash signature table pinned at
-                        // build — same discipline (r16)
     "d16_editdist_join", // bounded (id, s) relation pinned at build —
                         // four consumers re-ran the text scan (r17)
     "m6_materials_e2e", // cfgs/cfgAtoms pinned at build — four

@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The materialized cluster-labels surface (operators.DupClusters):
   * CC correctness on planted graphs and on graph shapes checked against
   * a breadth-first-search reference, the kernel's job budget, the
-  * hamming bucket kernel against the guarded band self-join it
-  * replaced (pairs, star mode, nulls, labels, rows held per bucket),
+  * hamming bucket kernel against a relational band self-join with
+  * star edges (pairs, star mode, nulls, labels, rows held per bucket),
   * build-once semantics of the session store, and equality of the d13
   * survivorship consumed from the store vs freshly recomputed labels. */
 class DupClustersSpec extends AnyFunSuite {
@@ -155,10 +155,10 @@ class DupClustersSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
   private val bandNames = (0 until 4).map(k => s"band$k")
 
-  /** The d3 pipeline the bucket kernel replaced, kept as its reference:
-    * band explode, `MinHash.guardedBandPairs` (the count pass with
-    * anti/semi splits and the band self-join), the hamming ≤ 3 verify
-    * and a `distinct`. */
+  /** The d3 pairs as plain relational operators, the kernel's
+    * reference: band explode, the band self-join with min-id star
+    * edges for buckets over the cap ([[BandPairsReference]]), the
+    * hamming ≤ 3 verify and a `distinct`. */
   private def referencePairs(sig: DataFrame,
       maxBucket: Int = operators.MinHash.DefaultMaxBucket): DataFrame = {
     val bands = bandNames.map(col)
@@ -167,7 +167,7 @@ class DupClustersSpec extends AnyFunSuite {
     val hamming = (0 until 4).map(k =>
       bit_count(col(s"band${k}_a").bitwiseXOR(col(s"band${k}_b"))).cast("long"))
       .reduce(_ + _)
-    operators.MinHash.guardedBandPairs(exploded,
+    BandPairsReference(exploded,
         Seq("band_idx", "band_val"), "doc_id", bandNames, maxBucket)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
         hamming.as("hamming"))
@@ -279,13 +279,15 @@ class DupClustersSpec extends AnyFunSuite {
     def bucket(key: Long, n: Int) = (0 until n).map(i =>
       operators.BandRow(key, i.toLong, hasId = true, Array(i & 7, 0, 0, 0)))
     val input = bucket(1L, 100) ++ bucket(2L, 3) ++ bucket(3L, 5)
-    val guarded = new operators.BucketStream(input.iterator, 3, 4)
+    def stream(maxBucket: Int) = new operators.BucketStream(input.iterator,
+      operators.BandRows, operators.BandRow.within(3), maxBucket)
+    val guarded = stream(4)
     val starPairs = guarded.pairs.toList
     assert(guarded.peakHeld === 5)
     // star from id 0 in buckets 1 and 3, all pairs in bucket 2
     assert(starPairs.count(_._1 == 0L) === 99 + 2 + 4)
     assert(starPairs.size === 99 + 3 + 4)
-    val whole = new operators.BucketStream(input.iterator, 3, Int.MaxValue)
+    val whole = stream(Int.MaxValue)
     assert(whole.pairs.size === 100 * 99 / 2 + 3 + 10)
     assert(whole.peakHeld === 100)
   }

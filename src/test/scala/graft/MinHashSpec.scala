@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftspec.JobLog
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -82,6 +83,28 @@ class MinHashSpec extends AnyFunSuite {
     val exact = keyed(graft.queries.DedupOps.d4NgramJaccard(spark, dir))
     assert(composed === exact)
     assert(composed.nonEmpty)
+  }
+
+  test("job budget: warm d2_minhash_pairs and d4_neardup_pairs at sf0.001") {
+    val sf = "/root/testdata/sf0.001"
+    // (query, build jobs, jobs, stages with skipped ones, stages that
+    // read a shuffle) over build + collect, after one warm-up run
+    val budgets = Seq(
+      ("d2_minhash_pairs", 0, 4, 10, 6),
+      ("d4_neardup_pairs", 0, 6, 12, 6))
+    budgets.foreach { case (name, buildJobs, maxJobs, maxStages, maxReads) =>
+      val fn = SparkEntry.queries(name)
+      fn(spark, sf).collect()
+      val (df, built) = JobLog.record(spark.sparkContext)(fn(spark, sf))
+      val (_, ran) = JobLog.record(spark.sparkContext)(df.collect())
+      val jobs = built ++ ran
+      info(s"$name: ${built.size} build jobs, ${jobs.size} jobs, " +
+        s"${jobs.map(_.stages).sum} stages, ${jobs.map(_.stages - 1).sum} read a shuffle")
+      assert(built.size <= buildJobs, built.mkString("\n"))
+      assert(jobs.size <= maxJobs, jobs.mkString("\n"))
+      assert(jobs.map(_.stages).sum <= maxStages, jobs.mkString("\n"))
+      assert(jobs.map(_.stages - 1).sum <= maxReads, jobs.mkString("\n"))
+    }
   }
 
   test("band-bucket skew guard: a 10^4-doc mega-bucket yields O(n) star pairs, not n^2") {
@@ -436,6 +459,83 @@ class MinHashSpec extends AnyFunSuite {
       "the dup VERDICT must be cap-invariant")
   }
 
+  /** A signature relation in the shape of DupClustersSpec's planted
+    * one: a band_0 mega-bucket "shared" of ids 1..10 plus a repeated id
+    * 5 and a null id, whose members agree on mh0..7, id i > 1 with
+    * every later member on the first i − 1 of mh8..15 and id 1 with no
+    * one there; a small band_1 bucket {20, 21, 22} where id 22 has a
+    * null band_0, as has id 23 (same signature, no shared band_1); and
+    * 200 random rows on few band values (buckets that all outgrow a
+    * cap of 4) with mh8..15 drawn from {0, 1}. `source` splits the
+    * random rows in two blocks for d4. */
+  private def plantedSig: org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    def row(id: Option[Long], tail: Seq[Long], b0: Option[String], b1: String,
+        source: String) = (id, Seq.fill(8)(7L) ++ tail, b0, b1, source)
+    val big = (1 to 10).map(i => row(Some(i.toLong),
+        (0 until 8).map(j => if (j < i - 1) 100L + j else i * 1000L + j),
+        Some("shared"), s"own$i", "web")) ++ Seq(
+      row(Some(5L), (0 until 8).map(j => 100L + j), Some("shared"), "own5b", "web"),
+      row(None, (0 until 8).map(j => 100L + j), Some("shared"), "own0", "web"))
+    val small = Seq(
+      row(Some(20L), (0 until 8).map(j => 200L + j), Some("solo20"), "small", "web"),
+      row(Some(21L), (0 until 8).map(j => if (j < 6) 200L + j else 9L), Some("solo21"),
+        "small", "web"),
+      row(Some(22L), (0 until 8).map(j => 200L + j), None, "small", "web"),
+      row(Some(23L), (0 until 8).map(j => 200L + j), None, "own23", "web"))
+    val rnd = new scala.util.Random(7)
+    val random = (100 until 300).map(i => row(Some(i.toLong),
+      Seq.fill(8)(rnd.nextInt(2).toLong), Some(s"r${rnd.nextInt(5)}"),
+      s"q${rnd.nextInt(8)}", if (i % 3 == 0) "wiki" else "web"))
+    (big ++ small ++ random).toDF("id", "mh", "band_0", "band_1", "source")
+      .select(col("id") +:
+        (0 until 16).map(j => element_at(col("mh"), j + 1).as(s"mh$j")) :+
+        col("band_0") :+ col("band_1") :+ col("source"): _*)
+  }
+
+  private def bandRows(sig: org.apache.spark.sql.DataFrame) =
+    posexplode(array(sig("band_0"), sig("band_1"))).as(Seq("band_idx", "band_key"))
+
+  test("candidatePairs and the d4 candidate step equal the band self-join reference") {
+    val sig = plantedSig
+    val exploded = sig.select(col("id"),
+      array((0 until 16).map(i => col(s"mh$i")): _*).as("__sig"), bandRows(sig))
+    val d4Rows = sig.select(col("id").as("doc_id"), col("source"), bandRows(sig))
+    def triples(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val estJ = org.apache.spark.sql.graftx.PositionalEqual
+      .equalCount(col("__sig_a"), col("__sig_b")).cast("double") / 16
+    val got = Seq(4, Int.MaxValue).map { cap =>
+      val d2 = triples(MinHash.candidatePairs(sig, "id", threshold = 0.75, maxBucket = cap))
+      assert(d2 === triples(BandPairsReference(exploded, Seq("band_idx", "band_key"),
+          "id", Seq("__sig"), cap)
+        .where(estJ >= 0.75 || col("is_star"))
+        .select(col("id_a"), col("id_b"), estJ).distinct()))
+      val d4 = pairs(queries.DedupOps.nearDupCandidates(d4Rows, cap))
+      assert(d4 === pairs(BandPairsReference(d4Rows, Seq("source", "band_idx", "band_key"),
+        "doc_id", Nil, cap).select(col("id_a"), col("id_b")).distinct()))
+      (d2, d4)
+    }
+    val ((d2Star, d4Star), (d2All, d4All)) = (got(0), got(1))
+    // the mega-bucket: star edges from id 1, below the threshold too;
+    // without the cap only pairs at est ≥ 0.75 and every band pair
+    assert(d2Star.filter(_._2 <= 10).map(_._2) === (2L to 10L).toSet)
+    assert(d2Star.contains((1L, 2L, 0.5)) && !d2All.exists(p => p._1 == 1L && p._2 == 2L))
+    assert(d2All.contains((5L, 10L, 1.0)) && !d2Star.exists(p => p._1 == 5L && p._2 == 10L))
+    assert(d2Star.contains((20L, 21L, 14.0 / 16)) && d2All.contains((20L, 21L, 14.0 / 16)))
+    assert(d4All.size > d4Star.size && d4Star.contains((1L, 10L)) && d4All.contains((2L, 3L)))
+    // ids 22 and 23 (null band_0s, equal signatures) share no bucket:
+    // 22 pairs only through band_1, 23 with nothing
+    assert(d2Star.contains((20L, 22L, 1.0)) && d4Star.contains((20L, 22L)))
+    assert(!(d2Star ++ d2All).exists(_._2 == 23L) && !(d4Star ++ d4All).exists(_._2 == 23L))
+    // no d4 pair crosses a source block
+    val wiki = sig.where(col("source") === "wiki").collect().map(_.getLong(0)).toSet
+    assert((d4Star ++ d4All).forall(p => wiki(p._1) == wiki(p._2)))
+    assert((d2Star ++ d2All).forall(p => p._1 < p._2) && (d4Star ++ d4All).forall(p => p._1 < p._2))
+  }
+
   test("skew-guard bypass flag: plain plan, identical results on a clean corpus") {
     import spark.implicits._
     val rows = (0 until 3).flatMap { c =>
@@ -448,15 +548,25 @@ class MinHashSpec extends AnyFunSuite {
     val df = rows.toDF("id", "text")
     val sig = MinHash.signatures(df, "id", "text", materialize = false)
     def run() = MinHash.candidatePairs(sig, "id", threshold = 0.5)
+    // candidate generation is one exchange on the bucket key and no
+    // join, with the guard on and off alike
+    def shape(df: org.apache.spark.sql.DataFrame) = {
+      val plan = df.queryExecution.optimizedPlan
+      (plan.collect {
+        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+          if r.partitionExpressions.exists(_.references.exists(_.name == "band_key")) => r
+      }.size, plan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }.size)
+    }
     val withGuard = run()
-    assert(withGuard.queryExecution.optimizedPlan.toString.contains("__bn"))
+    assert(shape(withGuard) === (1, 0))
     val guardOn = withGuard.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     spark.conf.set(MinHash.GuardConfKey, "off")
     try {
       val bypassed = run()
-      // no count pass, no anti/semi splits in the bypassed plan
-      assert(!bypassed.queryExecution.optimizedPlan.toString.contains("__bn"))
+      assert(shape(bypassed) === (1, 0))
       val guardOff = bypassed.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(guardOff === guardOn)

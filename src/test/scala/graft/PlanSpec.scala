@@ -136,7 +136,7 @@ class PlanSpec extends AnyFunSuite {
     val plan = formatted(queries.DedupOps.nearDupPairs(spark, sf))
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
-      "candidate generation must stay an equi-join on (source, band_idx, band_key)")
+      "candidate generation must stay one band-bucket pass on (source, band_idx, band_key)")
     // the verify stage joins candidates to per-doc token sets by key
     assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin") ||
       plan.contains("BroadcastHashJoin"))
