@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions._
   * the guard threshold). For each of the guarded surfaces the runner
   * executes guard ON (default) and guard OFF
   * (`spark.graft.lsh.skewGuard = off`: the bucket pass holds every
-  * bucket whole, i.e. the plain band self-join):
+  * bucket whole in one task's memory and emits the plain band
+  * self-join's pairs — no faster than guard ON, since the pass has no
+  * count pass to skip, and the n² mega-bucket runs in one task; this
+  * reference arm is the one use of `off` on the self-join surfaces):
   *
   *  - d2_minhash_pairs — candidate pairs (star edges exempt from the
   *    threshold): pair recall vs the unguarded set, extra star edges,

@@ -149,7 +149,8 @@ object DupClusters {
     * fragment that component, so one for which band agreement is
     * itself the similarity evidence passes star edges
     * ([[MinHash.candidatePairs]]). With [[MinHash.GuardConfKey]] `off`
-    * every bucket is held whole (the plain band self-join).
+    * every bucket is held whole in one task's memory (the plain band
+    * self-join, with no speed-up: there is no count pass to skip).
     *
     * Rows with a null id pair with nothing but count toward their
     * bucket's size; a row with a null key column is in no bucket. A

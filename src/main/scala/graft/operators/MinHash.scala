@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.PositionalEqual
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Reusable MinHash+LSH operator API (the library surface behind the
@@ -115,15 +117,20 @@ object MinHash {
   val DefaultMaxBucket: Int = 4096
 
   /** Session conf for the band-bucket skew guard: `"on"` (default)
-    * runs the star/cap machinery; `"off"` skips it entirely — the
-    * bucket pass (`DupClusters.bucketPairs`) holds every bucket whole
-    * and emits the plain band self-join, and [[capBucketMembers]] is a
-    * pass-through. Set it off ONLY for a corpus the caller asserts is
-    * unskewed (no band bucket anywhere near [[DefaultMaxBucket]]): it
-    * drops the cap's count pass and splits at the price of the n²
-    * mega-bucket failure mode the guard exists for. Results are
-    * identical on any corpus where no bucket exceeds the cap — the
-    * only regime where turning it off is legitimate. */
+    * runs the star/cap machinery; `"off"` lifts it. Results are
+    * identical on any corpus where no bucket exceeds the cap.
+    *
+    *  - [[capBucketMembers]] becomes a pass-through: off drops its
+    *    count pass and splits, which is a real saving on a corpus the
+    *    caller asserts is unskewed (no band bucket anywhere near
+    *    [[DefaultMaxBucket]]).
+    *  - The self-join surfaces (`DupClusters.bucketPairs`: d2, d3, d4
+    *    pairs and the dup-labels build) only lose the cap: every
+    *    bucket is held whole in one task's memory and emits all its
+    *    pairs, the plain band self-join. That pass has no count pass
+    *    to skip, so off saves nothing there, and a mega-bucket must
+    *    fit in one task's heap (nothing spills). Its one use there is
+    *    the unguarded reference arm of `graft.GuardRecall`. */
   val GuardConfKey = "spark.graft.lsh.skewGuard"
 
   private[operators] def guardOff(df: DataFrame): Boolean =
@@ -201,11 +208,8 @@ object MinHash {
       StructField("est_jaccard", DoubleType)))
     DupClusters.bucketPairs(exploded, Seq("band_idx", "band_key"), idCol,
         Seq("__sig"), out, maxBucket) { (x, y, star) =>
-        val (a, b) = (x.getSeq[Long](1), y.getSeq[Long](1))
-        var equal = 0
-        var i = 0
-        while (i < k) { if (a(i) == b(i)) equal += 1; i += 1 }
-        val est = equal.toDouble / k
+        def sigOf(r: Row) = new GenericArrayData(r.getSeq[Any](1))
+        val est = PositionalEqual.equalCount(sigOf(x), sigOf(y)).toDouble / k
         if (est >= threshold || star) Some(Row(x.get(0), y.get(0), est)) else None
       }
       .distinct()

@@ -19,9 +19,10 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Intege
   * `size(filter(sequence(1, k), i -> a[i] == b[i]))`, materializes a
   * sequence array and evaluates an INTERPRETED lambda per candidate
   * pair (higher-order functions don't participate in whole-stage
-  * codegen); this expression is a bare fused loop over the two array
-  * payloads inside codegen — the `SortedIntersectSize` discipline
-  * applied to the signature compare. Results are bit-identical to
+  * codegen); this expression is a bare loop over the two array
+  * payloads, [[PositionalEqual.equalCount]], called from generated
+  * code — the `SortedIntersectSize` discipline applied to the
+  * signature compare. Results are bit-identical to
   * the lambda form (VectorExprSpec asserts it), so every DuckDB
   * oracle stays hash-identical.
   *
@@ -36,9 +37,24 @@ case class PositionalEqualCount(left: Expression, right: Expression)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "positional_equal_count"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    PositionalEqual.equalCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) =>
+      s"org.apache.spark.sql.graftx.PositionalEqual.equalCount($x, $y)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PositionalEqualCount =
+    copy(left = newLeft, right = newRight)
+}
+
+object PositionalEqual {
+  /** The number of positions where two same-length long arrays agree:
+    * the one definition behind [[PositionalEqualCount]] (interpreted
+    * and generated code alike) and the in-bucket verify of
+    * `graft.operators.MinHash.candidatePairs`. */
+  def equalCount(x: ArrayData, y: ArrayData): Int = {
     val n = x.numElements()
     if (y.numElements() != n)
       throw new IllegalArgumentException(
@@ -55,36 +71,6 @@ case class PositionalEqualCount(left: Expression, right: Expression)
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      s"""
-         |int $n = $x.numElements();
-         |if ($y.numElements() != $n) {
-         |  throw new IllegalArgumentException(
-         |    "positional_equal_count: length mismatch");
-         |}
-         |int $i = 0; int $c = 0;
-         |while ($i < $n) {
-         |  if ($x.isNullAt($i) || $y.isNullAt($i)) {
-         |    throw new IllegalArgumentException(
-         |      "positional_equal_count: null array elements are not supported");
-         |  }
-         |  if ($x.getLong($i) == $y.getLong($i)) { $c++; }
-         |  $i++;
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PositionalEqualCount =
-    copy(left = newLeft, right = newRight)
-}
-
-object PositionalEqual {
   /** Column surface: codegen'd positional-equality count over two
     * same-length array<long> columns. */
   def equalCount(a: Column, b: Column): Column =
