@@ -2,6 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{JArray, JObject}
+import org.json4s.JsonDSL._
+
+import Study.{obj, timed}
 
 /** Measures the ANN tiers' ACTUAL retrieval quality against the exact
   * brute-force baseline (VERDICT r10 task 6: s2/s3/s4 are
@@ -32,11 +36,10 @@ import org.apache.spark.sql.functions._
   * nlist/{32,16,8,4,2} (production default nlist/16); sign-LSH has no
   * probe knob → one point.
   *
-  * Output: one JSON artifact (default bench/ann_recall.json) + a
-  * printed table for COVERAGE.
+  * Usage: runMain graft.Study AnnRecall <out.json> <sfDir> [copies=25]
+  * (bench/ann_recall.json), plus a printed table for COVERAGE.
   */
 object AnnRecall {
-  private def r4(x: Double): Double = math.rint(x * 10000) / 10000
   private val K = 10
   private val IdOff = 100000000L
 
@@ -72,24 +75,9 @@ object AnnRecall {
     hits.toDouble / (nq * K)
   }
 
-  def main(args: Array[String]): Unit = {
-    val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val out = if (args.length > 1) args(1) else "bench/ann_recall.json"
-    val copies = if (args.length > 2) args(2).toInt else 25
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions",
-      "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val src = args(0)
+    val copies = args.lift(1).map(_.toInt).getOrElse(25)
 
     val orig = spark.read.parquet(s"$src/embeddings.parquet")
       .select(col("vec_id"), col("label"), col("embedding"))
@@ -110,10 +98,8 @@ object AnnRecall {
     val scaledDf = (orig +: (1 until copies).map(variantCopy).toSeq)
       .reduce(_ unionByName _)
 
-    val sb = new StringBuilder
-    sb ++= "{\n"
     val points = Seq("1x" -> orig, s"${copies}x" -> scaledDf)
-    points.zipWithIndex.foreach { case ((label, corpus), pi) =>
+    Study.Json(JObject(points.map { case (label, corpus) =>
       val e = corpus.repartition(col("vec_id")).persist()
       val n = e.count()
       val truth = trueCos(e).persist()
@@ -130,7 +116,14 @@ object AnnRecall {
       // corpus difficulty context: the mean k-th-best true cosine
       val meanKth = thresh.agg(avg(col("kth"))).head().getDouble(0)
 
-      sb ++= s"""  "$label": {\n    "n_vectors": $n, "nlist": $nlist, "mean_true_kth_cos": ${r4(meanKth)},\n"""
+      /** sec and recall@K of one ANN run, materialized while timed. */
+      def measure(name: String)(build: => DataFrame): JObject = {
+        val (df, t) = timed { val d = build.persist(); d.count(); d }
+        val r = recallOf(df, truth, thresh)
+        df.unpersist()
+        println(f"[ann-recall] $label $name: recall=$r%.4f ${t}%.2fs")
+        obj("sec" -> t, s"recall_at_$K" -> r)
+      }
 
       // brute-force wall-clock for reference (the exact tier): the
       // s1 kernel shape over this corpus
@@ -142,98 +135,52 @@ object AnnRecall {
           .where(col("rk") <= K)
           .write.format("noop").mode("overwrite").save()
       }
-      sb ++= s"""    "bruteforce": {"sec": ${r4(tBrute)}, "recall_at_$K": 1.0},\n"""
       println(f"[ann-recall] $label n=$n kth=$meanKth%.4f brute: ${tBrute}%.2fs")
-
-      // sign-LSH on the DEFAULT (round 15: AUTO — capped planes,
-      // derived radius; the ≥0.8-at-every-rung contract)
-      val (lsh, tLsh) = timed {
-        graft.operators.IntKmeans.lshTopK(
-          e.select(col("vec_id"), col("embedding")), q, "embedding",
-          "vec_id", k = K, dim = 64, seed = 42L).persist()
-      }
-      val rLsh = recallOf(lsh, truth, thresh)
-      lsh.unpersist()
-      sb ++= s"""    "lsh": {"sec": ${r4(tLsh)}, "recall_at_$K": ${r4(rLsh)}},\n"""
-      println(f"[ann-recall] $label lsh(auto): recall=$rLsh%.4f ${tLsh}%.2fs")
-      // explicit radius 1 (uncapped planes): the pre-r15 default,
-      // kept as the speed end of the dial
-      val (lsh1, tLsh1) = timed {
-        graft.operators.IntKmeans.lshTopK(
-          e.select(col("vec_id"), col("embedding")), q, "embedding",
-          "vec_id", k = K, dim = 64, seed = 42L, probeHamming = 1)
-          .persist()
-      }
-      val rLsh1 = recallOf(lsh1, truth, thresh)
-      lsh1.unpersist()
-      sb ++= s"""    "lsh_probe1": {"sec": ${r4(tLsh1)}, "recall_at_$K": ${r4(rLsh1)}},\n"""
-      println(f"[ann-recall] $label lsh_probe1: recall=$rLsh1%.4f ${tLsh1}%.2fs")
-
-      // sign-LSH at probe radius 2 (round 12): the recall dial — the
-      // pair-flip probes multiply candidates ~np/2× over radius 1
-      val (lsh2, tLsh2) = timed {
-        graft.operators.IntKmeans.lshTopK(
-          e.select(col("vec_id"), col("embedding")), q, "embedding",
-          "vec_id", k = K, dim = 64, seed = 42L, probeHamming = 2)
-          .persist()
-      }
-      val rLsh2 = recallOf(lsh2, truth, thresh)
-      lsh2.unpersist()
-      sb ++= s"""    "lsh_probe2": {"sec": ${r4(tLsh2)}, "recall_at_$K": ${r4(rLsh2)}},\n"""
-      println(f"[ann-recall] $label lsh_probe2: recall=$rLsh2%.4f ${tLsh2}%.2fs")
-
-      // IVF-Flat + IVF-PQ on DEFAULTS (round 16: nprobe = 0 is AUTO —
-      // GREATEST(4, nlist/16), widened to ≥ nlist/4 under the small-
-      // corpus line) — the headline rungs the VERDICT gate reads
-      def autoJson(name: String, run: () => DataFrame): String = {
-        val (df, t) = timed(run().persist())
-        val r = recallOf(df, truth, thresh)
-        df.unpersist()
-        println(f"[ann-recall] $label $name(auto): recall=$r%.4f ${t}%.2fs")
-        s"""    "$name": {"sec": ${r4(t)}, "recall_at_$K": ${r4(r)}},\n"""
-      }
-      sb ++= autoJson("ivf_flat_auto", () =>
-        graft.operators.IntKmeans.topK(
-          e.select(col("vec_id"), col("embedding")), q, "embedding",
-          "vec_id", k = K, nlist = nlist))
-      sb ++= autoJson("ivf_pq_auto", () =>
-        graft.operators.IntKmeans.pqTopK(
-          e.select(col("vec_id"), col("embedding")), q, "embedding",
-          "vec_id", k = K, nlist = nlist, m = 8, ksub = 16))
-
+      def lsh(probe: Int) = graft.operators.IntKmeans.lshTopK(
+        e.select(col("vec_id"), col("embedding")), q, "embedding",
+        "vec_id", k = K, dim = 64, seed = 42L, probeHamming = probe)
       // IVF-Flat + IVF-PQ explicit-nprobe sweep (the caller's dial)
-      val sweeps = Seq(32, 16, 8, 4, 2).map(d => d -> math.max(4, nlist / d))
-      def sweepJson(name: String,
-          run: Int => DataFrame): String = {
-        val rows = sweeps.map { case (div, np) =>
-          val (df, t) = timed(run(np).persist())
-          val r = recallOf(df, truth, thresh)
-          df.unpersist()
-          println(f"[ann-recall] $label $name nprobe=$np (nlist/$div): " +
-            f"recall=$r%.4f ${t}%.2fs")
-          s"""      {"nprobe": $np, "nlist_div": $div, "sec": ${r4(t)}, "recall_at_$K": ${r4(r)}}"""
+      def sweep(name: String)(run: Int => DataFrame): JArray =
+        Seq(32, 16, 8, 4, 2).map { div =>
+          val np = math.max(4, nlist / div)
+          obj("nprobe" -> np, "nlist_div" -> div) ~
+            measure(s"$name nprobe=$np (nlist/$div)")(run(np))
         }
-        s"""    "$name": [\n${rows.mkString(",\n")}\n    ]"""
-      }
-      sb ++= sweepJson("ivf_flat", np =>
-        graft.operators.IntKmeans.topK(
-          e.select(col("vec_id"), col("embedding")), q, "embedding",
-          "vec_id", k = K, nlist = nlist, nprobe = np, iters = 2,
-          seed = 42L)) + ",\n"
-      sb ++= sweepJson("ivf_pq", np =>
-        graft.operators.IntKmeans.pqTopK(
-          e.select(col("vec_id"), col("embedding")), q, "embedding",
-          "vec_id", k = K, nlist = nlist, m = 8, ksub = 16, nprobe = np,
-          iters = 2, seed = 42L)) + "\n"
-      sb ++= (if (pi == points.size - 1) "  }\n" else "  },\n")
+      val fields = obj(
+        "n_vectors" -> n, "nlist" -> nlist, "mean_true_kth_cos" -> meanKth,
+        "bruteforce" -> obj("sec" -> tBrute, s"recall_at_$K" -> 1.0),
+        // sign-LSH on the DEFAULT (round 15: AUTO — capped planes,
+        // derived radius; the ≥0.8-at-every-rung contract)
+        "lsh" -> measure("lsh(auto)")(lsh(0)),
+        // explicit radius 1 (uncapped planes): the pre-r15 default,
+        // kept as the speed end of the dial
+        "lsh_probe1" -> measure("lsh_probe1")(lsh(1)),
+        // sign-LSH at probe radius 2 (round 12): the recall dial — the
+        // pair-flip probes multiply candidates ~np/2× over radius 1
+        "lsh_probe2" -> measure("lsh_probe2")(lsh(2)),
+        // IVF-Flat + IVF-PQ on DEFAULTS (round 16: nprobe = 0 is AUTO —
+        // GREATEST(4, nlist/16), widened to ≥ nlist/4 under the small-
+        // corpus line) — the headline rungs the VERDICT gate reads
+        "ivf_flat_auto" -> measure("ivf_flat(auto)")(
+          graft.operators.IntKmeans.topK(
+            e.select(col("vec_id"), col("embedding")), q, "embedding",
+            "vec_id", k = K, nlist = nlist)),
+        "ivf_pq_auto" -> measure("ivf_pq(auto)")(
+          graft.operators.IntKmeans.pqTopK(
+            e.select(col("vec_id"), col("embedding")), q, "embedding",
+            "vec_id", k = K, nlist = nlist, m = 8, ksub = 16)),
+        "ivf_flat" -> sweep("ivf_flat")(np =>
+          graft.operators.IntKmeans.topK(
+            e.select(col("vec_id"), col("embedding")), q, "embedding",
+            "vec_id", k = K, nlist = nlist, nprobe = np, iters = 2,
+            seed = 42L)),
+        "ivf_pq" -> sweep("ivf_pq")(np =>
+          graft.operators.IntKmeans.pqTopK(
+            e.select(col("vec_id"), col("embedding")), q, "embedding",
+            "vec_id", k = K, nlist = nlist, m = 8, ksub = 16, nprobe = np,
+            iters = 2, seed = 42L)))
       truth.unpersist(); thresh.unpersist(); e.unpersist()
-    }
-    sb ++= "}\n"
-
-    val p = java.nio.file.Paths.get(out)
-    Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.write(p, sb.toString.getBytes("UTF-8"))
-    println(s"[ann-recall] wrote $out")
-    spark.stop()
+      label -> fields
+    }.toList))
   }
 }

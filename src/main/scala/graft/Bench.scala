@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Measurement discipline (round-4 hardening):
   *
@@ -31,19 +30,23 @@ object Bench {
     * when it was needed). */
   private[graft] def benchBaselineBoth(sfName: String)
       : Map[String, (Double, Double)] = {
-    val p = java.nio.file.Paths.get(s"bench/bench_$sfName.json")
-    if (!java.nio.file.Files.isReadable(p)) return Map.empty
     // `[,}]` after warm, not `}`: round-13 artifacts append
     // "warm_per_calib" after warm, and the guard regex must keep
     // reading BOTH artifact generations.
     val line = """"([A-Za-z0-9_]+)":\s*\{"cold":\s*([-0-9.eE]+),\s*"warm":\s*([-0-9.eE]+)[,}]""".r
-    try {
-      val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      line.findAllMatchIn(text)
-        .map(m => m.group(1) -> (m.group(2).toDouble, m.group(3).toDouble))
-        .toMap
-    } catch { case _: Throwable => Map.empty }
+    priorArtifact(sfName)(text => line.findAllMatchIn(text)
+      .map(m => m.group(1) -> (m.group(2).toDouble, m.group(3).toDouble))
+      .toMap).getOrElse(Map.empty)
   }
+
+  /** `read` over the text of the committed `bench/bench_<sf>.json`;
+    * None when it is missing, unreadable or `read` throws. */
+  private def priorArtifact[A](sfName: String)(read: String => A): Option[A] =
+    try {
+      val p = java.nio.file.Paths.get(s"bench/bench_$sfName.json")
+      if (!java.nio.file.Files.isReadable(p)) None
+      else Some(read(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
+    } catch { case _: Throwable => None }
 
   /** Calibration-normalized round-over-round movers: for each name in
     * `common`, compare (warm/calibration) now vs the committed
@@ -76,17 +79,14 @@ object Bench {
     * bench measured 0.139 start vs 0.213 end and a start-only basis
     * mis-flagged 53 queries). None on first run / unreadable. */
   private[graft] def priorCalibration(sfName: String): Option[Double] = {
-    val p = java.nio.file.Paths.get(s"bench/bench_$sfName.json")
-    if (!java.nio.file.Files.isReadable(p)) return None
     val start = """"calibration_sec":\s*([-0-9.eE]+)""".r
     val end = """"calibration_end_sec":\s*([-0-9.eE]+)""".r
-    try {
-      val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    priorArtifact(sfName) { text =>
       start.findFirstMatchIn(text).map(_.group(1).toDouble).map { s =>
         end.findFirstMatchIn(text).map(_.group(1).toDouble)
           .fold(s)(e => (s + e) / 2)
       }
-    } catch { case _: Throwable => None }
+    }.flatten
   }
 
   private[graft] def benchBaseline(sfName: String): Map[String, Double] =
@@ -98,13 +98,9 @@ object Bench {
     * adjudicated 32-core runs against an 8-core basis). None when the
     * artifact predates the field or is unreadable. */
   private[graft] def priorCpus(sfName: String): Option[Int] = {
-    val p = java.nio.file.Paths.get(s"bench/bench_$sfName.json")
-    if (!java.nio.file.Files.isReadable(p)) return None
     val re = """"cpus":\s*([0-9]+)""".r
-    try {
-      val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      re.findFirstMatchIn(text).map(_.group(1).toInt)
-    } catch { case _: Throwable => None }
+    priorArtifact(sfName)(re.findFirstMatchIn(_).map(_.group(1).toInt))
+      .flatten
   }
 
   /** Stable hash of a query's PHYSICAL plan SHAPE (round 14, VERDICT
@@ -144,31 +140,16 @@ object Bench {
   /** Per-query plan-shape hashes from the committed artifact (absent
     * in pre-round-14 artifacts → empty). */
   private[graft] def priorShapes(sfName: String): Map[String, String] = {
-    val p = java.nio.file.Paths.get(s"bench/bench_$sfName.json")
-    if (!java.nio.file.Files.isReadable(p)) return Map.empty
     val line = """"([A-Za-z0-9_]+)":\s*\{"cold":[^}]*"plan_shape":\s*"([0-9a-f]+)"""".r
-    try {
-      val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      line.findAllMatchIn(text)
-        .map(m => m.group(1) -> m.group(2)).toMap
-    } catch { case _: Throwable => Map.empty }
+    priorArtifact(sfName)(line.findAllMatchIn(_)
+      .map(m => m.group(1) -> m.group(2)).toMap).getOrElse(Map.empty)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions",
-      "org.apache.spark.sql.graftx.GraftExtensions")
-      // The 64k AQE coalesce floor moved into the engine's session
-      // defaults (GraftExtensions.applySessionDefaults, round 17) so
-      // the library ships what the bench measures; still
-      // SPARK_GRAFT_MIN_PARTITION_SIZE-overridable there.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR") // nothing may print after the JSON line
+    val cpus = Study.cpus
+    // log level ERROR: nothing may print after the JSON line
+    val spark = Study.session()
 
     // optional comma-separated subset (e.g. the documents/embeddings
     // family for the second scale point, whose dir carries only those
@@ -245,7 +226,7 @@ object Bench {
     // disarms (as on a first run) and the artifact write is keyed
     // by core count instead of clobbering the committed one.
     val sfNameEarly = new java.io.File(sfDir).getName
-    val cpusMismatch = priorCpus(sfNameEarly).exists(_ != cpus.toInt)
+    val cpusMismatch = priorCpus(sfNameEarly).exists(_ != cpus)
     val cold = pass()
     val warm0 = pass(captureShape = true)
 

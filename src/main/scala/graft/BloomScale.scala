@@ -2,8 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s.JObject
+import org.json4s.JsonDSL._
 
 import graft.sources.Versioned
+import Study.{obj, timed}
 
 /** Measures the round-16 bloom-sidecar claim: on a uuid-keyed table —
   * where every file's [min,max] spans the whole key space, so the
@@ -22,30 +25,13 @@ import graft.sources.Versioned
   *  - sidecar build cost (in the commit, amortized) and on-disk
   *    bytes, reported once.
   *
-  * Usage: runMain graft.BloomScale <scaledSfDir> <tableRootDir>
-  * <out.json> <label> [files]
+  * Usage: runMain graft.Study BloomScale <out.json> <scaledSfDir>
+  * <tableRootDir> <label> [files=16]
   */
 object BloomScale {
-  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
-
-  def main(args: Array[String]): Unit = {
-    val Array(srcDir, rootDir, outJson, label) = args.take(4)
-    val nFiles = args.lift(4).map(_.toInt).getOrElse(16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val Seq(srcDir, rootDir, label) = args.take(3)
+    val nFiles = args.lift(3).map(_.toInt).getOrElse(16)
 
     // uuid-like keys derived from doc ids: every commit's key range
     // spans the whole space — the adversarial regime for min/max
@@ -60,13 +46,8 @@ object BloomScale {
         .map(b => f"${b & 0xff}%02x").mkString
     }
 
-    val sb = new StringBuilder
-    sb ++= s"""{\n  "label": "$label", "n_docs": $nDocs, "files": $nFiles"""
-
-    Seq(false, true).foreach { bloom =>
+    def arm(bloom: Boolean): JObject = {
       val t = s"$rootDir/tbl_${if (bloom) "on" else "off"}"
-      if (bloom) spark.conf.set("spark.graft.bloom.columns", "k")
-      else spark.conf.unset("spark.graft.bloom.columns")
       var buildSec = 0.0
       (0 until nFiles).foreach { i =>
         val (_, s) = timed(Versioned.commit(
@@ -123,21 +104,21 @@ object BloomScale {
         spark.read.format("graftv").load(t)
           .where(col("k") === lit(keyOf(13L))).count())
 
-      sb ++= s""",\n  "${if (bloom) "bloom_on" else "bloom_off"}": {"""
-      sb ++= s""""commit_sec_total": ${r3(buildSec)}, """
-      sb ++= s""""sidecar_bytes": $sidecarBytes, """
-      sb ++= s""""point_delete": {"files_touched": $delTouched, "sec": ${r3(delSec)}}, """
-      sb ++= s""""point_merge_16keys": {"files_touched": $mrgTouched, "sec": ${r3(mrgSec)}}, """
-      sb ++= s""""miss_delete": {"files_touched": $missTouched, "sec": ${r3(missSec)}}, """
-      sb ++= s""""point_select_dsv2": {"rows": $selRows, "sec": ${r3(selSec)}}}"""
       System.err.println(s"[bloom-scale] $label bloom=$bloom: " +
         f"delete touched $delTouched/$nFiles files in $delSec%.2fs, " +
         f"merge $mrgTouched, miss $missTouched")
+      obj("commit_sec_total" -> buildSec,
+        "sidecar_bytes" -> sidecarBytes,
+        "point_delete" -> obj("files_touched" -> delTouched, "sec" -> delSec),
+        "point_merge_16keys" ->
+          obj("files_touched" -> mrgTouched, "sec" -> mrgSec),
+        "miss_delete" -> obj("files_touched" -> missTouched, "sec" -> missSec),
+        "point_select_dsv2" -> obj("rows" -> selRows, "sec" -> selSec))
     }
-    sb ++= "\n}\n"
-    java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-      sb.toString.getBytes("UTF-8"))
-    println(s"[bloom-scale] wrote $outJson")
-    spark.stop()
+    val off = arm(bloom = false)
+    val on = Study.withConf(spark, "spark.graft.bloom.columns" -> "k")(
+      arm(bloom = true))
+    Study.Json(obj("label" -> label, "n_docs" -> nDocs, "files" -> nFiles,
+      "bloom_off" -> off, "bloom_on" -> on))
   }
 }

@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+
+import Study.{obj, scratch}
 
 /** Streaming CDC replication A→B at scale (round 13, VERDICT r12 #5):
   * the v6 cdf-apply law as a RUNNING stream, measured on a
@@ -21,30 +24,17 @@ import org.apache.spark.sql.functions._
   *    state-equal A at the trigger's commit version (symmetric
   *    `exceptAll` counts, both zero) — not just at the end.
   *
-  * Output: one JSON artifact (default bench/changefeed_replication
-  * .json) with per-trigger rows/seconds/equality.
+  * Usage: runMain graft.Study CdcReplicationScale <out.json> <sfDir>
+  * [copies=25] (bench/changefeed_replication.json): per-trigger
+  * rows/seconds/equality.
   */
 object CdcReplicationScale {
-  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
-
-  def main(args: Array[String]): Unit = {
-    val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val out =
-      if (args.length > 1) args(1) else "bench/changefeed_replication.json"
-    val copies = if (args.length > 2) args(2).toInt else 25
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val src = args(0)
+    val copies = args.lift(1).map(_.toInt).getOrElse(25)
     val appends = 6
-    val scaled = java.nio.file.Files
-      .createTempDirectory("graft-cdcrs-data-").toString
-    MakeScale.main(Array(src, scaled, copies.toString))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val scaled = scratch("cdcrs-data")
+    MakeScale.scale(spark, src, scaled, copies)
     import graft.sources.Versioned
 
     val docs = Tables(spark, scaled, "documents")
@@ -52,10 +42,8 @@ object CdcReplicationScale {
     val nDocs = docs.count()
 
     // ---- drive A
-    val a = java.nio.file.Files
-      .createTempDirectory("graft-cdcrs-a-").toString
-    val b = java.nio.file.Files
-      .createTempDirectory("graft-cdcrs-b-").toString
+    val a = scratch("cdcrs-a")
+    val b = scratch("cdcrs-b")
     (0 until appends).foreach { i =>
       Versioned.commit(
         docs.where(pmod(col("doc_id"), lit(appends)) === i), a, "append")
@@ -76,8 +64,7 @@ object CdcReplicationScale {
     //      rate-limited convergence law)
     def replicate(mvpt: Int, replica: String)
         : Seq[(Long, Int, Long, Double, Boolean)] = {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-cdcrs-ckpt-").toString
+      val ckpt = scratch("cdcrs-ckpt")
       val triggers = scala.collection.mutable
         .ArrayBuffer[(Long, Int, Long, Double, Boolean)]()
       val q = spark.readStream.format("graftv")
@@ -111,38 +98,30 @@ object CdcReplicationScale {
       q.stop()
       triggers.sortBy(_._1).toSeq
     }
-    def trigJson(ts: Seq[(Long, Int, Long, Double, Boolean)]): String =
+    def trigJson(ts: Seq[(Long, Int, Long, Double, Boolean)]) =
       ts.map { case (bid, v, n, s, eq) =>
-        s"""    {"trigger": $bid, "version": $v, "rows": $n, "sec": ${r3(s)}, "state_equal": $eq}"""
-      }.mkString(",\n")
+        obj("trigger" -> bid, "version" -> v, "rows" -> n, "sec" -> s,
+          "state_equal" -> eq)
+      }
 
     val triggers = replicate(1, b)
     // round 14 (VERDICT r13 #2): the SAME backlog drained 4 versions
     // per trigger onto a fresh replica — net-effect coalescing means
     // per-trigger cost tracks the trigger's net key footprint, not
     // the number of versions it drains
-    val b4 = java.nio.file.Files
-      .createTempDirectory("graft-cdcrs-b4-").toString
+    val b4 = scratch("cdcrs-b4")
     val triggers4 = replicate(4, b4)
 
     val allEqual = triggers.forall(_._5) && triggers4.forall(_._5)
-    val sb = new StringBuilder
-    sb ++= "{\n"
-    sb ++= s"""  "corpus": "${copies}x", "n_docs": $nDocs,\n"""
-    sb ++= s"""  "n_versions": $nVersions, "appends": $appends,\n"""
-    sb ++= s"""  "ops": ["append", "merge", "delete", "update", "optimize"],\n"""
-    sb ++= s"""  "equal_at_every_drained_version": $allEqual,\n"""
-    sb ++= s"""  "total_apply_sec_mvpt1": ${r3(triggers.map(_._4).sum)},\n"""
-    sb ++= s"""  "total_apply_sec_mvpt4": ${r3(triggers4.map(_._4).sum)},\n"""
-    sb ++= s"""  "per_trigger_mvpt1": [\n${trigJson(triggers)}\n  ],\n"""
-    sb ++= s"""  "per_trigger_mvpt4": [\n${trigJson(triggers4)}\n  ]\n"""
-    sb ++= "}\n"
-    val p = java.nio.file.Paths.get(out)
-    Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.write(p, sb.toString.getBytes("UTF-8"))
-    println(s"[cdc-replication] equal_at_every_drained_version=" +
-      s"$allEqual -> $out")
+    println(s"[cdc-replication] equal_at_every_drained_version=$allEqual")
     require(allEqual, "drained-equality FAILED")
-    spark.stop()
+    Study.Json(obj("corpus" -> s"${copies}x", "n_docs" -> nDocs,
+      "n_versions" -> nVersions, "appends" -> appends,
+      "ops" -> Seq("append", "merge", "delete", "update", "optimize"),
+      "equal_at_every_drained_version" -> allEqual,
+      "total_apply_sec_mvpt1" -> triggers.map(_._4).sum,
+      "total_apply_sec_mvpt4" -> triggers4.map(_._4).sum,
+      "per_trigger_mvpt1" -> trigJson(triggers),
+      "per_trigger_mvpt4" -> trigJson(triggers4)))
   }
 }

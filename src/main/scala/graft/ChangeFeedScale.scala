@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+
+import Study.{obj, scratch}
 
 /** Drives a scaled versioned-table ingest THROUGH the streaming
   * change-feed source into the d14 incremental dedup (VERDICT r10
@@ -25,30 +28,16 @@ import org.apache.spark.sql.functions._
   *    must equal the one-shot batch probe of the FINAL table state
   *    against the same history.
   *
-  * Output: one JSON artifact (default bench/changefeed_scale.json).
+  * Usage: runMain graft.Study ChangeFeedScale <out.json> <sfDir>
+  * [copies=25] (bench/changefeed_scale.json).
   */
 object ChangeFeedScale {
-  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
-
-  def main(args: Array[String]): Unit = {
-    val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val out = if (args.length > 1) args(1) else "bench/changefeed_scale.json"
-    val copies = if (args.length > 2) args(2).toInt else 25
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val src = args(0)
+    val copies = args.lift(1).map(_.toInt).getOrElse(25)
     val appends = 8
-    // MakeScale stops its SparkContext when done — run it FIRST, then
-    // build this study's session fresh
-    val scaled = java.nio.file.Files
-      .createTempDirectory("graft-cfs-data-").toString
-    MakeScale.main(Array(src, scaled, copies.toString))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions",
-      "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val scaled = scratch("cfs-data")
+    MakeScale.scale(spark, src, scaled, copies)
 
     val docs = Tables(spark, scaled, "documents")
       .select(col("doc_id"), col("text")).persist()
@@ -63,8 +52,7 @@ object ChangeFeedScale {
     history.count() // settle the static side before timing anything
 
     // ---- stage the ingest: `appends` appends + one COW merge
-    val table = java.nio.file.Files
-      .createTempDirectory("graft-cfs-table-").toString
+    val table = scratch("cfs-table")
     (0 until appends).foreach { i =>
       graft.sources.Versioned.commit(
         batchDocs.where(pmod(col("doc_id") / 10, lit(appends)) === i),
@@ -79,8 +67,7 @@ object ChangeFeedScale {
     val nVersions = graft.sources.Versioned.versions(table).max
 
     // ---- tail it through the DSv2 change-feed stream
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-cfs-ckpt-").toString
+    val ckpt = scratch("cfs-ckpt")
     val sink = new java.util.concurrent.ConcurrentHashMap[
       Long, (Long, Double, Boolean)]() // doc_id -> (match_id, est, dup)
     val triggers =
@@ -132,24 +119,15 @@ object ChangeFeedScale {
     require(streamed.size == oneShot.size,
       s"coverage: streamed ${streamed.size} vs batch ${oneShot.size}")
 
-    val trigRows = triggers.sortBy(_._1).map { case (b, n, s) =>
-      s"""    {"trigger": $b, "rows": $n, "sec": ${r3(s)}}"""
-    }
-    val totalSec = triggers.map(_._3).sum
-    val sb = new StringBuilder
-    sb ++= "{\n"
-    sb ++= s"""  "corpus": "${copies}x", "n_docs": $nDocs, "n_batch_docs": $nBatch,\n"""
-    sb ++= s"""  "n_versions": $nVersions, "appends": $appends, "merges": 1,\n"""
-    sb ++= s"""  "max_versions_per_trigger": 1,\n"""
-    sb ++= s"""  "drained_equals_batch": $equal,\n"""
-    sb ++= s"""  "total_probe_sec": ${r3(totalSec)},\n"""
-    sb ++= s"""  "per_trigger": [\n${trigRows.mkString(",\n")}\n  ]\n"""
-    sb ++= "}\n"
-    val p = java.nio.file.Paths.get(out)
-    Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.write(p, sb.toString.getBytes("UTF-8"))
-    println(s"[changefeed-scale] drained_equals_batch=$equal -> $out")
+    println(s"[changefeed-scale] drained_equals_batch=$equal")
     require(equal, "drained-equality FAILED")
-    spark.stop()
+    Study.Json(obj("corpus" -> s"${copies}x", "n_docs" -> nDocs,
+      "n_batch_docs" -> nBatch, "n_versions" -> nVersions,
+      "appends" -> appends, "merges" -> 1, "max_versions_per_trigger" -> 1,
+      "drained_equals_batch" -> equal,
+      "total_probe_sec" -> triggers.map(_._3).sum,
+      "per_trigger" -> triggers.sortBy(_._1).map { case (b, n, s) =>
+        obj("trigger" -> b, "rows" -> n, "sec" -> s)
+      }))
   }
 }

@@ -2,6 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s.{JInt, JString}
+import org.json4s.JsonDSL._
+
+import Study.{obj, scratch, secs}
 
 /** Measures the CHECK-constraint enforcement cost at corpus scale
   * (round 13): the claim is ONE validation scan of the commit's
@@ -9,61 +13,41 @@ import org.apache.spark.sql.functions._
   * documents corpus: stage the same 8-append ingest into two tables,
   * one unconstrained and one carrying two CHECK constraints, and
   * compare per-append wall-clock; then time the add-time full-table
-  * validation and one gated COW update. Output:
-  * bench/constraint_scale.json.
+  * validation and one gated COW update.
   *
-  * Usage: runMain graft.ConstraintScale [srcSfDir] [out] [copies]
-  *        [appends]   (appends defaults to 8; the round-14
-  *        production-file-size rung uses appends=2 so each commit
-  *        carries >= 1M rows — one file of production size — and the
-  *        fixed per-commit validation job amortizes below 5%)
+  * Usage: runMain graft.Study ConstraintScale <out.json> <sfDir>
+  *        [copies=125] [appends=8] [filesPerAppend=0]
+  *        (bench/constraint_scale_1m.json = 500 copies, appends=2,
+  *        filesPerAppend=1: each commit carries >= 1M rows in one file
+  *        of production size, and the fixed per-commit validation job
+  *        amortizes below 5%)
   */
 object ConstraintScale {
-  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
-
-  def main(args: Array[String]): Unit = {
-    val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val out = if (args.length > 1) args(1) else "bench/constraint_scale.json"
-    val copies = if (args.length > 2) args(2).toInt else 125
-    val appends = if (args.length > 3) args(3).toInt else 8
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val src = args(0)
+    val copies = args.lift(1).map(_.toInt).getOrElse(125)
+    val appends = args.lift(2).map(_.toInt).getOrElse(8)
     // 0 = natural (shuffle-partition count) file layout; N coalesces
     // each append to N files — the production-file-size rung uses 1
     // so rows/FILE (not just rows/append) crosses 1M and per-file
     // fixed costs amortize out of the validation-scan measurement
-    val filesPerAppend = if (args.length > 4) args(4).toInt else 0
-    val scaled = java.nio.file.Files
-      .createTempDirectory("graft-cons-data-").toString
-    MakeScale.main(Array(src, scaled, copies.toString))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val filesPerAppend = args.lift(3).map(_.toInt).getOrElse(0)
+    val scaled = scratch("cons-data")
+    MakeScale.scale(spark, src, scaled, copies)
     import graft.sources.Versioned
 
     val docs = Tables(spark, scaled, "documents")
       .select(col("doc_id"), col("text"), col("n_chars")).persist()
     val nDocs = docs.count()
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     def slice(i: Int) = {
       val sl = docs.where(pmod(col("doc_id"), lit(appends)) === i)
       if (filesPerAppend > 0) sl.coalesce(filesPerAppend) else sl
     }
 
-    val warm = java.nio.file.Files
-      .createTempDirectory("graft-cons-warm-").toString
-    val bare = java.nio.file.Files
-      .createTempDirectory("graft-cons-bare-").toString
-    val narrow = java.nio.file.Files
-      .createTempDirectory("graft-cons-narrow-").toString
-    val gated = java.nio.file.Files
-      .createTempDirectory("graft-cons-gated-").toString
+    val warm = scratch("cons-warm")
+    val bare = scratch("cons-bare")
+    val narrow = scratch("cons-narrow")
+    val gated = scratch("cons-gated")
 
     // UNTIMED warm-up ingest: the first table pays JIT + page-cache
     // warm-up for everyone (the first measured cut showed the bare
@@ -72,7 +56,7 @@ object ConstraintScale {
       Versioned.commit(slice(i), warm, "append"))
 
     // unconstrained ingest
-    val tBare = (0 until appends).map(i => timed {
+    val tBare = (0 until appends).map(i => secs {
       Versioned.commit(slice(i), bare, "append")
     })
     // NARROW-column constraints only: the validation scan is column-
@@ -81,25 +65,25 @@ object ConstraintScale {
     Versioned.commit(slice(0).limit(0), narrow, "append")
     Versioned.addConstraint(spark, narrow, "chars_pos", "n_chars >= 0")
     Versioned.addConstraint(spark, narrow, "id_nonneg", "doc_id >= 0")
-    val tNarrow = (0 until appends).map(i => timed {
+    val tNarrow = (0 until appends).map(i => secs {
       Versioned.commit(slice(i), narrow, "append")
     })
     // + a FULL-TEXT constraint: the scan must re-read the text bytes
     Versioned.commit(slice(0).limit(0), gated, "append") // v1 empty seed
-    val tAdd = timed {
+    val tAdd = secs {
       Versioned.addConstraint(spark, gated, "chars_pos", "n_chars >= 0")
       Versioned.addConstraint(spark, gated, "has_text",
         "text IS NOT NULL")
     }
-    val tGated = (0 until appends).map(i => timed {
+    val tGated = (0 until appends).map(i => secs {
       Versioned.commit(slice(i), gated, "append")
     })
     // add-time full-table validation cost on the LOADED table
-    val tAddFull = timed {
+    val tAddFull = secs {
       Versioned.addConstraint(spark, gated, "id_pos", "doc_id >= 0")
     }
     // one gated COW update (fresh-file validation only)
-    val tUpdate = timed {
+    val tUpdate = secs {
       Versioned.updateWhere(spark, gated,
         pmod(col("doc_id"), lit(997)) === 0,
         Map("n_chars" -> (col("n_chars") + 1)))
@@ -110,12 +94,12 @@ object ConstraintScale {
     // commit-path bookkeeping. The narrow scan touches two int64
     // columns; the text scan decodes every text page — the honest
     // floor of what a text-referencing constraint must cost.
-    val tScanNarrow = timed {
+    val tScanNarrow = secs {
       Versioned.read(spark, narrow)
         .agg(sum(when(col("n_chars") < 0, 1L).otherwise(0L)),
           sum(when(col("doc_id") < 0, 1L).otherwise(0L))).collect(); ()
     }
-    val tScanText = timed {
+    val tScanText = secs {
       Versioned.read(spark, gated)
         .agg(sum(when(col("text").isNull, 1L).otherwise(0L))).collect()
       ()
@@ -123,28 +107,20 @@ object ConstraintScale {
     val bareSum = tBare.sum
     val narrowSum = tNarrow.sum
     val gatedSum = tGated.sum
-    val json =
-      s"""{"label": "${copies}x", "n_docs": $nDocs, "appends": $appends,
-         | "rows_per_append": ${nDocs / appends},
-         | "files_per_append": ${if (filesPerAppend > 0) filesPerAppend.toString else "\"natural\""},
-         | "bare_ingest_sec": ${r3(bareSum)},
-         | "narrow_gated_ingest_sec": ${r3(narrowSum)},
-         | "narrow_overhead_pct": ${r3(
-        (narrowSum - bareSum) / bareSum * 100)},
-         | "text_gated_ingest_sec": ${r3(gatedSum)},
-         | "text_overhead_pct": ${r3(
-        (gatedSum - bareSum) / bareSum * 100)},
-         | "add_on_empty_sec": ${r3(tAdd)},
-         | "add_on_loaded_sec": ${r3(tAddFull)},
-         | "gated_cow_update_sec": ${r3(tUpdate)},
-         | "validation_scan_direct_narrow_sec": ${r3(tScanNarrow)},
-         | "validation_scan_direct_text_sec": ${r3(tScanText)},
-         | "note": "the validation scan reads ONLY the commit's fresh files, column-pruned to the constrained columns. Measured at 1.25M rows/FILE (appends=2, files_per_append=1): narrow int64 constraints cost ~0% of the write (direct validation scan 0.34s vs 33s ingest, ~1%; the 39k-row-file rungs' 39-55% was per-file fixed job cost, amortized away at production file size), while a text-referencing constraint re-reads the text bytes just written - the overhead honestly tracks the constrained columns' byte share, never the table"}""".stripMargin
-        .replace("\n", "") + "\n"
-    val p = java.nio.file.Paths.get(out)
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(p, json)
-    println(json)
-    spark.stop()
+    Study.Json(obj("label" -> s"${copies}x", "n_docs" -> nDocs,
+      "appends" -> appends, "rows_per_append" -> nDocs / appends,
+      "files_per_append" ->
+        (if (filesPerAppend > 0) JInt(filesPerAppend) else JString("natural")),
+      "bare_ingest_sec" -> bareSum,
+      "narrow_gated_ingest_sec" -> narrowSum,
+      "narrow_overhead_pct" -> (narrowSum - bareSum) / bareSum * 100,
+      "text_gated_ingest_sec" -> gatedSum,
+      "text_overhead_pct" -> (gatedSum - bareSum) / bareSum * 100,
+      "add_on_empty_sec" -> tAdd,
+      "add_on_loaded_sec" -> tAddFull,
+      "gated_cow_update_sec" -> tUpdate,
+      "validation_scan_direct_narrow_sec" -> tScanNarrow,
+      "validation_scan_direct_text_sec" -> tScanText,
+      "note" -> ("the validation scan reads ONLY the commit's fresh files, column-pruned to the constrained columns. Measured at 1.25M rows/FILE (appends=2, files_per_append=1): narrow int64 constraints cost ~0% of the write (direct validation scan 0.34s vs 33s ingest, ~1%; the 39k-row-file rungs' 39-55% was per-file fixed job cost, amortized away at production file size), while a text-referencing constraint re-reads the text bytes just written - the overhead honestly tracks the constrained columns' byte share, never the table")))
   }
 }

@@ -2,6 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JObject
+import org.json4s.JsonDSL._
+
+import Study.{obj, timed}
 
 /** The COMPOSED curation pipeline at scale (round 15, VERDICT r14
   * #7): m7's normalize → redact → exact dedup → simhash dedup →
@@ -14,33 +18,17 @@ import org.apache.spark.sql.functions._
   * per stage is the superlinearity check: ratio ≈ rung ratio = the
   * stage scales linearly; ratio ≫ rung ratio = a scale-killer.
   *
-  * Usage: runMain graft.CurationScale <dirA> <labelA> <dirB> <labelB>
-  * <out.json>
+  * Usage: runMain graft.Study CurationScale <out.json> <dirA> <labelA>
+  * <dirB> <labelB>
   */
 object CurationScale {
-  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
-
   private def planOps(df: DataFrame): Seq[String] =
     df.queryExecution.executedPlan.collect {
       case p => p.nodeName
     }.distinct.filterNot(_ == "AdaptiveSparkPlan").take(10).toSeq
 
-  def main(args: Array[String]): Unit = {
-    val Array(dirA, labelA, dirB, labelB, outJson) = args.take(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val Seq(dirA, labelA, dirB, labelB) = args.take(4)
 
     // defaultYaml + the t13 quality gate FED FORWARD (round 16,
     // VERDICT r15 #6: MakeScale now preserves stopwords, so the gate
@@ -64,28 +52,24 @@ object CurationScale {
         |    frac: 0.5
         |""".stripMargin
 
-    def runRung(dir: String, label: String): String = {
+    def stage(name: String, sec: Double, rows: Long, ops: Seq[String]) =
+      obj("stage" -> name, "sec" -> sec, "rows_out" -> rows, "plan" -> ops)
+
+    def runRung(dir: String, label: String): JObject = {
       val plan = graft.pipeline.TextPipeline.parse(scaleYaml)
       var docs = Tables(spark, dir, "documents").localCheckpoint(true)
       val n0 = docs.count()
       System.err.println(s"[curation-scale] $label: $n0 docs")
-      val sb = new StringBuilder
-      sb ++= s"""  "$label": {"n_docs": $n0, "stages": [\n"""
-      var first = true
-      plan.stages.foreach { st =>
+      val curated = plan.stages.map { st =>
         val staged = graft.pipeline.TextPipeline
           .applyStage(docs, st, plan.ranSeed)
         val ops = planOps(staged)
         val (out, sec) = timed(staged.localCheckpoint(true))
         val n = out.count()
         docs = out
-        if (!first) sb ++= ",\n"
-        first = false
-        sb ++= s"""    {"stage": "${st.stepType}", "sec": ${r3(sec)}, """ +
-          s""""rows_out": $n, "plan": [${ops.map(o => s""""$o"""")
-            .mkString(", ")}]}"""
         System.err.println(f"[curation-scale] $label ${st.stepType}: " +
           f"$sec%.2fs -> $n rows")
+        stage(st.stepType, sec, n, ops)
       }
       // split assignment (o5)
       val (buckets, splitSec) = timed {
@@ -94,8 +78,6 @@ object CurationScale {
           .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
       }
-      sb ++= s""",\n    {"stage": "split", "sec": ${r3(splitSec)}, """ +
-        s""""rows_out": ${buckets.map(_._2).sum}, "plan": ["Exchange", "HashAggregate"]}"""
       System.err.println(f"[curation-scale] $label split: $splitSec%.2fs " +
         s"${buckets.mkString(",")}")
       // d14 state-table dedup stage: band state over the curated
@@ -115,20 +97,18 @@ object CurationScale {
       val (nProbe, probeSec) = timed(
         graft.queries.DedupOps
           .incrementalProbeAgainstState(batchSigs, state).count())
-      sb ++= s""",\n    {"stage": "minhash_state_build", "sec": ${r3(stateSec)}, "rows_out": -1, "plan": ["Exchange", "HashAggregate", "Generate"]}"""
-      sb ++= s""",\n    {"stage": "minhash_state_probe", "sec": ${r3(probeSec)}, "rows_out": $nProbe, "plan": ["SortMergeJoin", "Window"]}"""
       System.err.println(f"[curation-scale] $label d14: build " +
         f"$stateSec%.2fs probe $probeSec%.2fs ($nProbe probed)")
-      sb ++= "\n  ]}"
-      sb.toString
+      obj("n_docs" -> n0, "stages" -> (curated ++ Seq(
+        stage("split", splitSec, buckets.map(_._2).sum,
+          Seq("Exchange", "HashAggregate")),
+        stage("minhash_state_build", stateSec, -1,
+          Seq("Exchange", "HashAggregate", "Generate")),
+        stage("minhash_state_probe", probeSec, nProbe,
+          Seq("SortMergeJoin", "Window")))))
     }
 
-    val a = runRung(dirA, labelA)
-    val b = runRung(dirB, labelB)
-    val json = s"{\n$a,\n$b\n}"
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outJson), json)
-    System.err.println(s"[curation-scale] wrote $outJson")
-    spark.stop()
+    Study.Json(obj(labelA -> runRung(dirA, labelA),
+      labelB -> runRung(dirB, labelB)))
   }
 }

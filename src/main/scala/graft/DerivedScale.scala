@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
 
 import graft.operators.DerivedState
 import graft.sources.Versioned
+import Study.{obj, secs, timed}
 
 /** CDF-maintained derived state at scale (round 15, VERDICT r14 #5):
   * measures [[DerivedState.maintainMinhashBandState]] against a
@@ -16,31 +18,14 @@ import graft.sources.Versioned
   * ingest pipeline appends documents and the dedup index follows the
   * change feed.
   *
-  * Usage: runMain graft.DerivedScale <scaledSfDir> <srcTable>
-  * <stateTable> <out.json> <label>
+  * Usage: runMain graft.Study DerivedScale <out.json> <scaledSfDir>
+  * <srcTable> <stateTable> <label>
   */
 object DerivedScale {
-  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
-
-  def main(args: Array[String]): Unit = {
-    val Array(srcDir, srcTbl, stateTbl, outJson, label) = args.take(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val Seq(srcDir, srcTbl, stateTbl, label) = args.take(4)
     def drain(): Double =
-      timed(DerivedState.maintainMinhashBandState(spark, srcTbl,
-        stateTbl))._2
+      secs(DerivedState.maintainMinhashBandState(spark, srcTbl, stateTbl))
 
     val docs = Tables(spark, srcDir, "documents")
       .select(col("doc_id"), col("text"))
@@ -72,16 +57,9 @@ object DerivedScale {
       .maintainMinhashBandState(spark, srcTbl, stateTbl))
     require(noop.isEmpty, "re-drain was not a no-op")
 
-    val json =
-      s"""{"label":"$label","n_docs":$nDocs,""" +
-      s""""initial_build_sec":${r3(buildSec)},""" +
-      s""""state_rows":$stateRows0,""" +
-      s""""increment_sec":[${incr.map(r3).mkString(",")}],""" +
-      s""""delete_drain_sec":${r3(delSec)},""" +
-      s""""noop_drain_sec":${r3(noopSec)}}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outJson), json)
-    System.err.println(s"[derived-scale] $json")
-    spark.stop()
+    Study.Json(obj("label" -> label, "n_docs" -> nDocs,
+      "initial_build_sec" -> buildSec, "state_rows" -> stateRows0,
+      "increment_sec" -> incr, "delete_drain_sec" -> delSec,
+      "noop_drain_sec" -> noopSec))
   }
 }

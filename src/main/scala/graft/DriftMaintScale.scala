@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
 
 import graft.operators.DerivedState
 import graft.sources.Versioned
+import Study.{obj, timed}
 
 /** Measures drift-triggered state maintenance at scale (round 16,
   * VERDICT r15 #4): the claim is maintenance cost ∝ DRIFTED fraction,
@@ -21,27 +23,12 @@ import graft.sources.Versioned
   * the gate retrain — recording measure cost (sample-sized, flat)
   * separately from retrain cost (the explicit rebuild).
   *
-  * Usage: runMain graft.DriftMaintScale <scaledSfDir> <workDir>
-  * <out.json> <label>
+  * Usage: runMain graft.Study DriftMaintScale <out.json> <scaledSfDir>
+  * <workDir> <label>
   */
 object DriftMaintScale {
-  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
-
-  def main(args: Array[String]): Unit = {
-    val Array(srcDir, workDir, outJson, label) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val Seq(srcDir, workDir, label) = args.take(3)
 
     // ---------------------------------------------- band-state arm
     val docsSrc = s"$workDir/docs"
@@ -66,9 +53,8 @@ object DriftMaintScale {
     }
     val p999 = math.max(1L, quantile(0.999))
     val p99 = math.max(1L, quantile(0.99))
-    System.err.println(s"[drift-maint] $label: $nDocs docs, " +
-      s"$stateRows state rows, $nBuckets buckets, " +
-      s"p99=$p99 p999=$p999")
+    Study.step("drift-maint", obj("label" -> label, "n_docs" -> nDocs,
+      "rows" -> stateRows, "buckets" -> nBuckets, "p99" -> p99, "p999" -> p999))
     val ((b0, r0), sec0) = timed {
       DerivedState.recapBandState(spark, bandSt) // default 4096 cap
     }
@@ -124,27 +110,20 @@ object DriftMaintScale {
     require(retrained, s"shifted corpus must trip the gate ($fGate)")
     val fAfter = DerivedState.ivfDriftFraction(spark, centsT, postsT)
 
-    val json =
-      s"""{"label":"$label","n_docs":$nDocs,""" +
-      s""""band_state":{"rows":$stateRows,"buckets":$nBuckets,""" +
-      s""""build_sec":${r3(buildSec)},""" +
-      s""""rungs":[""" +
-      s"""{"cap":4096,"drifted_buckets":$b0,"rows_removed":$r0,"sec":${r3(sec0)}},""" +
-      s"""{"cap":$p999,"drifted_buckets":$b1,"rows_removed":$r1,"sec":${r3(sec1)}},""" +
-      s"""{"cap":$p99,"drifted_buckets":$b2,"rows_removed":$r2,"sec":${r3(sec2)}}],""" +
-      s""""post_recap_drain_ok":true},""" +
-      s""""ivf":{"n_vectors":$nVec,"nlist":$nlist,""" +
-      s""""train_sec":${r3(trainSec)},"drain_sec":${r3(drainSec)},""" +
-      s""""measure_sec":${r3(measSec)},""" +
-      s""""fraction_healthy":${r3(fHealthy)},""" +
-      s""""shifted_drain_sec":${r3(drain2Sec)},""" +
-      s""""measure2_sec":${r3(meas2Sec)},""" +
-      s""""fraction_drifted":${r3(fDrifted)},""" +
-      s""""retrain_sec":${r3(retrainSec)},""" +
-      s""""fraction_after_retrain":${r3(fAfter)}}}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outJson), json)
-    System.err.println(s"[drift-maint] $json")
-    spark.stop()
+    def rung(cap: Long, drifted: Long, removed: Long, sec: Double) =
+      obj("cap" -> cap, "drifted_buckets" -> drifted,
+        "rows_removed" -> removed, "sec" -> sec)
+    Study.Json(obj("label" -> label, "n_docs" -> nDocs,
+      "band_state" -> obj("rows" -> stateRows, "buckets" -> nBuckets,
+        "build_sec" -> buildSec,
+        "rungs" -> Seq(rung(4096, b0, r0, sec0), rung(p999, b1, r1, sec1),
+          rung(p99, b2, r2, sec2)),
+        "post_recap_drain_ok" -> true),
+      "ivf" -> obj("n_vectors" -> nVec, "nlist" -> nlist,
+        "train_sec" -> trainSec, "drain_sec" -> drainSec,
+        "measure_sec" -> measSec, "fraction_healthy" -> fHealthy,
+        "shifted_drain_sec" -> drain2Sec, "measure2_sec" -> meas2Sec,
+        "fraction_drifted" -> fDrifted, "retrain_sec" -> retrainSec,
+        "fraction_after_retrain" -> fAfter)))
   }
 }

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
 
 import graft.sources.Versioned
+import Study.{obj, secs}
 
 /** Proves the round-16 deletion-vector claim (VERDICT r15 #1): driver
   * memory and filter-closure size stay FLAT as DV'd rows grow — the
@@ -27,11 +29,10 @@ import graft.sources.Versioned
   *    `delete_sec`, `masked_scan_sec`, and the post-delete driver
   *    heap delta after a GC (indicative only).
   *
-  * Usage: runMain graft.DvMaskScale <scaledSfDir> <tableDir>
-  * <out.json> <label>
+  * Usage: runMain graft.Study DvMaskScale <out.json> <scaledSfDir>
+  * <tableDir> <label>
   */
 object DvMaskScale {
-  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
 
   private def serBytes(o: AnyRef): Long = {
     val bos = new java.io.ByteArrayOutputStream()
@@ -40,21 +41,8 @@ object DvMaskScale {
     bos.size().toLong
   }
 
-  def main(args: Array[String]): Unit = {
-    val Array(srcDir, tableDir, outJson, label) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val Seq(srcDir, tableDir, label) = args.take(3)
     def heapUsed(): Long = {
       System.gc(); Thread.sleep(200)
       val rt = Runtime.getRuntime
@@ -72,61 +60,55 @@ object DvMaskScale {
     System.err.println(s"[dv-mask] $label: $nDocs docs, " +
       s"${base.files.size} files")
 
-    spark.conf.set("spark.graft.dv.enabled", "true")
     val root = tableDir.stripSuffix("/") // plain local path already
     // growing matched-row density, every rung under the 0.5 crossover
     val rungs = Seq(
       ("1x", pmod(col("doc_id"), lit(3000)) === 17),
       ("25x", pmod(col("doc_id"), lit(120)) === 17),
       ("625x", pmod(col("doc_id"), lit(5)) === 3))
-    val lines = rungs.map { case (rung, pred) =>
-      val preV = Versioned.snapshot(tableDir).version
-      val nMatch = Versioned.read(spark, tableDir).where(pred).count()
-      val h0 = heapUsed()
-      val delSec = timed {
-        Versioned.deleteWhere(spark, tableDir, pred); ()
-      }
-      val h1 = heapUsed()
-      val snap = Versioned.snapshot(tableDir)
-      val dvPaths = snap.dvs.map { case (dataRel, dvRel) =>
-        s"$root/$dataRel" -> s"$root/$dvRel"
-      }
-      // what the r16 closure ships vs what the pre-r16 one shipped
-      val closureNew = serBytes(dvPaths)
-      val oldMask: Map[String, Array[Long]] =
-        snap.dvs.map { case (dataRel, dvRel) =>
-          s"$root/$dataRel" -> graft.sources.DeletionVectors.read(
-            java.nio.file.Paths.get(root, dvRel))
+    val lines = Study.withConf(spark, "spark.graft.dv.enabled" -> "true") {
+      rungs.map { case (rung, pred) =>
+        val preV = Versioned.snapshot(tableDir).version
+        val nMatch = Versioned.read(spark, tableDir).where(pred).count()
+        val h0 = heapUsed()
+        val delSec = secs(Versioned.deleteWhere(spark, tableDir, pred))
+        val h1 = heapUsed()
+        val snap = Versioned.snapshot(tableDir)
+        val dvPaths = snap.dvs.map { case (dataRel, dvRel) =>
+          s"$root/$dataRel" -> s"$root/$dvRel"
         }
-      val closureOld = serBytes(oldMask)
-      val sidecarBytes = snap.dvs.values.map(d =>
-        java.nio.file.Files.size(java.nio.file.Paths.get(root, d))).sum
-      val maskedScan = timed {
-        Versioned.read(spark, tableDir)
-          .agg(count(lit(1)), sum(col("n_chars"))).collect(); ()
+        // what the r16 closure ships vs what the pre-r16 one shipped
+        val closureNew = serBytes(dvPaths)
+        val oldMask: Map[String, Array[Long]] =
+          snap.dvs.map { case (dataRel, dvRel) =>
+            s"$root/$dataRel" -> graft.sources.DeletionVectors.read(
+              java.nio.file.Paths.get(root, dvRel))
+          }
+        val closureOld = serBytes(oldMask)
+        val sidecarBytes = snap.dvs.values.map(d =>
+          java.nio.file.Files.size(java.nio.file.Paths.get(root, d))).sum
+        val maskedScan = secs {
+          Versioned.read(spark, tableDir)
+            .agg(count(lit(1)), sum(col("n_chars"))).collect(); ()
+        }
+        val after = Versioned.read(spark, tableDir).count()
+        require(after == nDocs - nMatch,
+          s"rung $rung wrong count: $after vs ${nDocs - nMatch}")
+        Versioned.restore(tableDir, preV)
+        System.err.println(s"[dv-mask] $rung: rows=$nMatch " +
+          s"closure=$closureNew old=$closureOld files=${snap.dvs.size}")
+        obj("rung" -> rung, "dvd_rows" -> nMatch,
+          "dvd_files" -> snap.dvs.size,
+          "closure_bytes" -> closureNew,
+          "closure_bytes_old_design" -> closureOld,
+          "driver_rows_returned" -> snap.dvs.size,
+          "sidecar_bytes" -> sidecarBytes,
+          "delete_sec" -> delSec,
+          "masked_scan_sec" -> maskedScan,
+          "heap_delta_mb" -> (h1 - h0) / 1048576.0)
       }
-      val after = Versioned.read(spark, tableDir).count()
-      require(after == nDocs - nMatch,
-        s"rung $rung wrong count: $after vs ${nDocs - nMatch}")
-      Versioned.restore(tableDir, preV)
-      System.err.println(s"[dv-mask] $rung: rows=$nMatch " +
-        s"closure=$closureNew old=$closureOld files=${snap.dvs.size}")
-      s"""{"rung":"$rung","dvd_rows":$nMatch,""" +
-        s""""dvd_files":${snap.dvs.size},""" +
-        s""""closure_bytes":$closureNew,""" +
-        s""""closure_bytes_old_design":$closureOld,""" +
-        s""""driver_rows_returned":${snap.dvs.size},""" +
-        s""""sidecar_bytes":$sidecarBytes,""" +
-        s""""delete_sec":${r3(delSec)},""" +
-        s""""masked_scan_sec":${r3(maskedScan)},""" +
-        s""""heap_delta_mb":${r3((h1 - h0) / 1048576.0)}}"""
     }
-    val json = s"""{"label":"$label","n_docs":$nDocs,""" +
-      s""""files":${base.files.size},""" +
-      s""""rungs":[${lines.mkString(",")}]}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outJson), json)
-    System.err.println(s"[dv-mask] $json")
-    spark.stop()
+    Study.Json(obj("label" -> label, "n_docs" -> nDocs,
+      "files" -> base.files.size, "rungs" -> lines))
   }
 }

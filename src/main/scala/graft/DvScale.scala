@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
 
 import graft.sources.Versioned
+import Study.{obj, secs, withConf}
 
 /** Measures the DELETION-VECTOR point-DML claim at scale (round 15,
   * VERDICT r14 #1): a scattered small delete on a large table should
@@ -23,27 +25,12 @@ import graft.sources.Versioned
   * mode must take the per-file COW branch (sidecar count 0), pinning
   * that the fraction triage routes big deletes away from masks.
   *
-  * Usage: runMain graft.DvScale <scaledSfDir> <tableDir> <out.json>
-  * <label>
+  * Usage: runMain graft.Study DvScale <out.json> <scaledSfDir>
+  * <tableDir> <label>
   */
 object DvScale {
-  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
-
-  def main(args: Array[String]): Unit = {
-    val Array(srcDir, tableDir, outJson, label) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val Seq(srcDir, tableDir, label) = args.take(3)
     def dirBytes(rels: Seq[String]): Long =
       rels.map(f => java.nio.file.Files.size(
         java.nio.file.Paths.get(tableDir, f))).sum
@@ -54,20 +41,18 @@ object DvScale {
       val newDvs = snap.dvs.values.toSeq.filterNot(prevDvs)
       (dirBytes(newData), dirBytes(newDvs), newDvs.size)
     }
-    def fullScan(): Double = timed {
+    def fullScan(): Double = secs {
       Versioned.read(spark, tableDir)
         .agg(count(lit(1)), sum(col("n_chars")), sum(length(col("text"))))
         .collect(); ()
     }
-    def withDv[A](on: Boolean)(f: => A): A = {
-      spark.conf.set("spark.graft.dv.enabled", on.toString)
-      try f finally spark.conf.unset("spark.graft.dv.enabled")
-    }
+    def withDv[A](on: Boolean)(f: => A): A =
+      withConf(spark, "spark.graft.dv.enabled" -> on.toString)(f)
 
     // ---------------------------------------------------- the table
     val docs = Tables(spark, srcDir, "documents")
     val nDocs = docs.count()
-    val tIngest = timed {
+    val tIngest = secs {
       (0 until 8).foreach(i =>
         Versioned.commit(docs.where(pmod(col("doc_id"), lit(8)) === i),
           tableDir, "append"))
@@ -80,14 +65,15 @@ object DvScale {
     // doc_id-clustered layout, so EVERY file is touched
     val pointPred = pmod(col("doc_id"), lit(3000)) === 17
     val nPoint = docs.where(pointPred).count()
-    System.err.println(s"[dv-scale] $label: $nDocs docs, " +
-      s"${snap0.files.size} files, ${tableBytes / (1 << 20)} MiB; " +
-      s"point delete = $nPoint rows")
+    val head = obj("label" -> label, "n_docs" -> nDocs,
+      "table_bytes" -> tableBytes, "ingest_sec" -> tIngest,
+      "point_rows" -> nPoint)
+    Study.step("dv-scale", head)
 
     // -------------------------------------------- leg 1: COW delete
     val preV = snap0.version
     val cowSec = withDv(false) {
-      timed { Versioned.deleteWhere(spark, tableDir, pointPred); () }
+      secs(Versioned.deleteWhere(spark, tableDir, pointPred))
     }
     val (cowDataBytes, _, _) =
       addedByLast(snap0.files.toSet, Set.empty)
@@ -97,7 +83,7 @@ object DvScale {
     // --------------------------------------------- leg 2: DV delete
     val snap1 = Versioned.snapshot(tableDir)
     val dvSec = withDv(true) {
-      timed { Versioned.deleteWhere(spark, tableDir, pointPred); () }
+      secs(Versioned.deleteWhere(spark, tableDir, pointPred))
     }
     val (dvDataBytes, dvSidecarBytes, nSidecars) =
       addedByLast(snap1.files.toSet, Set.empty)
@@ -107,11 +93,11 @@ object DvScale {
     // DV UPDATE on a disjoint scattered slice
     val updPred = pmod(col("doc_id"), lit(3000)) === 23
     val dvUpdSec = withDv(true) {
-      timed { Versioned.updateWhere(spark, tableDir, updPred,
-        Map("n_chars" -> (col("n_chars") + lit(1L)))); () }
+      secs { Versioned.updateWhere(spark, tableDir, updPred,
+        Map("n_chars" -> (col("n_chars") + lit(1L)))) }
     }
     // ------------------------------------------------- purge + scan
-    val purgeSec = timed {
+    val purgeSec = secs {
       Versioned.optimize(spark, tableDir, numFiles = 32,
         clusterBy = Seq("doc_id")); ()
     }
@@ -122,30 +108,21 @@ object DvScale {
     val bigPred = pmod(col("doc_id"), lit(10)) < 6
     val snap2 = Versioned.snapshot(tableDir)
     val bigSec = withDv(true) {
-      timed { Versioned.deleteWhere(spark, tableDir, bigPred); () }
+      secs(Versioned.deleteWhere(spark, tableDir, bigPred))
     }
     val bigSidecars = Versioned.snapshot(tableDir).dvs.size
     val (bigDataBytes, _, _) = addedByLast(snap2.files.toSet, Set.empty)
 
-    val json =
-      s"""{"label":"$label","n_docs":$nDocs,""" +
-      s""""table_bytes":$tableBytes,"ingest_sec":${r3(tIngest)},""" +
-      s""""point_rows":$nPoint,""" +
-      s""""cow":{"delete_sec":${r3(cowSec)},""" +
-      s""""data_bytes_written":$cowDataBytes,""" +
-      s""""scan_after_sec":${r3(cowScan)}},""" +
-      s""""dv":{"delete_sec":${r3(dvSec)},""" +
-      s""""data_bytes_written":$dvDataBytes,""" +
-      s""""sidecar_bytes":$dvSidecarBytes,"sidecars":$nSidecars,""" +
-      s""""masked_scan_sec":${r3(maskedScan)},""" +
-      s""""update_sec":${r3(dvUpdSec)},""" +
-      s""""optimize_purge_sec":${r3(purgeSec)},""" +
-      s""""scan_after_purge_sec":${r3(cleanScan)}},""" +
-      s""""crossover_60pct":{"delete_sec":${r3(bigSec)},""" +
-      s""""sidecars":$bigSidecars,""" +
-      s""""data_bytes_written":$bigDataBytes}}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson), json)
-    System.err.println(s"[dv-scale] $json")
-    spark.stop()
+    Study.Json(head ~ obj(
+      "cow" -> obj("delete_sec" -> cowSec,
+        "data_bytes_written" -> cowDataBytes, "scan_after_sec" -> cowScan),
+      "dv" -> obj("delete_sec" -> dvSec,
+        "data_bytes_written" -> dvDataBytes,
+        "sidecar_bytes" -> dvSidecarBytes, "sidecars" -> nSidecars,
+        "masked_scan_sec" -> maskedScan, "update_sec" -> dvUpdSec,
+        "optimize_purge_sec" -> purgeSec,
+        "scan_after_purge_sec" -> cleanScan),
+      "crossover_60pct" -> obj("delete_sec" -> bigSec,
+        "sidecars" -> bigSidecars, "data_bytes_written" -> bigDataBytes)))
   }
 }

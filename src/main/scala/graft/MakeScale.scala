@@ -22,9 +22,11 @@ import org.apache.spark.sql.functions._
   * exponents (t4 looked super-linear purely from the corpus
   * transform).
   *
-  * Usage: runMain graft.MakeScale <srcSfDir> <dstDir> <copies> [full]
-  * — "full" additionally scales the relational/event tables (re-keyed,
-  * events time-shifted per copy) and copies the dims through.
+  * Usage: runMain graft.MakeScale <srcSfDir> <dstDir> <copies>
+  * [full|zipf [support]|boiler [megaN]] — "full" additionally scales
+  * the relational/event tables (re-keyed, events time-shifted per
+  * copy) and copies the dims through. Studies call [[scale]] on their
+  * own session.
   *
   * BOILERPLATE MODE (`… <copies> boiler [megaN]`, round-10; VERDICT
   * r9 task 1): the LSH band-bucket skew guard's bounded-recall
@@ -39,7 +41,7 @@ import org.apache.spark.sql.functions._
   * guard threshold, so d2/d4/d9/d14's mega-bucket paths actually
   * fire; the mutated families give the pair/cluster comparison a
   * RANGE of similarities instead of the trivial est = 1.0 case.
-  * Measured by `graft.GuardRecall` (guard on vs off: pair recall,
+  * Measured by the `GuardRecall` study (guard on vs off: pair recall,
   * cluster equivalence, wall-clock) → bench/guard_recall.json +
   * COVERAGE §guard-recall.
   *
@@ -63,23 +65,22 @@ import org.apache.spark.sql.functions._
   */
 object MakeScale {
   def main(args: Array[String]): Unit = {
-    val src = args(0)
-    val dst = args(1)
-    val copies = args(2).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions",
-      "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Study.session()
+    try scale(spark, args(0), args(1), args(2).toInt, args.lift(3).getOrElse(""),
+      args.lift(4).map(_.toInt))
+    finally spark.stop()
+  }
+
+  /** Writes `copies` re-keyed copies of `src` to `dst`. `mode` is ""
+    * (documents + embeddings), "full", "zipf" or "boiler"; `modeArg`
+    * is zipf's rank support or boiler's megaN. */
+  def scale(spark: SparkSession, src: String, dst: String, copies: Int,
+      mode: String = "", modeArg: Option[Int] = None): Unit = {
     val idOff = 100000000L
 
     def alphaSuffix(i: Int): String =
       "q" + ('a' + i / 26).toChar + ('a' + i % 26).toChar
-    val zipfMode = args.length > 3 && args(3) == "zipf"
+    val zipfMode = mode == "zipf"
     val docs = spark.read.parquet(s"$src/documents.parquet")
 
     // zipf mode: every token position becomes a draw from one shared
@@ -88,7 +89,7 @@ object MakeScale {
     // statistics; the md5-keyed inverse-CDF keeps the corpus
     // deterministic under regeneration and free of near-dup structure
     // (each copy's draws are independent).
-    val zipfV: Int = if (args.length > 4) args(4).toInt else 456976 // 26^4
+    val zipfV: Int = modeArg.getOrElse(456976) // 26^4
     def zipfText(i: Int): Column = {
       val alphabet = array(('a' to 'z').map(c => lit(c.toString)): _*)
       def letter(q: Column): Column =
@@ -133,9 +134,8 @@ object MakeScale {
     }.reduce(_ unionByName _)
 
     // boilerplate mode: plant the templated-page families (object doc)
-    val boilerMode = args.length > 3 && args(3) == "boiler"
-    val withBoiler = if (!boilerMode) scaledDocs else {
-      val megaN = if (args.length > 4) args(4).toInt else 12000
+    val withBoiler = if (mode != "boiler") scaledDocs else {
+      val megaN = modeArg.getOrElse(12000)
       val T = 42
       val template = (1 to T).map(i => s"bpt$i")
       def fam(tag: String, n: Int, idBase: Long, muts: Int) =
@@ -179,7 +179,7 @@ object MakeScale {
     // measured exponent about the operator, not the corpus transform.
     // Dimension tables (region…part) copy through unscaled: at any
     // scale the dims stay broadcast-sized, exactly like production.
-    if (args.length > 3 && args(3) == "full") {
+    if (mode == "full") {
       val yearNanos = 31557600L * 1000000000L // 365.25 d — ts is epoch-nanos
       // NOTE the physical schema asymmetry this creates: the base
       // events.parquet stores ts as a parquet TIMESTAMP (nanos in the
@@ -190,19 +190,15 @@ object MakeScale {
       // raw longs through), but scaled dirs are BENCH-ONLY inputs —
       // the DuckDB oracle (epoch_us/date_trunc on a real timestamp)
       // runs exclusively against the base sf dirs.
-      val orders = spark.read.parquet(s"$src/orders.parquet")
-      (0 until copies).map { i =>
-        orders.withColumn("o_orderkey", col("o_orderkey") + lit(i * idOff))
-      }.reduce(_ unionByName _)
-        .repartition(32, col("o_orderkey"))
-        .write.mode("overwrite").parquet(s"$dst/orders.parquet")
-
-      val lineitem = spark.read.parquet(s"$src/lineitem.parquet")
-      (0 until copies).map { i =>
-        lineitem.withColumn("l_orderkey", col("l_orderkey") + lit(i * idOff))
-      }.reduce(_ unionByName _)
-        .repartition(32, col("l_orderkey"))
-        .write.mode("overwrite").parquet(s"$dst/lineitem.parquet")
+      Seq("orders" -> "o_orderkey", "lineitem" -> "l_orderkey").foreach {
+        case (t, key) =>
+          val fact = spark.read.parquet(s"$src/$t.parquet")
+          (0 until copies).map { i =>
+            fact.withColumn(key, col(key) + lit(i * idOff))
+          }.reduce(_ unionByName _)
+            .repartition(32, col(key))
+            .write.mode("overwrite").parquet(s"$dst/$t.parquet")
+      }
 
       val events = Tables(spark, src, "events")
       (0 until copies).map { i =>
@@ -222,6 +218,5 @@ object MakeScale {
     }
 
     println(s"[makescale] wrote $dst at ${copies}x of $src")
-    spark.stop()
   }
 }

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
 
 import graft.sources.Versioned
+import Study.{obj, secs}
 
 /** Measures the round-11 STRING-KEY merge path at corpus scale: the
   * reference's row identity is a uuid4 string, so the load-bearing
@@ -20,28 +22,16 @@ import graft.sources.Versioned
   *  - a scattered batch (uuids spread across the key space);
   *  - a composite (uuid, bucket) batch through the same machinery.
   *
-  * Output: bench/merge_string_<label>.json.
+  * Usage: runMain graft.Study MergeScale <out.json> <scaledSfDir>
+  * <workDir> <label> (bench/merge_string_<label>.json). The corpus
+  * needs at least 10,200 documents: the probes take key ranges from
+  * fixed positions of the sorted uuid list. The tables land in
+  * `<workDir>/table` and `<workDir>/bulk`.
   */
 object MergeScale {
-  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
-
-  def main(args: Array[String]): Unit = {
-    val srcDir = args(0)
-    val tableDir = args(1)
-    val label = if (args.length > 2) args(2) else "25x"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions",
-      "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val Seq(srcDir, workDir, label) = args.take(3)
+    val tableDir = s"$workDir/table"
 
     val docs = Tables(spark, srcDir, "documents")
       .select(
@@ -52,32 +42,32 @@ object MergeScale {
     val tbl = docs.select(col("uid"), col("bucket"), col("n_chars"))
     val nDocs = docs.count()
 
-    val tIngest = timed {
+    val tIngest = secs {
       (0 until 8).foreach(i =>
         Versioned.commit(tbl.where(pmod(col("doc_id"), lit(8)) === i),
           tableDir, "append"))
     }
-    val tCluster = timed {
+    val tCluster = secs {
       Versioned.optimize(spark, tableDir, numFiles = 32,
         clusterBy = Seq("uid"))
     }
     val base = Versioned.snapshot(tableDir)
-    System.err.println(s"[merge-scale] $label: $nDocs docs, " +
-      s"${base.files.size} files clustered on the STRING key; " +
-      s"ingest ${r3(tIngest)}s cluster ${r3(tCluster)}s")
+    Study.step("merge-scale", obj("label" -> label, "n_docs" -> nDocs,
+      "files" -> base.files.size, "ingest_sec" -> tIngest,
+      "cluster_sec" -> tCluster))
 
     def mergeProbe(name: String, updates: DataFrame,
-        keys: Seq[String]): String = {
+        keys: Seq[String]) = {
       val before = Versioned.snapshot(tableDir)
       val nUpd = updates.count()
-      val t = timed { Versioned.merge(updates, tableDir, keys) }
+      val t = secs { Versioned.merge(updates, tableDir, keys) }
       val after = Versioned.snapshot(tableDir)
       val carried = after.files.toSet.intersect(before.files.toSet).size
       val rewritten = before.files.size - carried
-      System.err.println(f"[merge-scale] $label $name: $nUpd rows, " +
-        f"$carried of ${before.files.size} files carried " +
-        f"($rewritten rewritten) in ${t}%.2fs")
-      s"""  "$name": {"rows": $nUpd, "files_before": ${before.files.size}, "carried": $carried, "rewritten": $rewritten, "sec": ${r3(t)}}"""
+      val probe = obj("rows" -> nUpd, "files_before" -> before.files.size,
+        "carried" -> carried, "rewritten" -> rewritten, "sec" -> t)
+      Study.step("merge-scale", obj(name -> probe))
+      probe
     }
 
     // key-range endpoints taken FROM the data (the id space is
@@ -110,23 +100,22 @@ object MergeScale {
     // table — the r11 coalesce(touched.size) would funnel every
     // inserted row through ONE writer task; the round-12 file scaling
     // must land multiple output files and keep the write parallel.
-    val bulkDir = tableDir + "-bulk"
+    val bulkDir = s"$workDir/bulk"
     Versioned.commit(tbl.limit(1).coalesce(1), bulkDir, "append")
     // target sized to the corpus so the scaling is OBSERVABLE here
     // (~16 files); production default is 2^20 rows/file
-    spark.conf.set("spark.graft.versioned.targetFileRows",
-      math.max(1000L, nDocs / 16).toString)
+    val targetRows = math.max(1000L, nDocs / 16)
     val bulkBefore = Versioned.snapshot(bulkDir)
-    val tBulk = timed { Versioned.merge(tbl, bulkDir, Seq("uid")) }
-    spark.conf.unset("spark.graft.versioned.targetFileRows")
+    val tBulk = Study.withConf(spark,
+      "spark.graft.versioned.targetFileRows" -> targetRows.toString) {
+      secs { Versioned.merge(tbl, bulkDir, Seq("uid")) }
+    }
     val bulkAfter = Versioned.snapshot(bulkDir)
     val bulkRows = Versioned.read(spark, bulkDir).count()
-    System.err.println(f"[merge-scale] $label bulk_insert: $nDocs rows " +
-      f"into ${bulkBefore.files.size}-file table -> " +
-      f"${bulkAfter.files.size} files in ${tBulk}%.2fs " +
-      f"(rows_after=$bulkRows)")
-    val bulk =
-      s"""  "bulk_insert_merge": {"rows": $nDocs, "files_before": ${bulkBefore.files.size}, "files_after": ${bulkAfter.files.size}, "rows_after": $bulkRows, "target_file_rows": ${math.max(1000L, nDocs / 16)}, "sec": ${r3(tBulk)}}"""
+    val bulk = obj("rows" -> nDocs, "files_before" -> bulkBefore.files.size,
+      "files_after" -> bulkAfter.files.size, "rows_after" -> bulkRows,
+      "target_file_rows" -> targetRows, "sec" -> tBulk)
+    Study.step("merge-scale", obj("bulk_insert_merge" -> bulk))
 
     // 5. updateWhere on a tight uuid range (round 12): the COW UPDATE
     // must prune like the point delete. The earlier merge probes left
@@ -135,7 +124,7 @@ object MergeScale {
     Versioned.optimize(spark, tableDir, numFiles = 32,
       clusterBy = Seq("uid"))
     val updBefore = Versioned.snapshot(tableDir)
-    val tUpd = timed {
+    val tUpd = secs {
       Versioned.updateWhere(spark, tableDir,
         col("uid").between(uids(2000), uids(2199)),
         Map("n_chars" -> (col("n_chars") + 1L)))
@@ -143,17 +132,17 @@ object MergeScale {
     val updAfter = Versioned.snapshot(tableDir)
     val updCarried = updAfter.files.toSet
       .intersect(updBefore.files.toSet).size
-    System.err.println(f"[merge-scale] $label update_tight: " +
-      f"$updCarried of ${updBefore.files.size} files carried in ${tUpd}%.2fs")
-    val updProbe =
-      s"""  "update_where_tight": {"rows": 200, "files_before": ${updBefore.files.size}, "carried": $updCarried, "rewritten": ${updBefore.files.size - updCarried}, "sec": ${r3(tUpd)}}"""
+    val updProbe = obj("rows" -> 200, "files_before" -> updBefore.files.size,
+      "carried" -> updCarried,
+      "rewritten" -> (updBefore.files.size - updCarried), "sec" -> tUpd)
+    Study.step("merge-scale", obj("update_where_tight" -> updProbe))
 
     // 6. NOT-MATCHED-BY-SOURCE sync merge (round 12): its footprint
     // is every unmatched target row, so the WHOLE table rewrites —
     // measured here so the honest cost is on the record (this is the
     // operation's semantics, not a missed optimization)
     val nmbsBefore = Versioned.snapshot(tableDir)
-    val tNmbs = timed {
+    val tNmbs = secs {
       Versioned.mergeClauses(
         tbl.where(pmod(xxhash64(col("uid")), lit(4L)) === 0L), tableDir,
         Seq("uid"),
@@ -165,17 +154,14 @@ object MergeScale {
     val nmbsAfter = Versioned.snapshot(tableDir)
     val nmbsCarried = nmbsAfter.files.toSet
       .intersect(nmbsBefore.files.toSet).size
-    System.err.println(f"[merge-scale] $label nmbs_sync: " +
-      f"$nmbsCarried of ${nmbsBefore.files.size} files carried " +
-      f"(full rewrite by design) in ${tNmbs}%.2fs")
-    val nmbsProbe =
-      s"""  "nmbs_sync_merge": {"files_before": ${nmbsBefore.files.size}, "carried": $nmbsCarried, "sec": ${r3(tNmbs)}, "note": "whole-table rewrite is the operation's semantics"}"""
+    val nmbsProbe = obj("files_before" -> nmbsBefore.files.size,
+      "carried" -> nmbsCarried, "sec" -> tNmbs,
+      "note" -> "whole-table rewrite is the operation's semantics")
 
-    val json = s"""{\n  "label": "$label", "n_docs": $nDocs, "ingest_sec": ${r3(tIngest)}, "cluster_sec": ${r3(tCluster)},\n$tight,\n$scattered,\n$composite,\n$bulk,\n$updProbe,\n$nmbsProbe\n}\n"""
-    val p = java.nio.file.Paths.get(s"bench/merge_string_$label.json")
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(p, json)
-    println(json)
-    spark.stop()
+    Study.Json(obj("label" -> label, "n_docs" -> nDocs,
+      "ingest_sec" -> tIngest, "cluster_sec" -> tCluster,
+      "uuid_range_tight" -> tight, "uuid_scattered" -> scattered,
+      "composite_uuid_bucket" -> composite, "bulk_insert_merge" -> bulk,
+      "update_where_tight" -> updProbe, "nmbs_sync_merge" -> nmbsProbe))
   }
 }

@@ -1,48 +1,32 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps `.explain("formatted")` for every declared query (or a
-  * comma-separated subset in args(1)) to
-  * `$SPARK_GRAFT_PLAN_DIR/<name>_<tag>.txt` (default `plans/r17`)
-  * — the before/after evidence for the optimization round. Usage:
-  *   sbt "runMain graft.PlanDump <tag> [q1,q2,...] [sfDir]"
-  * Plans only (no execution); session configured exactly like Bench so
-  * the plans match what the bench runs. */
+  * comma-separated subset) as `<outDir>/<name>_<tag>.txt` — the
+  * before/after evidence for an optimization round (plans/r16,
+  * plans/r17). Plans only, no execution; on the runner's session the
+  * plans match what Bench runs at the same SPARK_GRAFT_CPUS. Usage:
+  *   runMain graft.Study PlanDump <outDir> <sfDir> <tag> [q1,q2,…|all]
+  */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    val tag = if (args.nonEmpty) args(0) else "before"
-    val only: Option[Set[String]] =
-      if (args.length > 1 && args(1).nonEmpty && args(1) != "all")
-        Some(args(1).split(",").map(_.trim).toSet)
-      else None
-    val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val outDir = Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r17"))
-    Files.createDirectories(outDir)
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val Seq(sfDir, tag) = args.take(2)
+    val only = args.lift(2).filter(a => a.nonEmpty && a != "all")
+      .map(_.split(",").map(_.trim).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    names.foreach { n =>
+    Study.TextFiles(names.flatMap { n =>
       try {
         val df = SparkEntry.queries(n)(spark, sfDir)
         val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-        Files.write(outDir.resolve(s"${n}_$tag.txt"), txt.getBytes("UTF-8"))
         println(s"[plandump] $n ok")
+        Some(s"${n}_$tag.txt" -> txt)
       } catch { case e: Throwable =>
         println(s"[plandump] $n FAILED: ${e.getMessage}")
+        None
       }
-    }
-    spark.stop()
+    })
   }
 }

@@ -1,25 +1,18 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dumps formatted physical plans of representative queries to
-  * PLANS.md — the evidence behind SCALING.md's claims (pushdown,
-  * pruning, broadcasts, codegen spans). Run:
-  * `sbt "runMain graft.Plans"`. */
+import Study.scratch
+
+/** Formatted physical plans of representative queries, as markdown —
+  * the evidence behind SCALING.md's claims (pushdown, pruning,
+  * broadcasts, codegen spans). Shuffle partition counts in the plans
+  * follow SPARK_GRAFT_CPUS; PLANS.md holds sf0.001 at 4. Usage:
+  * `runMain graft.Study Plans PLANS.md <sfDir>`. */
 object Plans {
-  def main(args: Array[String]): Unit = {
-    val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions",
-      "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val sf = args(0)
 
     val picks = Seq(
       "f1_projection" -> "column pruning + pushed IsNotNull",
@@ -113,7 +106,8 @@ object Plans {
 
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans (generated by graft.Plans)\n\n")
-    sb.append(s"Scale dir: `$sf`. Regenerate: `sbt \"runMain graft.Plans\"`.\n")
+    sb.append(s"Scale dir: `$sf`. Regenerate: " +
+      s"`sbt \"runMain graft.Study Plans PLANS.md $sf\"`.\n")
     picks.foreach { case (name, why) =>
       val df = SparkEntry.queries(name)(spark, sf)
       val plan = df.queryExecution.explainString(
@@ -135,64 +129,42 @@ object Plans {
     // entries (they aggregate eagerly) — plan a projection over a
     // throwaway versioned table to show the connector's column
     // pruning landing in the scan's ReadSchema.
-    val vTmp = Files.createTempDirectory("plans-graftv-").toString
-    try {
-      sources.Versioned.commit(
-        spark.read.parquet(s"$sf/documents.parquet"), vTmp)
-      val vDf = spark.read.format("graftv").load(vTmp)
-        .groupBy("lang")
-        .agg(org.apache.spark.sql.functions.sum("n_chars").as("chars"))
-      val vPlan = vDf.queryExecution.explainString(
-        ExplainMode.fromString("formatted"))
-      sb.append("\n## graftv DSv2 scan (connector path) — batch reads " +
-        "delegate to Spark's vectorized ParquetScan over the manifest " +
-        "file list (r10), so the plan shows the NATIVE columnar scan " +
-        "(PushedFilters/ReadSchema, whole-stage codegen) through the " +
-        s"table format\n\n```\n$vPlan```\n")
-      // round 11: a PARTITIONED graftv table — the partition filter
-      // prunes the planned file set via the manifest's partition
-      // point stats BEFORE this plan exists (planInputPartitions);
-      // the spec asserting the planned-file count is
-      // VersionedSourceSpec."partitioned graftv scan".
-      val vpTmp = Files.createTempDirectory("plans-graftv-part-").toString
-      try {
-        sources.Versioned.commit(
-          spark.read.parquet(s"$sf/documents.parquet")
-            .withColumn("pb", org.apache.spark.sql.functions
-              .pmod(org.apache.spark.sql.functions.col("doc_id"),
-                org.apache.spark.sql.functions.lit(4))),
-          vpTmp, partitionBy = Seq("pb"))
-        val vpDf = spark.read.format("graftv").load(vpTmp)
-          .where(org.apache.spark.sql.functions.col("pb") === 2)
-          .groupBy("lang")
-          .agg(org.apache.spark.sql.functions.sum("n_chars").as("chars"))
-        val vpPlan = vpDf.queryExecution.explainString(
-          ExplainMode.fromString("formatted"))
-        sb.append("\n## graftv PARTITIONED scan (r11) — the pb = 2 " +
-          "filter prunes files at planInputPartitions via the " +
-          "manifest's partition point stats (file-count assert in " +
-          "VersionedSourceSpec); the surviving files read through the " +
-          s"same vectorized delegate\n\n```\n$vpPlan```\n")
-      } finally {
-        def rmp(p: java.nio.file.Path): Unit = {
-          if (Files.isDirectory(p)) {
-            val s = Files.list(p)
-            try s.iterator().forEachRemaining(rmp) finally s.close()
-          }
-          Files.deleteIfExists(p)
-        }
-        rmp(Paths.get(vpTmp))
-      }
-    } finally {
-      def rm(p: java.nio.file.Path): Unit = {
-        if (Files.isDirectory(p)) {
-          val s = Files.list(p)
-          try s.iterator().forEachRemaining(rm) finally s.close()
-        }
-        Files.deleteIfExists(p)
-      }
-      rm(Paths.get(vTmp))
-    }
+    val vTmp = scratch("plans-graftv")
+    sources.Versioned.commit(
+      spark.read.parquet(s"$sf/documents.parquet"), vTmp)
+    val vDf = spark.read.format("graftv").load(vTmp)
+      .groupBy("lang")
+      .agg(org.apache.spark.sql.functions.sum("n_chars").as("chars"))
+    val vPlan = vDf.queryExecution.explainString(
+      ExplainMode.fromString("formatted"))
+    sb.append("\n## graftv DSv2 scan (connector path) — batch reads " +
+      "delegate to Spark's vectorized ParquetScan over the manifest " +
+      "file list (r10), so the plan shows the NATIVE columnar scan " +
+      "(PushedFilters/ReadSchema, whole-stage codegen) through the " +
+      s"table format\n\n```\n$vPlan```\n")
+    // round 11: a PARTITIONED graftv table — the partition filter
+    // prunes the planned file set via the manifest's partition
+    // point stats BEFORE this plan exists (planInputPartitions);
+    // the spec asserting the planned-file count is
+    // VersionedSourceSpec."partitioned graftv scan".
+    val vpTmp = scratch("plans-graftv-part")
+    sources.Versioned.commit(
+      spark.read.parquet(s"$sf/documents.parquet")
+        .withColumn("pb", org.apache.spark.sql.functions
+          .pmod(org.apache.spark.sql.functions.col("doc_id"),
+            org.apache.spark.sql.functions.lit(4))),
+      vpTmp, partitionBy = Seq("pb"))
+    val vpDf = spark.read.format("graftv").load(vpTmp)
+      .where(org.apache.spark.sql.functions.col("pb") === 2)
+      .groupBy("lang")
+      .agg(org.apache.spark.sql.functions.sum("n_chars").as("chars"))
+    val vpPlan = vpDf.queryExecution.explainString(
+      ExplainMode.fromString("formatted"))
+    sb.append("\n## graftv PARTITIONED scan (r11) — the pb = 2 " +
+      "filter prunes files at planInputPartitions via the " +
+      "manifest's partition point stats (file-count assert in " +
+      "VersionedSourceSpec); the surviving files read through the " +
+      s"same vectorized delegate\n\n```\n$vpPlan```\n")
     // round 13 (VERDICT r12 #7): the v-family entries (v1–v16) have no
     // single data-plane plan to dump — each is an eager driver loop
     // performing multiple REAL commits (appends, COW merges, deletes,
@@ -216,8 +188,6 @@ object Plans {
       "bench/changefeed_replication.json, where commit cost is shown " +
       "to scale with the TOUCHED file set (file-granular COW), never " +
       "the table size.\n")
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${picks.length + 1} plans)")
-    spark.stop()
+    Study.Text(sb.toString)
   }
 }

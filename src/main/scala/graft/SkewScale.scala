@@ -1,8 +1,12 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.JobLog
+import org.json4s.JObject
+import org.json4s.JsonDSL._
+
+import Study.{obj, timed}
 
 /** Measures the j10 skew claim at scale (round 17, VERDICT r16 #8):
   * on a join whose probe side has a mega-key, (a) does AQE's runtime
@@ -17,8 +21,8 @@ import org.apache.spark.sql.functions._
   * measure nothing (guide §3.1); the mechanism under test is the
   * shuffled join's reduce-side balance.
   *
-  * Three arms, each timed against the noop sink with a task-metrics
-  * listener; per arm the stage with the largest shuffle-read volume
+  * Three arms, each timed against the noop sink under a
+  * [[JobLog]] trace; per arm the stage with the largest shuffle-read volume
   * (the join's reduce stage) reports max/median task duration and
   * shuffle-read bytes:
   *  - `plain_aqe_skew`: plain join, AQE skew-join ON (engine
@@ -30,60 +34,30 @@ import org.apache.spark.sql.functions._
   *    downstream keyed aggregations where AQE's splitter cannot
   *    reach (it only splits sort-merge/hash JOIN partitions).
   *
-  * Usage: runMain graft.SkewScale [out.json] [nProbeRows]
+  * Usage: runMain graft.Study SkewScale <out.json> [nProbeRows=64000000]
+  * (bench/skew_salt_25x.json)
   */
 object SkewScale {
-  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
-
-  private final class StageMetrics extends SparkListener {
-    val byStage = new java.util.concurrent.ConcurrentHashMap[
-      Int, java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]]()
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        byStage.computeIfAbsent(te.stageId,
-          _ => new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]())
-          .add((m.executorRunTime,
-            m.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    def reset(): Unit = byStage.clear()
-    /** (maxMs, medMs, maxBytes, medBytes, nTasks) of the stage with
-      * the largest total shuffle read — the join's reduce stage. */
-    def joinStage(): (Long, Long, Long, Long, Int) = {
-      import scala.jdk.CollectionConverters._
-      val stages = byStage.asScala.toSeq.map { case (id, q) =>
-        val xs = q.asScala.toSeq
-        (id, xs, xs.map(_._2).sum)
-      }
-      if (stages.isEmpty) return (0L, 0L, 0L, 0L, 0)
-      val (_, xs, _) = stages.maxBy(_._3)
-      val dur = xs.map(_._1).sorted
-      val rd = xs.map(_._2).sorted
+  /** (maxMs, medMs, maxBytes, medBytes, nTasks) of the stage with the
+    * largest total shuffle read — the join's reduce stage. */
+  private def joinStage(tasks: Seq[JobLog.Task]): (Long, Long, Long, Long, Int) =
+    if (tasks.isEmpty) (0L, 0L, 0L, 0L, 0)
+    else {
+      val xs = tasks.groupBy(_.stage).values
+        .maxBy(_.map(_.shuffleReadBytes).sum)
+      val dur = xs.map(_.runMs).sorted
+      val rd = xs.map(_.shuffleReadBytes).sorted
       (dur.last, dur(dur.size / 2), rd.last, rd(rd.size / 2), xs.size)
     }
-  }
 
-  def main(args: Array[String]): Unit = {
-    val outJson = args.lift(0).getOrElse("bench/skew_salt_25x.json")
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
     // AQE's skew split compares COMPRESSED shuffle bytes with
     // skewedPartitionThresholdInBytes (256 MB): at the default n the
     // mega-key's partition reads ~62 MB (task_shuffle_read_max in
     // bench/skew_salt_25x.json), so AQE never splits it and the two
     // plain arms differ only in the skew-join setting; their task
     // metrics, not a plan flag, show whether a split happened
-    val n = args.lift(1).map(_.toLong).getOrElse(64000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      // the mechanism under test is the SHUFFLED join's balance
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val n = args.lift(0).map(_.toLong).getOrElse(64000000L)
     spark.range(1000000L).selectExpr("sum(id)").collect() // JIT settle
 
     val HotKey = 77L
@@ -97,42 +71,34 @@ object SkewScale {
     val build = spark.range(nKeys).select(col("id").as("k"),
       (col("id") % 97).as("w"))
 
-    val listener = new StageMetrics
-    spark.sparkContext.addSparkListener(listener)
-    def arm(name: String, df: => DataFrame): String = {
+    def arm(df: => DataFrame): JObject = {
       // settle lap (JIT/codegen) then the measured lap
       df.write.format("noop").mode("overwrite").save()
-      listener.reset()
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500) // drain the async listener bus
-      val (maxMs, medMs, maxRd, medRd, nT) = listener.joinStage()
-      s""""$name": {"wall_sec": ${r3(wall)}, "join_stage_tasks": $nT, """ +
-        s""""task_ms_max": $maxMs, "task_ms_median": $medMs, """ +
-        s""""task_shuffle_read_max": $maxRd, """ +
-        s""""task_shuffle_read_median": $medRd, """ +
-        s""""max_over_median_ms": ${r3(maxMs.toDouble /
-          math.max(medMs, 1L))}}"""
+      val ((_, wall), _, tasks) = JobLog.trace(spark.sparkContext)(
+        timed(df.write.format("noop").mode("overwrite").save()))
+      val (maxMs, medMs, maxRd, medRd, nT) = joinStage(tasks)
+      obj("wall_sec" -> wall, "join_stage_tasks" -> nT,
+        "task_ms_max" -> maxMs, "task_ms_median" -> medMs,
+        "task_shuffle_read_max" -> maxRd,
+        "task_shuffle_read_median" -> medRd,
+        "max_over_median_ms" -> maxMs.toDouble / math.max(medMs, 1L))
     }
 
     def agg(j: DataFrame): DataFrame =
       j.groupBy(col("w")).agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
 
-    val plainOn = arm("plain_aqe_skew", agg(probe.join(build, "k")))
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    val plainOff = arm("plain_no_aqe_skew", agg(probe.join(build, "k")))
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    val salted = arm("salted", agg(graft.operators.SkewJoin
-      .saltedJoin(probe, build, "k", Seq(HotKey), salt = 32)))
-
-    val json = s"""{\n  "n_probe_rows": $n, "hot_share": 0.3, """ +
-      s""""n_build_keys": $nKeys, "cpus": $cpus,\n  $plainOn,\n""" +
-      s"""  $plainOff,\n  $salted\n}\n"""
-    val p = java.nio.file.Paths.get(outJson)
-    Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.write(p, json.getBytes("UTF-8"))
-    println(json)
-    spark.stop()
+    // the mechanism under test is the SHUFFLED join's balance
+    Study.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val plainOn = arm(agg(probe.join(build, "k")))
+      val plainOff = Study.withConf(spark,
+        "spark.sql.adaptive.skewJoin.enabled" -> "false") {
+        arm(agg(probe.join(build, "k")))
+      }
+      val salted = arm(agg(graft.operators.SkewJoin
+        .saltedJoin(probe, build, "k", Seq(HotKey), salt = 32)))
+      Study.Json(obj("n_probe_rows" -> n, "hot_share" -> 0.3,
+        "n_build_keys" -> nKeys, "plain_aqe_skew" -> plainOn,
+        "plain_no_aqe_skew" -> plainOff, "salted" -> salted))
+    }
   }
 }

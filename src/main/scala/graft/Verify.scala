@@ -1,24 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions",
-      "org.apache.spark.sql.graftx.GraftExtensions")
-      // the 64k AQE coalesce floor is an engine session default now
-      // (GraftExtensions.applySessionDefaults) — correctness runs
-      // under the same config the bench measures
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's session: correctness runs under the config it measures
+    val spark = Study.session()
     new java.io.File(outDir).mkdirs()
     // Fixture preflight (round-5 lesson): an empty/missing table must
     // abort the whole run loudly, not let its queries fail one by one
@@ -42,28 +32,15 @@ object Verify {
         Some(name)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def json(v: JValue): String = JsonMethods.compact(JsonMethods.render(v))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json(JObject(SparkEntry.oracleSql.toList.map { case (k, v) => k -> JString(v) })))
     // full-surface manifest: lets the checker fail when the correctness
     // artifact is missing entries (the round-5 events gap was silent
     // because nothing compared "what ran" against "what should run").
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      SparkEntry.queries.keys.toSeq.sorted
-        .filter(n => only.forall(_.contains(n)))
-        .map(q).mkString("[", ",", "]"))
+      json(JArray(SparkEntry.queries.keys.toList.sorted
+        .filter(n => only.forall(_.contains(n))).map(JString(_)))))
     spark.stop()
     if (failures.nonEmpty) {
       // Artifacts for the queries that DID succeed are all written; the

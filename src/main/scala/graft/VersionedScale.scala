@@ -2,8 +2,11 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JObject
+import org.json4s.JsonDSL._
 
 import graft.sources.Versioned
+import Study.{obj, secs}
 
 /** Scales the versioned READ PATH (VERDICT r9 task 5): the v-family
   * oracle gates are toy-sized driver loops that measure commit
@@ -21,68 +24,59 @@ import graft.sources.Versioned
   *
   * each as (a) a full-scan aggregate and (b) the d14-style
   * incremental minhash probe (history/batch sourced from the table),
-  * two laps, warm lap reported. Output: one JSON artifact per scale
-  * point (bench/versioned_scale_<label>.json) for the COVERAGE
-  * exponent table.
+  * two laps, warm lap reported. One JSON artifact per scale point
+  * (bench/versioned_scale_<label>.json) for the COVERAGE exponent
+  * table.
   *
-  * Usage: runMain graft.VersionedScale <scaledSfDir> <tableDir> <label>
+  * Usage: runMain graft.Study VersionedScale <out.json> <scaledSfDir>
+  * <workDir> <label>. The tables land in `<workDir>/table`,
+  * `<workDir>/part` and `<workDir>/d14state`.
   */
 object VersionedScale {
-  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
-
-  def main(args: Array[String]): Unit = {
-    val Array(srcDir, tableDir, label) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions",
-      "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val Seq(srcDir, workDir, label) = args.take(3)
+    val tableDir = s"$workDir/table"
 
     val docs = Tables(spark, srcDir, "documents")
     val nDocs = docs.count()
 
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     /** two laps, warm reported (cold kept for the artifact) */
-    def lap2(body: => Unit): (Double, Double) = (timed(body), timed(body))
+    def lap2(body: => Unit): JObject = obj("cold" -> secs(body), "warm" -> secs(body))
 
     // ------------------------------------------------ ingest history
     // 8 append slices + a COW merge + a clustered OPTIMIZE — the
     // streaming-ingest-then-maintain shape (many commits, one
     // key-ranged upsert, one compaction).
-    val tIngest = timed {
+    val tIngest = secs {
       (0 until 8).foreach(i =>
         Versioned.commit(docs.where(pmod(col("doc_id"), lit(8)) === i),
           tableDir, "append"))
     }
-    val tMerge = timed {
+    val tMerge = secs {
       Versioned.merge(docs.where(pmod(col("doc_id"), lit(97)) === 0)
         .withColumn("n_chars", -col("n_chars")), tableDir, "doc_id")
     }
-    val tOptimize = timed {
+    val tOptimize = secs {
       Versioned.optimize(spark, tableDir, numFiles = 32,
         clusterBy = Seq("doc_id"))
     }
     val snap = Versioned.snapshot(tableDir)
-    System.err.println(s"[versioned-scale] $label: $nDocs docs, " +
-      s"v${snap.version}, ${snap.files.size} live files; ingest " +
-      s"${r3(tIngest)}s merge ${r3(tMerge)}s optimize ${r3(tOptimize)}s")
+    val head = obj("label" -> label, "n_docs" -> nDocs,
+      "version" -> snap.version, "live_files" -> snap.files.size,
+      "ingest_sec" -> tIngest, "merge_sec" -> tMerge,
+      "optimize_sec" -> tOptimize)
+    Study.step("versioned-scale", head)
 
     // ------------------------------------------------ full-scan aggs
     def fullScan(df: DataFrame): Unit = {
       df.agg(count(lit(1)), sum(col("n_chars")), sum(length(col("text"))))
         .collect(); ()
     }
-    val (rawC, rawW) = lap2(fullScan(spark.read.parquet(s"$srcDir/documents.parquet")))
-    val (libC, libW) = lap2(fullScan(Versioned.read(spark, tableDir)))
-    val (conC, conW) = lap2(fullScan(spark.read.format("graftv").load(tableDir)))
-    System.err.println(s"[versioned-scale] $label full-scan warm: " +
-      s"raw ${r3(rawW)}s lib ${r3(libW)}s connector ${r3(conW)}s")
+    val fullscan = obj(
+      "raw" -> lap2(fullScan(spark.read.parquet(s"$srcDir/documents.parquet"))),
+      "library" -> lap2(fullScan(Versioned.read(spark, tableDir))),
+      "connector" -> lap2(fullScan(spark.read.format("graftv").load(tableDir))))
+    Study.step("versioned-scale", obj("fullscan" -> fullscan))
 
     // -------------------------------- d14-style probe through each path
     // round 14 (VERDICT r13 #5): the old probe recomputed the HISTORY
@@ -102,25 +96,25 @@ object VersionedScale {
         sigsOf(src, _ === 0), sigsOf(src, _ =!= 0))
         .write.format("noop").mode("overwrite").save()
     }
-    val (probeRawC, probeRawW) =
+    val probeRaw =
       lap2(probeRecompute(spark.read.parquet(s"$srcDir/documents.parquet")))
     val con = spark.read.format("graftv").load(tableDir)
     val stateTbl = s"d14_state_${label.replace('.', '_')}"
     spark.sql(s"DROP TABLE IF EXISTS $stateTbl")
-    val tState = timed {
+    val tState = secs {
       graft.operators.Bucketed.write(
         graft.queries.DedupOps.minhashBandState(sigsOf(con, _ =!= 0)),
-        stateTbl, s"$tableDir-d14state", key = "band_key", buckets = 32)
+        stateTbl, s"$workDir/d14state", key = "band_key", buckets = 32)
     }
     def probeState(): Unit = {
       graft.queries.DedupOps.incrementalProbeAgainstState(
         sigsOf(con, _ === 0), spark.table(stateTbl))
         .write.format("noop").mode("overwrite").save()
     }
-    val (probeStC, probeStW) = lap2(probeState())
-    System.err.println(s"[versioned-scale] $label d14 probe warm: " +
-      s"recompute ${r3(probeRawW)}s; state build once ${r3(tState)}s " +
-      s"then per-increment ${r3(probeStW)}s")
+    val d14 = obj("recompute_raw" -> probeRaw, "state_build_once_sec" -> tState,
+      "against_state" -> lap2(probeState()))
+    spark.sql(s"DROP TABLE IF EXISTS $stateTbl")
+    Study.step("versioned-scale", obj("d14_probe" -> d14))
 
     // ------------------- point lookup: manifest-stats data skipping
     // the OPTIMIZE above clustered by doc_id, so the manifest's
@@ -132,9 +126,8 @@ object VersionedScale {
       spark.read.format("graftv").load(tableDir)
         .where(col("doc_id") === 42L).collect(); ()
     }
-    val (skipC, skipW) = lap2(lookup())
-    System.err.println(s"[versioned-scale] $label point lookup " +
-      s"(stats-skipped) warm: ${r3(skipW)}s vs full-scan ${r3(conW)}s")
+    val skip = lap2(lookup())
+    Study.step("versioned-scale", obj("point_lookup_skipped" -> skip))
 
     // ------------------- partitioned layout: partition-pruned scan
     // (round 11) — the same corpus ingested partitionBy(pb = doc_id %
@@ -142,8 +135,8 @@ object VersionedScale {
     // plan ~1/16 of the files via the manifest's partition point
     // stats (structurally asserted in VersionedSourceSpec; this is
     // the wall-clock beside it).
-    val partDir = s"$tableDir-part"
-    val tIngestPart = timed {
+    val partDir = s"$workDir/part"
+    val tIngestPart = secs {
       (0 until 8).foreach(i => Versioned.commit(
         docs.where(pmod(col("doc_id"), lit(8)) === i)
           .withColumn("pb", pmod(col("doc_id"), lit(16))),
@@ -152,34 +145,12 @@ object VersionedScale {
     def partAgg(df: DataFrame): Unit = {
       df.agg(count(lit(1)), sum(col("n_chars"))).collect(); ()
     }
-    val (partFullC, partFullW) =
-      lap2(partAgg(spark.read.format("graftv").load(partDir)))
-    val (partPruneC, partPruneW) =
-      lap2(partAgg(spark.read.format("graftv").load(partDir)
-        .where(col("pb") === 7)))
-    System.err.println(s"[versioned-scale] $label partitioned scan " +
-      s"warm: full ${r3(partFullW)}s vs pb=7 pruned ${r3(partPruneW)}s")
+    val partitioned = obj("ingest_sec" -> tIngestPart,
+      "full" -> lap2(partAgg(spark.read.format("graftv").load(partDir))),
+      "pruned_1of16" -> lap2(partAgg(spark.read.format("graftv").load(partDir)
+        .where(col("pb") === 7))))
 
-    val json =
-      s"""{"label": "$label", "n_docs": $nDocs, "version": ${snap.version},
-         | "live_files": ${snap.files.size},
-         | "ingest_sec": ${r3(tIngest)}, "merge_sec": ${r3(tMerge)},
-         | "optimize_sec": ${r3(tOptimize)},
-         | "fullscan": {"raw": {"cold": ${r3(rawC)}, "warm": ${r3(rawW)}},
-         |  "library": {"cold": ${r3(libC)}, "warm": ${r3(libW)}},
-         |  "connector": {"cold": ${r3(conC)}, "warm": ${r3(conW)}}},
-         | "d14_probe": {"recompute_raw": {"cold": ${r3(probeRawC)}, "warm": ${r3(probeRawW)}},
-         |  "state_build_once_sec": ${r3(tState)},
-         |  "against_state": {"cold": ${r3(probeStC)}, "warm": ${r3(probeStW)}}},
-         | "point_lookup_skipped": {"cold": ${r3(skipC)}, "warm": ${r3(skipW)}},
-         | "partitioned": {"ingest_sec": ${r3(tIngestPart)},
-         |  "full": {"cold": ${r3(partFullC)}, "warm": ${r3(partFullW)}},
-         |  "pruned_1of16": {"cold": ${r3(partPruneC)}, "warm": ${r3(partPruneW)}}}}
-         |""".stripMargin.replace("\n", "")
-    val p = java.nio.file.Paths.get(s"bench/versioned_scale_$label.json")
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(p, json + "\n")
-    println(json)
-    spark.stop()
+    Study.Json(head ~ obj("fullscan" -> fullscan, "d14_probe" -> d14,
+      "point_lookup_skipped" -> skip, "partitioned" -> partitioned))
   }
 }

@@ -1,65 +1,38 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftx.JobLog
+import org.json4s.JsonDSL._
 
-/** Per-stage wall/CPU profile of one declared query (round-16
-  * evidence tooling): runs the query through the noop sink twice
-  * (cold+warm) with a stage listener and prints, for the warm lap,
-  * each stage's duration, task count, and name. */
+import graft.Study
+import graft.Study.{obj, secs}
+
+/** Per-stage profile of one declared query: runs it through the noop
+  * sink twice (cold, then warm under a [[JobLog]] trace) and reports,
+  * for the warm lap, its jobs and each stage's task count, summed and
+  * maximum task run time and shuffle bytes read, heaviest stage first.
+  * Usage: runMain graft.Study ProfileQ <out.json> <sfDir> <query>
+  */
 object ProfileQ {
-  def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      // 64k AQE floor: engine session default (GraftExtensions);
-      // GRAFT_MIN_PART kept as this tool's explicit override knob
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_MIN_PART", "64k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Int, Long, Long, Int, String)]()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        val wall = (for { s <- si.submissionTime; c <- si.completionTime }
-          yield c - s).getOrElse(-1L)
-        stages.add((si.stageId, wall,
-          si.taskMetrics.executorRunTime, si.numTasks,
-          si.name.take(90)))
-      }
-    }
-    def lap(): Double = {
-      val t0 = System.nanoTime()
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val Seq(sfDir, name) = args.take(2)
+    def lap(): Double = secs {
       graft.SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
     }
     val cold = lap()
-    spark.sparkContext.addSparkListener(listener)
-    val warm = lap()
-    spark.sparkContext.removeSparkListener(listener)
-    Thread.sleep(500)
-    println(f"[profq] $name cold $cold%.3f warm $warm%.3f")
-    import scala.jdk.CollectionConverters._
-    val ss = stages.asScala.toSeq.sortBy(-_._2)
-    ss.foreach { case (id, wall, cpu, nt, nm) =>
-      println(f"[profq] stage $id%4d wall ${wall}%6d ms cpu ${cpu}%6d ms tasks $nt%3d  $nm")
-    }
-    println(f"[profq] stage wall sum ${ss.map(_._2).sum} ms, n stages ${ss.size}, n jobs ${jobs.get}")
-    spark.stop()
+    val (warm, jobs, tasks) = JobLog.trace(spark.sparkContext)(lap())
+    val stages = tasks.groupBy(_.stage).toSeq.map { case (id, ts) =>
+      (id, ts.size, ts.map(_.runMs).sum, ts.map(_.runMs).max,
+        ts.map(_.shuffleReadBytes).sum)
+    }.sortBy(-_._3)
+    println(f"[profq] $name cold $cold%.3f warm $warm%.3f, " +
+      s"${jobs.size} jobs, ${stages.size} stages run")
+    Study.Json(obj("query" -> name, "cold_sec" -> cold, "warm_sec" -> warm,
+      "jobs" -> jobs.map(j => obj("site" -> j.site, "stages" -> j.stages)),
+      "stages" -> stages.map { case (id, n, sum, max, read) =>
+        obj("stage" -> id, "tasks" -> n, "task_ms_sum" -> sum,
+          "task_ms_max" -> max, "shuffle_read_bytes" -> read)
+      }))
   }
 }

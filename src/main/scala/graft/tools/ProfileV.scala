@@ -2,66 +2,53 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.sources.Versioned
+import org.json4s.JsonDSL._
+import graft.Study
+import graft.Study.{obj, scratch}
 import graft.sources.Versioned._
-import java.nio.file.Files
 
-/** Ad-hoc wall-clock profile of the versioned commit path (round 16
-  * optimization evidence): replays v11_cdc_replicate's ops with
-  * per-step timers, 3 laps, printing the per-op breakdown. Not part
-  * of the bench/driver surface. */
+/** Wall-clock profile of the versioned commit path: replays
+  * v11_cdc_replicate's ops with per-step timers, 3 laps, one
+  * {op, sec} row per step. Not part of the bench/driver surface.
+  * Usage: runMain graft.Study ProfileV <out.json> <sfDir>
+  */
 object ProfileV {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def run(spark: SparkSession, args: Seq[String]): Study.Output = {
+    val sfDir = args(0)
     val docs = graft.Tables(spark, sfDir, "documents")
       .select(col("doc_id"), col("n_chars"))
     // settle JIT
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
-    def t[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[profv] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      r
-    }
-    (1 to 3).foreach { lap =>
-      println(s"=== lap $lap ===")
-      val a = Files.createTempDirectory("graft-profv-").toString
-      val b = Files.createTempDirectory("graft-profv-").toString
-      try {
-        t("commit v1")(commit(docs.where(col("doc_id") % 4 === 0), a))
-        t("commit v2")(commit(docs.where(col("doc_id") % 4 === 1), a))
-        t("merge v3")(merge(docs.where(col("doc_id") % 6 === 0)
-          .withColumn("n_chars", col("n_chars") + 1000000L), a, "doc_id"))
-        t("deleteWhere v4")(deleteWhere(spark, a, col("doc_id") % 10 === 0))
-        t("updateWhere v5")(updateWhere(spark, a, col("doc_id") % 9 === 1,
-          Map("n_chars" -> -col("n_chars"))))
-        t("optimize v6")(optimize(spark, a))
-        (1 to versions(a).max).foreach { v =>
-          t(s"readChanges+apply $v")(
-            applyChanges(readChanges(spark, a, v - 1, v), b, Seq("doc_id")))
-        }
-        val fa = read(spark, a); val fb = read(spark, b)
-        t("exceptAll diff")(
-          fb.exceptAll(fa).count() + fa.exceptAll(fb).count())
-        t("final agg")(fb.agg(count(lit(1)), sum(col("doc_id")),
-          sum(col("n_chars"))).head())
-      } finally {
-        def rm(d: String): Unit = {
-          import scala.sys.process._
-          Seq("rm", "-rf", d).!
-        }
-        rm(a); rm(b)
+    val laps = (1 to 3).map { lap =>
+      val steps = Seq.newBuilder[(String, Double)]
+      def t[A](name: String)(f: => A): A = {
+        val (r, sec) = Study.timed(f)
+        println(f"[profv] lap $lap $name%-28s $sec%8.3f s")
+        steps += name -> sec
+        r
       }
+      val a = scratch("profv")
+      val b = scratch("profv")
+      t("commit v1")(commit(docs.where(col("doc_id") % 4 === 0), a))
+      t("commit v2")(commit(docs.where(col("doc_id") % 4 === 1), a))
+      t("merge v3")(merge(docs.where(col("doc_id") % 6 === 0)
+        .withColumn("n_chars", col("n_chars") + 1000000L), a, "doc_id"))
+      t("deleteWhere v4")(deleteWhere(spark, a, col("doc_id") % 10 === 0))
+      t("updateWhere v5")(updateWhere(spark, a, col("doc_id") % 9 === 1,
+        Map("n_chars" -> -col("n_chars"))))
+      t("optimize v6")(optimize(spark, a))
+      (1 to versions(a).max).foreach { v =>
+        t(s"readChanges+apply $v")(
+          applyChanges(readChanges(spark, a, v - 1, v), b, Seq("doc_id")))
+      }
+      val fa = read(spark, a); val fb = read(spark, b)
+      t("exceptAll diff")(
+        fb.exceptAll(fa).count() + fa.exceptAll(fb).count())
+      t("final agg")(fb.agg(count(lit(1)), sum(col("doc_id")),
+        sum(col("n_chars"))).head())
+      steps.result().map { case (op, sec) => obj("op" -> op, "sec" -> sec) }
     }
-    spark.stop()
+    Study.Json(obj("laps" -> laps))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.graftspec.JobLog
+import org.apache.spark.sql.graftx.JobLog
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
