@@ -19,7 +19,7 @@ object Bench {
   private def r3(x: Double): Double = math.rint(x * 1000) / 1000
 
   /** Per-query (cold, warm) seconds from the previous artifact
-    * (`bench/bench_<sf>.json` as it exists on disk BEFORE this run
+    * (`<dir>/bench_<sf>.json` as it exists on disk BEFORE this run
     * overwrites it). We control the writer, so a line-oriented regex
     * on `"name": {"cold": X, "warm": Y}` is exact; missing/unreadable
     * file → empty map (guards simply disarmed on first run). Both the
@@ -28,22 +28,24 @@ object Bench {
     * names with this map — a growing surface must not disarm them
     * (round-9 lesson: three new queries nulled the verdict exactly
     * when it was needed). */
-  private[graft] def benchBaselineBoth(sfName: String)
+  private[graft] def benchBaselineBoth(sfName: String, dir: String = "bench")
       : Map[String, (Double, Double)] = {
     // `[,}]` after warm, not `}`: round-13 artifacts append
     // "warm_per_calib" after warm, and the guard regex must keep
     // reading BOTH artifact generations.
     val line = """"([A-Za-z0-9_]+)":\s*\{"cold":\s*([-0-9.eE]+),\s*"warm":\s*([-0-9.eE]+)[,}]""".r
-    priorArtifact(sfName)(text => line.findAllMatchIn(text)
+    priorArtifact(sfName, dir)(text => line.findAllMatchIn(text)
       .map(m => m.group(1) -> (m.group(2).toDouble, m.group(3).toDouble))
       .toMap).getOrElse(Map.empty)
   }
 
-  /** `read` over the text of the committed `bench/bench_<sf>.json`;
-    * None when it is missing, unreadable or `read` throws. */
-  private def priorArtifact[A](sfName: String)(read: String => A): Option[A] =
+  /** `read` over the text of the artifact `<dir>/bench_<sf>.json`
+    * (the committed one under `bench/` by default); None when it is
+    * missing, unreadable or `read` throws. */
+  private def priorArtifact[A](sfName: String, dir: String)(
+      read: String => A): Option[A] =
     try {
-      val p = java.nio.file.Paths.get(s"bench/bench_$sfName.json")
+      val p = java.nio.file.Paths.get(dir, s"bench_$sfName.json")
       if (!java.nio.file.Files.isReadable(p)) None
       else Some(read(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
     } catch { case _: Throwable => None }
@@ -78,10 +80,11 @@ object Bench {
     * when the canary itself drifted mid-run — this round's closing
     * bench measured 0.139 start vs 0.213 end and a start-only basis
     * mis-flagged 53 queries). None on first run / unreadable. */
-  private[graft] def priorCalibration(sfName: String): Option[Double] = {
+  private[graft] def priorCalibration(sfName: String,
+      dir: String = "bench"): Option[Double] = {
     val start = """"calibration_sec":\s*([-0-9.eE]+)""".r
     val end = """"calibration_end_sec":\s*([-0-9.eE]+)""".r
-    priorArtifact(sfName) { text =>
+    priorArtifact(sfName, dir) { text =>
       start.findFirstMatchIn(text).map(_.group(1).toDouble).map { s =>
         end.findFirstMatchIn(text).map(_.group(1).toDouble)
           .fold(s)(e => (s + e) / 2)
@@ -97,9 +100,9 @@ object Bench {
     * default artifact, so round-17 drift/contention gates would have
     * adjudicated 32-core runs against an 8-core basis). None when the
     * artifact predates the field or is unreadable. */
-  private[graft] def priorCpus(sfName: String): Option[Int] = {
+  private[graft] def priorCpus(sfName: String, dir: String = "bench"): Option[Int] = {
     val re = """"cpus":\s*([0-9]+)""".r
-    priorArtifact(sfName)(re.findFirstMatchIn(_).map(_.group(1).toInt))
+    priorArtifact(sfName, dir)(re.findFirstMatchIn(_).map(_.group(1).toInt))
       .flatten
   }
 
@@ -139,9 +142,10 @@ object Bench {
 
   /** Per-query plan-shape hashes from the committed artifact (absent
     * in pre-round-14 artifacts → empty). */
-  private[graft] def priorShapes(sfName: String): Map[String, String] = {
+  private[graft] def priorShapes(sfName: String,
+      dir: String = "bench"): Map[String, String] = {
     val line = """"([A-Za-z0-9_]+)":\s*\{"cold":[^}]*"plan_shape":\s*"([0-9a-f]+)"""".r
-    priorArtifact(sfName)(line.findAllMatchIn(_)
+    priorArtifact(sfName, dir)(line.findAllMatchIn(_)
       .map(m => m.group(1) -> m.group(2)).toMap).getOrElse(Map.empty)
   }
 

@@ -101,7 +101,7 @@ object GuardRecall {
     val head = obj("dir" -> dir, "n_docs" -> nDocs,
       "max_bucket" -> graft.operators.MinHash.DefaultMaxBucket)
 
-    if (onOnly) {
+    val result = if (onOnly) {
       // guard-ON wall-clocks only (two laps, warm reported): the
       // growth of these against the boiler family size is the guard's
       // sub-quadratic evidence at sizes where OFF cannot run
@@ -197,5 +197,8 @@ object GuardRecall {
         "d4_neardup_pairs" -> d4Json, "d9_fuzzy_decontaminate" -> d9Json,
         "d14_incremental_minhash" -> d14Json))
     }
+    // the session outlives the arm: leave no cached corpus behind
+    docs.unpersist()
+    result
   }
 }

@@ -3,7 +3,12 @@ package org.apache.spark.sql.graftx
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StringType
 
 /** SparkSessionExtensions entry point: registers the native graft
@@ -12,6 +17,15 @@ import org.apache.spark.sql.types.StringType
   * expression. Enable with
   * `.config("spark.sql.extensions", "org.apache.spark.sql.graftx.GraftExtensions")`
   * or `.withExtensions(new GraftExtensions)`.
+  *
+  * It also injects one AQE query-stage preparation rule,
+  * [[GraftExtensions.SmallSortSinglePartition]]: a global sort whose
+  * input is at most AQE's one-partition floor
+  * (`spark.sql.adaptive.coalescePartitions.minPartitionSize`) shuffles
+  * to one partition instead of range-partitioning, which drops the
+  * `RangePartitioner`'s sampling job. It adds no conf key and does
+  * nothing with AQE or partition coalescing off, above the floor, or
+  * on an explicit `repartitionByRange`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -47,6 +61,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       GraftExtensions.applySessionDefaults(session)
       GraftExtensions.SessionDefaultsRule
     }
+    e.injectQueryStagePrepRule(_ => GraftExtensions.SmallSortSinglePartition)
   }
 }
 
@@ -141,5 +156,27 @@ object GraftExtensions {
     override def apply(
         plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
         : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = plan
+  }
+
+  /** Small ORDER BYs sort in one task (criterion in the class doc).
+    * EnsureRequirements plans a global sort over a range exchange whose
+    * `RangePartitioner` first runs a sampling job over the sort's whole
+    * input; below the coalescing floor AQE merges the range output into
+    * one partition anyway, so the sampled bounds are wasted. The size is
+    * the exchange child's logical stats: the optimizer's estimate on
+    * first planning, materialized stages' runtime sizes on re-planning. */
+  private[graftx] object SmallSortSinglePartition extends Rule[SparkPlan] {
+    override def apply(plan: SparkPlan): SparkPlan = {
+      if (!conf.coalesceShufflePartitionsEnabled) return plan
+      val floor = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+      plan.transformUp {
+        case s @ SortExec(_, true, ex @ ShuffleExchangeExec(
+            _: RangePartitioning, child, ENSURE_REQUIREMENTS, _), _)
+            if child.logicalLink.exists(_.stats.sizeInBytes <= floor) =>
+          val single = ex.copy(outputPartitioning = SinglePartition)
+          single.copyTagsFrom(ex)
+          s.withNewChildren(Seq(single))
+      }
+    }
   }
 }

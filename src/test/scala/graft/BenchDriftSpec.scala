@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * cancels out, while a code regression (the query moves, the canary
   * doesn't) survives the division and is flagged.
   */
-class BenchDriftSpec extends AnyFunSuite {
+class BenchDriftSpec extends AnyFunSuite with TempDirs {
 
   private val prior = Map(
     "q_big" -> (2.0, 1.72), // (cold, warm)
@@ -58,8 +58,8 @@ class BenchDriftSpec extends AnyFunSuite {
 
   test("artifact regex reads BOTH generations: with and without " +
     "warm_per_calib; priorCalibration reads calibration_sec") {
-    val p = Paths.get("bench/bench_drifttestsf.json")
-    Files.createDirectories(p.getParent)
+    val dir = tempDir("graft-benchdrift-").toString
+    val p = Paths.get(dir, "bench_drifttestsf.json")
     val artifact =
       """{
         |  "sf": "drifttestsf",
@@ -72,14 +72,14 @@ class BenchDriftSpec extends AnyFunSuite {
         |}""".stripMargin
     try {
       Files.write(p, artifact.getBytes("UTF-8"))
-      val both = Bench.benchBaselineBoth("drifttestsf")
+      val both = Bench.benchBaselineBoth("drifttestsf", dir)
       assert(both == Map("old_style" -> (1.5, 1.2),
         "new_style" -> (2.5, 2.1)))
       // the basis is the MEAN of start/end calibration — per-query
       // times are spread across the run, so neither endpoint alone
       // is the right divisor when the canary drifted mid-run
-      assert(Bench.priorCalibration("drifttestsf").contains(0.2))
-      assert(Bench.priorCalibration("no_such_sf_name").isEmpty)
+      assert(Bench.priorCalibration("drifttestsf", dir).contains(0.2))
+      assert(Bench.priorCalibration("no_such_sf_name", dir).isEmpty)
     } finally Files.deleteIfExists(p)
   }
 
@@ -102,8 +102,8 @@ class BenchDriftSpec extends AnyFunSuite {
     assert(Bench.planShapeHash(agg1.orderBy("k")) !=
       Bench.planShapeHash(agg1))
     // artifact round-trip: the per-query regex reads the hash back
-    val p = Paths.get("bench/bench_shapetestsf.json")
-    Files.createDirectories(p.getParent)
+    val dir = tempDir("graft-benchdrift-").toString
+    val p = Paths.get(dir, "bench_shapetestsf.json")
     val h = Bench.planShapeHash(agg1)
     val artifact =
       s"""{
@@ -114,9 +114,9 @@ class BenchDriftSpec extends AnyFunSuite {
          |}""".stripMargin
     try {
       Files.write(p, artifact.getBytes("UTF-8"))
-      assert(Bench.priorShapes("shapetestsf") == Map("q_shaped" -> h))
+      assert(Bench.priorShapes("shapetestsf", dir) == Map("q_shaped" -> h))
       // the warm regex still reads both entries
-      assert(Bench.benchBaselineBoth("shapetestsf").keySet ==
+      assert(Bench.benchBaselineBoth("shapetestsf", dir).keySet ==
         Set("q_shaped", "q_pre14"))
     } finally Files.deleteIfExists(p)
   }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,7 +16,7 @@ import graft.sources.Versioned.{WhenMatched, WhenNotMatched}
   * no-op, not a failure). The law under proof: B state-equals A at
   * EVERY drained version, not just at the end.
   */
-class CdcReplicationSpec extends AnyFunSuite {
+class CdcReplicationSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -35,9 +33,9 @@ class CdcReplicationSpec extends AnyFunSuite {
   test("B tracks A through append/merge/delete/update/optimize, " +
     "state-equal at every drained version") {
     import spark.implicits._
-    val a = Files.createTempDirectory("graft-cdcrep-a-").toString
-    val b = Files.createTempDirectory("graft-cdcrep-b-").toString
-    val ckpt = Files.createTempDirectory("graft-cdcrep-ck-").toString
+    val a = tempDir("graft-cdcrep-a-").toString
+    val b = tempDir("graft-cdcrep-b-").toString
+    val ckpt = tempDir("graft-cdcrep-ck-").toString
 
     // ---- drive A through the full commit-kind zoo
     def rows(xs: (Long, Long, String)*) = xs.toDF("id", "v", "note")
@@ -112,7 +110,7 @@ class CdcReplicationSpec extends AnyFunSuite {
     // most two merges, not 2N. The range mixes inserts, a clause-
     // chain merge (update+insert+delete), deleteWhere, updateWhere,
     // and an optimize — every commit kind.
-    val c = Files.createTempDirectory("graft-cdcrep-c-").toString
+    val c = tempDir("graft-cdcrep-c-").toString
     Versioned.applyChanges(
       Versioned.readChanges(spark, a, 0, 7), c, Seq("id"))
     assert(stateOf(Versioned.read(spark, c)) ===
@@ -130,7 +128,7 @@ class CdcReplicationSpec extends AnyFunSuite {
     // split ranges converge to the same state as the single drain:
     // (0,3] then (3,7] — an update whose key's last event is in the
     // second half lands with the second apply
-    val d = Files.createTempDirectory("graft-cdcrep-d-").toString
+    val d = tempDir("graft-cdcrep-d-").toString
     Versioned.applyChanges(
       Versioned.readChanges(spark, a, 0, 3), d, Seq("id"))
     assert(stateOf(Versioned.read(spark, d)) ===
@@ -144,9 +142,9 @@ class CdcReplicationSpec extends AnyFunSuite {
   test("Trigger.AvailableNow drains exactly the prepare-time backlog " +
     "and stops; mid-drain commits wait for the next scheduled run") {
     import spark.implicits._
-    val a = Files.createTempDirectory("graft-cdcan-a-").toString
-    val b = Files.createTempDirectory("graft-cdcan-b-").toString
-    val ckpt = Files.createTempDirectory("graft-cdcan-ck-").toString
+    val a = tempDir("graft-cdcan-a-").toString
+    val b = tempDir("graft-cdcan-b-").toString
+    val ckpt = tempDir("graft-cdcan-ck-").toString
     def rows(xs: (Long, Long, String)*) = xs.toDF("id", "v", "note")
     (1 to 4).foreach(i =>
       Versioned.commit(rows((i.toLong, i * 10L, s"r$i")), a))
@@ -188,8 +186,8 @@ class CdcReplicationSpec extends AnyFunSuite {
   test("a replica is BORN from the first batch when the target does " +
     "not exist yet") {
     import spark.implicits._
-    val a = Files.createTempDirectory("graft-cdcrep2-a-").toString
-    val b = Files.createTempDirectory("graft-cdcrep2-b-").toString
+    val a = tempDir("graft-cdcrep2-a-").toString
+    val b = tempDir("graft-cdcrep2-b-").toString
     Versioned.commit(Seq((1L, 1L, "x"), (2L, 2L, "y"))
       .toDF("id", "v", "note"), a)
     Versioned.applyChanges(Versioned.readChanges(spark, a, 0, 1), b,

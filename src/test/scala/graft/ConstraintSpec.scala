@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +15,7 @@ import graft.sources.Versioned
   * SQL-standard rule). A failed check aborts BEFORE publish — the
   * staged files stay unreferenced for vacuum, the table untouched.
   */
-class ConstraintSpec extends AnyFunSuite {
+class ConstraintSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -28,7 +26,7 @@ class ConstraintSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmpTable(): String =
-    Files.createTempDirectory("graft-constraint-").toString
+    tempDir("graft-constraint-").toString
 
   test("add validates existing rows; appends are gated; drop lifts " +
     "the gate; NULL passes") {

@@ -16,7 +16,7 @@ import graft.sources.Versioned
   * born table supports (appends, COW ops, time travel, CDC from v1,
   * SQL) composes on top.
   */
-class ConvertSpec extends AnyFunSuite {
+class ConvertSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -27,7 +27,7 @@ class ConvertSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-convert-spec-").toString
+    tempDir("graft-convert-spec-").toString
 
   test("adopt a plain parquet directory: no rewrite, both read " +
     "paths serve it, history records op=convert") {

@@ -28,7 +28,7 @@ import graft.sources.Versioned.{WhenMatched, WhenNotMatched}
   * resolve and rebase (appends) or abort loudly (COW vs overlapping
   * interlopers) — never a torn manifest, never a lost commit.
   */
-class CrossProcessRaceSpec extends AnyFunSuite {
+class CrossProcessRaceSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -78,8 +78,8 @@ class CrossProcessRaceSpec extends AnyFunSuite {
   test("two independent JVMs race appends while this JVM races " +
     "merges: one linear history, no torn manifest, no lost commit") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-xproc-").toString
-    val scratch = Files.createTempDirectory("graft-xproc-cwd-").toFile
+    val t = tempDir("graft-xproc-").toString
+    val scratch = tempDir("graft-xproc-cwd-").toFile
 
     // seed: ids 0..9 the parent's merges will keep rewriting — key-
     // disjoint from every child append (child ids start at 1e6), so
@@ -188,8 +188,8 @@ class CrossProcessRaceSpec extends AnyFunSuite {
     "read-to-publish window — the merge must abort loudly, the retry " +
     "must win, and the history must stay linear") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-xproc-abort-").toString
-    val scratch = Files.createTempDirectory("graft-xproc-abort-cwd-")
+    val t = tempDir("graft-xproc-abort-").toString
+    val scratch = tempDir("graft-xproc-abort-cwd-")
       .toFile
     val seed = (0L until 10L).map(i => (i, 0, -1, 0L))
       .toDF("id", "writer", "commit_seq", "v")
@@ -260,8 +260,8 @@ class CrossProcessRaceSpec extends AnyFunSuite {
     "JVMs point-delete the SAME file — the loser aborts, the retry " +
     "re-reads the winner's mask, no lost ordinals, no double CDF") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-xproc-dv-").toString
-    val scratch = Files.createTempDirectory("graft-xproc-dv-cwd-").toFile
+    val t = tempDir("graft-xproc-dv-").toString
+    val scratch = tempDir("graft-xproc-dv-cwd-").toFile
     Versioned.commit((0L until 100L).map(i => (i, i * 10L))
       .toDF("id", "v").repartition(1), t) // v1: ONE data file
     val fileRel = Versioned.snapshot(t).files match {

@@ -1,6 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{InputAdapter, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
+import org.apache.spark.sql.graftx.JobLog
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions for the SCALING.md claims: pushdown,
@@ -180,8 +185,8 @@ class PlanSpec extends AnyFunSuite {
   test("chunk windows: single scan, no shuffle except the determinism sort") {
     val plan = formatted(queries.PackOps.p2ChunkWindows(spark, sf))
     assert(plan.contains("Generate"), "the window explode must be a Generate")
-    // exactly one exchange: the final range partitioning for the
-    // oracle-determinism orderBy — no join/aggregate shuffle exists
+    // exactly one exchange: the oracle-determinism orderBy's (one
+    // partition for this small input) — no join/aggregate shuffle exists
     val exchanges = plan.linesIterator
       .count(_.matches("""\(\d+\) Exchange.*"""))
     assert(exchanges === 1, s"expected only the sort exchange, got:\n$plan")
@@ -189,15 +194,107 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("simhash signatures: row-local, the executed plan's one exchange is the sort's") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val df = queries.DedupOps.d3Simhash(spark, sf)
     assert(df.collect().nonEmpty) // executedPlan is now AQE's final plan
-    val exchanges = new AdaptiveSparkPlanHelper {}
-      .collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeLike => e }
-    assert(exchanges.size === 1, df.queryExecution.executedPlan.toString)
-    assert(exchanges.head.outputPartitioning.getClass.getSimpleName ===
-      "RangePartitioning", exchanges.head.toString)
+    val all = exchanges(df.queryExecution.executedPlan)
+    assert(all.size === 1, df.queryExecution.executedPlan.toString)
+    assert(sortExchanges(df.queryExecution.executedPlan) === all,
+      df.queryExecution.executedPlan.toString)
+  }
+
+  /** The exchange under each global sort of `plan`, looking through
+    * codegen inputs, AQE shuffle reads and query stages. */
+  private def sortExchanges(plan: SparkPlan): Seq[ShuffleExchangeLike] = {
+    def under(p: SparkPlan): SparkPlan = p match {
+      case i: InputAdapter => under(i.child)
+      case r: AQEShuffleReadExec => under(r.child)
+      case q: ShuffleQueryStageExec => under(q.plan)
+      case other => other
+    }
+    new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case SortExec(_, true, child, _) => under(child)
+    }.collect { case e: ShuffleExchangeLike => e }
+  }
+
+  private def exchanges(plan: SparkPlan): Seq[ShuffleExchangeLike] =
+    new AdaptiveSparkPlanHelper {}.collect(plan) { case e: ShuffleExchangeLike => e }
+
+  private def initialPlan(df: org.apache.spark.sql.DataFrame): SparkPlan =
+    df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].initialPlan
+
+  /** Runs `df`; the partitionings under the global sorts it executed. */
+  private def sortPartitionings(df: org.apache.spark.sql.DataFrame): Seq[Partitioning] = {
+    df.collect()
+    sortExchanges(df.queryExecution.executedPlan).map(_.outputPartitioning)
+  }
+
+  private def isRange(p: Partitioning): Boolean = p.isInstanceOf[RangePartitioning]
+
+  // the lap queries whose global sort reads less than the 64k AQE floor
+  private val smallSorts = Seq("f5_catalog_find", "o5_split_assign",
+    "d1_exact_dedup", "p2_chunk_windows", "t1_token_stats")
+
+  test("small global sorts shuffle to one partition, with no range partitioning") {
+    smallSorts.foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sf)
+      val executed = sortPartitionings(df)
+      val plans = s"$q:\n${df.queryExecution.executedPlan}"
+      assert(executed.forall(_ == SinglePartition), plans)
+      assert(!exchanges(df.queryExecution.executedPlan)
+        .exists(e => isRange(e.outputPartitioning)), plans)
+      // o5 fires on re-planning, once its aggregate's size is known; f5's
+      // sort input is empty at sf0.001, so AQE's empty-relation
+      // propagation removes the executed sort and only the initial plan
+      // shows it
+      val initial = sortExchanges(initialPlan(df)).map(_.outputPartitioning)
+      assert((initial ++ executed).contains(SinglePartition), plans)
+    }
+  }
+
+  // with a range-partitioned sort each fired one more: f5 2, o5 4, d1 4,
+  // p2 3, t1 3 (a first collect pays the one-time jobs)
+  smallSorts.zip(Seq(1, 3, 3, 2, 2)).foreach { case (q, budget) =>
+    test(s"$q: the small global sort fires no range-sampling job ($budget jobs)") {
+      SparkEntry.queries(q)(spark, sf).collect()
+      val df = SparkEntry.queries(q)(spark, sf)
+      val jobs = JobLog.record(spark.sparkContext)(df.collect())._2
+      assert(jobs.size <= budget, jobs.mkString("\n"))
+    }
+  }
+
+  test("a global sort above the AQE floor keeps its range partitioning") {
+    val parts = Study.withConf(spark,
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1") {
+      sortPartitionings(SparkEntry.queries("p2_chunk_windows")(spark, sf))
+    }
+    assert(parts.nonEmpty && parts.forall(isRange), parts)
+  }
+
+  test("the small-sort rule does nothing with AQE off or coalescing off") {
+    Seq("spark.sql.adaptive.enabled", "spark.sql.adaptive.coalescePartitions.enabled")
+      .foreach { key =>
+        val parts = Study.withConf(spark, key -> "false") {
+          sortPartitionings(SparkEntry.queries("p2_chunk_windows")(spark, sf))
+        }
+        assert(parts.nonEmpty && parts.forall(isRange), s"$key: $parts")
+      }
+  }
+
+  test("the small-sort rule leaves a user's repartitionByRange ranged") {
+    val df = operators.Splits.assignImpl(spark.read.parquet(s"$sf/orders.parquet"),
+      "o_orderkey", "plancheck", 0.8, 7L, materialize = false)
+    df.collect()
+    val ranged = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeLike if e.shuffleOrigin == REPARTITION_BY_NUM => e
+    }
+    assert(ranged.nonEmpty && ranged.forall(e => isRange(e.outputPartitioning)),
+      df.queryExecution.executedPlan.toString)
+    // a global sort straight over the user's range exchange keeps it too
+    val sorted = spark.read.parquet(s"$sf/orders.parquet")
+      .repartitionByRange(4, org.apache.spark.sql.functions.col("o_orderkey"))
+      .orderBy("o_orderkey")
+    val parts = sortPartitionings(sorted)
+    assert(parts.nonEmpty && parts.forall(isRange), sorted.queryExecution.executedPlan.toString)
   }
 
   test("salted skew join: build side replicates via Generate, join keys carry the salt") {
@@ -210,8 +307,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("sliding windows: no single-partition window, corpus collapses in a partial agg") {
-    val plan = formatted(queries.Extras.w7SlidingWindow(spark, sf))
-    assert(!plan.contains("SinglePartition"),
+    val df = queries.Extras.w7SlidingWindow(spark, sf)
+    val plan = formatted(df)
+    // the one single-partition exchange allowed is the small final
+    // sort's (GraftExtensions.SmallSortSinglePartition)
+    val funnels = exchanges(initialPlan(df)).filter(_.outputPartitioning == SinglePartition)
+    assert(funnels.forall(sortExchanges(initialPlan(df)).contains),
       "the sliding-window agg must shuffle on (window, event_type), not funnel")
     assert(plan.contains("HashAggregate"),
       "overlapping windows must aggregate, not window-function, the corpus")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +13,7 @@ import graft.sources.Versioned
   * the rewrite is file-granular, CDF records delete+insert, and the
   * publish rebases over predicate-disjoint concurrent appends.
   */
-class ReplaceWhereSpec extends AnyFunSuite {
+class ReplaceWhereSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -26,7 +24,7 @@ class ReplaceWhereSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmpTable(): String =
-    Files.createTempDirectory("graft-replace-").toString
+    tempDir("graft-replace-").toString
 
   test("replace one key range atomically: file-granular rewrite, " +
     "window validation, CDF delete+insert") {

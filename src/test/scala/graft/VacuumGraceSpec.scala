@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,7 +22,7 @@ import graft.sources.Versioned
   *  3. the same guard covers the COW seam (merge/delete/update/
   *     optimize rewrites and their CDC files).
   */
-class VacuumGraceSpec extends AnyFunSuite {
+class VacuumGraceSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -35,7 +33,7 @@ class VacuumGraceSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmpTable(): String =
-    Files.createTempDirectory("graft-vacgrace-").toString
+    tempDir("graft-vacgrace-").toString
 
   test("law 1: vacuum lands inside the write-to-publish window; " +
     "default grace spares the staged files and the publish succeeds") {
