@@ -18,7 +18,9 @@ import org.json4s.jackson.JsonMethods
   * deleted when it returns. Paths the arm keeps (a table directory, a
   * work directory) are among its args. Each arm's scaladoc gives its
   * args. Arms run on the caller's session and leave it as they found
-  * it: no `spark.stop()`, and SQL confs are set through [[withConf]].
+  * it: no `spark.stop()`, SQL confs are set through [[withConf]], and
+  * whatever the arm cached and left cached is un-cached when it returns
+  * (`graftx.SessionCache`).
   */
 object Study {
 
@@ -110,9 +112,11 @@ object Study {
       args: Seq[String]): Unit = {
     val body = arms.getOrElse(arm, throw new IllegalArgumentException(
       s"unknown arm $arm; arms: ${arms.keys.toSeq.sorted.mkString(", ")}"))
+    val cached = org.apache.spark.sql.graftx.SessionCache.snapshot(spark)
     val result =
       try body(spark, args)
       finally {
+        org.apache.spark.sql.graftx.SessionCache.restore(spark, cached)
         while (!scratchDirs.isEmpty)
           FileUtils.deleteQuietly(scratchDirs.poll().toFile)
       }

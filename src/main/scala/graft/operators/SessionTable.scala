@@ -16,7 +16,14 @@ import scala.collection.concurrent.TrieMap
   * queries in a loop does not accumulate cached plans
   * (CacheHygieneSpec's invariant). Keys embed the applicationId so a
   * stopped-and-restarted session can never serve another context's
-  * checkpointed blocks. */
+  * checkpointed blocks.
+  *
+  * A pin carries its measured size: the pinned relation's logical
+  * stats are the bytes its blocks occupy
+  * (`graftx.GraftExtensions.withMeasuredSize`), not the optimizer's
+  * estimate of the plan it was built from, so joins and sorts over it
+  * plan for its real size (a 500-row labels table reports KB, not tens
+  * of MB). */
 object SessionTable {
   private val store = TrieMap.empty[String, DataFrame]
   private val buildSecs = TrieMap.empty[String, Double]
@@ -24,7 +31,8 @@ object SessionTable {
   def of(s: SparkSession, key: String)(compute: => DataFrame): DataFrame =
     store.getOrElseUpdate(s"${s.sparkContext.applicationId}:$key", {
       val t0 = System.nanoTime()
-      val df = compute.localCheckpoint(true)
+      val df = org.apache.spark.sql.graftx.GraftExtensions
+        .withMeasuredSize(compute.localCheckpoint(true))
       buildSecs.put(key, (System.nanoTime() - t0) / 1e9)
       df
     })

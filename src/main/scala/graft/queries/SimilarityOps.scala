@@ -22,11 +22,13 @@ object SimilarityOps {
     org.apache.spark.sql.graftx.VectorExpressions.dotProduct(x, y) // codegen'd inner loop
 
   def s1KnnBruteforce(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir, "embeddings")
-      .repartition(col("vec_id"))
+    def vectors(t: DataFrame): DataFrame = t
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v")))) // per-vector, pre-join
-    val q = e.where(col("vec_id") < 5)
+    val e = vectors(Tables(s, dir, "embeddings").repartition(col("vec_id")))
+    // the probes read the plain scan: the corpus repartition would cost
+    // the broadcast side a shuffle job of its own
+    val q = vectors(Tables(s, dir, "embeddings").where(col("vec_id") < 5))
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val cos = round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
     val w = Window.partitionBy(col("query_id"))

@@ -1,15 +1,19 @@
 package org.apache.spark.sql.graftx
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, ExpressionInfo, Literal, PlanExpression, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.{CodegenSupport, FileSourceScanExec, FilterExec, GenerateExec, LogicalRDD, ProjectExec, RDDScanExec, SortExec, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StringType
+import org.apache.spark.storage.RDDBlockId
 
 /** SparkSessionExtensions entry point: registers the native graft
   * expressions as SQL functions, so
@@ -19,13 +23,19 @@ import org.apache.spark.sql.types.StringType
   * or `.withExtensions(new GraftExtensions)`.
   *
   * It also injects one AQE query-stage preparation rule,
-  * [[GraftExtensions.SmallSortSinglePartition]]: a global sort whose
-  * input is at most AQE's one-partition floor
-  * (`spark.sql.adaptive.coalescePartitions.minPartitionSize`) shuffles
-  * to one partition instead of range-partitioning, which drops the
-  * `RangePartitioner`'s sampling job. It adds no conf key and does
-  * nothing with AQE or partition coalescing off, above the floor, or
-  * on an explicit `repartitionByRange`.
+  * [[GraftExtensions.SmallSortSinglePartition]], for a global sort
+  * whose input is at most AQE's one-partition floor
+  * (`spark.sql.adaptive.coalescePartitions.minPartitionSize`). If that
+  * input is provably one partition already (row-local operators over a
+  * one-partition file or RDD scan), the sort reads it with no exchange
+  * at all; otherwise it shuffles to one partition instead of
+  * range-partitioning. Either way the `RangePartitioner`'s sampling job
+  * is gone, and in the first case the shuffle job too. It adds no conf
+  * key and does nothing with AQE or partition coalescing off, above the
+  * floor, or on an explicit `repartitionByRange`. The floor is read
+  * from the logical stats of the sort's input, so a pinned relation
+  * must report its measured size ([[GraftExtensions.withMeasuredSize]])
+  * for the rule to see it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -164,7 +174,11 @@ object GraftExtensions {
     * input; below the coalescing floor AQE merges the range output into
     * one partition anyway, so the sampled bounds are wasted. The size is
     * the exchange child's logical stats: the optimizer's estimate on
-    * first planning, materialized stages' runtime sizes on re-planning. */
+    * first planning, materialized stages' runtime sizes on re-planning.
+    * A one-partition input needs no shuffle to become one partition: it
+    * is marked [[OnePartitionExec]], so the sort's requirement still
+    * holds for AQE's later validation. Any other input gets a
+    * `SinglePartition` exchange. */
   private[graftx] object SmallSortSinglePartition extends Rule[SparkPlan] {
     override def apply(plan: SparkPlan): SparkPlan = {
       if (!conf.coalesceShufflePartitionsEnabled) return plan
@@ -173,10 +187,73 @@ object GraftExtensions {
         case s @ SortExec(_, true, ex @ ShuffleExchangeExec(
             _: RangePartitioning, child, ENSURE_REQUIREMENTS, _), _)
             if child.logicalLink.exists(_.stats.sizeInBytes <= floor) =>
-          val single = ex.copy(outputPartitioning = SinglePartition)
-          single.copyTagsFrom(ex)
-          s.withNewChildren(Seq(single))
+          if (onePartition(child)) s.withNewChildren(Seq(OnePartitionExec(child)))
+          else {
+            val single = ex.copy(outputPartitioning = SinglePartition)
+            single.copyTagsFrom(ex)
+            s.withNewChildren(Seq(single))
+          }
       }
     }
+
+    /** Row-local operators down to a scan of exactly one partition. A
+      * file scan qualifies unless it is bucketed or its partition
+      * filters hold a subquery (dynamic pruning among them), which must
+      * run before the files can be listed. */
+    private def onePartition(p: SparkPlan): Boolean = p match {
+      case _: ProjectExec | _: FilterExec | _: GenerateExec => onePartition(p.children.head)
+      case f: FileSourceScanExec =>
+        !f.bucketedScan &&
+          !f.partitionFilters.exists(_.exists(_.isInstanceOf[PlanExpression[_]])) &&
+          f.inputRDD.getNumPartitions == 1
+      case r: RDDScanExec => r.rdd.getNumPartitions == 1
+      case _ => false
+    }
   }
+
+  /** `pinned`, a `localCheckpoint`ed DataFrame, reporting the bytes its
+    * blocks occupy as its logical size instead of the optimizer's
+    * estimate of the plan it was pinned from. Each partition's block
+    * size (memory plus disk) is read from the block manager master,
+    * which every block reports to synchronously as it is stored, so the
+    * sum is complete once the pin's job has ended, and no Spark job
+    * runs. (The status store behind `SparkContext.getRDDStorageInfo`
+    * reads the same sizes, but the listener bus feeds it
+    * asynchronously.) If any partition has no block, `pinned` is
+    * returned as it is. */
+  def withMeasuredSize(pinned: DataFrame): DataFrame =
+    pinned.queryExecution.logical match {
+      case l: LogicalRDD =>
+        val session = pinned.sparkSession.asInstanceOf[ClassicSession]
+        val master = session.sparkContext.env.blockManager.master
+        val sizes = (0 until l.rdd.getNumPartitions).map { p =>
+          master.getBlockStatus(RDDBlockId(l.rdd.id, p), askStorageEndpoints = false)
+            .values.headOption.map(b => b.memSize + b.diskSize)
+        }
+        if (sizes.isEmpty || sizes.exists(_.isEmpty)) pinned
+        else Dataset.ofRows(session, l.copy()(session,
+          Some(Statistics(sizeInBytes = BigInt(sizes.flatten.sum))), Some(l.constraints)))
+      case _ => pinned
+    }
+}
+
+/** A sort's one-partition input, claiming `SinglePartition` where a
+  * shuffle to one partition would have stood
+  * ([[GraftExtensions.SmallSortSinglePartition]] places it only over an
+  * input it has proved to be one partition). It passes rows and
+  * generated code through unchanged. */
+private[graftx] case class OnePartitionExec(child: SparkPlan)
+    extends UnaryExecNode with CodegenSupport {
+  override def output: Seq[Attribute] = child.output
+  override def outputPartitioning: Partitioning = SinglePartition
+  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
+  protected override def doExecute(): RDD[InternalRow] = child.execute()
+  override def inputRDDs(): Seq[RDD[InternalRow]] =
+    child.asInstanceOf[CodegenSupport].inputRDDs()
+  protected override def doProduce(ctx: CodegenContext): String =
+    child.asInstanceOf[CodegenSupport].produce(ctx, this)
+  override def doConsume(ctx: CodegenContext, input: Seq[ExprCode], row: ExprCode): String =
+    consume(ctx, input)
+  override protected def withNewChildInternal(newChild: SparkPlan): OnePartitionExec =
+    copy(child = newChild)
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.graftx.JobLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,7 +9,7 @@ import graft.core.Config
 import graft.generators.Generators
 import graft.pipeline.{ActiveLoop, ConfigRow, MaterialsPipeline}
 
-class ActiveLoopSpec extends AnyFunSuite {
+class ActiveLoopSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -21,7 +20,7 @@ class ActiveLoopSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("active loop grows the set, dedups, and resumes from state") {
-    val path = Files.createTempDirectory("active").toString + "/active_set"
+    val path = tempDir("active").toString + "/active_set"
     val loop = new ActiveLoop(spark, StubCalculator(), path)
     loop.bootstrap(MaterialsPipeline.seeds)
     assert(loop.currentIteration === 0)
@@ -52,7 +51,7 @@ class ActiveLoopSpec extends AnyFunSuite {
   }
 
   private def freshPath(): String =
-    Files.createTempDirectory("active").toString + "/active_set"
+    tempDir("active").toString + "/active_set"
 
   test("run stops at the first step that adds nothing") {
     val one = new ActiveLoop(spark, StubCalculator(), freshPath())

@@ -12,7 +12,7 @@ import graft.sources.Versioned
   * `RESTORE … TO TIMESTAMP AS OF` (the read-side monotone-stamp
   * lookup, session-zone literals, driving a rollback).
   */
-class MaintenanceExtrasSpec extends AnyFunSuite {
+class MaintenanceExtrasSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,7 +24,7 @@ class MaintenanceExtrasSpec extends AnyFunSuite {
 
   test("VACUUM DRY RUN reports the reclaim set without deleting") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-dryrun-").toString
+    val t = tempDir("graft-dryrun-").toString
     Versioned.commit(Seq((1L, "a")).toDF("id", "s"), t) // v1
     Versioned.commit(Seq((9L, "z")).toDF("id", "s"), t, "overwrite") // v2
     // library dry run with the grace waived: v1's files are
@@ -51,7 +51,7 @@ class MaintenanceExtrasSpec extends AnyFunSuite {
     "touch; the rest carry by reference; no match is a no-op") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val t = Files.createTempDirectory("graft-optwhere-").toString
+    val t = tempDir("graft-optwhere-").toString
     // four key-disjoint files: ids 0-9 / 10-19 / 20-29 / 30-39
     (0 until 4).foreach { b =>
       Versioned.commit((b * 10L until b * 10L + 10L).map(i => (i, i))
@@ -92,7 +92,7 @@ class MaintenanceExtrasSpec extends AnyFunSuite {
   test("RESTORE TO TIMESTAMP AS OF rolls back through the monotone " +
     "stamp lookup") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-restts-").toString
+    val t = tempDir("graft-restts-").toString
     Versioned.commit(Seq((1L, "a")).toDF("id", "s"), t) // v1
     Thread.sleep(30) // real stamp gap (time-travel spec discipline)
     val midMs = System.currentTimeMillis()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
-import org.apache.spark.sql.execution.{InputAdapter, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{InputAdapter, LogicalRDD, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
 import org.apache.spark.sql.graftx.JobLog
@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pruning, broadcast joins. These are the properties that decide
   * 100 TB behavior — a regression here is a performance bug even if
   * results stay correct. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -182,29 +182,27 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"))
   }
 
-  test("chunk windows: single scan, no shuffle except the determinism sort") {
+  test("chunk windows: single scan, no shuffle at all") {
     val plan = formatted(queries.PackOps.p2ChunkWindows(spark, sf))
     assert(plan.contains("Generate"), "the window explode must be a Generate")
-    // exactly one exchange: the oracle-determinism orderBy's (one
-    // partition for this small input) — no join/aggregate shuffle exists
+    // no exchange: the oracle-determinism orderBy reads its one-partition
+    // input in place — and no join/aggregate shuffle exists
     val exchanges = plan.linesIterator
       .count(_.matches("""\(\d+\) Exchange.*"""))
-    assert(exchanges === 1, s"expected only the sort exchange, got:\n$plan")
+    assert(exchanges === 0, s"expected no exchange, got:\n$plan")
     assert(!plan.contains("SortMergeJoin") && !plan.contains("HashAggregate"))
   }
 
-  test("simhash signatures: row-local, the executed plan's one exchange is the sort's") {
+  test("simhash signatures: row-local, the executed plan has no exchange") {
     val df = queries.DedupOps.d3Simhash(spark, sf)
     assert(df.collect().nonEmpty) // executedPlan is now AQE's final plan
-    val all = exchanges(df.queryExecution.executedPlan)
-    assert(all.size === 1, df.queryExecution.executedPlan.toString)
-    assert(sortExchanges(df.queryExecution.executedPlan) === all,
+    assert(exchanges(df.queryExecution.executedPlan).isEmpty,
       df.queryExecution.executedPlan.toString)
   }
 
-  /** The exchange under each global sort of `plan`, looking through
+  /** The input node under each global sort of `plan`, looking through
     * codegen inputs, AQE shuffle reads and query stages. */
-  private def sortExchanges(plan: SparkPlan): Seq[ShuffleExchangeLike] = {
+  private def sortInputs(plan: SparkPlan): Seq[SparkPlan] = {
     def under(p: SparkPlan): SparkPlan = p match {
       case i: InputAdapter => under(i.child)
       case r: AQEShuffleReadExec => under(r.child)
@@ -213,8 +211,12 @@ class PlanSpec extends AnyFunSuite {
     }
     new AdaptiveSparkPlanHelper {}.collect(plan) {
       case SortExec(_, true, child, _) => under(child)
-    }.collect { case e: ShuffleExchangeLike => e }
+    }
   }
+
+  /** The exchange under each global sort of `plan`. */
+  private def sortExchanges(plan: SparkPlan): Seq[ShuffleExchangeLike] =
+    sortInputs(plan).collect { case e: ShuffleExchangeLike => e }
 
   private def exchanges(plan: SparkPlan): Seq[ShuffleExchangeLike] =
     new AdaptiveSparkPlanHelper {}.collect(plan) { case e: ShuffleExchangeLike => e }
@@ -230,36 +232,118 @@ class PlanSpec extends AnyFunSuite {
 
   private def isRange(p: Partitioning): Boolean = p.isInstanceOf[RangePartitioning]
 
-  // the lap queries whose global sort reads less than the 64k AQE floor
-  private val smallSorts = Seq("f5_catalog_find", "o5_split_assign",
-    "d1_exact_dedup", "p2_chunk_windows", "t1_token_stats")
+  private def isOnePartition(p: SparkPlan): Boolean = p.nodeName == "OnePartition"
+
+  // the lap queries whose global sort reads less than the 64k AQE floor:
+  // over an aggregate's shuffle output, which is not one partition
+  // before AQE coalesces it ...
+  private val smallSortsOverShuffle = Seq("o5_split_assign", "d1_exact_dedup")
+  // ... and over row-local operators on a one-partition scan (d6's is
+  // the pinned labels relation)
+  private val smallSortsInPlace = Seq("f5_catalog_find", "p2_chunk_windows",
+    "t1_token_stats", "d3_simhash", "d6_dup_clusters")
 
   test("small global sorts shuffle to one partition, with no range partitioning") {
-    smallSorts.foreach { q =>
+    smallSortsOverShuffle.foreach { q =>
       val df = SparkEntry.queries(q)(spark, sf)
       val executed = sortPartitionings(df)
       val plans = s"$q:\n${df.queryExecution.executedPlan}"
-      assert(executed.forall(_ == SinglePartition), plans)
+      assert(executed.nonEmpty && executed.forall(_ == SinglePartition), plans)
       assert(!exchanges(df.queryExecution.executedPlan)
         .exists(e => isRange(e.outputPartitioning)), plans)
-      // o5 fires on re-planning, once its aggregate's size is known; f5's
-      // sort input is empty at sf0.001, so AQE's empty-relation
+    }
+  }
+
+  test("small global sorts over one partition read it with no exchange") {
+    smallSortsInPlace.foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sf)
+      df.collect()
+      val plans = s"$q:\n${df.queryExecution.executedPlan}"
+      // f5's sort input is empty at sf0.001, so AQE's empty-relation
       // propagation removes the executed sort and only the initial plan
       // shows it
-      val initial = sortExchanges(initialPlan(df)).map(_.outputPartitioning)
-      assert((initial ++ executed).contains(SinglePartition), plans)
+      Seq(initialPlan(df), df.queryExecution.executedPlan).foreach { p =>
+        assert(sortInputs(p).forall(isOnePartition), plans)
+        assert(exchanges(p).forall(e => !isRange(e.outputPartitioning)), plans)
+      }
+      assert(sortInputs(initialPlan(df)).nonEmpty, plans)
+    }
+  }
+
+  test("a sort with no exchange passes AQE's requirement check: its union's aggregate stays coalesced") {
+    // AQE keeps a coalesced shuffle read only if the whole final stage
+    // still meets every operator's distribution requirement, the sort's
+    // included
+    val sorted = spark.read.parquet(s"$sf/supplier.parquet")
+      .select(org.apache.spark.sql.functions.col("s_suppkey").as("k"))
+      .orderBy("k")
+    val agg = spark.read.parquet(s"$sf/orders.parquet")
+      .groupBy(org.apache.spark.sql.functions.col("o_custkey").as("k")).count()
+      .select("k")
+    val df = sorted.union(agg)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(sortInputs(plan).nonEmpty && sortInputs(plan).forall(isOnePartition), plan.toString)
+    assert(new AdaptiveSparkPlanHelper {}.collect(plan) { case r: AQEShuffleReadExec => r }
+      .exists(_.hasCoalescedPartition), plan.toString)
+  }
+
+  test("a small sort over a 3-file parquet directory keeps its SinglePartition exchange") {
+    val dir = tempDir("graft-plan-spec-").resolve("three").toString
+    spark.range(0, 300).selectExpr("(id * 7919) % 300 AS k", "id AS v")
+      .repartition(3).write.parquet(dir)
+    assert(spark.read.parquet(dir).rdd.getNumPartitions === 3)
+    val df = spark.read.parquet(dir).orderBy("k")
+    val parts = sortPartitionings(df)
+    assert(parts.nonEmpty && parts.forall(_ == SinglePartition),
+      df.queryExecution.executedPlan.toString)
+    assert(df.collect().map(_.getLong(0)).toSeq === (0L until 300L))
+  }
+
+  test("the no-exchange sorts return the AQE-off rows in the AQE-off order") {
+    smallSortsInPlace.foreach { q =>
+      val off = Study.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+        SparkEntry.queries(q)(spark, sf).collect().toSeq
+      }
+      assert(SparkEntry.queries(q)(spark, sf).collect().toSeq === off, q)
     }
   }
 
   // with a range-partitioned sort each fired one more: f5 2, o5 4, d1 4,
-  // p2 3, t1 3 (a first collect pays the one-time jobs)
-  smallSorts.zip(Seq(1, 3, 3, 2, 2)).foreach { case (q, budget) =>
+  // p2 3, t1 3 (a first collect pays the one-time jobs); a SinglePartition
+  // exchange still cost p2 and t1 a shuffle job each
+  Seq("f5_catalog_find" -> 1, "o5_split_assign" -> 3, "d1_exact_dedup" -> 3,
+      "p2_chunk_windows" -> 1, "t1_token_stats" -> 1).foreach { case (q, budget) =>
     test(s"$q: the small global sort fires no range-sampling job ($budget jobs)") {
       SparkEntry.queries(q)(spark, sf).collect()
       val df = SparkEntry.queries(q)(spark, sf)
       val jobs = JobLog.record(spark.sparkContext)(df.collect())._2
       assert(jobs.size <= budget, jobs.mkString("\n"))
     }
+  }
+
+  test("d6_dup_clusters: a warm read of the pinned labels is one job") {
+    SparkEntry.queries("d6_dup_clusters")(spark, sf).collect()
+    val df = SparkEntry.queries("d6_dup_clusters")(spark, sf)
+    val jobs = JobLog.record(spark.sparkContext)(df.collect())._2
+    assert(jobs.size <= 1, jobs.mkString("\n"))
+  }
+
+  test("s1_knn_bruteforce: the probe side skips the corpus repartition (4 jobs)") {
+    SparkEntry.queries("s1_knn_bruteforce")(spark, sf).collect()
+    val df = SparkEntry.queries("s1_knn_bruteforce")(spark, sf)
+    val jobs = JobLog.record(spark.sparkContext)(df.collect())._2
+    assert(jobs.size <= 4, jobs.mkString("\n"))
+  }
+
+  test("the pinned dup-labels relation reports its measured size") {
+    val df = SparkEntry.queries("d6_dup_clusters")(spark, sf)
+    df.collect()
+    val sizes = df.queryExecution.optimizedPlan.collect {
+      case l: LogicalRDD => l.stats.sizeInBytes
+    }
+    // the optimizer's pre-pin estimate was tens of MB
+    assert(sizes.size === 1 && sizes.head > 0 && sizes.head < (1 << 20), sizes)
   }
 
   test("a global sort above the AQE floor keeps its range partitioning") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,7 +14,7 @@ import graft.sources.Versioned
   * age. A 10-year-old table with 50k commits costs the same driver
   * JSON walk as a 10-commit one.
   */
-class SnapshotReplaySpec extends AnyFunSuite {
+class SnapshotReplaySpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -29,7 +27,7 @@ class SnapshotReplaySpec extends AnyFunSuite {
   test("104-version table: every version resolves by replaying at " +
     "most CheckpointInterval manifests") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-replay-").toString
+    val t = tempDir("graft-replay-").toString
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1)
     // 100 appends, with a COW merge and an OPTIMIZE mid-history so
     // the walk crosses full (COW) and delta (append) manifests alike
@@ -57,7 +55,7 @@ class SnapshotReplaySpec extends AnyFunSuite {
   test("a metadata-heavy history keeps the law: metadata commits on " +
     "a checkpoint boundary publish FULL") {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft-replay-md-").toString
+    val t = tempDir("graft-replay-md-").toString
     Versioned.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), t) // v1
     // 25 consecutive metadata commits (constraints + columns) cross
     // two checkpoint boundaries with ZERO appends in between — the

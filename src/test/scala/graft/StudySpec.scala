@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftx.SessionCache
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.BeforeAndAfterAll
@@ -9,10 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every `graft.Study` arm runs on this suite's session over sf0.001
   * with small sizes, writing under a temp dir. Each arm must leave the
-  * session running with its SQL confs as it found them, write only to
-  * the `<out>` it was given, and — where a committed artifact records
-  * the arm — produce that artifact's nested key paths (labels
-  * substituted; `cpus` is the runner's own field). */
+  * session running with its SQL confs and its cache as it found them,
+  * write only to the `<out>` it was given, and — where a committed
+  * artifact records the arm — produce that artifact's nested key paths
+  * (labels substituted; `cpus` is the runner's own field). */
 class StudySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -49,9 +50,11 @@ class StudySpec extends AnyFunSuite with BeforeAndAfterAll {
     warm
     val confs = spark.conf.getAll
     val committed = evidence()
+    val cached = SessionCache.snapshot(spark)
     Study.run(spark, arm, dir(out), args)
     assert(!spark.sparkContext.isStopped, s"$arm stopped the session")
     assert(spark.conf.getAll == confs, s"$arm left SQL confs changed")
+    assert(SessionCache.snapshot(spark) == cached, s"$arm left the cache changed")
     assert(evidence() == committed, s"$arm wrote to committed evidence")
     Paths.get(dir(out))
   }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Versioned
 
-class VersionedSpec extends AnyFunSuite {
+class VersionedSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -19,7 +19,7 @@ class VersionedSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmpTable(): String =
-    Files.createTempDirectory("versioned-spec-").toString
+    tempDir("versioned-spec-").toString
 
   test("append/append/overwrite/restore: every version reads back") {
     import spark.implicits._
@@ -179,7 +179,7 @@ class VersionedSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val t = tmpTable()
-    val ckpt = Files.createTempDirectory("versioned-ckpt-").toString
+    val ckpt = tempDir("versioned-ckpt-").toString
     val src = MemoryStream[Long]
     src.addData(1L, 2L, 3L)
     def run(): Unit = {
