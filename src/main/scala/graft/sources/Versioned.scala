@@ -23,18 +23,19 @@ import org.apache.spark.sql.types.StructType
   *  - A manifest is either a DELTA (`full=false`, the files this
   *    commit ADDS) or a CHECKPOINT (`full=true`, the complete live
   *    file set). Overwrites and restores are checkpoints by nature;
-  *    appends self-checkpoint every [[CheckpointInterval]] commits so
-  *    snapshot resolution replays a bounded manifest suffix
-  *    (≤ interval), not the whole history — the log equivalent of
-  *    Delta's parquet checkpoints.
+  *    delta commits (appends, metadata changes) self-checkpoint every
+  *    [[CheckpointInterval]] versions so snapshot resolution replays
+  *    a bounded manifest suffix (≤ interval), not the whole history —
+  *    the log equivalent of Delta's parquet checkpoints.
   *  - Commit = write data files, then publish the next `v%06d.json`
   *    with an ATOMIC create-exclusive (hard-link a fully-written temp
   *    file into place; `CREATE_NEW` fallback). Two racing writers
   *    target the same version number; exactly one link succeeds, the
   *    loser re-reads the log and retries on top (optimistic
-  *    concurrency). Append/append races always merge cleanly; the
-  *    retry re-resolves the live set so a lost append lands on top of
-  *    a concurrent overwrite with last-writer-wins append semantics.
+  *    concurrency, one loop for every op: [[publishNext]]).
+  *    Append/append races always merge cleanly; the retry re-resolves
+  *    the live set so a lost append lands on top of a concurrent
+  *    overwrite with last-writer-wins append semantics.
   *
   * 100 TB shape: the log is O(files-per-commit) driver-side JSON and
   * snapshot resolution is O(interval) manifest reads; the data path
@@ -46,7 +47,7 @@ import org.apache.spark.sql.types.StructType
   */
 object Versioned {
 
-  /** Append commits self-checkpoint at this cadence: any snapshot read
+  /** Delta commits self-checkpoint at this cadence: any snapshot read
     * replays at most this many manifests past its base checkpoint. */
   val CheckpointInterval = 10
 
@@ -417,7 +418,10 @@ object Versioned {
     * reclaimed them, and publishing would reference missing files.
     * The loud failure names the contract knob. */
   private def requireStaged(path: String, rel: Seq[String],
-      op: String): Unit =
+      op: String): Unit = {
+    val hook = beforePublish
+    beforePublish = () => ()
+    hook()
     rel.foreach { f =>
       require(Files.exists(Paths.get(norm(path), f)),
         s"versioned: $op at $path lost staged file $f before publish " +
@@ -425,6 +429,13 @@ object Versioned {
           "write's write-to-publish duration; re-run the write and " +
           "size vacuum graceMs above the longest expected write")
     }
+  }
+
+  /** Test seam: fires ONCE per append or COW commit, after its files
+    * are staged and before the log head is read for publish — the
+    * window a concurrent vacuum, a second writer or a crash can
+    * interleave into. Self-clearing. */
+  private[graft] var beforePublish: () => Unit = () => ()
 
   /** CHECK-constraint gate over a DataFrame: a row VIOLATES a
     * constraint iff its expression evaluates FALSE — NULL passes (the
@@ -695,6 +706,49 @@ object Versioned {
     } catch {
       case _: FileAlreadyExistsException => false
     } finally Files.deleteIfExists(tmp)
+  }
+
+  /** The log head one publish attempt builds on: the listed
+    * `versions`, the head `version` (0 for a fresh table) and its
+    * `manifest`. `snap` replays the head lazily, only when the
+    * checkpoint rule needs the live set. */
+  private final class Head(path: String, val versions: Seq[Int]) {
+    val version: Int = versions.lastOption.getOrElse(0)
+    val manifest: Option[Manifest] =
+      if (version == 0) None
+      else Some(parseManifest(manifestPath(path, version)))
+    lazy val snap: Snapshot = snapshot(path, Some(version))
+  }
+
+  /** The one optimistic commit step (Delta's protocol): every manifest
+    * publish except CLONE's and CONVERT's version 1 goes through here.
+    * Each attempt lists the log once, reads the head, and asks `next`
+    * for the manifest of `head.version + 1`; None is a no-op (an
+    * already-committed txn) and returns None. A non-full manifest on a
+    * CHECKPOINT boundary (every [[CheckpointInterval]]-th version)
+    * publishes FULL, carrying the head's live files, stats and dv map
+    * forward — a checkpoint is a replay base, so inheriting would drop
+    * the mask — and snapshot replay stays bounded by the interval for
+    * every commit mix (SnapshotReplaySpec). Losing the link race re-runs
+    * `next` on top of the winner; the op's own rules (txn dedup,
+    * conflict checks, rebase state) live in `next`. */
+  private def publishNext(path: String, op: String)(
+      next: Head => Option[Manifest]): Option[Int] = {
+    var attempt = 0
+    while (attempt < 64) {
+      val h = new Head(path, versions(path))
+      val m = next(h) match {
+        case None => return None
+        case Some(m) if !m.full && m.version % CheckpointInterval == 0 =>
+          m.copy(full = true, files = h.snap.files ++ m.files,
+            stats = h.snap.stats ++ m.stats, dvs = Some(h.snap.dvs))
+        case Some(m) => m
+      }
+      if (publish(path, m)) return Some(m.version)
+      attempt += 1 // lost the race: re-resolve on top of the winner
+    }
+    sys.error(s"versioned: $op gave up after $attempt contended commits " +
+      s"at $path")
   }
 
   // ----------------------------------------------------- snapshots
@@ -1296,44 +1350,51 @@ object Versioned {
     // partitioning is a table property (Delta), so appends inherit the
     // table's layout when no partitionBy is given, and a conflicting
     // explicit partitionBy on append is a loud error. Overwrite may
-    // re-lay-out freely.
-    val existingPcols: Seq[String] =
-      if (versions(path).isEmpty) Nil else snapshot(path).partitionCols
-    val pcols: Seq[String] =
-      if (mode == "overwrite" || versions(path).isEmpty) partitionBy
-      else if (partitionBy.isEmpty) existingPcols
-      else {
-        require(partitionBy == existingPcols,
-          s"versioned: append partitionBy (${partitionBy.mkString(",")}) " +
-            s"must match the table's (${existingPcols.mkString(",")}) " +
-            s"at $path")
-        partitionBy
-      }
+    // re-lay-out freely. One head manifest serves both the layout and
+    // the column mapping (each manifest carries both in full); the
+    // publish re-checks them against the head it commits on.
+    val appendTo = new Head(path, versions(path)).manifest
+      .filter(_ => mode != "overwrite")
+    val pcols: Seq[String] = appendTo.fold(partitionBy) { m =>
+      require(partitionBy.isEmpty || partitionBy == m.partitionCols,
+        s"versioned: append partitionBy (${partitionBy.mkString(",")}) " +
+          s"must match the table's (${m.partitionCols.mkString(",")}) " +
+          s"at $path")
+      m.partitionCols
+    }
     pcols.foreach(c => require(df.columns.contains(c),
       s"versioned: partition column $c not in the DataFrame at $path"))
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"data/c-$commitId"
     // files carry PHYSICAL names (round 14): appends translate the
     // logical df through the table's mapping; an overwrite or first
     // commit re-establishes identity
-    val writeMap: Map[String, String] =
-      if (mode == "overwrite" || versions(path).isEmpty)
-        Map.empty
-      else snapshot(path).colMap
-    writeData(df, s"$path/$dataRel", pcols, writeMap)
-    val added = listParquet(dataPath(path, commitId))
-      .map(f => s"$dataRel/$f")
-    // asNullable: parquet round-trips lose NOT NULL anyway; storing the
-    // nullable form keeps a Seq-derived first commit (non-null encoders)
-    // append-compatible with later parquet-derived commits.
-    val ddl = asNullableSchema(df.schema).toDDL
+    val writeMap = appendTo.fold(Map.empty[String, String])(_.colMap)
     // footer + partition-value stats of the just-written files, once,
     // outside the retry loop (the files don't change across publish
     // retries)
-    val addedStats = statsForFiles(df.sparkSession, path, added, pcols,
-      df.schema, writeMap)
-    publishAdded(path, added, ddl, mode, txn, mergeSchema, pcols,
-      addedStats)
+    val (added, addedStats) = stageData(df, path, newCommitId(), pcols,
+      writeMap, df.schema)
+    // asNullable: parquet round-trips lose NOT NULL anyway; storing the
+    // nullable form keeps a Seq-derived first commit (non-null encoders)
+    // append-compatible with later parquet-derived commits.
+    publishAdded(path, added, asNullableSchema(df.schema).toDDL, mode, txn,
+      mergeSchema, pcols, addedStats)
+  }
+
+  private def newCommitId(): String =
+    java.util.UUID.randomUUID().toString.take(12)
+
+  /** The staging step every commit shares: write `df` as fresh data
+    * files under `data/c-<commitId>/` and read their footer and
+    * partition-value stats. Returns the table-relative files and their
+    * stats; nothing is visible until a manifest references them. */
+  private def stageData(df: DataFrame, path: String, commitId: String,
+      pcols: Seq[String], colMap: Map[String, String], schema: StructType)
+      : (Seq[String], FileStats) = {
+    val dataRel = s"data/c-$commitId"
+    writeData(df, s"$path/$dataRel", pcols, colMap)
+    val files = listParquet(dataPath(path, commitId)).map(f => s"$dataRel/$f")
+    (files, statsForFiles(df.sparkSession, path, files, pcols, schema,
+      colMap))
   }
 
   /** Safe WIDENING lattice (round 14, VERDICT r13 #6; the Delta
@@ -1413,9 +1474,6 @@ object Versioned {
         segs.nonEmpty && !segs.contains("..") && !segs.contains(""),
         s"versioned: unsafe file name $f")
     }
-    val hook = beforeAppendPublish
-    beforeAppendPublish = () => ()
-    hook()
     // Vacuum-race guard (round 13): staging files are unreferenced
     // until THIS publish lands, so a concurrent vacuum whose grace
     // window is shorter than our write-to-publish duration may have
@@ -1426,9 +1484,9 @@ object Versioned {
     // window is milliseconds vs the minutes-scale grace contract —
     // SCALING.md §cross-process writers.)
     requireStaged(path, added, "commit")
-    // CHECK constraints gate the fresh files ONCE before the publish
-    // loop (one validation scan); the loop re-validates only if a
-    // racing metadata commit changed the constraint set meanwhile.
+    // CHECK constraints gate the fresh files ONCE, on the first attempt
+    // (one validation scan); a retry re-validates only if a racing
+    // metadata commit changed the constraint set meanwhile.
     // Enforcement reads the staged files under the TABLE's DDL, not
     // the append's: constraints were validated against the table
     // schema, and a mergeSchema append omitting a constrained column
@@ -1437,119 +1495,80 @@ object Versioned {
     // (an OVERWRITE may change the schema, so its staged files read
     // under the NEW ddl — a constraint referencing a column the
     // overwrite dropped then fails loudly: drop the constraint first)
-    var enforced: Map[String, String] = Map.empty
-    var enforcedDdl: String = ddl
-    var enforcedMap: Map[String, String] = Map.empty
-    locally {
-      val vs0 = versions(path)
-      if (vs0.nonEmpty) {
-        val m0 = parseManifest(manifestPath(path, vs0.max))
-        // Exactly-once replay check BEFORE constraint enforcement
-        // (round 14, ADVICE): a foreachBatch replay of an already-
-        // committed batch must no-op with None even if a constraint
-        // added AFTER the original commit would reject the replayed
-        // rows — otherwise a restarted stream is permanently stuck in
-        // recovery. The loop below re-checks under the then-current
-        // head, so a race that commits the same batch between here
-        // and publish still dedups.
-        txn.foreach { case (app, b) =>
-          if (m0.txns.get(app).exists(_ >= b)) return None
+    var enforced: Option[Map[String, String]] = None
+    publishNext(path, s"$mode commit") { h =>
+      val v = h.version + 1
+      val prevTxns = h.manifest.fold(Map.empty[String, Long])(_.txns)
+      val constraints =
+        h.manifest.fold(Map.empty[String, String])(_.constraints)
+      // the head this commit appends to: None for an overwrite or a
+      // first commit, which replace the file set
+      val appendTo = h.manifest.filter(_ => mode != "overwrite")
+      // Exactly-once replay check BEFORE constraint enforcement
+      // (round 14, ADVICE): a foreachBatch replay of an already-
+      // committed batch must no-op with None even if a constraint
+      // added AFTER the original commit would reject the replayed
+      // rows — otherwise a restarted stream is permanently stuck in
+      // recovery. Every attempt re-checks under its own head, so a
+      // racing replay of the same batch that won while we were
+      // writing data files still dedups.
+      val replayed = txn.exists { case (app, b) =>
+        prevTxns.get(app).exists(_ >= b) }
+      Option.when(!replayed) {
+        if (!enforced.contains(constraints)) {
+          enforceOnFiles(path, added, appendTo.fold(ddl)(_.schemaDdl),
+            constraints, s"$mode commit",
+            appendTo.fold(Map.empty[String, String])(_.colMap))
+          enforced = Some(constraints)
         }
-        enforced = m0.constraints
-        if (mode != "overwrite") {
-          enforcedDdl = m0.schemaDdl
-          enforcedMap = m0.colMap // staged files carry physical names
-        }
-      }
-    }
-    enforceOnFiles(path, added, enforcedDdl, enforced, s"$mode commit",
-      enforcedMap)
-    var attempt = 0
-    while (attempt < 64) {
-      val vs = versions(path)
-      val cur = if (vs.isEmpty) 0 else vs.max
-      val v = cur + 1
-      val prevM =
-        if (cur == 0) None else Some(parseManifest(manifestPath(path, cur)))
-      val prevTxns = prevM.map(_.txns).getOrElse(Map.empty[String, Long])
-      val prevConstraints =
-        prevM.map(_.constraints).getOrElse(Map.empty[String, String])
-      if (prevConstraints != enforced) {
-        // a concurrent ADD/DROP CONSTRAINT landed after our gate —
-        // re-validate under the new set before publishing against it
-        enforceOnFiles(path, added,
-          if (mode == "overwrite") ddl
-          else prevM.map(_.schemaDdl).getOrElse(ddl),
-          prevConstraints, s"$mode commit",
-          if (mode == "overwrite") Map.empty
-          else prevM.map(_.colMap).getOrElse(Map.empty))
-        enforced = prevConstraints
-      }
-      txn.foreach { case (app, b) =>
-        // re-check under the current log head: a racing replay of the
-        // same batch may have won while we were writing data files
-        if (prevTxns.get(app).exists(_ >= b)) return None
-      }
-      val (full, files, outDdl, stats, outDvs) =
-        if (mode == "overwrite" || cur == 0)
-          // fresh/replaced file set: explicit EMPTY dv map (clears)
-          (true, added, ddl, addedStats,
-            Some(Map.empty[String, String]))
-        else {
-          val prev = snapshot(path, Some(cur))
-          require(prev.partitionCols == pcols,
-            s"versioned: append layout (${pcols.mkString(",")}) does not " +
-              s"match the table's (${prev.partitionCols.mkString(",")}) " +
-              s"at $path v$v — a racing commit changed the partitioning")
-          val committed =
-            if (prev.schemaDdl == ddl) ddl
-            else if (!mergeSchema)
-              throw new IllegalArgumentException(
-                s"versioned: append schema mismatch at $path v$v:\n  table: " +
-                  s"${prev.schemaDdl}\n  append: $ddl (pass mergeSchema = " +
-                  "true for additive evolution)")
-            else {
-              // evolution through the DATA path writes the new
-              // column's bytes under its LOGICAL name — if that name
-              // was DROPPED earlier its physical name is retired and
-              // old files still carry those bytes; minting can't help
-              // (the staged files are already written), so reject
-              // loudly and steer to ADD COLUMNS (which mints) (r14)
-              val merged = mergeDdl(prev.schemaDdl, ddl, path, "mergeSchema")
-              val fresh = StructType.fromDDL(merged).fieldNames
-                .filterNot(StructType.fromDDL(prev.schemaDdl)
-                  .fieldNames.contains)
-              val taken = prevM.map(_.colMap.values.toSet)
-                .getOrElse(Set.empty)
-              fresh.filter(taken.contains).foreach { c =>
+        appendTo match {
+          case None =>
+            // fresh/replaced file set: explicit EMPTY dv map (clears),
+            // and an identity column mapping (every file is fresh)
+            Manifest(v, mode, full = true, added, ddl, prevTxns ++ txn,
+              stats = addedStats, partitionCols = pcols,
+              constraints = constraints, dvs = Some(Map.empty))
+          case Some(prev) =>
+            require(prev.partitionCols == pcols,
+              s"versioned: append layout (${pcols.mkString(",")}) does " +
+                "not match the table's " +
+                s"(${prev.partitionCols.mkString(",")}) at $path v$v — " +
+                "a racing commit changed the partitioning")
+            val committed =
+              if (prev.schemaDdl == ddl) ddl
+              else if (!mergeSchema)
                 throw new IllegalArgumentException(
-                  s"versioned: evolved column $c at $path reuses a " +
-                    "retired physical name — add it via ALTER TABLE " +
-                    "ADD COLUMNS first (which mints a fresh physical " +
-                    "name), then append")
+                  s"versioned: append schema mismatch at $path v$v:\n  " +
+                    s"table: ${prev.schemaDdl}\n  append: $ddl (pass " +
+                    "mergeSchema = true for additive evolution)")
+              else {
+                // evolution through the DATA path writes the new
+                // column's bytes under its LOGICAL name — if that name
+                // was DROPPED earlier its physical name is retired and
+                // old files still carry those bytes; minting can't help
+                // (the staged files are already written), so reject
+                // loudly and steer to ADD COLUMNS (which mints) (r14)
+                val merged = mergeDdl(prev.schemaDdl, ddl, path, "mergeSchema")
+                val fresh = StructType.fromDDL(merged).fieldNames
+                  .filterNot(StructType.fromDDL(prev.schemaDdl)
+                    .fieldNames.contains)
+                fresh.filter(prev.colMap.values.toSet).foreach { c =>
+                  throw new IllegalArgumentException(
+                    s"versioned: evolved column $c at $path reuses a " +
+                      "retired physical name — add it via ALTER TABLE " +
+                      "ADD COLUMNS first (which mints a fresh physical " +
+                      "name), then append")
+                }
+                merged
               }
-              merged
-            }
-          if (v % CheckpointInterval == 0)
-            // checkpoint carries stats AND the dv map forward — it is
-            // a replay base; inheriting here would drop the mask
-            (true, prev.files ++ added, committed,
-              prev.stats ++ addedStats, Some(prev.dvs))
-          else (false, added, committed, addedStats,
-            None) // delta append: absent = inherit dv state
+            // a delta append: the column mapping (a table property)
+            // carries forward, and an absent dv map inherits
+            Manifest(v, mode, full = false, added, committed,
+              prevTxns ++ txn, stats = addedStats, partitionCols = pcols,
+              constraints = constraints, colMap = prev.colMap)
         }
-      // column mapping is a table property: appends carry it forward;
-      // an overwrite re-establishes identity (every file is fresh)
-      val outMap =
-        if (mode == "overwrite" || cur == 0) Map.empty[String, String]
-        else prevM.map(_.colMap).getOrElse(Map.empty)
-      if (publish(path, Manifest(v, mode, full, files, outDdl,
-        prevTxns ++ txn, stats = stats, partitionCols = pcols,
-        constraints = prevConstraints, colMap = outMap, dvs = outDvs)))
-        return Some(v)
-      attempt += 1 // lost the race: re-resolve on top of the winner
+      }
     }
-    sys.error(s"versioned: gave up after $attempt contended commits at $path")
   }
 
   /** ALTER TABLE … ADD COLUMNS (round 13): publish a METADATA-ONLY
@@ -1572,16 +1591,8 @@ object Versioned {
       parent: String = ""): Int = {
     val newCols = StructType.fromDDL(colsDdl)
     require(newCols.nonEmpty, s"versioned: ADD COLUMNS needs columns")
-    var attempt = 0
-    while (attempt < 64) {
-      val vs = versions(path)
-      require(vs.nonEmpty,
-        s"versioned: no committed versions under $path — create the " +
-          "table before altering it")
-      val cur = vs.max
-      val snap = snapshot(path, Some(cur))
-      val prevS = StructType.fromDDL(snap.schemaDdl)
-      val headM = parseManifest(manifestPath(path, cur))
+    alterTable(path, "ADD COLUMNS") { (h, headM) =>
+      val prevS = StructType.fromDDL(headM.schemaDdl)
       // canonical parent segments (loud on missing / non-struct)
       val parentSegs: Seq[String] =
         if (parent.isEmpty) Nil
@@ -1615,14 +1626,10 @@ object Versioned {
       val minted = newCols.fields.collect {
         case f if taken.contains(s"$physParent${f.name}") =>
           (parentSegs :+ f.name).mkString(".") ->
-            s"$physParent${f.name}__p${cur + 1}"
+            s"$physParent${f.name}__p${h.version + 1}"
       }.toMap
-      if (publishMetadata(path, cur, outDdl, snap.partitionCols,
-        headM.txns, headM.constraints, headM.colMap ++ minted))
-        return cur + 1
-      attempt += 1
+      headM.copy(schemaDdl = outDdl, colMap = headM.colMap ++ minted)
     }
-    sys.error(s"versioned: gave up altering $path after $attempt attempts")
   }
 
   /** `ALTER TABLE … ALTER COLUMN c TYPE t` (round 14, VERDICT r13
@@ -1638,15 +1645,8 @@ object Versioned {
   def alterColumnType(path: String, colName: String,
       newTypeDdl: String): Int = {
     val newType = StructType.fromDDL(s"`c` $newTypeDdl").head.dataType
-    var attempt = 0
-    while (attempt < 64) {
-      val vs = versions(path)
-      require(vs.nonEmpty,
-        s"versioned: no committed versions under $path — create the " +
-          "table before altering it")
-      val cur = vs.max
-      val snap = snapshot(path, Some(cur))
-      val prevS = StructType.fromDDL(snap.schemaDdl)
+    alterTable(path, "ALTER COLUMN") { (_, headM) =>
+      val prevS = StructType.fromDDL(headM.schemaDdl)
       val f = prevS.fields.find(_.name.equalsIgnoreCase(colName))
         .getOrElse(throw new IllegalArgumentException(
           s"versioned: no column $colName at $path (have " +
@@ -1656,15 +1656,9 @@ object Versioned {
         s"versioned: ALTER COLUMN ${f.name} ${f.dataType.sql} -> " +
           s"${newType.sql} at $path is not a widening (only " +
           "byte<short<int<long and float<double widen)")
-      val outDdl = StructType(prevS.fields.map(p =>
-        if (p.name == f.name) p.copy(dataType = newType) else p)).toDDL
-      val headM = parseManifest(manifestPath(path, cur))
-      if (publishMetadata(path, cur, outDdl, snap.partitionCols,
-        headM.txns, headM.constraints, headM.colMap))
-        return cur + 1
-      attempt += 1
+      headM.copy(schemaDdl = StructType(prevS.fields.map(p =>
+        if (p.name == f.name) p.copy(dataType = newType) else p)).toDDL)
     }
-    sys.error(s"versioned: gave up altering $path after $attempt attempts")
   }
 
   /** Attribute names a constraint expression references (walked from
@@ -1703,15 +1697,8 @@ object Versioned {
     require(newName.nonEmpty && !newName.contains('.') &&
       !newName.startsWith("__graft_"),
       s"versioned: invalid target column name '$newName'")
-    var attempt = 0
-    while (attempt < 64) {
-      val vs = versions(path)
-      require(vs.nonEmpty,
-        s"versioned: no committed versions under $path — create the " +
-          "table before altering it")
-      val cur = vs.max
-      val snap = snapshot(path, Some(cur))
-      val prevS = StructType.fromDDL(snap.schemaDdl)
+    alterTable(path, "RENAME COLUMN") { (_, headM) =>
+      val prevS = StructType.fromDDL(headM.schemaDdl)
       val (segs, f) = resolvePath(prevS, oldName, path)
       val oldPath = segs.mkString(".")
       val parentSegs = segs.init
@@ -1724,11 +1711,10 @@ object Versioned {
           (if (parentSegs.isEmpty) s"at $path"
            else s"in ${parentSegs.mkString(".")} at $path"))
       require(!(parentSegs.isEmpty &&
-        snap.partitionCols.exists(_.equalsIgnoreCase(f.name))),
+        headM.partitionCols.exists(_.equalsIgnoreCase(f.name))),
         s"versioned: cannot rename partition column ${f.name} at " +
           s"$path — partition names are baked into file paths; " +
           "re-layout via an overwrite instead")
-      val headM = parseManifest(manifestPath(path, cur))
       headM.constraints.foreach { case (n, e) =>
         // conservative for nested: a constraint referencing the TOP
         // column may reach into the renamed field
@@ -1751,12 +1737,8 @@ object Versioned {
       }.toMap ++
         (if (phys == newPath) Map.empty[String, String]
         else Map(newPath -> phys))
-      if (publishMetadata(path, cur, outS.toDDL, snap.partitionCols,
-        headM.txns, headM.constraints, outMap))
-        return cur + 1
-      attempt += 1
+      headM.copy(schemaDdl = outS.toDDL, colMap = outMap)
     }
-    sys.error(s"versioned: gave up altering $path after $attempt attempts")
   }
 
   /** `ALTER TABLE … DROP COLUMN c` (round 14): a METADATA-ONLY
@@ -1772,16 +1754,9 @@ object Versioned {
     * unmapped, and the field's PHYSICAL PATH is tombstoned so a
     * re-add under the same parent mints fresh. A struct must keep at
     * least one field (parquet has no empty groups). */
-  def dropColumn(path: String, colName: String): Int = {
-    var attempt = 0
-    while (attempt < 64) {
-      val vs = versions(path)
-      require(vs.nonEmpty,
-        s"versioned: no committed versions under $path — create the " +
-          "table before altering it")
-      val cur = vs.max
-      val snap = snapshot(path, Some(cur))
-      val prevS = StructType.fromDDL(snap.schemaDdl)
+  def dropColumn(path: String, colName: String): Int =
+    alterTable(path, "DROP COLUMN") { (h, headM) =>
+      val prevS = StructType.fromDDL(headM.schemaDdl)
       val (segs, f) = resolvePath(prevS, colName, path)
       val oldPath = segs.mkString(".")
       val parentSegs = segs.init
@@ -1795,10 +1770,9 @@ object Versioned {
         else s"versioned: cannot drop the last field of struct " +
           s"${parentSegs.mkString(".")} at $path")
       require(!(parentSegs.isEmpty &&
-        snap.partitionCols.exists(_.equalsIgnoreCase(f.name))),
+        headM.partitionCols.exists(_.equalsIgnoreCase(f.name))),
         s"versioned: cannot drop partition column ${f.name} at $path " +
           "— re-layout via an overwrite instead")
-      val headM = parseManifest(manifestPath(path, cur))
       headM.constraints.foreach { case (n, e) =>
         require(!constraintRefs(e).contains(segs.head.toLowerCase),
           s"versioned: cannot drop $oldPath at $path — CHECK " +
@@ -1811,39 +1785,25 @@ object Versioned {
       val childPrefix = oldPath + "."
       val outMap = headM.colMap.view
         .filterKeys(k => k != oldPath && !k.startsWith(childPrefix))
-        .toMap + (s"$RetiredKeyPrefix${cur + 1}" -> phys)
-      if (publishMetadata(path, cur, outDdl, snap.partitionCols,
-        headM.txns, headM.constraints, outMap))
-        return cur + 1
-      attempt += 1
+        .toMap + (s"$RetiredKeyPrefix${h.version + 1}" -> phys)
+      headM.copy(schemaDdl = outDdl, colMap = outMap)
     }
-    sys.error(s"versioned: gave up altering $path after $attempt attempts")
-  }
 
   /** Publish a METADATA-ONLY commit (schema/constraint change, zero
-    * row effect) as version `cur + 1`. On a CHECKPOINT boundary
-    * (v % CheckpointInterval == 0) the commit publishes FULL —
-    * carrying the live file set forward like an append checkpoint
-    * would — so a run of consecutive metadata commits can never
-    * stretch snapshot replay past CheckpointInterval (the
-    * O(checkpoint)-reads law holds for EVERY commit mix, not just
-    * append-heavy histories; SnapshotReplaySpec pins it). */
-  private def publishMetadata(path: String, cur: Int, outDdl: String,
-      pcols: Seq[String], txns: Map[String, Long],
-      constraints: Map[String, String],
-      colMap: Map[String, String]): Boolean = {
-    val v = cur + 1
-    if (v % CheckpointInterval == 0) {
-      val snap = snapshot(path, Some(cur))
-      publish(path, Manifest(v, "metadata", full = true, snap.files,
-        outDdl, txns, stats = snap.stats, partitionCols = pcols,
-        constraints = constraints, colMap = colMap,
-        dvs = Some(snap.dvs))) // checkpoint = replay base: explicit
-    } else
-      publish(path, Manifest(v, "metadata", full = false, Nil, outDdl,
-        txns, partitionCols = pcols, constraints = constraints,
-        colMap = colMap))
-  }
+    * row effect) on top of the head: `edit` checks the op against the
+    * head manifest and returns it with its new DDL, constraints or
+    * column mapping; txns and partitioning carry forward. A retry
+    * re-runs `edit` on the new head. */
+  private def alterTable(path: String, op: String)(
+      edit: (Head, Manifest) => Manifest): Int =
+    publishNext(path, op) { h =>
+      require(h.version > 0, s"versioned: no committed versions under " +
+        s"$path — create the table before altering it")
+      val m = edit(h, h.manifest.get)
+      Some(Manifest(h.version + 1, "metadata", full = false, Nil,
+        m.schemaDdl, m.txns, partitionCols = m.partitionCols,
+        constraints = m.constraints, colMap = m.colMap))
+    }.get
 
   /** The table's CHECK constraints (name → boolean SQL expression),
     * from the latest manifest. Constraints are a TABLE PROPERTY: they
@@ -1869,51 +1829,27 @@ object Versioned {
     require(name.nonEmpty && name.forall(c =>
       c.isLetterOrDigit || c == '_'),
       s"versioned: constraint name must be [A-Za-z0-9_]+, got '$name'")
-    var attempt = 0
-    while (attempt < 64) {
-      val vs = versions(path)
-      require(vs.nonEmpty,
-        s"versioned: no committed versions under $path — create the " +
-          "table before constraining it")
-      val cur = vs.max
-      val headM = parseManifest(manifestPath(path, cur))
+    alterTable(path, "ADD CONSTRAINT") { (h, headM) =>
       require(!headM.constraints.keys.exists(_.equalsIgnoreCase(name)),
         s"versioned: constraint $name already exists at $path")
       // existing rows must conform BEFORE the constraint can exist
-      enforceOnDf(read(spark, path, Some(cur)), Map(name -> exprSql),
+      enforceOnDf(read(spark, path, Some(h.version)), Map(name -> exprSql),
         path, s"ADD CONSTRAINT $name")
-      if (publishMetadata(path, cur, headM.schemaDdl,
-        headM.partitionCols, headM.txns,
-        headM.constraints + (name -> exprSql), headM.colMap))
-        return cur + 1
-      attempt += 1
+      headM.copy(constraints = headM.constraints + (name -> exprSql))
     }
-    sys.error(s"versioned: gave up constraining $path after $attempt " +
-      "attempts")
   }
 
   /** `ALTER TABLE … DROP CONSTRAINT name` — metadata-only commit
     * without it; unknown names are a loud error. */
-  def dropConstraint(path: String, name: String): Int = {
-    var attempt = 0
-    while (attempt < 64) {
-      val vs = versions(path)
-      require(vs.nonEmpty, s"versioned: no committed versions at $path")
-      val cur = vs.max
-      val headM = parseManifest(manifestPath(path, cur))
+  def dropConstraint(path: String, name: String): Int =
+    alterTable(path, "DROP CONSTRAINT") { (_, headM) =>
       val key = headM.constraints.keys
         .find(_.equalsIgnoreCase(name)).getOrElse(
           throw new IllegalArgumentException(
             s"versioned: no constraint named $name at $path (have " +
               s"${headM.constraints.keys.mkString(", ")})"))
-      if (publishMetadata(path, cur, headM.schemaDdl,
-        headM.partitionCols, headM.txns, headM.constraints - key,
-        headM.colMap))
-        return cur + 1
-      attempt += 1
+      headM.copy(constraints = headM.constraints - key)
     }
-    sys.error(s"versioned: gave up dropping $name at $path")
-  }
 
   /** DESCRIBE DETAIL (round 13, Delta's statement of the same name):
     * one row of table-level facts — format, location, schema DDL,
@@ -1943,15 +1879,12 @@ object Versioned {
     * whose live set is `toVersion`'s. History is preserved. */
   def restore(path: String, toVersion: Int): Int = {
     val snap = snapshot(path, Some(toVersion))
-    var attempt = 0
-    while (attempt < 64) {
-      val cur = versions(path).max
-      val v = cur + 1
+    publishNext(path, "restore") { h =>
       // txns AND constraints roll FORWARD across a restore (the data
       // rolls back; the exactly-once ledger must not — a replayed
       // batch is still dup — and constraints are a table property,
       // not table state)
-      val headM = parseManifest(manifestPath(path, cur))
+      val headM = h.manifest.get
       // The restored rows may PREDATE a constraint added after
       // toVersion — re-validate the whole restored snapshot against
       // the carried set (round 14, ADVICE; the addConstraint
@@ -1962,14 +1895,12 @@ object Versioned {
       // exist on an explicit admin op.
       enforceOnFiles(path, snap.files, snap.schemaDdl, headM.constraints,
         s"RESTORE to v$toVersion", snap.colMap)
-      if (publish(path, Manifest(v, "restore", full = true, snap.files,
+      Some(Manifest(h.version + 1, "restore", full = true, snap.files,
         snap.schemaDdl, headM.txns, stats = snap.stats,
         partitionCols = snap.partitionCols,
         constraints = headM.constraints,
-        colMap = snap.colMap, dvs = Some(snap.dvs)))) return v
-      attempt += 1
-    }
-    sys.error(s"versioned: gave up restoring $path to v$toVersion")
+        colMap = snap.colMap, dvs = Some(snap.dvs)))
+    }.get
   }
 
   // ------------------------------------------------- merge (upsert)
@@ -2662,7 +2593,7 @@ object Versioned {
       .localCheckpoint(false)
     // a notMatchedBySource merge's footprint is the whole table —
     // empty bounds prove nothing, so ANY interloping append aborts
-    commitCow(spark, path, "merge", base, untouched,
+    commitCow(path, "merge", base, untouched,
       Some(keptExisting.unionByName(changeSet.where(col("_change_type")
         .isin("update_postimage", "insert")).drop("_change_type"))
         .coalesce(outFileCount(spark, touched.size, nTotal))),
@@ -2694,20 +2625,18 @@ object Versioned {
     * an empty task-0 partition) is deleted and never referenced; a
     * rewrite that keeps nothing publishes no data file, not an empty
     * one. */
-  private def commitCow(spark: SparkSession, path: String, op: String,
+  private def commitCow(path: String, op: String,
       base: Snapshot, kept: Seq[String], rows: Option[DataFrame],
       changes: Option[DataFrame], sourceBounds: Option[Map[String, ColStat]],
       ddl: Option[String] = None,
       sidecars: String => Map[String, String] = _ => Map.empty): Int = {
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
+    val commitId = newCommitId()
     val dvUpdates = sidecars(commitId)
-    val dataRel = s"data/c-$commitId"
-    val written = rows.fold(Seq.empty[String]) { df =>
-      writeData(df, s"$path/$dataRel", base.partitionCols, base.colMap)
-      listParquet(dataPath(path, commitId)).map(f => s"$dataRel/$f")
-    }
-    val fresh = statsForFiles(spark, path, written, base.partitionCols,
-      StructType.fromDDL(ddl.getOrElse(base.schemaDdl)), base.colMap)
+    val (written, fresh) =
+      rows.fold((Seq.empty[String], Map.empty: FileStats)) {
+        stageData(_, path, commitId, base.partitionCols, base.colMap,
+          StructType.fromDDL(ddl.getOrElse(base.schemaDdl)))
+      }
     val (added, empty) = written.partition(f =>
       !fresh(f).get(RowsStatKey).contains(LongStat(0L, 0L)))
     empty.foreach(f => Files.delete(Paths.get(norm(path), f)))
@@ -2731,18 +2660,6 @@ object Versioned {
     * ([[statIntersects]] false on at least one bound key). An append
     * without usable stats, a concurrent schema change, or any
     * non-append op aborts — the caller retries the whole operation. */
-  /** Test seam: invoked ONCE per COW op, after its files are written
-    * but before the log head is resolved for publish — lets specs
-    * inject a deterministic concurrent commit into the conflict
-    * window. Self-clearing. */
-  private[graft] var beforeCowPublish: () => Unit = () => ()
-
-  /** Test hook mirroring [[beforeCowPublish]] for the APPEND seam:
-    * fires once between data-file staging and manifest publish —
-    * the exact window a concurrent vacuum (or second writer) can
-    * interleave into. Self-clearing. */
-  private[graft] var beforeAppendPublish: () => Unit = () => ()
-
   /** `dvUpdates` (round 15, deletion vectors): NEW data-file → DV
     * sidecar entries this op created (a DV delete/update). The
     * published dv map is `base.dvs` restricted to files that SURVIVE
@@ -2759,16 +2676,12 @@ object Versioned {
     // judged against the BASE schema — that is what the op read, and
     // old-schema files read back null-filled under the evolved DDL.
     val outDdl = ddl.getOrElse(base.schemaDdl)
-    val hook = beforeCowPublish
-    beforeCowPublish = () => ()
-    hook()
     // same vacuum-race guard as the append seam, on the FRESH subset
     // only: carried-by-reference base files are protected by the
     // retained manifests (vacuum keeps them), so stat-ing them would
     // be O(live files) per commit for nothing — only this op's
     // still-unreferenced rewrites and CDC files are reclaimable by an
-    // undershooting concurrent vacuum. After the test hook, which
-    // simulates exactly this write-to-publish interloper window.
+    // undershooting concurrent vacuum.
     requireStaged(path,
       files.filterNot(base.files.toSet) ++ changes.getOrElse(Nil) ++
         dvUpdates.values.filterNot(base.dvs.values.toSet), op)
@@ -2781,55 +2694,50 @@ object Versioned {
       parseManifest(manifestPath(path, base.version)).constraints
     enforceOnFiles(path, files.filterNot(base.files.toSet), outDdl,
       cowConstraints, op, base.colMap)
+    // rebase state across attempts: the interlopers examined so far
+    // and the files they appended
     var seen = base.version
     var extraFiles = Vector.empty[String]
     var extraStats: FileStats = Map.empty
-    var attempt = 0
-    while (attempt < 64) {
-      val cur = versions(path).max
-      if (cur != seen) {
-        versions(path).filter(v => v > seen && v <= cur).foreach { v =>
-          val m = parseManifest(manifestPath(path, v))
-          def conflict(why: String): Nothing =
-            throw new java.util.ConcurrentModificationException(
-              s"versioned: $op at $path read v${base.version} but a " +
-                s"concurrent '${m.op}' commit landed at v$v ($why); " +
-                s"retry the $op")
-          if (m.op != "append") conflict("only appends can be rebased over")
-          if (m.schemaDdl != base.schemaDdl) conflict("schema changed")
-          val addedF =
-            if (!m.full) m.files
-            else m.files.filterNot(snapshot(path, Some(v - 1)).files.toSet)
-          sourceBounds.foreach { bounds =>
-            addedF.foreach { f =>
-              val st = m.stats.getOrElse(f, Map.empty)
-              val mayOverlap = bounds.isEmpty ||
-                bounds.forall { case (k, b) => statIntersects(st.get(base.physOf(k)), b) }
-              if (mayOverlap) conflict(
-                s"appended file $f cannot be proven key-disjoint from " +
-                  "the source")
-            }
+    publishNext(path, op) { h =>
+      h.versions.filter(_ > seen).foreach { v =>
+        val m = parseManifest(manifestPath(path, v))
+        def conflict(why: String): Nothing =
+          throw new java.util.ConcurrentModificationException(
+            s"versioned: $op at $path read v${base.version} but a " +
+              s"concurrent '${m.op}' commit landed at v$v ($why); " +
+              s"retry the $op")
+        if (m.op != "append") conflict("only appends can be rebased over")
+        if (m.schemaDdl != base.schemaDdl) conflict("schema changed")
+        val addedF =
+          if (!m.full) m.files
+          else m.files.filterNot(snapshot(path, Some(v - 1)).files.toSet)
+        sourceBounds.foreach { bounds =>
+          addedF.foreach { f =>
+            val st = m.stats.getOrElse(f, Map.empty)
+            val mayOverlap = bounds.isEmpty ||
+              bounds.forall { case (k, b) =>
+                statIntersects(st.get(base.physOf(k)), b) }
+            if (mayOverlap) conflict(
+              s"appended file $f cannot be proven key-disjoint from " +
+                "the source")
           }
-          extraFiles = extraFiles ++ addedF
-          extraStats = extraStats ++
-            m.stats.view.filterKeys(addedF.toSet).toMap
         }
-        seen = cur
+        extraFiles = extraFiles ++ addedF
+        extraStats = extraStats ++
+          m.stats.view.filterKeys(addedF.toSet).toMap
       }
-      val headM = parseManifest(manifestPath(path, cur))
+      seen = h.version
+      val headM = h.manifest.get
       val outDvs = base.dvs.view
         .filterKeys((files ++ extraFiles).toSet).toMap ++ dvUpdates
-      if (publish(path, Manifest(cur + 1, op, full = true,
+      Some(Manifest(h.version + 1, op, full = true,
         files ++ extraFiles, outDdl, headM.txns, changes = changes,
         stats = stats ++ extraStats,
         partitionCols = base.partitionCols,
         constraints = headM.constraints, colMap = headM.colMap,
-        dvs = Some(outDvs))))
-        return cur + 1
-      attempt += 1 // lost the publish race: re-examine the new head
-    }
-    sys.error(s"versioned: $op gave up after $attempt contended commits " +
-      s"at $path")
+        dvs = Some(outDvs)))
+    }.get
   }
 
   private def writeChanges(chg: DataFrame, path: String,
@@ -3138,7 +3046,7 @@ object Versioned {
     val kept = tagged.where(!col(Hit) || col(Hit).isNull).drop(Hit)
     val hit = tagged.where(col(Hit)).drop(Hit)
     val freshRows = fresh.map(_(hit))
-    commitCow(spark, path, op, base, untouched,
+    commitCow(path, op, base, untouched,
       Some(freshRows.fold(kept)(kept.unionByName)
         .coalesce(outFileCount(spark, touched.size, nFresh))),
       Some(changeRows(op, hit, freshRows)), Some(bounds))
@@ -3246,7 +3154,7 @@ object Versioned {
       .drop(FileC, PosC, Hit)
     val (rows, nOut) = freshRows.fold((keepCow, cow.size))(p =>
       (keepCow.unionByName(p), cow.size + gone.size))
-    commitCow(spark, path, op, base, untouched ++ zero ++ dv,
+    commitCow(path, op, base, untouched ++ zero ++ dv,
       Option.when(freshRows.isDefined || cow.nonEmpty)(
         rows.coalesce(math.max(1, nOut))),
       Some(changeRows(op, hit, freshRows)), Some(bounds),
@@ -3317,7 +3225,7 @@ object Versioned {
     // append rebases cleanly (the appended files simply stay in their
     // original layout); a steady append stream can no longer starve a
     // long compaction. sourceBounds = None encodes "no row footprint".
-    commitCow(spark, path, "optimize", base, carried, Some(laidOut),
+    commitCow(path, "optimize", base, carried, Some(laidOut),
       changes = None, sourceBounds = None)
   }
 
@@ -3356,7 +3264,7 @@ object Versioned {
       math.min(4096L, (totalBytes + target - 1) / target)).toInt
     val rows = readFiles(spark, path, touched, base.schemaDdl,
       base.colMap, base.dvs) // masks apply: live rows only
-    commitCow(spark, path, "optimize", base,
+    commitCow(path, "optimize", base,
       base.files.filterNot(touched.toSet), Some(rows.coalesce(outFiles)),
       changes = None, sourceBounds = None)
   }
@@ -3376,7 +3284,7 @@ object Versioned {
     val masked = base.files.filter(base.dvs.contains)
     val rows = readFiles(spark, path, masked, base.schemaDdl,
       base.colMap, base.dvs) // the mask applies: live rows only
-    commitCow(spark, path, "optimize", base,
+    commitCow(path, "optimize", base,
       base.files.filterNot(base.dvs.contains),
       Some(rows.coalesce(math.max(1, masked.size))),
       changes = None, sourceBounds = None)

@@ -317,8 +317,9 @@ private[sources] class VersionedBatchWrite(path: String,
       : org.apache.spark.sql.connector.write.DataWriterFactory =
     // Files carry PHYSICAL names on APPEND (translate through the
     // table's column mapping), but an OVERWRITE re-establishes
-    // identity in its manifest (publishAdded's `outMap` rule), so its
-    // files must carry the LOGICAL names untranslated — mirroring
+    // identity in its manifest (publishAdded writes an overwrite with
+    // an empty column mapping), so its files must carry the LOGICAL
+    // names untranslated — mirroring
     // commitInternal's `writeMap = Map.empty` for mode=overwrite
     // (round 15, ADVICE r14: translating here made an INSERT
     // OVERWRITE after RENAME COLUMN read back NULL for the renamed

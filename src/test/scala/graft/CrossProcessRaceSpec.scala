@@ -201,7 +201,7 @@ class CrossProcessRaceSpec extends AnyFunSuite with TempDirs {
     // commit whose ids (5000..) cannot be proven key-disjoint from
     // the merge source (ids 0..9000) by the per-file id stats.
     val out = new File(scratch, "overlap-child.log")
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       val p = spawnChild(t, 3, scratch, out,
         baseId = Some(5000L), commits = 1)
       assert(p.waitFor(240, TimeUnit.SECONDS), "overlap child hung")
@@ -280,7 +280,7 @@ class CrossProcessRaceSpec extends AnyFunSuite with TempDirs {
       // the child's DV delete (id % 10 == 7) lands INSIDE this JVM's
       // DV delete window (after its scan + sidecar staging, before
       // its publish) — a real second process on the same file
-      Versioned.beforeCowPublish = () => {
+      Versioned.beforePublish = () => {
         val p = spawnRaw(scratch, out, Seq(t, "dvdelete", "7"))
         assert(p.waitFor(240, TimeUnit.SECONDS), "dv child hung")
         assert(p.exitValue() === 0, s"dv child failed:\n${

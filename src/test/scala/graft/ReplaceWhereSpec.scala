@@ -96,7 +96,7 @@ class ReplaceWhereSpec extends AnyFunSuite with TempDirs {
     Versioned.commit((0L until 10L).map(i => (i, i)).toDF("id", "v")
       .coalesce(1), t) // v1
     // disjoint interloper: ids 100+ cannot match id < 5 — rebase
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       Versioned.commit(Seq((100L, 100L)).toDF("id", "v").coalesce(1), t)
       ()
     }
@@ -108,7 +108,7 @@ class ReplaceWhereSpec extends AnyFunSuite with TempDirs {
     assert(state(1L) === -1L)
     assert(state.size === 7) // 5 kept (5-9) + 1 inserted + 1 appended
     // overlapping interloper: ids in-window — abort loudly
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       Versioned.commit(Seq((2L, 2L)).toDF("id", "v").coalesce(1), t); ()
     }
     intercept[java.util.ConcurrentModificationException] {

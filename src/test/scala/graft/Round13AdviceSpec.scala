@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -24,7 +22,7 @@ import graft.sources.Versioned
   *  - table_changes guards: empty table, out-of-range Long literals,
   *    fully-qualified spark_catalog.db.t names.
   */
-class Round13AdviceSpec extends AnyFunSuite {
+class Round13AdviceSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -35,7 +33,7 @@ class Round13AdviceSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmpTable(): String =
-    Files.createTempDirectory("r13-advice-").toString
+    tempDir("r13-advice-").toString
 
   test("updateWhere casts SET expressions to the table column type") {
     import spark.implicits._

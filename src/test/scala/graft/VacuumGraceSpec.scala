@@ -41,7 +41,7 @@ class VacuumGraceSpec extends AnyFunSuite with TempDirs {
     val t = tmpTable()
     Versioned.commit(Seq((1L, "a")).toDF("id", "s"), t) // v1
     var reclaimed: Seq[String] = null
-    Versioned.beforeAppendPublish = () => {
+    Versioned.beforePublish = () => {
       reclaimed = Versioned.vacuum(t, retainVersions = 1) // default grace
     }
     val v = Versioned.commit(Seq((2L, "b")).toDF("id", "s"), t)
@@ -55,7 +55,7 @@ class VacuumGraceSpec extends AnyFunSuite with TempDirs {
     import spark.implicits._
     val t = tmpTable()
     Versioned.commit(Seq((1L, "a")).toDF("id", "s"), t) // v1
-    Versioned.beforeAppendPublish = () => {
+    Versioned.beforePublish = () => {
       // an operator who waived the grace while a writer is mid-flight
       Versioned.vacuum(t, retainVersions = 1, graceMs = 0L)
     }
@@ -74,7 +74,7 @@ class VacuumGraceSpec extends AnyFunSuite with TempDirs {
     import spark.implicits._
     val t = tmpTable()
     Versioned.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), t) // v1
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       Versioned.vacuum(t, retainVersions = 1, graceMs = 0L); ()
     }
     val e = intercept[IllegalArgumentException] {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,7 +10,7 @@ import graft.sources.Versioned
   * COLUMNS` as a metadata-only commit (old files null-fill, time
   * travel keeps per-version DDL: the v5 law through DDL), plus
   * `DESCRIBE DETAIL`. */
-class VersionedAlterSpec extends AnyFunSuite {
+class VersionedAlterSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -23,7 +21,7 @@ class VersionedAlterSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmpTable(): String =
-    Files.createTempDirectory("graftv-alter-").toString
+    tempDir("graftv-alter-").toString
 
   test("addColumns: old files null-fill, appends carry the column, time travel keeps per-version DDL") {
     import spark.implicits._
@@ -109,7 +107,7 @@ class VersionedAlterSpec extends AnyFunSuite {
     assert(tvf.count() == 2)
     // the streaming tail (no skipChangeCommits) survives the
     // metadata commit: zero rows contributed, later appends flow
-    val ckpt = Files.createTempDirectory("graftv-alter-ck-").toString
+    val ckpt = tempDir("graftv-alter-ck-").toString
     val q = spark.readStream.format("graftv").load(t)
       .writeStream.format("memory").queryName("r13_alter_tail")
       .option("checkpointLocation", ckpt).start()
@@ -141,7 +139,7 @@ class VersionedAlterSpec extends AnyFunSuite {
     import spark.implicits._
     val t = tmpTable()
     Versioned.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), t)
-    Versioned.beforeCowPublish = () => { Versioned.addColumns(t, "x INT"); () }
+    Versioned.beforePublish = () => { Versioned.addColumns(t, "x INT"); () }
     intercept[java.util.ConcurrentModificationException] {
       Versioned.deleteWhere(spark, t, col("id") === 1L)
     }

@@ -13,7 +13,7 @@ import graft.sources.Versioned
   * hard-links the source snapshot's immutable data files (same
   * inodes, no bytes move) under a fresh, fully independent log:
   * divergence, vacuum, and txn ledgers never cross the boundary. */
-class VersionedCloneSpec extends AnyFunSuite {
+class VersionedCloneSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,7 +24,7 @@ class VersionedCloneSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmp(): String = {
-    val d = Files.createTempDirectory("graftv-clone-")
+    val d = tempDir("graftv-clone-")
     Files.delete(d)
     d.toString
   }

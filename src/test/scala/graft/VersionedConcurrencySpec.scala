@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
@@ -25,7 +24,7 @@ import graft.sources.Versioned
   * Separately: racing `commitIfAbsent` replays of the SAME (appId,
   * batchId) must land exactly once — the exactly-once ledger under
   * forced concurrent retries. */
-class VersionedConcurrencySpec extends AnyFunSuite {
+class VersionedConcurrencySpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[8]")
@@ -45,7 +44,7 @@ class VersionedConcurrencySpec extends AnyFunSuite {
 
   test("threads of mixed append/merge/delete/restore serialize to the log order") {
     import spark.implicits._
-    val t = Files.createTempDirectory("versioned-conc-").toString
+    val t = tempDir("versioned-conc-").toString
     Versioned.commit(
       Seq((1L, "seed1"), (2L, "seed2"), (3L, "seed3")).toDF("id", "s"), t)
 
@@ -150,10 +149,10 @@ class VersionedConcurrencySpec extends AnyFunSuite {
     // (a) a key-disjoint append landing inside merge's conflict window
     // REBASES: the merge succeeds (no abort) and the appended rows
     // survive into its snapshot
-    val t1 = Files.createTempDirectory("versioned-resolve-").toString
+    val t1 = tempDir("versioned-resolve-").toString
     Versioned.commit((1L to 10L).map(i => (i, i * 10)).toDF("id", "v")
       .coalesce(1), t1) // v1
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       Versioned.commit(Seq((100L, 0L), (101L, 0L)).toDF("id", "v")
         .coalesce(1), t1) // interloper v2, keys disjoint from [3, 3]
       ()
@@ -168,7 +167,7 @@ class VersionedConcurrencySpec extends AnyFunSuite {
     assert(rows.size === 12)
 
     // (b) an OVERLAPPING append (same key range) still aborts loudly
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       Versioned.commit(Seq((4L, -1L)).toDF("id", "v").coalesce(1), t1)
       ()
     }
@@ -182,7 +181,7 @@ class VersionedConcurrencySpec extends AnyFunSuite {
       .head().getLong(1) === 888L)
 
     // (c) a non-append interloper (restore) always aborts a merge
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       Versioned.restore(t1, 1); ()
     }
     intercept[java.util.ConcurrentModificationException] {
@@ -191,12 +190,12 @@ class VersionedConcurrencySpec extends AnyFunSuite {
 
     // (d) OPTIMIZE rebases over ANY append (pure layout op): the
     // steady-append-starves-compaction regime is gone
-    val t2 = Files.createTempDirectory("versioned-resolve-opt-").toString
+    val t2 = tempDir("versioned-resolve-opt-").toString
     Versioned.commit((1L to 5L).map(i => (i, i)).toDF("id", "v")
       .coalesce(1), t2)
     Versioned.commit((6L to 9L).map(i => (i, i)).toDF("id", "v")
       .coalesce(1), t2)
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       Versioned.commit(Seq((50L, 50L)).toDF("id", "v").coalesce(1), t2)
       ()
     }
@@ -210,7 +209,7 @@ class VersionedConcurrencySpec extends AnyFunSuite {
 
   test("racing commitIfAbsent replays of one batch land exactly once") {
     import spark.implicits._
-    val t = Files.createTempDirectory("versioned-conc-txn-").toString
+    val t = tempDir("versioned-conc-txn-").toString
     Versioned.commit(Seq((0L, "seed")).toDF("id", "s"), t)
     (1L to 3L).foreach { batch =>
       val wins = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -244,10 +243,10 @@ class VersionedConcurrencySpec extends AnyFunSuite {
     // (a) an append whose stats prove no row can satisfy the delete
     // predicate REBASES (round 12 — r11 aborted on any interloper, so
     // a steady append stream starved deletes)
-    val t = Files.createTempDirectory("versioned-delresolve-").toString
+    val t = tempDir("versioned-delresolve-").toString
     Versioned.commit((1L to 10L).map(i => (i, i * 10)).toDF("id", "v")
       .coalesce(1), t) // v1
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       Versioned.commit(Seq((100L, 0L), (101L, 0L)).toDF("id", "v")
         .coalesce(1), t) // interloper, ids disjoint from [3, 3]
       ()
@@ -260,7 +259,7 @@ class VersionedConcurrencySpec extends AnyFunSuite {
     assert(ids.length === 11)
 
     // (b) an append overlapping the predicate bounds still aborts
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       Versioned.commit(Seq((4L, -1L)).toDF("id", "v").coalesce(1), t)
       ()
     }
@@ -274,7 +273,7 @@ class VersionedConcurrencySpec extends AnyFunSuite {
 
     // (c) an unanalyzable predicate proves nothing — even a
     // key-disjoint append aborts (empty bounds cannot certify)
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       Versioned.commit(Seq((500L, 0L)).toDF("id", "v").coalesce(1), t)
       ()
     }
@@ -284,7 +283,7 @@ class VersionedConcurrencySpec extends AnyFunSuite {
 
     // (d) updateWhere rides the same resolution: disjoint append
     // rebases, overlap aborts
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       Versioned.commit(Seq((600L, 0L)).toDF("id", "v").coalesce(1), t)
       ()
     }
@@ -296,7 +295,7 @@ class VersionedConcurrencySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(got === Seq((6L, 666L), (600L, 0L)),
       "update applied AND the interloper's row survives the rebase")
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       Versioned.commit(Seq((7L, -7L)).toDF("id", "v").coalesce(1), t)
       ()
     }

@@ -16,7 +16,7 @@ import graft.sources.Versioned
   * inferred schema from an existing snapshot — the first wall every
   * new user hit (Delta creates on first write; the reference births
   * each rset by writing it, database/__init__.py:1062–1067). */
-class VersionedCreateSpec extends AnyFunSuite {
+class VersionedCreateSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -27,7 +27,7 @@ class VersionedCreateSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def fresh(): String = {
-    val d = Files.createTempDirectory("graftv-create-")
+    val d = tempDir("graftv-create-")
     Files.delete(d) // a truly fresh (absent) location
     d.toString
   }
@@ -192,7 +192,7 @@ class VersionedCreateSpec extends AnyFunSuite {
   test("fresh streaming sink path is created by its first epoch") {
     import spark.implicits._
     val t = fresh()
-    val ckpt = Files.createTempDirectory("graftv-create-ck-").toString
+    val ckpt = tempDir("graftv-create-ck-").toString
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = org.apache.spark.sql.execution.streaming
       .runtime.MemoryStream[(Long, String)]

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +11,7 @@ import graft.sources.Versioned
   * physical names — per-version names under time travel, tombstoned
   * physical paths against resurrection, appends translating through
   * the nested mapping, SQL wired. */
-class VersionedNestedSpec extends AnyFunSuite {
+class VersionedNestedSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,7 +22,7 @@ class VersionedNestedSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmp(): String =
-    Files.createTempDirectory("graftv-nested-").toString
+    tempDir("graftv-nested-").toString
 
   private def provDf(rows: Seq[(Long, String, Long)]) = {
     import spark.implicits._

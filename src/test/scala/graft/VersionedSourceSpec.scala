@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Versioned
 
-class VersionedSourceSpec extends AnyFunSuite {
+class VersionedSourceSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -21,7 +21,7 @@ class VersionedSourceSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmpTable(): String =
-    Files.createTempDirectory("graftv-spec-").toString
+    tempDir("graftv-spec-").toString
 
   test("batch read via format(graftv) matches the library read, with time travel") {
     import spark.implicits._
@@ -57,7 +57,7 @@ class VersionedSourceSpec extends AnyFunSuite {
   test("streaming tail: version offsets drive micro-batches across restarts") {
     import spark.implicits._
     val t = tmpTable()
-    val ckpt = Files.createTempDirectory("graftv-ckpt-").toString
+    val ckpt = tempDir("graftv-ckpt-").toString
     Versioned.commit(Seq((1L, "a")).toDF("id", "s"), t)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     def runOnce(): Unit = {
@@ -185,7 +185,7 @@ class VersionedSourceSpec extends AnyFunSuite {
     // plain tail: the example reader serves partitioned data files
     // with every column (rows physically carry them; path consts are
     // a redundant cross-check)
-    val ckpt = Files.createTempDirectory("graftv-part-ckpt-").toString
+    val ckpt = tempDir("graftv-part-ckpt-").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, String)]()
     val q = spark.readStream.format("graftv").load(t)
       .writeStream.option("checkpointLocation", ckpt)
@@ -218,7 +218,7 @@ class VersionedSourceSpec extends AnyFunSuite {
 
     val lake = tmpTable()
     val out = tmpTable() + "/verdicts"
-    val ckpt = Files.createTempDirectory("mh_lake_ckpt").toString
+    val ckpt = tempDir("mh_lake_ckpt").toString
     // two lake commits with a STREAM RESTART between them: the second
     // run resumes from the checkpointed version offset
     Versioned.commit(incoming.where(pmod(col("doc_id"), lit(3)) < 2), lake)
@@ -268,7 +268,7 @@ class VersionedSourceSpec extends AnyFunSuite {
   test("streaming tail refuses a range crossing a rewrite commit") {
     import spark.implicits._
     val t = tmpTable()
-    val ckpt = Files.createTempDirectory("graftv-ckpt-").toString
+    val ckpt = tempDir("graftv-ckpt-").toString
     Versioned.commit(Seq((1L, "a")).toDF("id", "s"), t)
     val q = spark.readStream.format("graftv").load(t)
       .writeStream.format("memory").queryName("vtail2")
@@ -287,7 +287,7 @@ class VersionedSourceSpec extends AnyFunSuite {
   test("skipChangeCommits: a live tail survives OPTIMIZE and keeps appending") {
     import spark.implicits._
     val t = tmpTable()
-    val ckpt = Files.createTempDirectory("graftv-skip-ckpt-").toString
+    val ckpt = tempDir("graftv-skip-ckpt-").toString
     Versioned.commit(Seq((1L, "a")).toDF("id", "s"), t)
     Versioned.commit(Seq((2L, "b")).toDF("id", "s"), t)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -443,7 +443,7 @@ class VersionedSourceSpec extends AnyFunSuite {
   test("maxVersionsPerTrigger bounds each micro-batch's commit range (admission control)") {
     import spark.implicits._
     val t = tmpTable()
-    val ckpt = Files.createTempDirectory("graftv-mvpt-ckpt-").toString
+    val ckpt = tempDir("graftv-mvpt-ckpt-").toString
     (1 to 6).foreach(i =>
       Versioned.commit(Seq((i.toLong, s"r$i")).toDF("id", "s"), t))
     val batches = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
@@ -466,7 +466,7 @@ class VersionedSourceSpec extends AnyFunSuite {
   test("readChangeFeed: a live tail consumes a MERGE as row-level changes, no skips") {
     import spark.implicits._
     val t = tmpTable()
-    val ckpt = Files.createTempDirectory("graftv-cdf-ckpt-").toString
+    val ckpt = tempDir("graftv-cdf-ckpt-").toString
     Versioned.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), t) // v1
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, String, Int)]()
     def runOnce(): Unit = {
@@ -594,7 +594,7 @@ class VersionedSourceSpec extends AnyFunSuite {
   test("DSv2 streaming sink: exactly-once appends, replayed epoch publishes nothing") {
     import spark.implicits._
     val t = tmpTable()
-    val ckpt = Files.createTempDirectory("graftv-sink-ckpt-").toString
+    val ckpt = tempDir("graftv-sink-ckpt-").toString
     // the sink table must exist (the provider infers the sink schema)
     Versioned.commit(Seq((0L, "seed")).toDF("id", "s"), t)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -640,7 +640,7 @@ class VersionedSourceSpec extends AnyFunSuite {
     Versioned.commit(Seq((1L, 0L, "a"), (2L, 1L, "b"), (3L, 0L, "c"),
       (4L, 1L, "d")).toDF("id", "p", "s"), t, partitionBy = Seq("p"))
     // DSv2 streaming sink inherits the layout per epoch
-    val ckpt = Files.createTempDirectory("graftv-psink-ckpt-").toString
+    val ckpt = tempDir("graftv-psink-ckpt-").toString
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming
       .runtime.MemoryStream[(Long, Long, String)]

@@ -1,11 +1,11 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TempDirs
 
 /** Round-14 ADVICE-r13 regression pins (lives in graft.sources to
   * drive the private[sources] scan/publish seams directly):
@@ -21,7 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    constraint set (rows predating a constraint cannot silently
   *    re-enter under a manifest that claims the constraint holds).
   */
-class Round14AdviceSpec extends AnyFunSuite {
+class Round14AdviceSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -32,7 +32,7 @@ class Round14AdviceSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmp(): String =
-    Files.createTempDirectory("r14-advice-").toString
+    tempDir("r14-advice-").toString
 
   test("change-feed batch scan over an EMPTY log plans zero partitions") {
     val t = tmp() // no commits ever

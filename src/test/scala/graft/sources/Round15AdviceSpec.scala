@@ -1,10 +1,10 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TempDirs
 
 /** Round-15 ADVICE-r14 regression pins:
   *
@@ -23,7 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    with an explicit LOCATION, and quotes/escapes the registration
   *    statement's identifiers.
   */
-class Round15AdviceSpec extends AnyFunSuite {
+class Round15AdviceSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -34,7 +34,7 @@ class Round15AdviceSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmp(): String =
-    Files.createTempDirectory("r15-advice-").toString
+    tempDir("r15-advice-").toString
 
   test("DSv2 INSERT OVERWRITE after RENAME COLUMN keeps the values " +
     "(files carry logical names; manifest is identity)") {

@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 /** Round-16 ADVICE-r15 regression pins + the scale-safe DV plumbing:
   *
   *  - DerivedState.maintain fails LOUDLY when a source commit carries
@@ -24,7 +26,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - sidecar format v2 (varint gaps) roundtrips and v1 sidecars
   *    still read.
   */
-class Round16AdviceSpec extends AnyFunSuite {
+class Round16AdviceSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -35,7 +37,7 @@ class Round16AdviceSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmp(): String =
-    Files.createTempDirectory("r16-advice-").toString
+    tempDir("r16-advice-").toString
 
   private def withDv[A](f: => A): A = {
     spark.conf.set("spark.graft.dv.enabled", "true")
@@ -115,7 +117,7 @@ class Round16AdviceSpec extends AnyFunSuite {
     assert(DeletionVectors.normFilePath("/plain/path.parquet")
       === "/plain/path.parquet")
     import spark.implicits._
-    val odd = Files.createTempDirectory("r16-dv-")
+    val odd = tempDir("r16-dv-")
       .resolve("odd dir %25 name").toString
     Files.createDirectories(java.nio.file.Paths.get(odd))
     val t = s"$odd/tbl"
@@ -176,7 +178,7 @@ class Round16AdviceSpec extends AnyFunSuite {
 
   test("sidecar v2 varint-gap format roundtrips; legacy v1 sidecars " +
     "still read") {
-    val dir = Files.createTempDirectory("r16-dv-fmt-")
+    val dir = tempDir("r16-dv-fmt-")
     val cases = Seq(
       Array.empty[Long],
       Array(0L),

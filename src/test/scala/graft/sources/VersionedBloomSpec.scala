@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 /** Bloom sidecars — the point-lookup skipping tier (round 16):
   *
   *  - commits with `spark.graft.bloom.columns` set write a
@@ -25,7 +27,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - vacuum reclaims a rewritten file's sidecar and keeps live ones;
   *  - clone carries sidecars (same rel → same content address).
   */
-class VersionedBloomSpec extends AnyFunSuite {
+class VersionedBloomSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -36,7 +38,7 @@ class VersionedBloomSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmp(): String =
-    Files.createTempDirectory("r16-bloom-").toString
+    tempDir("r16-bloom-").toString
 
   private def withBloom[A](cols: String)(f: => A): A = {
     spark.conf.set(BloomFilters.ColumnsConf, cols)

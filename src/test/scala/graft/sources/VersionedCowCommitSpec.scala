@@ -9,6 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 /** The shared copy-on-write commit path of the versioned lake.
   *
   * Job and file budget of every DML operation on one fixed shape: 1000 rows in 4 contiguous-id files, predicate
@@ -19,7 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * has an upper bound: its window check and insert count are one
   * aggregate and its tag pin is lazy (5 jobs: source pin, the
   * two-job aggregate, data write, change-feed write). */
-class VersionedCowCommitSpec extends AnyFunSuite {
+class VersionedCowCommitSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -30,7 +32,7 @@ class VersionedCowCommitSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def table(): String = {
-    val t = Files.createTempDirectory("graftv-budget-").toString
+    val t = tempDir("graftv-budget-").toString
     Versioned.commit(spark.range(0, 1000, 1, 4)
       .select(col("id"), (col("id") % 7).as("v")), t)
     assert(Versioned.snapshot(t).files.size === 4)

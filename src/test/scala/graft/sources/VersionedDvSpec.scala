@@ -6,11 +6,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 /** Deletion vectors (round 15, VERDICT r14 #1): merge-on-read point
   * DML. A sub-crossover DELETE/UPDATE commits per-file ordinal
   * sidecars instead of rewriting file bytes; scans mask; OPTIMIZE
   * purges; time travel, CDF, restore, clone and vacuum all compose. */
-class VersionedDvSpec extends AnyFunSuite {
+class VersionedDvSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -21,7 +23,7 @@ class VersionedDvSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmp(): String =
-    Files.createTempDirectory("graftv-dv-").toString
+    tempDir("graftv-dv-").toString
 
   private def withDv[A](f: => A): A = {
     spark.conf.set("spark.graft.dv.enabled", "true")
@@ -359,13 +361,13 @@ class VersionedDvSpec extends AnyFunSuite {
     Versioned.commit((1L to 50L).map(i => (i, i)).toDF("id", "v"), t)
     // an append with ids far outside the delete's bounds lands inside
     // the delete's read-to-publish window
-    Versioned.beforeCowPublish = () => {
+    Versioned.beforePublish = () => {
       Versioned.commit(Seq((1000L, 1L), (1001L, 2L)).toDF("id", "v"), t)
       ()
     }
     try withDv {
       Versioned.deleteWhere(spark, t, col("id").between(10L, 12L))
-    } finally Versioned.beforeCowPublish = () => ()
+    } finally Versioned.beforePublish = () => ()
     val out = Versioned.read(spark, t)
     assert(out.count() === 49L, "rebase lost rows") // 50 - 3 + 2
     assert(out.where(col("id").between(10L, 12L)).count() === 0L)

@@ -6,13 +6,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 /** Scan-reported statistics (round 16): the manifest records
   * per-file byte size and row count as reserved pseudo-stats
   * (`__graft_bytes`/`__graft_rows`) and the DSv2 scan reports a
   * POST-PRUNING estimate via `SupportsReportStatistics` — without it
   * a DSv2 relation carries `defaultSizeInBytes` (effectively ∞) and
   * a join against a graftv table can never auto-broadcast. */
-class VersionedStatsSpec extends AnyFunSuite {
+class VersionedStatsSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -23,7 +25,7 @@ class VersionedStatsSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmp(): String =
-    Files.createTempDirectory("r16-stats-").toString
+    tempDir("r16-stats-").toString
 
   test("commits record size/row pseudo-stats per file") {
     import spark.implicits._
